@@ -94,10 +94,9 @@ def bench_extraction(spark, sf: float) -> tuple[float, dict]:
         t0 = time.time()
         # production plan: scan-aligned extraction (8 MB splits), then ONE
         # salted repartition on (warc_day, url-bucket) that both balances
-        # the write and bounds output file count; n_days_hint=4 sizes the
-        # write stage at 4x the (day,bucket) combo count so no task draws
-        # two combos (hash-packing straggler — see compact_for_write)
-        extracted = compact_for_write(extract_pages(pages), files_per_day=8, n_days_hint=4)
+        # the write and bounds output file count (see compact_for_write
+        # for the write-task rule)
+        extracted = compact_for_write(extract_pages(pages), files_per_day=8)
         extracted.write.mode("overwrite").partitionBy("warc_day").parquet(out)
         walls.append(time.time() - t0)
     wall = min(walls)

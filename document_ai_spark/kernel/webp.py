@@ -70,7 +70,6 @@ _DIST_MAP = (
     (8, 0), (4, 7), (-4, 7), (7, 4), (-7, 4), (8, 1), (8, 2), (6, 6),
     (-6, 6), (2, 8), (-2, 8), (8, 3), (-8, 3), (5, 7), (-5, 7), (7, 5),
     (-7, 5), (8, 4), (4, 8), (-4, 8), (8, 5), (-8, 5), (5, 8), (-5, 8),
-    (8, 6), (6, 8), (-6, 8),
 )
 
 

@@ -446,11 +446,13 @@ def remove_boilerplate_lines(
         .groupBy("lh")
         .agg(F.count_distinct("id").alias("line_df"))
         .filter(F.col("line_df") > max_line_df)
-        .select("lh")
+        .select(F.col("lh").alias("hot_lh"))
     )
+    # hot derives from hashed, so the join keys get distinct names: the
+    # condition never rests on Spark disambiguating a self-join
     kept = hashed.join(
         F.broadcast(hot),
-        (hashed["lh"] == hot["lh"]) & (F.trim(hashed["line"]) != F.lit("")),
+        (F.col("lh") == F.col("hot_lh")) & (F.trim(F.col("line")) != F.lit("")),
         "left_anti",
     )
     agg = kept.groupBy("id").agg(

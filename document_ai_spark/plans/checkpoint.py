@@ -8,27 +8,38 @@ partition-granular:
 
     checkpoint(run_id string, group_id int, status string,
                n_docs long, n_ok long, n_err long, bytes_in long,
-               started_at timestamp, finished_at timestamp, app_id string)
+               started_at double, finished_at double, app_id string)
 
-The unit of resume is a BUCKET GROUP: group_id = xxhash64(url, GROUP_SALT)
-mod n_groups — a pure function of the url, so group membership is identical
-across runs, partition counts and cluster sizes. A group is re-extracted iff
-no 'done' row exists for it. Each group's output goes to its own
-``group=<g>/`` subdirectory written with mode=overwrite, so re-running a
-half-failed group is idempotent (exactly-once output under retry).
+The unit of resume is a CHECKPOINT KEY, stored in group_id: a warc_day
+partition value (``pipeline.day_group_key``) or a url bucket,
+xxhash64(url, GROUP_SALT) mod n_groups. Both are pure functions of the
+row, so key membership is identical across runs, partition counts and
+cluster sizes. A key is re-extracted iff no 'done' row exists for it.
 
-At 100 TB scale the group count is sized so one group ≈ one comfortable
-Spark job (e.g. 1024 groups => ~100 GB/group); locally tests use 4-8.
+One extraction job covers every pending key and writes its output with
+dynamic partition overwrite, so re-running a key replaces exactly that
+key's partitions (exactly-once output under retry). The job appends one
+row per key after its write commits; a crash before the append re-runs
+that job's keys.
+
+The table is a directory of small parquet files, one per key, written and
+read on the driver with pyarrow. A missing directory is an empty
+checkpoint; any file that cannot be read raises, because treating it as
+empty would silently re-run the whole crawl.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 GROUP_SALT = 0xD0C  # fixed salt for group assignment (distinct from task salt)
 
@@ -46,28 +57,28 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("app_id", T.StringType()),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(CHECKPOINT_SCHEMA)
 
 
 def checkpoint_path(run_dir: str) -> str:
     return os.path.join(run_dir, "checkpoint")
 
 
-def read_checkpoint(spark: SparkSession, run_dir: str) -> DataFrame:
+def _read_table(run_dir: str) -> pa.Table:
     path = checkpoint_path(run_dir)
     if not os.path.isdir(path):
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
-    try:
-        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        return _ARROW_SCHEMA.empty_table()
+    return pq.read_table(path, schema=_ARROW_SCHEMA)
+
+
+def read_checkpoint(spark: SparkSession, run_dir: str) -> DataFrame:
+    return spark.createDataFrame(_read_table(run_dir))
 
 
 def done_groups(spark: SparkSession, run_dir: str) -> set[int]:
-    cp = read_checkpoint(spark, run_dir)
-    return {
-        r["group_id"]
-        for r in cp.filter(F.col("status") == "done").select("group_id").distinct().collect()
-    }
+    """Keys with a 'done' row, read on the driver without a Spark job."""
+    t = _read_table(run_dir)
+    return {g for g, s in zip(t["group_id"].to_pylist(), t["status"].to_pylist()) if s == "done"}
 
 
 def append_done(
@@ -80,31 +91,30 @@ def append_done(
 ) -> None:
     # driver-side pyarrow append (one tiny file, unique name): a Spark
     # write job for one row costs ~300 ms of scheduling, which multiplied
-    # by thousands of groups is real money; the parquet layout is
-    # identical so read_checkpoint is unchanged. On a cluster this row
-    # goes through the Iceberg catalog instead.
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    # by thousands of keys is real money. On a cluster this row goes
+    # through the Iceberg catalog instead.
     path = checkpoint_path(run_dir)
     os.makedirs(path, exist_ok=True)
     table = pa.table(
         {
             "run_id": [run_id],
-            "group_id": pa.array([group_id], pa.int32()),
+            "group_id": [group_id],
             "status": ["done"],
-            "n_docs": pa.array([int(counters.get("n_docs", 0))], pa.int64()),
-            "n_ok": pa.array([int(counters.get("n_ok", 0))], pa.int64()),
-            "n_err": pa.array([int(counters.get("n_err", 0))], pa.int64()),
-            "bytes_in": pa.array([int(counters.get("bytes_in", 0))], pa.int64()),
-            "started_at": pa.array([float(started_at)], pa.float64()),
-            "finished_at": pa.array([float(time.time())], pa.float64()),
+            "n_docs": [int(counters.get("n_docs", 0))],
+            "n_ok": [int(counters.get("n_ok", 0))],
+            "n_err": [int(counters.get("n_err", 0))],
+            "bytes_in": [int(counters.get("bytes_in", 0))],
+            "started_at": [float(started_at)],
+            "finished_at": [float(time.time())],
             "app_id": [spark.sparkContext.applicationId],
-        }
+        },
+        schema=_ARROW_SCHEMA,
     )
-    pq.write_table(table, os.path.join(path, f"cp-{run_id}-{group_id}-{_uuid.uuid4().hex[:8]}.parquet"))
+    # written under a hidden name, then renamed: a crash mid-write leaves a
+    # file every reader skips, not one that fails every later read
+    name = f"cp-{run_id}-{group_id}-{uuid.uuid4().hex[:8]}.parquet"
+    pq.write_table(table, os.path.join(path, "." + name))
+    os.replace(os.path.join(path, "." + name), os.path.join(path, name))
 
 
 def metrics_rollup(spark: SparkSession, run_dir: str) -> DataFrame:

@@ -1,16 +1,21 @@
 """End-to-end extraction pipeline with checkpoint/resume (SURVEY.md §3.1).
 
-One lazy DataFrame plan per bucket group:
+Each call runs ONE Spark job over every checkpoint key not yet done:
 
     read pages (parquet/Iceberg layout, partition+column pruned)
-      -> filter(group_id == g)                  # pure fn of url
-      -> repartition(P, salted url-hash)        # X2 skew defusal
+      -> filter(key IN pending keys)            # a day filter prunes files
       -> mapInArrow(extract_batch)              # U1+F1, Arrow batches
-      -> write group=<g>/ partitioned by warc_day, mode=overwrite
-    then append 'done' row + counters to the checkpoint table.
+      -> observe per-key n_docs, n_err, bytes_in
+      -> repartition(warc_day, url bucket)      # compact_for_write
+      -> write partitionBy(key, warc_day), dynamic partition overwrite
+    then append one 'done' row per key, from the observed counters.
 
-Re-running the same (pages_path, out_dir, run_dir) skips done groups —
-resume at partition(group) granularity, exactly-once output.
+A key is a warc_day partition value (:func:`run_extraction_by_day`, layout
+``warc_day=<d>/``) or a url bucket (:func:`run_extraction`, layout
+``group=<g>/warc_day=<d>/``). Re-running the same (pages_path, out_dir,
+run_dir) skips done keys: resume at partition granularity. A crash before
+the checkpoint append re-runs that job's keys, and the dynamic overwrite
+replaces exactly their partitions, so the output stays exactly-once.
 """
 
 from __future__ import annotations
@@ -19,7 +24,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from document_ai_spark.functions.hashing import salted_bucket
@@ -42,52 +47,93 @@ def read_source(spark: SparkSession, pages_path: str, source_format: str = "parq
     return read_pages(spark, pages_path)
 
 
-def group_dir(out_dir: str, group_id: int) -> str:
-    return os.path.join(out_dir, f"group={group_id}")
-
-
 def compact_for_write(
     df: DataFrame,
     files_per_day: int,
     id_col: str = "url",
-    num_tasks: int | None = None,
-    n_days_hint: int | None = None,
 ) -> DataFrame:
-    """Shuffle so `write.partitionBy("warc_day")` emits ~files_per_day files
-    per day instead of (tasks x days) small files.
+    """Shuffle so `write.partitionBy(..., "warc_day")` emits at most
+    files_per_day files per day directory instead of one per upstream task.
 
     Each row gets a bucket = xxhash64(url) mod files_per_day; repartitioning
     on (warc_day, bucket) puts every (day, bucket) combo in exactly one
-    task, so total output files == distinct days x files_per_day no matter
-    how many tasks ran upstream — the small-files guard that matters at
-    10^12 docs (a 1000-executor job would otherwise write days x tasks
-    files). The shuffle moves only the extracted output (much smaller than
-    the html input), and the bucket is a pure function of url, so output
-    bytes stay independent of parallelism.
+    task, so no day directory gets more than files_per_day files however
+    many tasks ran upstream — the small-files guard that matters at 10^12
+    docs (a 1000-executor job would otherwise write days x tasks files).
+    The shuffle moves only the extracted output (much smaller than the
+    html input), and the bucket is a pure function of url, so output bytes
+    stay independent of parallelism.
 
-    File count stays == distinct days x files_per_day for ANY task count
-    (each combo hashes wholly into one task), so ``num_tasks`` only sets
-    write parallelism; it is passed explicitly so AQE does NOT coalesce the
-    write stage down to a few tasks and serialize the parquet/zstd encode.
+    The file count is at most days x files_per_day, not equal to it: a
+    write task holding several combos of one day writes one file for them,
+    and an empty combo writes none. Over 4 days x 8 buckets, 4 tasks wrote
+    14 files and 128 tasks wrote 30 (two combos were empty).
 
-    TASK-COUNT RULE (measured, round 3): the write stage's unit of work is
-    one (day, bucket) combo, and HASH-packing C combos into ~C or fewer
-    tasks leaves collision stragglers (a task drawing 2-3 combos runs the
-    stage tail alone while cores idle) — at 4N parallelism that tail cost
-    the N->4N efficiency ~7-13%. Set tasks >= ~4x the combo count so the
-    expected max combos-per-task is ~1 and waves pack evenly; empty tasks
-    are ~ms each. Pass ``n_days_hint`` (number of distinct warc_day
-    values) to apply this automatically: num_tasks =
-    max(shuffle.partitions, 4 * n_days_hint * files_per_day). Explicit
-    ``num_tasks`` wins over the hint. Default without either: the
-    session's shuffle.partitions (fine whenever combos <= partitions / 4).
+    TASK-COUNT RULE: one write task per shuffle partition (the session
+    sets ``spark.sql.shuffle.partitions`` to its core count). The count is
+    passed explicitly so AQE does NOT coalesce the write stage down to a
+    few tasks and serialize the parquet/zstd encode.
     """
     bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_day))
-    if num_tasks is None:
-        num_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        if n_days_hint:
-            num_tasks = max(num_tasks, 4 * n_days_hint * files_per_day)
+    num_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(num_tasks, F.col("warc_day"), bucket)
+
+
+def _extract_pending(
+    spark: SparkSession,
+    pages: DataFrame,
+    key_name: str,
+    key: Column,
+    key_ids: dict,
+    out_dir: str,
+    run_dir: str,
+    run_id: str | None,
+    files_per_day: int,
+    **extract_kw,
+) -> dict:
+    """The one extraction job behind both entry points.
+
+    ``key`` computes the checkpoint key and gives the same value on a page
+    row and on its extracted row; ``key_ids`` maps every key value to its
+    checkpoint group_id. Keys without a 'done' row are extracted, and the
+    output is partitioned by ``key_name`` and then warc_day (warc_day
+    alone when it is the key).
+    """
+    done = cp.done_groups(spark, run_dir)
+    pending = {v: k for v, k in key_ids.items() if k not in done}
+    run_id = run_id or uuid.uuid4().hex[:12]
+    summary = {"run_id": run_id, "groups_done_before": len(done), "groups_run": len(pending)}
+    if not pending:
+        return summary
+    started = time.time()
+    values = list(pending)
+    extracted = extract_pages(pages.filter(key.isin(values)), **extract_kw)
+    extracted = extracted.withColumn(key_name, key)
+    counters, aggs = Observation(), []
+    for i, v in enumerate(values):
+        mine = F.col(key_name) == F.lit(v)
+        aggs += [
+            F.count_if(mine).alias(f"n_docs_{i}"),
+            F.count_if(mine & (F.col("kind") == "error")).alias(f"n_err_{i}"),
+            F.coalesce(F.sum(F.when(mine, F.col("bytes_in"))), F.lit(0)).alias(f"bytes_in_{i}"),
+        ]
+    # observed after the shuffle, so the counters are aggregated in the
+    # write's result stage, where each partition's update is applied once
+    # (a re-run shuffle-map task would add its update again)
+    (
+        compact_for_write(extracted, files_per_day)
+        .observe(counters, *aggs)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*dict.fromkeys([key_name, "warc_day"]))
+        .parquet(out_dir)
+    )
+    got = counters.get
+    for i, v in enumerate(values):
+        n_docs, n_err, n_bytes = (got[f"{c}_{i}"] for c in ("n_docs", "n_err", "bytes_in"))
+        stats = {"n_docs": n_docs, "n_ok": n_docs - n_err, "n_err": n_err, "bytes_in": n_bytes}
+        cp.append_done(spark, run_dir, run_id, pending[v], stats, started)
+    return summary
 
 
 def run_extraction(
@@ -98,66 +144,30 @@ def run_extraction(
     n_groups: int = 8,
     salt_partitions: int | None = None,
     run_id: str | None = None,
-    fail_after_group: int | None = None,
-    files_per_day: int | None = None,
+    files_per_day: int = 8,
     source_format: str = "parquet",
     markdown: bool = False,
 ) -> dict:
-    """Run (or resume) the full extraction job. Returns summary counters.
+    """Run (or resume) the extraction with url-bucket keys. Returns summary
+    counters.
 
-    SCALE FENCE — url-bucket mode is for tests/backfills, NOT production:
-    each of the ``n_groups`` passes filters on ``salted_bucket(url)``,
-    a predicate no file format can prune, so the source is scanned
-    ``n_groups`` times (at 100 TB with n_groups=1024 that is 1024 full
-    scans). The production path is :func:`run_extraction_by_day`, whose
-    groups are warc_day partition values — every group's filter prunes to
-    exactly its partition's files, so the corpus is read once total.
-    Bucket mode earns its keep only where day partitions are unusable
-    (unpartitioned sources, or a targeted re-run of a url subset) and the
-    corpus is small enough to rescan. tests/test_plans.py pins both the
-    fence and the day-mode pruning.
+    A key is ``salted_bucket(url, n_groups, GROUP_SALT)``, re-derived from
+    url after extraction; output goes to ``group=<g>/warc_day=<d>/``. This
+    is the mode for sources without day partitions (raw WARC) and for
+    targeted re-runs of a url subset.
 
-    ``fail_after_group`` is a test hook: raise after N groups complete to
-    simulate a mid-job crash (resume test, SURVEY.md §5.4).
+    SCALE FENCE: the bucket filter is a hash of url, which no file format
+    can prune, so every call scans the whole source once, however few keys
+    are pending. The production path is :func:`run_extraction_by_day`,
+    whose day filter prunes the scan to the pending days' files.
+    tests/test_plans.py pins both the fence and the day-mode pruning.
     """
-    run_id = run_id or uuid.uuid4().hex[:12]
-    pages = read_source(spark, pages_path, source_format)
-    done = cp.done_groups(spark, run_dir)
-    summary = {"run_id": run_id, "groups_done_before": len(done), "groups_run": 0}
-
-    completed = 0
-    for g in range(n_groups):
-        if g in done:
-            continue
-        started = time.time()
-        part = pages.filter(salted_bucket(F.col("url"), n_groups, cp.GROUP_SALT) == g)
-        extracted = extract_pages(part, salt_partitions=salt_partitions, markdown=markdown)
-        if files_per_day:
-            extracted = compact_for_write(extracted, files_per_day)
-        gdir = group_dir(out_dir, g)
-        (
-            extracted.write.mode("overwrite")
-            .partitionBy("warc_day")
-            .parquet(gdir)
-        )
-        # counters from the committed files (columnar read of 2 small cols)
-        stats = (
-            spark.read.parquet(gdir)
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.when(F.col("kind") != "error", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("kind") == "error", 1).otherwise(0)).alias("n_err"),
-                F.sum("bytes_in").alias("bytes_in"),
-            )
-            .collect()[0]
-            .asDict()
-        )
-        cp.append_done(spark, run_dir, run_id, g, stats, started)
-        summary["groups_run"] += 1
-        completed += 1
-        if fail_after_group is not None and completed >= fail_after_group:
-            raise RuntimeError(f"injected failure after {completed} groups (test hook)")
-    return summary
+    group = salted_bucket(F.col("url"), n_groups, cp.GROUP_SALT)
+    return _extract_pending(
+        spark, read_source(spark, pages_path, source_format), "group", group,
+        {g: g for g in range(n_groups)}, out_dir, run_dir, run_id, files_per_day,
+        salt_partitions=salt_partitions, markdown=markdown,
+    )
 
 
 def load_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -202,60 +212,19 @@ def run_extraction_by_day(
     pages_path: str,
     out_dir: str,
     run_dir: str,
-    concurrency: int = 2,
     files_per_day: int = 8,
     run_id: str | None = None,
     markdown: bool = False,
 ) -> dict:
-    """Production day-partitioned extraction with concurrent group jobs.
+    """Production day-partitioned extraction. Returns summary counters.
 
-    The resume unit is the warc_day PARTITION (exactly the north rule's
-    "resume at partition granularity"): unlike the url-bucket groups above,
-    a day filter is partition-PRUNED at the scan — each group job reads
-    only its own files, so G groups cost one total scan, not G scans.
-
-    Groups are submitted from a small driver-side thread pool: Spark
-    stages are barriers within one job, so a lone job idles cores in the
-    write stage's tail; with 2-3 concurrent day jobs one day's (small)
-    write overlaps the next day's scan+extract and the executor stays
-    saturated. Same technique on a real cluster (concurrent jobs share the
-    scheduler). Each day's output dir is overwritten atomically per day =>
-    re-running a half-finished day is exactly-once; checkpoint appends are
-    serialized with a lock.
+    A key is a warc_day PARTITION value (exactly the north rule's "resume
+    at partition granularity"): the filter on pending days is
+    partition-PRUNED at the scan, so the job reads only those days' files.
+    Output goes to ``warc_day=<d>/``.
     """
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    run_id = run_id or uuid.uuid4().hex[:12]
-    done = cp.done_groups(spark, run_dir)
-    days = list_days(pages_path)
-    lock = threading.Lock()
-    summary = {"run_id": run_id, "groups_done_before": len(done), "groups_run": 0}
-
-    def do_day(day):
-        started = time.time()
-        part = read_pages(spark, pages_path).filter(F.col("warc_day") == day)
-        extracted = compact_for_write(
-            extract_pages(part, markdown=markdown), files_per_day, n_days_hint=1
-        )
-        gdir = os.path.join(out_dir, f"warc_day={day}")
-        extracted.drop("warc_day").write.mode("overwrite").parquet(gdir)
-        stats = (
-            spark.read.parquet(gdir)
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.when(F.col("kind") != "error", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("kind") == "error", 1).otherwise(0)).alias("n_err"),
-                F.sum("bytes_in").alias("bytes_in"),
-            )
-            .collect()[0]
-            .asDict()
-        )
-        with lock:
-            cp.append_done(spark, run_dir, run_id, day_group_key(day), stats, started)
-            summary["groups_run"] += 1
-
-    todo = [d for d in days if day_group_key(d) not in done]
-    with ThreadPoolExecutor(max_workers=max(1, concurrency)) as pool:
-        list(pool.map(do_day, todo))
-    return summary
+    keys = {d: day_group_key(d) for d in list_days(pages_path)}
+    return _extract_pending(
+        spark, read_pages(spark, pages_path), "warc_day", F.col("warc_day"), keys,
+        out_dir, run_dir, run_id, files_per_day, markdown=markdown,
+    )

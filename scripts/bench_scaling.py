@@ -113,23 +113,15 @@ def worker(cores: int, corpus: str, out: str) -> None:
     # efficiency criterion measures)
     warm_out = out + "_warm"
     shutil.rmtree(warm_out, ignore_errors=True)
-    warm = compact_for_write(
-        extract_pages(pages.limit(2000)), files_per_day=FILES_PER_DAY, n_days_hint=4
-    )
+    warm = compact_for_write(extract_pages(pages.limit(2000)), files_per_day=FILES_PER_DAY)
     warm.write.mode("overwrite").partitionBy("warc_day").parquet(warm_out)
     shutil.rmtree(warm_out, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    # single-job plan: at bench scale one job already keeps the executor
-    # ~90% busy, and per-group fixed costs outweigh barrier overlap; the
-    # day-grouped concurrent variant (run_extraction_by_day) wins only
-    # when each group carries enough data to amortize its job overhead
-    # n_days_hint=4 (the corpus spans 4 warc_days): tasks = 4x combos so
-    # no write task draws multiple (day,bucket) combos — the hash-packing
-    # straggler that otherwise eats the 4N tail (see compact_for_write)
-    extracted = compact_for_write(
-        extract_pages(pages), files_per_day=FILES_PER_DAY, n_days_hint=4
-    )
+    # single-job plan, the same one run_extraction_by_day submits: one
+    # job over every day, so per-job fixed costs are paid once (see
+    # compact_for_write for the write-task rule)
+    extracted = compact_for_write(extract_pages(pages), files_per_day=FILES_PER_DAY)
     extracted.write.mode("overwrite").partitionBy("warc_day").parquet(out)
     wall = time.time() - t0
     print(

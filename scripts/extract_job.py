@@ -7,17 +7,20 @@ Ship the package alongside the job and run it on a cluster:
         scripts/extract_job.py <pages_dir> <out_dir> [n_groups] [salt_partitions] [files_per_day] \
         [--by-day] [--warc] [--markdown]
 
-Flags: --by-day resumes at warc_day-partition granularity with 2-3
-concurrent day jobs (partition-pruned scans; n_groups/salt ignored);
+Flags: --by-day resumes at warc_day-partition granularity (the scan is
+partition-pruned to the pending days; n_groups/salt ignored);
 --warc reads raw .warc/.warc.gz files instead of the Parquet table
 (per-file parallelism; pair with salt_partitions to rebalance);
 --markdown emits structure-marked text (heading/list markers) instead of
 plain text — the corpus shape for markdown-structure chunking.
 
-The job is resumable: re-submitting with the same <out_dir> skips bucket
-groups already recorded 'done' in <out_dir>/_checkpoint (exactly-once via
-per-group overwrite; see document_ai_spark/plans/pipeline.py). On a real
-cluster the parquet paths become Iceberg tables — the plan is unchanged.
+Each submission runs one Spark job over the checkpoint keys (url buckets,
+or days with --by-day) not yet recorded 'done' in <out_dir>/_checkpoint,
+so re-submitting with the same <out_dir> resumes. The write uses dynamic
+partition overwrite: a re-run replaces exactly the pending keys'
+partitions and leaves _checkpoint in place (exactly-once; see
+document_ai_spark/plans/pipeline.py). On a real cluster the parquet paths
+become Iceberg tables — the plan is unchanged.
 """
 
 from __future__ import annotations

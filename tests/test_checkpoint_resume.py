@@ -1,22 +1,52 @@
 """Checkpoint/resume + exactly-once semantics (SURVEY.md X5, §5.4)."""
 
 import os
+import shutil
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from document_ai_spark.plans import checkpoint as cp
 from document_ai_spark.plans.checkpoint import done_groups, metrics_rollup
-from document_ai_spark.plans.pipeline import load_extracted, run_extraction
+from document_ai_spark.plans.pipeline import (
+    day_group_key,
+    load_extracted,
+    run_extraction,
+    run_extraction_by_day,
+)
+
+
+def _drop_checkpoint_rows(run, keys):
+    """Delete the checkpoint files of ``keys``: the state a crash between
+    the output commit and those keys' checkpoint appends leaves behind."""
+    path = cp.checkpoint_path(run)
+    for name in os.listdir(path):
+        if int(name.split("-")[2]) in keys:  # cp-<run_id>-<key>-<uuid>.parquet
+            os.remove(os.path.join(path, name))
+
+
+def _files(d):
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_mtime_ns
+        for root, _, names in os.walk(d)
+        for f in names
+        if f.endswith(".parquet")
+    }
 
 
 def test_crash_resume_exactly_once(spark, pages_dir, tmp_path):
     out, run = str(tmp_path / "out"), str(tmp_path / "run")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extraction(spark, pages_dir, out, run, n_groups=4, fail_after_group=2)
-    assert len(done_groups(spark, run)) == 2
+    run_extraction(spark, pages_dir, out, run, n_groups=4)
+    _drop_checkpoint_rows(run, [1, 3])
+    assert done_groups(spark, run) == {0, 2}
+    kept = {f: t for f, t in _files(out).items() if "/group=0/" in f or "/group=2/" in f}
 
     s = run_extraction(spark, pages_dir, out, run, n_groups=4)
     assert s["groups_done_before"] == 2 and s["groups_run"] == 2
+    assert done_groups(spark, run) == {0, 1, 2, 3}
+    # only the re-run keys' partitions were rewritten
+    assert {f: t for f, t in _files(out).items() if f in kept} == kept
 
     df = load_extracted(spark, out)
     n, nd = df.count(), df.select("url").distinct().count()
@@ -40,6 +70,93 @@ def test_metrics_rollup_counters(spark, pages_dir, tmp_path):
     assert m["n_err"] == 1 and m["bytes_in"] > 0
 
 
+@pytest.mark.parametrize("key", ["day", "group"])
+def test_checkpoint_counters_match_output(spark, pages_dir, tmp_path, key):
+    """The counters observed during the write equal a groupBy of what the
+    write committed, key by key."""
+    out, run = str(tmp_path / "out"), str(tmp_path / "run")
+    if key == "day":
+        run_extraction_by_day(spark, pages_dir, out, run)
+        col, key_id = "warc_day", lambda d: day_group_key(str(d))
+    else:
+        run_extraction(spark, pages_dir, out, run, n_groups=4)
+        col, key_id = "group", int
+    want = {
+        key_id(r[col]): (r["n_docs"], r["n_err"], r["bytes_in"])
+        for r in load_extracted(spark, out)
+        .groupBy(col)
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.count_if(F.col("kind") == "error").alias("n_err"),
+            F.sum("bytes_in").alias("bytes_in"),
+        )
+        .collect()
+    }
+    got = {
+        r["group_id"]: (r["n_docs"], r["n_err"], r["bytes_in"])
+        for r in cp.read_checkpoint(spark, run).collect()
+    }
+    assert got == want and sum(n for n, _, _ in got.values()) == 200
+
+
+@pytest.mark.parametrize("key", ["day", "group"])
+def test_checkpoint_inside_out_dir_survives_rerun(spark, pages_dir, tmp_path, key):
+    """scripts/extract_job.py keeps its checkpoint at <out_dir>/_checkpoint;
+    a re-run that writes must not delete it (nor the done keys' output)."""
+    out = str(tmp_path / "out")
+    run = os.path.join(out, "_checkpoint")
+
+    def job():
+        if key == "day":
+            return run_extraction_by_day(spark, pages_dir, out, run)
+        return run_extraction(spark, pages_dir, out, run, n_groups=4)
+
+    job()
+    done = done_groups(spark, run)
+    redo = sorted(done)[0]
+    _drop_checkpoint_rows(run, [redo])
+    s = job()
+    assert s["groups_run"] == 1 and s["groups_done_before"] == len(done) - 1
+    assert done_groups(spark, run) == done
+    df = load_extracted(spark, out)
+    assert df.count() == df.select("url").distinct().count() == 200
+
+
+def test_unreadable_checkpoint_file_raises(spark, tmp_path):
+    """A checkpoint file that cannot be read must raise when the checkpoint
+    is read, never turn into an empty checkpoint that re-runs every key."""
+    run = str(tmp_path / "run")
+    cp.append_done(spark, run, "r1", 0, {"n_docs": 5}, 0.0)
+    with open(os.path.join(cp.checkpoint_path(run), "cp-r1-1-corrupt.parquet"), "wb") as f:
+        f.write(b"PAR1 this is not a parquet footer")
+    with pytest.raises(pa.ArrowInvalid):
+        cp.read_checkpoint(spark, run)
+    with pytest.raises(pa.ArrowInvalid):
+        done_groups(spark, run)
+    # a checkpoint that was never written is empty, not an error
+    assert done_groups(spark, str(tmp_path / "no_run")) == set()
+
+
+def test_torn_checkpoint_append_is_skipped(spark, tmp_path, monkeypatch):
+    """A crash in the middle of one checkpoint append leaves that key not
+    done and the checkpoint readable."""
+    import pyarrow.parquet as pq
+
+    run = str(tmp_path / "run")
+    cp.append_done(spark, run, "r1", 0, {"n_docs": 5}, 0.0)
+
+    def torn_write(table, where, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1")
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="disk gone"):
+        cp.append_done(spark, run, "r1", 1, {"n_docs": 5}, 0.0)
+    monkeypatch.undo()
+    assert done_groups(spark, run) == {0}
+
+
 def test_output_partitioned_by_day(spark, pages_dir, tmp_path):
     out, run = str(tmp_path / "out"), str(tmp_path / "run")
     run_extraction(spark, pages_dir, out, run, n_groups=2)
@@ -47,19 +164,12 @@ def test_output_partitioned_by_day(spark, pages_dir, tmp_path):
     assert len(days) == 4  # generator spreads warc_ts over 4 days
 
 
-def test_day_partitioned_concurrent_pipeline(spark, pages_dir, tmp_path):
-    """run_extraction_by_day: partition-pruned day groups run from a thread
-    pool; output must be byte-identical to the bucket-group pipeline, and
-    re-running must skip all done days."""
-    from document_ai_spark.plans.pipeline import (
-        load_extracted,
-        run_extraction,
-        run_extraction_by_day,
-    )
-
+def test_day_partitioned_pipeline(spark, pages_dir, tmp_path):
+    """run_extraction_by_day: partition-pruned day keys in one job; output
+    must be byte-identical to the bucket-key pipeline, and re-running must
+    skip all done days."""
     s1 = run_extraction_by_day(
-        spark, pages_dir, str(tmp_path / "day_out"), str(tmp_path / "day_run"),
-        concurrency=3, files_per_day=2,
+        spark, pages_dir, str(tmp_path / "day_out"), str(tmp_path / "day_run"), files_per_day=2
     )
     assert s1["groups_run"] > 0
     run_extraction(
@@ -74,8 +184,7 @@ def test_day_partitioned_concurrent_pipeline(spark, pages_dir, tmp_path):
     assert fp(str(tmp_path / "day_out")) == fp(str(tmp_path / "grp_out"))
 
     s2 = run_extraction_by_day(
-        spark, pages_dir, str(tmp_path / "day_out"), str(tmp_path / "day_run"),
-        concurrency=3,
+        spark, pages_dir, str(tmp_path / "day_out"), str(tmp_path / "day_run")
     )
     assert s2["groups_run"] == 0 and s2["groups_done_before"] == s1["groups_run"]
 
@@ -85,10 +194,6 @@ def test_day_resume_keyed_on_day_value_not_index(spark, pages_dir, tmp_path):
     lexically-earlier day partition appears between runs (normal
     incremental-crawl case), index-keyed resume would silently skip the new
     day and re-run a done one."""
-    import shutil
-
-    from document_ai_spark.plans.pipeline import day_group_key, run_extraction_by_day
-
     days = sorted(d for d in os.listdir(pages_dir) if d.startswith("warc_day="))
     assert len(days) >= 2
     src = str(tmp_path / "pages")
@@ -97,12 +202,12 @@ def test_day_resume_keyed_on_day_value_not_index(spark, pages_dir, tmp_path):
     for d in days[1:]:
         shutil.copytree(os.path.join(pages_dir, d), os.path.join(src, d))
     out, run = str(tmp_path / "out"), str(tmp_path / "run")
-    s1 = run_extraction_by_day(spark, src, out, run, concurrency=2)
+    s1 = run_extraction_by_day(spark, src, out, run)
     assert s1["groups_run"] == len(days) - 1
 
     # the earlier day arrives; ONLY it must run, everything done stays done
     shutil.copytree(os.path.join(pages_dir, days[0]), os.path.join(src, days[0]))
-    s2 = run_extraction_by_day(spark, src, out, run, concurrency=2)
+    s2 = run_extraction_by_day(spark, src, out, run)
     assert s2["groups_run"] == 1 and s2["groups_done_before"] == len(days) - 1
 
     new_day = days[0].split("=", 1)[1]

@@ -5,6 +5,7 @@ orders of magnitude at 100 TB even when results stay correct."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -82,10 +83,31 @@ def test_compact_write_shuffle_not_aqe_coalesced(spark, pages_dir):
     assert n == expected
 
 
+def test_compact_write_file_count_bound(spark, pages_dir, tmp_path):
+    """Each day directory gets at most min(files_per_day, write tasks)
+    files, and the write runs one task per shuffle partition."""
+    from document_ai_spark.operators.extraction import extract_pages
+    from document_ai_spark.plans.pipeline import compact_for_write, read_pages
+
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for files_per_day in (1, 4):
+        pages = read_pages(spark, pages_dir)
+        df = compact_for_write(extract_pages(pages), files_per_day=files_per_day)
+        tasks = df.rdd.getNumPartitions()
+        assert tasks == partitions
+        out = str(tmp_path / f"fpd{files_per_day}")
+        df.write.partitionBy("warc_day").parquet(out)
+        days = [d for d in os.listdir(out) if d.startswith("warc_day=")]
+        files = [
+            [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")] for d in days
+        ]
+        assert len(days) == 4
+        assert all(1 <= len(fs) <= min(files_per_day, tasks) for fs in files)
+
+
 def test_day_mode_group_filter_is_partition_pruned(spark, pages_dir):
     """The production path (run_extraction_by_day) filters on warc_day — a
-    PARTITION column — so each group job's scan reads only its own
-    partition's files: G groups cost ONE total corpus scan."""
+    PARTITION column — so its scan reads only the pending days' files."""
     from pyspark.sql import functions as F
 
     from document_ai_spark.plans.pipeline import list_days, read_pages
@@ -99,8 +121,8 @@ def test_day_mode_group_filter_is_partition_pruned(spark, pages_dir):
 
 def test_bucket_mode_group_filter_cannot_prune(spark, pages_dir):
     """The url-bucket group filter is a hash of url — NOT prunable, which
-    is why run_extraction's docstring fences bucket mode to tests/backfills
-    (n_groups passes = n_groups full scans at scale)."""
+    is why run_extraction's docstring fences bucket mode: every call scans
+    the whole source, however few buckets are pending."""
     from pyspark.sql import functions as F
 
     from document_ai_spark.plans.checkpoint import GROUP_SALT
