@@ -1,7 +1,8 @@
 """Per-round benchmark (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS, else the CPUs this process
+may run on] and prints ONE JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <float>,
@@ -29,8 +30,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from document_ai_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 
 # headline driver queries (subset of __spark_entry__.queries() spanning
 # scan/filter/agg, joins, top-k, dedup family, text analysis, retrieval)

@@ -110,15 +110,9 @@ def embed_udf(texts: pd.Series) -> pd.Series:
 def cosine_sim(a, b):
     """Column expression: cosine similarity of two array<float> columns,
     computed in double precision JVM-side (zip_with + aggregate — no
-    Python). Null-safe: returns null if either side is null."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
+    Python). A null or zero vector scores 0.0; unequal lengths give null."""
+    na, nb = l2_norm(a), l2_norm(b)
+    return F.when((na > 0) & (nb > 0), dot_product(a, b) / (na * nb)).otherwise(F.lit(0.0))
 
 
 def l2_norm(v):

@@ -463,23 +463,25 @@ def _parse_xref_chain(payload: bytes):
     return entries, encrypted
 
 
-_TRAILER_KW_RE = re.compile(rb"trailer\b")
+# all that may follow a file's last trailer dict
+_TRAILER_END_RE = re.compile(rb"\s*(?:startxref\s+\d+\s*)?%%EOF\s*\Z")
 
 
 def _is_encrypted_tail(payload: bytes) -> bool:
     """Cheap /Encrypt probe over the file TAIL (last 4 KB — where every
     revision's newest trailer lives; spec requires /Encrypt in each
-    update's trailer, so the newest one always carries it). Scoped to
-    trailer DICTS in the tail window rather than the whole payload so a
-    literal '/Encrypt' inside some content stream can never false-
-    positive a good document into an error row. The xref chain walk
+    update's trailer, so the newest one always carries it). Only the
+    LAST trailer dict counts, and only when nothing but whitespace, an
+    optional ``startxref <n>`` and ``%%EOF`` follows it, so a literal
+    'trailer << /Encrypt … >>' inside some content stream can never
+    false-positive a good document into an error row. The xref chain walk
     (:func:`_parse_xref_chain`) independently covers xref-stream files,
     whose /Encrypt sits in the stream dict, not a classic trailer."""
     tail = payload[-4096:]
-    for m in _TRAILER_KW_RE.finditer(tail):
-        if _ENCRYPT_RE.search(_balanced_dict(tail, m.end())):
-            return True
-    return False
+    i = tail.rfind(b"trailer")
+    tdict = _balanced_dict(tail, i + len(b"trailer")) if i >= 0 else b""
+    end = tail.find(tdict, i) + len(tdict)
+    return bool(tdict and _ENCRYPT_RE.search(tdict) and _TRAILER_END_RE.match(tail, end))
 
 
 def _apply_xref_overlay(payload: bytes, objs: dict, packed: dict) -> None:

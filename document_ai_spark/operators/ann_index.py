@@ -1,54 +1,43 @@
 """Materialized ANN index tables: build once, probe pruned.
 
-Closes the gap the round-3 verdict named ("What's missing #4"): the
-query-time paths in operators/similarity.py compute the sketch / centroid
-assignment over the WHOLE corpus per query and only *document* that at
-scale the assignment is a pre-materialized partition column. This module
-IS that scale path, demonstrated end-to-end:
+The query-time paths in operators/similarity.py assign every vector its
+bucket per query. This module is their scale path: the same steps —
+``similarity._assign_buckets``, an ``isin`` over the probe set
+(``_probe_clusters`` / ``_probe_prefixes``, computed driver-side from
+k-element metadata), ``brute_force_topk`` — with the assignment written
+once as a partition column:
 
-  * ``build_ann_index`` assigns every vector its coarse bucket — IVF
-    nearest-centroid id (JVM ``array_max`` expression, no UDF) or LSH
-    sign-sketch prefix — and writes the embedding table IDENTITY-
-    PARTITIONED by that bucket id via ``Catalog.write_partitioned``:
-    one directory (Parquet) / identity transform (Iceberg) per bucket.
-  * ``ivf_topk_indexed`` / ``lsh_topk_indexed`` compute the probe set
-    driver-side (nprobe nearest centroids / all prefixes within hamming
-    distance ``multi_probe`` — both from k-element metadata, no data
-    scan), read the index table and ``isin``-filter on the partition
-    column. Catalyst turns that into PartitionFilters at the scan: only
-    the probed directories' files are opened (tests/test_ann_index.py
-    pins the pruned file count from the executed plan). Exact cosine
-    rescoring then runs on the candidates only.
-
-At 10^12 rows this means a single-query probe reads ~nprobe/k of the
-corpus from disk rather than scanning and sketching all of it; the index
-build is one linear pass + one shuffle (the partitioned write).
+  * ``build_ann_index`` writes the embedding table IDENTITY-PARTITIONED
+    by its bucket id (IVF nearest centroid or LSH sign-sketch prefix) via
+    ``Catalog.write_partitioned``: one directory (Parquet) / identity
+    transform (Iceberg) per bucket.
+  * ``ivf_topk_indexed`` / ``lsh_topk_indexed`` read it and ``isin``-filter
+    the partition column. Catalyst turns that into PartitionFilters at the
+    scan: only the probed directories' files are opened
+    (tests/test_ann_index.py pins the pruned file count from the executed
+    plan), so a probe reads ~nprobe/k of the corpus.
 
 Reference analog: ChromaDB's persisted HNSW index (reference
 services/ai_service/main.py:56-61) — built once at ingest, probed at
-query time. Same contract (index is a table, probes touch a fraction),
-Spark-native realization (partition pruning instead of a graph walk).
+query time; here partition pruning replaces the graph walk.
 
 Determinism: centroids come from train_ivf_centroids (exact-DECIMAL
-Lloyd, similarity.py:164) and hyperplanes from blake2b — the bucket of a
-vector is a pure function of its value, so rebuilding the index at any
-parallelism yields byte-identical bucket assignment.
+Lloyd) and hyperplanes from blake2b — the bucket of a vector is a pure
+function of its value, so rebuilding the index at any parallelism yields
+byte-identical bucket assignment.
 """
 
 from __future__ import annotations
 
-from itertools import combinations
-from typing import Tuple
-
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from document_ai_spark.operators.similarity import (
+    _assign_buckets,
     _hyperplanes,
-    assign_cluster,
+    _probe_clusters,
+    _probe_prefixes,
     brute_force_topk,
-    sketch_udf,
     train_ivf_centroids,
 )
 from document_ai_spark.sources.catalog import Catalog
@@ -82,41 +71,6 @@ def _is_missing_table(exc: Exception) -> bool:
         or "TABLE_OR_VIEW_NOT_FOUND" in msg
         or "Path does not exist" in msg
     )
-
-
-def _assign_buckets(
-    emb: DataFrame,
-    method: str,
-    centroids: list | None,
-    vec_col: str,
-    n_planes: int,
-    prefix_bits: int,
-    dim: int | None = None,
-) -> Tuple[DataFrame, str, int]:
-    """The ONE bucket-assignment body shared by build and append (the
-    'bucket is a pure function' contract must not have two copies):
-    -> (indexed df, partition column, embedding dim).
-
-    ``dim`` should be passed by the caller (IVF: len(centroids[0]);
-    append: the ``<table>__meta`` sidecar) — the ``first()`` fallback is
-    a build-time convenience only and costs one driver job."""
-    if method == "ivf":
-        if centroids is None:
-            raise ValueError("ann_index: ivf assignment requires centroids")
-        return assign_cluster(emb, centroids, vec_col=vec_col), "ivf_cluster", len(centroids[0])
-    if dim is None:
-        head = emb.select(vec_col).first()
-        if head is None:
-            raise ValueError("ann_index: embedding table is empty")
-        dim = len(head[0])
-    if method == "lsh":
-        udf = sketch_udf(dim, n_planes)
-        mask = (1 << prefix_bits) - 1
-        indexed = emb.withColumn(
-            "sketch_prefix", udf(F.col(vec_col)).bitwiseAND(F.lit(mask))
-        )
-        return indexed, "sketch_prefix", dim
-    raise ValueError(f"unknown ANN index method {method!r}")
 
 
 def build_ann_index(
@@ -218,20 +172,6 @@ def append_to_ann_index(
     catalog.write_partitioned(indexed, table, [part_col], mode="append")
 
 
-def _probe_clusters(query_vec: list, centroids: list, nprobe: int) -> list:
-    """The nprobe centroid ids nearest the query by cosine (ties -> lowest
-    id) — identical ranking rule to similarity.ivf_topk."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    ranked = []
-    for i, c in enumerate(centroids):
-        ca = np.asarray(c, dtype=np.float64)
-        cn = np.linalg.norm(ca)
-        s = float(ca @ q / (cn * qn)) if cn > 0 and qn > 0 else 0.0
-        ranked.append((-s, i))
-    return [i for _, i in sorted(ranked)[:nprobe]]
-
-
 def ivf_topk_indexed(
     catalog: Catalog,
     table: str,
@@ -245,24 +185,11 @@ def ivf_topk_indexed(
     """IVF probe against a table written by build_ann_index(method='ivf'):
     the ``isin`` over the partition column becomes PartitionFilters at
     the parquet scan — only the nprobe probed directories are read.
-    nprobe == len(centroids) reads everything and is exact (same recall
-    contract as similarity.ivf_topk / q47)."""
+    nprobe == len(centroids) reads everything and is exact (q47's
+    recall contract); any nprobe returns what similarity.ivf_topk does."""
     probe = _probe_clusters(query_vec, centroids, nprobe)
     cand = catalog.read(table).filter(F.col("ivf_cluster").isin(probe))
     return brute_force_topk(cand, query_vec, k, id_col, vec_col)
-
-
-def _probe_prefixes(qprefix: int, prefix_bits: int, multi_probe: int) -> list:
-    """All prefixes within hamming distance <= multi_probe of qprefix —
-    sum_{h<=p} C(prefix_bits, h) values, enumerated driver-side."""
-    out = [qprefix]
-    for h in range(1, multi_probe + 1):
-        for flip in combinations(range(prefix_bits), h):
-            x = qprefix
-            for b in flip:
-                x ^= 1 << b
-            out.append(x)
-    return out
 
 
 def lsh_topk_indexed(
@@ -280,17 +207,8 @@ def lsh_topk_indexed(
     build_ann_index(method='lsh'): the probe set (hamming ball around the
     query's prefix) is enumerated driver-side and pushed as an ``isin``
     partition filter — the pruned-probe demonstration of q23's documented
-    scale path. Same candidate set as similarity.lsh_bucketed_topk with
-    identical parameters."""
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes)
-    qa = np.asarray(query_vec, dtype=np.float64)
-    qbits = (planes @ qa) > 0
-    qsketch = 0
-    for i, bit in enumerate(qbits):
-        if bit:
-            qsketch |= 1 << i
-    mask = (1 << prefix_bits) - 1
-    probe = _probe_prefixes(qsketch & mask, prefix_bits, multi_probe)
+    scale path. Returns what similarity.lsh_bucketed_topk does with the
+    same parameters."""
+    probe = _probe_prefixes(query_vec, n_planes, prefix_bits, multi_probe)
     cand = catalog.read(table).filter(F.col("sketch_prefix").isin(probe))
     return brute_force_topk(cand, query_vec, k, id_col, vec_col)

@@ -1,7 +1,8 @@
 """Retrieval query path: top-k -> deterministic rerank -> context fold.
 
 Spark re-expression of the reference's RAG chain (SURVEY.md §3.2):
-retrieve k=7 by cosine (reference services/ai_service/query_llm.py:33-35)
+retrieve k=7 by cosine (reference services/ai_service/query_llm.py:33-35;
+scored by similarity.brute_force_topk's kernel)
 -> LLM listwise rerank (:40-43, replaced by a deterministic lexical-overlap
 rescorer for testability) -> format_docs context fold
 (reference services/ai_service/utils/query.py:69-101: "\n\n"-joined, each
@@ -11,11 +12,11 @@ external model service, out of data-plane scope.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from document_ai_spark.functions.embed import cosine_sim, embed_text_py
-from document_ai_spark.operators.textstats import token_count
+from document_ai_spark.functions.embed import embed_text_py
+from document_ai_spark.operators.similarity import _exact_topk
 
 
 def retrieve_topk(
@@ -23,14 +24,8 @@ def retrieve_topk(
     vec_col: str = "embedding", id_col: str = "chunk_id",
 ) -> DataFrame:
     """Embed the query (driver-side, same hashed-feature function as the
-    corpus) and take exact cosine top-k."""
-    qv = embed_text_py(query)
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    return (
-        chunks.withColumn("score", F.round(cosine_sim(F.col(vec_col), q), 4))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    corpus) and take exact cosine top-k -> the chunk columns + score."""
+    return _exact_topk(chunks, embed_text_py(query), k, id_col, vec_col)
 
 
 def lexical_rerank(

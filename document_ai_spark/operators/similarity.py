@@ -2,46 +2,116 @@
 
 Capability analog of the reference's ChromaDB cosine top-k retrieval
 (k=7, hnsw:space=cosine; reference services/ai_service/query_llm.py:33-35,
-services/ai_service/main.py:56-61). Two strategies:
-
-  * brute_force_topk — exact cosine scored JVM-side (zip_with/aggregate in
-    double precision), TakeOrderedAndProject top-k (no full sort). The
-    correctness baseline and the right plan when the corpus fits a scan.
-  * lsh_bucketed_topk — random-hyperplane LSH: sign-bit sketch of each
-    vector against H fixed hyperplanes; candidates = vectors sharing a
-    sketch prefix with the query under any of R rotations; exact rescoring
-    on candidates only. Hyperplanes are blake2b-seeded => deterministic
-    across runs/cluster sizes. At 100 TB the bucket table is
-    pre-materialized and bucket-pruned at read time.
-
-batch_topk — top-k per query for a batch of queries (window row_number),
-the many-queries-at-once shape the reference's single-query loop cannot do.
+services/ai_service/main.py:56-61). One exact scorer, brute_force_topk:
+numpy per Arrow batch (``mapInArrow``, the query in the closure), each
+batch's top-k, then one global ``orderBy(score desc, id asc).limit(k)``.
+Its scores are bit-identical to ``F.round(cosine_sim(vec, q), 4)``.
+Every other top-k path runs it on a candidate set: batch_topk scores many
+queries per batch; lsh_bucketed_topk / ivf_topk keep the rows whose bucket
+(``_assign_buckets``: sign-sketch prefix / nearest centroid) is in the
+query's probe set, and operators/ann_index.py runs the same steps over a
+table partitioned by that bucket, so the probe prunes files.
 """
 
 from __future__ import annotations
 
+import decimal
 import hashlib
+from itertools import combinations
+from typing import Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from document_ai_spark.functions.embed import cosine_sim
 
+# rounding moves a score <= 0.5e-4, so a row 1e-4 below the k-th raw score
+# rounds strictly below it (rounding is monotone); 1e-4 more for float error
+_ROUND_SLACK = 2e-4
+
+
+def _seq_sum(m: np.ndarray) -> np.ndarray:
+    """Row sums accumulated left to right, as cosine_sim's aggregate() folds."""
+    return np.cumsum(m, axis=-1)[..., -1]
+
+
+def _round4(x: float) -> float:
+    """Spark's round(x, 4): HALF_UP on the shortest repr, never -0.0."""
+    d = decimal.Decimal(repr(float(x))).quantize(decimal.Decimal("0.0001"), decimal.ROUND_HALF_UP)
+    return float(d) + 0.0
+
+
+def _batch_vectors(batch: pa.RecordBatch, id_col: str, vec_col: str, dim: int) -> np.ndarray:
+    """The batch's vectors as an n x dim float64 matrix. A null vector, or
+    one holding a null, is a zero row (cosine_sim scores it 0.0); any other
+    length than the query's raises."""
+    col = batch.column(vec_col)
+    lens = pc.list_value_length(col).fill_null(dim).to_numpy(zero_copy_only=False)
+    if (lens != dim).any():
+        i = int(np.argmax(lens != dim))
+        rid = batch.column(id_col)[i].as_py()
+        raise ValueError(f"{vec_col} of {id_col}={rid!r} has {lens[i]} dims; the query has {dim}")
+    valid = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))
+    flat = col.flatten()
+    m = np.zeros((len(col), dim))
+    m[valid] = flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
+    if flat.null_count:
+        m[valid[flat.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim).any(axis=1)]] = 0.0
+    return m
+
+
+def _batch_topk(batch: pa.RecordBatch, queries: list, k: int, id_col: str, vec_col: str):
+    """Per query, the batch's top-k under (4-dp score desc, id asc) ->
+    (row indices, scores). Only rows within _ROUND_SLACK of the k-th raw
+    score are rounded and sorted."""
+    ids, m = batch.column(id_col), None
+    for q in queries:
+        if m is None or m.shape[1] != len(q):
+            m = _batch_vectors(batch, id_col, vec_col, len(q))
+            norms = np.sqrt(_seq_sum(m * m))
+        denom = norms * np.sqrt(_seq_sum(q * q))
+        ok = denom > 0
+        raw = np.where(ok, (_seq_sum(m * q) + 0.0) / np.where(ok, denom, 1.0), 0.0)
+        cand = np.arange(len(raw))
+        if 0 < k < len(raw):
+            kth = np.partition(raw, len(raw) - k)[len(raw) - k]
+            cand = np.flatnonzero(raw >= kth - _ROUND_SLACK)
+        top = sorted(zip((-_round4(raw[i]) for i in cand), ids.take(cand).to_pylist(), cand.tolist()))[:k]
+        yield np.array([i for _, _, i in top], dtype=np.int64), [-s for s, _, _ in top]
+
+
+def _scored(df: DataFrame, query_vecs: list, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Every column of ``df`` + score + _q (the query's index): the top-k
+    rows of each Arrow batch for each query."""
+    qs = [np.asarray(q, dtype=np.float64) for q in query_vecs]
+
+    def score(batches):
+        for b in batches:
+            for j, (rows, scores) in enumerate(_batch_topk(b, qs, k, id_col, vec_col)):
+                top = b.take(rows).append_column("score", pa.array(scores, pa.float64()))
+                yield top.append_column("_q", pa.array(np.full(len(rows), j, np.int32)))
+
+    extra = [T.StructField("score", T.DoubleType()), T.StructField("_q", T.IntegerType())]
+    return df.mapInArrow(score, T.StructType([*df.schema, *extra]))
+
+
+def _exact_topk(df: DataFrame, query_vec: list, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """brute_force_topk keeping every column of ``df`` (+ score)."""
+    top = _scored(df, [query_vec], k, id_col, vec_col).drop("_q")
+    return top.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+
 
 def brute_force_topk(
     emb: DataFrame, query_vec: list, k: int = 7,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k against a literal query vector."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = emb.select(
-        F.col(id_col),
-        F.round(cosine_sim(F.col(vec_col).cast("array<double>"), q), 4).alias("score"),
-    )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    """Exact cosine top-k against one query vector -> (id, score)."""
+    return _exact_topk(emb.select(id_col, vec_col), query_vec, k, id_col, vec_col).select(id_col, "score")
 
 
 def batch_topk(
@@ -49,20 +119,26 @@ def batch_topk(
     id_col: str = "vec_id", vec_col: str = "embedding",
     qid_col: str = "query_id", qvec_col: str = "query_vec",
 ) -> DataFrame:
-    """Top-k corpus vectors per query row: broadcast the query batch,
-    score all pairs, window row_number <= k. One shuffle (by query_id)."""
-    pairs = emb.crossJoin(F.broadcast(queries))
-    scored = pairs.select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.round(cosine_sim(F.col(vec_col), F.col(qvec_col)), 4).alias("score"),
+    """Top-k corpus vectors per query row -> (query_id, vec_id, score,
+    rank). The queries are collected to the driver (they were broadcast
+    before); a window over the per-batch top-k rows picks each query's k."""
+    qrows = queries.select(qid_col, qvec_col).collect()
+    keys = emb.sparkSession.createDataFrame(
+        [(j, r[0]) for j, r in enumerate(qrows)],
+        T.StructType([T.StructField("_q", T.IntegerType()), queries.schema[qid_col]]),
     )
+    top = _scored(emb.select(id_col, vec_col), [r[1] for r in qrows], k, id_col, vec_col)
     w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return (
+        top.join(F.broadcast(keys), "_q")
+        .select(qid_col, id_col, "score")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
 
 
 # ---------------------------------------------------------------------------
-# LSH (random hyperplane) bucketing
+# Candidate sets: LSH (random hyperplane) and IVF (inverted-file) buckets
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: bytes = b"document_ai_spark/lsh") -> np.ndarray:
@@ -81,6 +157,11 @@ def _hyperplanes(dim: int, n_planes: int, seed: bytes = b"document_ai_spark/lsh"
     return out
 
 
+def _sketch(planes: np.ndarray, v: np.ndarray) -> int:
+    """Sign sketch of one vector: bit p set iff v·h_p > 0."""
+    return sum(1 << i for i, bit in enumerate((planes @ v) > 0) if bit)
+
+
 def sketch_udf(dim: int, n_planes: int = 16):
     """pandas UDF: embedding -> integer sign-sketch (bit p set iff v·h_p>0)."""
     planes = _hyperplanes(dim, n_planes)
@@ -90,21 +171,74 @@ def sketch_udf(dim: int, n_planes: int = 16):
         def sk(v):
             if v is None:
                 return 0
-            a = np.asarray(v, dtype=np.float64)
-            if a.shape[0] != dim:
-                b = np.zeros(dim)
-                b[: min(dim, a.shape[0])] = a[:dim]
-                a = b
-            bits = (planes @ a) > 0
-            out = 0
-            for i, bit in enumerate(bits):
-                if bit:
-                    out |= 1 << i
-            return out
+            a = np.asarray(v, dtype=np.float64)[:dim]
+            return _sketch(planes, np.pad(a, (0, dim - a.shape[0])))
 
         return vecs.map(sk)
 
     return _udf
+
+
+def _assign_buckets(
+    emb: DataFrame,
+    method: str,
+    centroids: list | None,
+    vec_col: str,
+    n_planes: int,
+    prefix_bits: int,
+    dim: int | None = None,
+) -> Tuple[DataFrame, str, int]:
+    """The ONE bucket assignment of the query-time ANN paths and the index
+    build/append (a bucket is a pure function of the vector) -> (df +
+    bucket column, bucket column, dim). Without ``dim`` (IVF:
+    len(centroids[0]); a query: its length; append: the sidecar) LSH
+    pays one driver job for ``first()``."""
+    if method == "ivf":
+        if centroids is None:
+            raise ValueError("ann_index: ivf assignment requires centroids")
+        return assign_cluster(emb, centroids, vec_col=vec_col), "ivf_cluster", len(centroids[0])
+    if dim is None:
+        head = emb.select(vec_col).first()
+        if head is None:
+            raise ValueError("ann_index: embedding table is empty")
+        dim = len(head[0])
+    if method == "lsh":
+        udf = sketch_udf(dim, n_planes)
+        mask = (1 << prefix_bits) - 1
+        indexed = emb.withColumn(
+            "sketch_prefix", udf(F.col(vec_col)).bitwiseAND(F.lit(mask))
+        )
+        return indexed, "sketch_prefix", dim
+    raise ValueError(f"unknown ANN index method {method!r}")
+
+
+def _probe_prefixes(query_vec: list, n_planes: int, prefix_bits: int, multi_probe: int) -> list:
+    """Every sketch prefix within hamming distance ``multi_probe`` of the
+    query's — sum_{h<=p} C(prefix_bits, h) values, enumerated driver-side."""
+    planes = _hyperplanes(len(query_vec), n_planes)
+    qprefix = _sketch(planes, np.asarray(query_vec, dtype=np.float64)) & ((1 << prefix_bits) - 1)
+    out = [qprefix]
+    for h in range(1, multi_probe + 1):
+        for flip in combinations(range(prefix_bits), h):
+            x = qprefix
+            for b in flip:
+                x ^= 1 << b
+            out.append(x)
+    return out
+
+
+def _probe_clusters(query_vec: list, centroids: list, nprobe: int) -> list:
+    """The ``nprobe`` centroid ids nearest the query by cosine (ties ->
+    lowest id)."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    qn = np.linalg.norm(q)
+    ranked = []
+    for i, c in enumerate(centroids):
+        ca = np.asarray(c, dtype=np.float64)
+        cn = np.linalg.norm(ca)
+        s = float(ca @ q / (cn * qn)) if cn > 0 and qn > 0 else 0.0
+        ranked.append((-s, i))
+    return [i for _, i in sorted(ranked)[:nprobe]]
 
 
 def lsh_bucketed_topk(
@@ -120,25 +254,12 @@ def lsh_bucketed_topk(
     sum_{h<=p} C(prefix_bits, h) / 2^prefix_bits  (p=1, 8 bits => 9/256).
     prefix_bits up + multi_probe up => same recall, finer buckets — at
     10^12 rows the sketch is a partition column and bucket pruning happens
-    at the file-scan level."""
-    dim = len(query_vec)
-    udf = sketch_udf(dim, n_planes)
-    qa = np.asarray(query_vec, dtype=np.float64)
-    planes = _hyperplanes(dim, n_planes)
-    qbits = (planes @ qa) > 0
-    qsketch = 0
-    for i, bit in enumerate(qbits):
-        if bit:
-            qsketch |= 1 << i
-    mask = (1 << prefix_bits) - 1
-    sketched = emb.withColumn("sketch", udf(F.col(vec_col)))
-    xor = F.col("sketch").bitwiseAND(F.lit(mask)).bitwiseXOR(F.lit(qsketch & mask))
-    cand = sketched.filter(F.bit_count(xor) <= F.lit(multi_probe))
-    return brute_force_topk(cand, query_vec, k, id_col, vec_col)
-
-
-# ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN with deterministic centroid training
+    at the file-scan level (ann_index.lsh_topk_indexed)."""
+    sketched, part_col, _ = _assign_buckets(
+        emb, "lsh", None, vec_col, n_planes, prefix_bits, dim=len(query_vec)
+    )
+    probe = _probe_prefixes(query_vec, n_planes, prefix_bits, multi_probe)
+    return brute_force_topk(sketched.filter(F.col(part_col).isin(probe)), query_vec, k, id_col, vec_col)
 
 
 def _centroid_lits(centroids: list) -> list:
@@ -223,57 +344,9 @@ def ivf_topk(
     """IVF ANN top-k: probe the ``nprobe`` centroids nearest the query and
     exact-score only their members; nprobe == len(centroids) is exact
     (the recall dial q47 pins, same contract as the LSH path's q41). At
-    10^12 rows ``ivf_cluster`` is a partition/bucket column written at
-    index-build time, so probing prunes at the file-scan level and the
-    per-query cost is ~nprobe/k of the corpus."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    ranked = []
-    for i, c in enumerate(centroids):
-        ca = np.asarray(c, dtype=np.float64)
-        cn = np.linalg.norm(ca)
-        s = float(ca @ q / (cn * qn)) if cn > 0 and qn > 0 else 0.0
-        ranked.append((-s, i))
-    probe = [i for _, i in sorted(ranked)[:nprobe]]
-    cand = assign_cluster(emb, centroids, vec_col=vec_col).filter(
-        F.col("ivf_cluster").isin(probe)
-    )
-    return brute_force_topk(cand, query_vec, k, id_col, vec_col)
-
-
-def batch_topk_grouped(
-    emb: DataFrame, queries: DataFrame, k: int = 7,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    qid_col: str = "query_id", qvec_col: str = "query_vec",
-) -> DataFrame:
-    """batch_topk via grouped applyInPandas: per query group, one numpy
-    matrix-vector product + argpartition instead of per-pair higher-order
-    folds. Same (query_id, vec_id, score) contract as batch_topk; ~10-50x
-    less CPU per pair at 1024 dims, at the cost of shuffling the candidate
-    set by query_id (use when queries are few and candidates are many,
-    which is the retrieval norm)."""
-    pairs = emb.select(id_col, vec_col).crossJoin(F.broadcast(queries.select(qid_col, qvec_col)))
-
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        q = np.asarray(pdf[qvec_col].iloc[0], dtype=np.float64)
-        qn = np.linalg.norm(q)
-        norms = np.linalg.norm(mat, axis=1)
-        denom = norms * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(denom > 0, mat @ q / denom, 0.0)
-        scores = np.round(scores, 4)
-        ids = pdf[id_col].to_numpy()
-        # top-k with deterministic (score desc, id asc) tie-break
-        order = np.lexsort((ids, -scores))[:k]
-        return pd.DataFrame(
-            {
-                qid_col: pdf[qid_col].iloc[0],
-                id_col: ids[order],
-                "score": scores[order],
-                "rank": np.arange(1, len(order) + 1),
-            }
-        )
-
-    out_schema = f"{qid_col} long, {id_col} long, score double, rank integer"
-    return pairs.groupBy(qid_col).applyInPandas(topk, schema=out_schema)
+    10^12 rows ``ivf_cluster`` is a partition column written at index-build
+    time (ann_index.ivf_topk_indexed), so probing prunes at the file-scan
+    level and the per-query cost is ~nprobe/k of the corpus."""
+    cand, part_col, _ = _assign_buckets(emb, "ivf", centroids, vec_col, 0, 0)
+    probe = _probe_clusters(query_vec, centroids, nprobe)
+    return brute_force_topk(cand.filter(F.col(part_col).isin(probe)), query_vec, k, id_col, vec_col)

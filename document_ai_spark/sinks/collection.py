@@ -50,9 +50,10 @@ def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame, hash_col: 
     """Delete every row whose ``hash_col`` appears in ``hashes`` (J4/X7).
 
     Iceberg: `DELETE FROM t WHERE doc_hash IN (SELECT ...)`. Parquet
-    fallback: rewrite via LEFT ANTI JOIN into a temp dir, then atomic-ish
-    swap (write-then-rename keeps readers from seeing a half-deleted
-    state). Returns the number of rows deleted.
+    fallback: rewrite via LEFT ANTI JOIN into a temp dir, move the old
+    directory aside, move the rewrite in (on failure, move the old one
+    back), then remove the old one: no failure leaves ``path`` empty.
+    Returns the number of rows deleted.
     """
     cur = spark.read.parquet(path)
     doomed = hashes.select(F.col(hash_col)).distinct()
@@ -61,8 +62,14 @@ def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame, hash_col: 
     tmp = tempfile.mkdtemp(prefix="collection_rewrite_", dir=os.path.dirname(path.rstrip("/")))
     kept.write.mode("overwrite").parquet(tmp)
     n_after = spark.read.parquet(tmp).count()
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    old = tmp + "_old"
+    os.rename(path, old)
+    try:
+        os.rename(tmp, path)
+    except BaseException:
+        os.rename(old, path)
+        raise
+    shutil.rmtree(old)
     return n_before - n_after
 
 

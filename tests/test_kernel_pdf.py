@@ -1246,9 +1246,13 @@ def test_encrypted_pdf_is_labeled_not_decoded():
 
 def test_encrypt_inside_content_stream_is_not_a_false_positive():
     # the literal '/Encrypt' INSIDE page content must not label the doc:
-    # detection is scoped to trailer dicts / xref chain heads
-    payload = pdf(obj(72, 700, "mentions /Encrypt in running text prose"))
-    assert extract_document(payload)[1] == "pdf"
+    # detection is scoped to the file's last trailer dict / xref chain
+    # heads — even when the page text spells out a whole trailer dict
+    for text in (
+        "mentions /Encrypt in running text prose",
+        "trailer << /Encrypt 5 0 R >>",
+    ):
+        assert extract_document(pdf(obj(72, 700, text)))[1] == "pdf", text
 
 
 def test_xref_chain_is_total_on_garbage():

@@ -325,31 +325,83 @@ def test_frame_sample_plan(spark):
     assert by_id[3] == [0]
 
 
-def test_batch_topk_grouped_matches_window_formulation(spark):
-    """applyInPandas top-k (numpy matvec per query group) must agree with
-    the window-function batch_topk on ids, scores and ranking."""
-    import pyspark.sql.functions as F
+def test_exact_scorer_is_identical_to_cosine_sim(spark, emb):
+    """The numpy scorer must give exactly the 4-dp scores of
+    F.round(cosine_sim(...), 4): batch_topk over all pairs of the sf0.001
+    embeddings plus non-unit ramp queries, and brute_force_topk for the
+    ramps and two embeddings, whose rows must be batch_topk's for that
+    query. Also: ties break by id ascending, and k above the row count
+    returns every row."""
+    from document_ai_spark.functions.embed import cosine_sim
+    from document_ai_spark.operators.similarity import batch_topk, brute_force_topk
 
-    from document_ai_spark.operators.similarity import batch_topk, batch_topk_grouped
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("query_vec"),
+    n = emb.count()
+    dim = len(emb.first().embedding)
+    ramps = [[((-1) ** i) * (1.0 + i / s) for i in range(dim)] for s in (7.0, 3.0, 0.5)]
+    queries = emb.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("query_vec")
+    ).unionByName(
+        spark.createDataFrame(
+            [(-1 - j, q) for j, q in enumerate(ramps)], "query_id long, query_vec array<double>"
         )
     )
-    corpus = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    a = {
-        (r.query_id, r.vec_id, r.score)
-        for r in batch_topk(corpus, queries, k=5).collect()
+    ref = F.round(cosine_sim(F.col("embedding"), F.col("query_vec")), 4)
+    want = {
+        (r.query_id, r.vec_id): r.score
+        for r in emb.crossJoin(queries).select("query_id", "vec_id", ref.alias("score")).collect()
     }
-    b = {
-        (r.query_id, r.vec_id, r.score)
-        for r in batch_topk_grouped(corpus, queries, k=5).collect()
-    }
-    assert a == b and len(a) == 15
+    rows = sorted((r.query_id, r.rank, r.vec_id, r.score) for r in batch_topk(emb, queries, k=n + 5).collect())
+    assert {(q, v): s for q, _, v, s in rows} == want  # 0 differing scores
+    assert len(rows) == len(want)
+
+    own = [(i, list(emb.filter(F.col("vec_id") == i).first().embedding)) for i in (0, 7)]
+    for qid, qv in [(-1 - j, q) for j, q in enumerate(ramps)] + own:
+        exact = [(r.vec_id, r.score) for r in brute_force_topk(emb, qv, k=n + 5).collect()]
+        assert len(exact) == n
+        assert exact == [(v, s) for q, _, v, s in rows if q == qid]
+        assert exact == sorted(exact, key=lambda t: (-t[1], t[0]))
+
+    # cosines on a 4-dp boundary: 1/32 and 5/32 exactly (HALF_UP, not
+    # half-even), and row 3's 1/32 only when the products are summed left
+    # to right (its two -2^-54 terms are lost one at a time, not as a pair)
+    t = 2.0**-27
+    q = [1.0, 0.0, t, t, 0.0, 0.0, 0.0, 0.0]
+    edges = spark.createDataFrame(
+        [
+            (1, [1.0, 31.0, 0.0, 0.0, 7.0, 3.0, 2.0, 0.0]),
+            (2, [5.0, 31.0, 0.0, 0.0, 6.0, 1.0, 1.0, 0.0]),
+            (3, [1.0, 31.0, -t, -t, 7.0, 3.0, 2.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    ql = F.array(*[F.lit(x) for x in q])
+    ref = edges.select("vec_id", F.round(cosine_sim(F.col("embedding"), ql), 4).alias("score"))
+    expect = [(2, 0.1563), (1, 0.0313), (3, 0.0313)]
+    assert [tuple(r) for r in ref.orderBy(F.desc("score"), "vec_id").collect()] == expect
+    assert [tuple(r) for r in brute_force_topk(edges, q, k=3).collect()] == expect
+
+    # ties: equal vectors score equal and come out by id ascending, across
+    # partitions and Arrow batches
+    tied = spark.createDataFrame(
+        [(i, [1.0, 2.0, 2.0] if i % 3 == 0 else [float(i), 1.0, -1.0]) for i in range(600, 0, -1)],
+        "vec_id long, embedding array<float>",
+    ).repartition(5)
+    top = [(r.vec_id, r.score) for r in brute_force_topk(tied, [1.0, 2.0, 2.0], k=4).collect()]
+    assert top == [(3, 1.0), (6, 1.0), (9, 1.0), (12, 1.0)]
+
+
+def test_exact_scorer_rejects_dimension_mismatch(spark):
+    # a vector whose length differs from the query's used to score null
+    # and sort last; it must raise, naming the row. A null vector scores 0.
+    from document_ai_spark.operators.similarity import brute_force_topk
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    ok = brute_force_topk(df.filter("vec_id < 3"), [1.0, 0.0]).collect()
+    assert [(r.vec_id, r.score) for r in ok] == [(1, 1.0), (2, 0.0)]
+    with pytest.raises(Exception, match=r"ValueError: embedding of vec_id=3 has 3 dims"):
+        brute_force_topk(df, [1.0, 0.0]).collect()
 
 
 def test_repetition_features_known_values(spark):

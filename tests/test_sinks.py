@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from document_ai_spark.sinks.collection import (
@@ -43,6 +44,28 @@ def test_delete_by_hash(spark, tmp_path):
     assert n == 2
     left = {r.doc_hash for r in read_collection(spark, path).collect()}
     assert left == {f"h{i}" for i in range(10)} - {"h2", "h7"}
+
+
+def test_delete_by_hash_failed_swap_keeps_collection(spark, tmp_path, monkeypatch):
+    # the rewrite is written, then moving it into place at ``path`` fails
+    # (the first rename onto ``path``): the original collection must
+    # still be readable there
+    path = os.path.join(str(tmp_path), "col")
+    append_chunks(_chunks(spark, range(10)), path)
+    rename, failed = os.rename, []
+
+    def failing_rename(src, dst):
+        if dst == path and not failed:
+            failed.append(src)
+            raise OSError("injected rename failure")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    doomed = spark.createDataFrame([("h2",)], "doc_hash string")
+    with pytest.raises(OSError, match="injected"):
+        delete_by_hash(spark, path, doomed)
+    left = {r.doc_hash for r in read_collection(spark, path).collect()}
+    assert left == {f"h{i}" for i in range(10)}
 
 
 def test_force_readd_replaces_matching_hashes(spark, tmp_path):
