@@ -565,27 +565,37 @@ def _kernel_fingerprint() -> str:
     return h.hexdigest()[:12]
 
 
+def _extract_2k(spark, out_dir: str, markdown: bool = False) -> None:
+    """Extract the 2k-doc pages corpus (seed 42) with the production job
+    into ``out_dir``. Both it and the run's checkpoint dir are cleared
+    first, so no stale day or 'done' key survives; the run dir sits beside
+    ``out_dir`` because the oracles glob ``out_dir/*/*.parquet``."""
+    import shutil
+    import tempfile
+
+    from document_ai_spark.plans.pipeline import run_extraction_by_day
+    from document_ai_spark.sources.pages import CORPUS_VERSION, write_pages_parquet
+
+    corpus = os.path.join(tempfile.gettempdir(), f"da_spark_pages_v{CORPUS_VERSION}_2k")
+    if not os.path.isdir(corpus):
+        write_pages_parquet(corpus, 2000, seed=42)
+    run_dir = out_dir + "_run"
+    shutil.rmtree(out_dir, ignore_errors=True)
+    shutil.rmtree(run_dir, ignore_errors=True)
+    run_extraction_by_day(spark, corpus, out_dir, run_dir, files_per_day=4, markdown=markdown)
+
+
 def _ensure_extract_2k(spark) -> str:
     """Build the plain-extraction 2k parquet (q25's output) if missing —
     so queries that CONSUME it (q53) don't depend on q25 having run
     first in the same process. Keyed on corpus version AND kernel
     source fingerprint."""
-    import tempfile
-
-    from document_ai_spark.operators.extraction import extract_pages
-    from document_ai_spark.plans.pipeline import compact_for_write, read_pages
-    from document_ai_spark.sources.pages import CORPUS_VERSION, write_pages_parquet
+    from document_ai_spark.sources.pages import CORPUS_VERSION
 
     out_dir = _q25_out_dir()
     marker = os.path.join(out_dir, f"_corpus_v{CORPUS_VERSION}_k{_kernel_fingerprint()}")
-    if not os.path.isdir(out_dir) or not os.path.exists(marker):
-        corpus = os.path.join(tempfile.gettempdir(), f"da_spark_pages_v{CORPUS_VERSION}_2k")
-        if not os.path.isdir(corpus):
-            write_pages_parquet(corpus, 2000, seed=42)
-        extracted = extract_pages(read_pages(spark, corpus), salt_partitions=16)
-        compact_for_write(extracted, files_per_day=4).write.mode("overwrite").partitionBy(
-            "warc_day"
-        ).parquet(out_dir)
+    if not os.path.exists(marker):
+        _extract_2k(spark, out_dir)
         with open(marker, "w") as f:
             f.write("")
     return out_dir
@@ -598,22 +608,12 @@ def q45_markdown_chunks(spark, sf_dir):
     corpus with markdown=True (h1-h6 -> '#'-prefixes, PDF 18pt titles ->
     '# '), write day-partitioned, then chunk_by_heading over the WRITTEN
     text — one row per (url, chunk) with offsets + md5, so the DuckDB
-    oracle re-derives the identical chunking in SQL from the same parquet."""
-    import tempfile
-
+    oracle re-derives the identical chunking in SQL from the same parquet.
+    Every call extracts afresh."""
     from document_ai_spark.operators.chunking import chunk_by_heading
-    from document_ai_spark.operators.extraction import extract_pages
-    from document_ai_spark.plans.pipeline import compact_for_write, read_pages
-    from document_ai_spark.sources.pages import CORPUS_VERSION, write_pages_parquet
 
-    corpus = os.path.join(tempfile.gettempdir(), f"da_spark_pages_v{CORPUS_VERSION}_2k")
-    if not os.path.isdir(corpus):
-        write_pages_parquet(corpus, 2000, seed=42)
     out_dir = _q45_out_dir()
-    extracted = extract_pages(read_pages(spark, corpus), salt_partitions=16, markdown=True)
-    compact_for_write(extracted, files_per_day=4).write.mode("overwrite").partitionBy(
-        "warc_day"
-    ).parquet(out_dir)
+    _extract_2k(spark, out_dir, markdown=True)
     written = spark.read.option("basePath", out_dir).parquet(out_dir)
     chunks = chunk_by_heading(written.select("url", "text"))
     return chunks.select(
@@ -804,8 +804,8 @@ def q39_nfc_dedup_keys(spark, sf_dir):
 
 def q40_extract_from_warc(spark, sf_dir):
     """Cross-source byte-identity: the SAME corpus read from raw WARC files
-    (Common Crawl's native, non-splittable format; per-file parallelism +
-    input-side salting) must extract identically to the Parquet path — so
+    (Common Crawl's native, non-splittable format; one extraction task per
+    file) must extract identically to the Parquet path — so
     this rollup must equal DuckDB's re-aggregation of the parquet-path
     output that q25 wrote (the oracle reuses q25's SQL verbatim)."""
     import tempfile
@@ -818,7 +818,7 @@ def q40_extract_from_warc(spark, sf_dir):
     if not os.path.isdir(corpus):
         write_pages_warc(corpus, 2000, seed=42)
     q25_extract_lang_day(spark, sf_dir)  # ensure the parquet-path output exists
-    out = extract_pages(read_warc(spark, corpus), salt_partitions=16)
+    out = extract_pages(read_warc(spark, corpus))
     return (
         out.groupBy("lang", F.col("warc_day").cast("string").alias("warc_day"), "kind")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
@@ -1228,8 +1228,8 @@ def q44_incremental_extract(spark, sf_dir):
     pages, out, ckpt, batch_out = _q44_dirs()
     if not os.path.isdir(pages):
         write_pages_parquet(pages, 500, seed=43)
-    incremental_extract(spark, pages, out, ckpt, salt_partitions=8)
-    extract_pages(read_pages(spark, pages), salt_partitions=8).write.mode(
+    incremental_extract(spark, pages, out, ckpt)
+    extract_pages(read_pages(spark, pages)).write.mode(
         "overwrite"
     ).partitionBy("warc_day").parquet(batch_out)
     written = spark.read.option("basePath", out).parquet(out)

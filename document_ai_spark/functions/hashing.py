@@ -6,9 +6,9 @@ services/ai_service/utils/hash_file.py:5-19). Spark's built-ins cover
 sha2/md5/xxhash64 but not BLAKE2b, so this is a vectorized pandas UDF
 (Arrow-batched, never per-row Python UDF).
 
-salted_bucket — the skew-defusing partitioning key (SURVEY.md X2): built-in
-xxhash64 (JVM-side, codegen'd) of (url, salt) mod P. Giant pages from one
-host/day spread across P tasks instead of landing in one.
+salted_bucket — deterministic url bucket: built-in xxhash64 (JVM-side,
+codegen'd) of (url, salt) mod P, the checkpoint key of the pipeline's
+url-bucket mode (plans/pipeline.run_extraction).
 """
 
 from __future__ import annotations

@@ -2,9 +2,9 @@
 
 Spark re-expression of the reference's per-batch convert stage
 (reference services/ai_service/add_documents.py:43-44 ->
-document_conversion/docling_pdf_loader.py:26-33), per SURVEY.md U1/X2/X3:
+document_conversion/docling_pdf_loader.py:26-33), per SURVEY.md U1/X3:
 
-    pages --repartition(P, salted url-hash)--> mapInArrow(extract_batch)
+    pages --scan-aligned--> mapInArrow(extract_batch)
 
 Design for 100 TB:
   * mapInArrow (iterator of pyarrow RecordBatches) — pipelined, no
@@ -14,23 +14,24 @@ Design for 100 TB:
     as flat pyarrow arrays + offsets, skipping one boxing of ~30 span
     tuples per document each way (measured ~12% off the whole Python
     stage vs the mapInPandas formulation at sf0.1).
-  * the ONLY shuffle is the explicit salted repartition, which exists to
-    defuse giant-page skew (AQE cannot see inside a UDF stage); when the
-    input is already well-balanced pass salt_partitions=None to avoid it.
+  * no shuffle: the stage runs on the scan's own splits (8 MB parquet
+    splits, one task per WARC file). Skew is handled after extraction by
+    the pipeline's one write shuffle on (warc_day, url bucket) — see
+    plans/pipeline.compact_for_write — which moves only the extracted
+    output, much smaller than the html input.
   * per-document error isolation inside the kernel (kind='error' rows) — a
     poison page never fails a task, so task retries stay idempotent.
-  * column pruning: only (url, warc_ts, lang, html) enter the exchange.
+  * column pruning: only (url, warc_ts, lang, html) enter the stage.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from document_ai_spark.functions.hashing import salted_bucket
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -147,27 +148,11 @@ def _extract_batches(
         )
 
 
-def extract_pages(
-    pages: DataFrame,
-    salt_partitions: int | None = None,
-    salt: int = 0,
-    heavy_bytes: int = 0,
-    markdown: bool = False,
-) -> DataFrame:
+def extract_pages(pages: DataFrame, markdown: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, ...) -> extracted DataFrame.
 
-    ``salt_partitions``: when set, rows are salted-repartitioned on
-    url-hash (SURVEY.md X2) so skewed giant pages spread evenly across
-    tasks AND reduce-task count decouples from the scan's file-split
-    layout. With the default ``heavy_bytes=0`` the whole input moves
-    through one exchange (the north-rule shape: one full balancing
-    shuffle, one scan). Setting ``heavy_bytes>0`` switches to outlier-only
-    salting: only payloads >= heavy_bytes are shuffled while the bulk
-    keeps scan-aligned partitioning — saves shuffle volume when the giant
-    tail is rare, at the cost of a second pass over the scan (two filter
-    branches), so prefer it only when shuffle bandwidth, not scan I/O, is
-    the cluster bottleneck. Routing and bucketing are pure functions of
-    (url, payload length), so output is independent of physical
+    One Arrow stage over the input's own partitions. Every output row is a
+    pure function of its input row, so output is independent of physical
     partitioning (byte-identity invariant).
 
     ``markdown=True``: the kernel emits structure-marked text ('#'-level
@@ -176,25 +161,8 @@ def extract_pages(
     """
     # explicit pruning before the UDF; ORDER IS LOAD-BEARING — the Arrow
     # stage addresses input columns positionally (batch.column(i))
-    cols = ["url", "warc_ts", "lang", "html"]
-    df = pages.select(*cols)
-    if salt_partitions:
-        bucketed = salted_bucket(F.col("url"), salt_partitions, salt)
-        if heavy_bytes > 0:
-            size = F.coalesce(F.length("html"), F.lit(0))
-            light = df.filter(size < heavy_bytes)
-            heavy = df.filter(size >= heavy_bytes).repartition(salt_partitions, bucketed)
-            df = light.unionByName(heavy)
-        else:
-            df = df.repartition(salt_partitions, bucketed)
-    if markdown:
-        # structure-marked text ('# ' headings, '- ' lists) — the analog
-        # of the reference's export_to_markdown; cloudpickle captures the
-        # flag, everything else identical to the plain path
-        def _md_batches(batches):
-            return _extract_batches(batches, markdown=True)
-
-        out = df.mapInArrow(_md_batches, schema=EXTRACTED_SCHEMA)
-    else:
-        out = df.mapInArrow(_extract_batches, schema=EXTRACTED_SCHEMA)
+    df = pages.select("url", "warc_ts", "lang", "html")
+    out = df.mapInArrow(
+        functools.partial(_extract_batches, markdown=markdown), schema=EXTRACTED_SCHEMA
+    )
     return out.withColumn("warc_day", F.date_format("warc_ts", "yyyy-MM-dd"))

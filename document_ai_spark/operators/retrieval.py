@@ -35,13 +35,11 @@ def lexical_rerank(
     rescore by query-term overlap (count of query tokens present in the
     chunk / #query tokens), then re-sort by (rerank_score, score)."""
     terms = sorted({t.lower() for t in query.split() if t})
-    if not terms:
-        return retrieved.withColumn("rerank_score", F.lit(0.0))
-    hits = None
-    for t in terms:
-        h = F.when(F.lower(F.col(text_col)).contains(t), 1).otherwise(0)
-        hits = h if hits is None else hits + h
-    out = retrieved.withColumn("rerank_score", F.round(hits / F.lit(len(terms)), 4))
+    score = F.lit(0.0)  # no query terms: every row 0.0, still sorted
+    if terms:
+        hits = sum(F.when(F.lower(F.col(text_col)).contains(t), 1).otherwise(0) for t in terms)
+        score = F.round(hits / F.lit(len(terms)), 4)
+    out = retrieved.withColumn("rerank_score", score)
     return out.orderBy(F.desc("rerank_score"), F.desc("score"), F.asc(id_col))
 
 

@@ -4,9 +4,9 @@ Each call runs ONE Spark job over every checkpoint key not yet done:
 
     read pages (parquet/Iceberg layout, partition+column pruned)
       -> filter(key IN pending keys)            # a day filter prunes files
-      -> mapInArrow(extract_batch)              # U1+F1, Arrow batches
+      -> mapInArrow(extract_batch)              # scan-aligned, Arrow batches
+      -> repartition(warc_day, url bucket)      # compact_for_write, the one shuffle
       -> observe per-key n_docs, n_err, bytes_in
-      -> repartition(warc_day, url bucket)      # compact_for_write
       -> write partitionBy(key, warc_day), dynamic partition overwrite
     then append one 'done' row per key, from the observed counters.
 
@@ -89,7 +89,7 @@ def _extract_pending(
     run_dir: str,
     run_id: str | None,
     files_per_day: int,
-    **extract_kw,
+    markdown: bool,
 ) -> dict:
     """The one extraction job behind both entry points.
 
@@ -107,7 +107,7 @@ def _extract_pending(
         return summary
     started = time.time()
     values = list(pending)
-    extracted = extract_pages(pages.filter(key.isin(values)), **extract_kw)
+    extracted = extract_pages(pages.filter(key.isin(values)), markdown)
     extracted = extracted.withColumn(key_name, key)
     counters, aggs = Observation(), []
     for i, v in enumerate(values):
@@ -142,7 +142,6 @@ def run_extraction(
     out_dir: str,
     run_dir: str,
     n_groups: int = 8,
-    salt_partitions: int | None = None,
     run_id: str | None = None,
     files_per_day: int = 8,
     source_format: str = "parquet",
@@ -165,8 +164,7 @@ def run_extraction(
     group = salted_bucket(F.col("url"), n_groups, cp.GROUP_SALT)
     return _extract_pending(
         spark, read_source(spark, pages_path, source_format), "group", group,
-        {g: g for g in range(n_groups)}, out_dir, run_dir, run_id, files_per_day,
-        salt_partitions=salt_partitions, markdown=markdown,
+        {g: g for g in range(n_groups)}, out_dir, run_dir, run_id, files_per_day, markdown,
     )
 
 
@@ -226,5 +224,5 @@ def run_extraction_by_day(
     keys = {d: day_group_key(d) for d in list_days(pages_path)}
     return _extract_pending(
         spark, read_pages(spark, pages_path), "warc_day", F.col("warc_day"), keys,
-        out_dir, run_dir, run_id, files_per_day, markdown=markdown,
+        out_dir, run_dir, run_id, files_per_day, markdown,
     )

@@ -41,11 +41,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 256 rows/batch: rows carry whole HTML/PDF payloads, and on the
-        # PRODUCTION path the Arrow stage consumes SHUFFLE output (salted
-        # repartition), where no scan-split byte bound applies — a batch
-        # is up to maxRecordsPerBatch post-shuffle rows, so with MB-sized
-        # giant pages 256 keeps the worst batch in the hundreds of MB
+        # 256 rows/batch: rows carry whole HTML/PDF payloads, and when the
+        # extraction stage reads read_warc's per-file output (every record
+        # of one ~1 GB WARC file in one task) no scan-split byte bound
+        # applies — a batch is up to maxRecordsPerBatch rows, so with
+        # MB-sized giant pages 256 keeps the worst batch in the hundreds of MB
         # (1024 measured only ~6% faster in one window, not worth the
         # 4x worst-case batch memory / Arrow 2 GB offset headroom).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")

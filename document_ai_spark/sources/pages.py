@@ -33,7 +33,7 @@ the newer generation of the page object ObjStm-packed behind an xref
 stream whose /Prev chains to the original classic table — the CURRENT
 text is reachable only via xref-driven precedence) — a Zipf long tail
 of page sizes with a handful of giant pages
-(x100 median — exercises salted repartitioning), and one of each edge case:
+(x100 median — exercises task skew), and one of each edge case:
 empty, whitespace-only, truncated tags, invalid UTF-8, no-main-block, a
 byte-duplicate payload under two urls, a zero-text-object PDF, a
 static /Encrypt'd PDF the kernel must LABEL (error='encrypted'), never
@@ -814,7 +814,7 @@ def generate_rows(n_docs: int, seed: int = 42) -> Iterator[dict]:
         # Zipf-ish size: 1/k tail, occasionally giant (x100 median)
         r = rng.random()
         if i % 997 == 499:
-            n_paras = 400  # giant page: exercises salting
+            n_paras = 400  # giant page: exercises task skew
         elif r < 0.5:
             n_paras = rng.randint(2, 6)
         elif r < 0.85:

@@ -14,12 +14,12 @@ Reading strategy for Spark: WARC files are NOT splittable (a record can
 straddle any byte offset, and gzip members would need per-record framing),
 so parallelism is per-FILE: ``spark.read.format("binaryFile")`` lists the
 files, and an Arrow-batched ``mapInArrow`` stage parses each file's
-records. This is exactly the case the extraction operator's input-side
-salting exists for (``extract_pages(salt_partitions=...)``): after parsing,
-rows are salted-repartitioned so giant files/pages spread across tasks.
-At crawl scale, one WARC file is ~1 GB => tens of thousands of files =>
-file-level parallelism saturates any executor count; record parsing
-streams within each task.
+records. At crawl scale, one WARC file is ~1 GB => tens of thousands of
+files => file-level parallelism saturates any executor count, so the
+parsed rows go straight into the extraction stage, task for task; the
+pipeline's one write shuffle (``compact_for_write``) balances the output.
+A gzip decode failure raises a ValueError naming the file: a corrupt
+archive fails the job instead of silently dropping its records.
 
 Output schema == the pages table (url, warc_ts, html, text, lang,
 warc_day), so ``extract_pages(read_warc(...))`` is a drop-in for the
@@ -149,14 +149,17 @@ def write_pages_warc(out_dir: str, n_docs: int, seed: int = 42, docs_per_file: i
 def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
     """WARC files -> pages-schema DataFrame.
 
-    binaryFile scan lists files (one row per file, content in memory —
-    crawl WARCs are ~1 GB, sized for exactly this); an Arrow stage parses
-    records. Parallelism is per-file (non-splittable format); pipe the
-    result through ``extract_pages(salt_partitions=...)`` to rebalance."""
+    binaryFile scan lists the directory's ``*.warc*`` files (one row per
+    file, content in memory — crawl WARCs are ~1 GB, sized for exactly
+    this); an Arrow stage parses records. Parallelism is per-file
+    (non-splittable format). A ``.gz`` file that does not decode raises
+    ValueError naming its path."""
     import pyarrow as pa
 
     def _parse(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import gzip
+        import io
+        import zlib
 
         for batch in batches:
             names = batch.schema.names
@@ -166,17 +169,15 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
             tss: List[dt.datetime] = []
             payloads: List[bytes] = []
             langs: List[str] = []
-            for path, blob in zip(paths, contents):
+            for path, blob in zip(paths.to_pylist(), contents):
                 raw = blob.as_py() or b""
-                if str(path).endswith(".gz"):
+                if path.endswith(".gz"):
                     # Common Crawl ships .warc.gz as CONCATENATED per-record
                     # gzip members; GzipFile reads through all members
-                    import io
-
                     try:
                         raw = gzip.GzipFile(fileobj=io.BytesIO(raw)).read()
-                    except OSError:
-                        continue  # corrupt archive: isolate this file
+                    except (OSError, EOFError, zlib.error) as e:
+                        raise ValueError(f"corrupt gzip WARC file {path}: {e}") from e
                 for url, ts, payload, lang in parse_records(raw):
                     urls.append(url)
                     tss.append(ts)
@@ -193,6 +194,6 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
                 names=["url", "warc_ts", "html", "text", "lang"],
             )
 
-    files = spark.read.format("binaryFile").load(os.path.join(warc_dir, "*.warc*"))
+    files = spark.read.format("binaryFile").option("pathGlobFilter", "*.warc*").load(warc_dir)
     pages = files.select("path", "content").mapInArrow(_parse, schema=WARC_PAGE_SCHEMA)
     return pages.withColumn("warc_day", F.date_format("warc_ts", "yyyy-MM-dd"))

@@ -37,7 +37,6 @@ def incremental_extract(
     pages_dir: str,
     out_dir: str,
     stream_checkpoint_dir: str,
-    salt_partitions: int | None = None,
 ) -> None:
     """Process all not-yet-seen page files, append extraction output,
     then stop (availableNow). Re-running picks up only new files —
@@ -49,7 +48,7 @@ def incremental_extract(
     )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        out = extract_pages(batch_df, salt_partitions=salt_partitions)
+        out = extract_pages(batch_df)
         out.write.mode("append").partitionBy("warc_day").parquet(out_dir)
 
     q = (

@@ -6,10 +6,11 @@ local[4N] (default N=4), each trial in a FRESH JVM, report docs/sec +
 MB/sec at both, and assert the two outputs are byte-identical per url
 (parallelism must not change results).
 
-The job is the production plan: parquet scan with 16 MB splits (scan-aligned
-extraction parallelism, no input shuffle — the source is splittable) ->
-mapInPandas extraction -> ONE salted repartition on (warc_day,
-xxhash64(url) mod files_per_day) -> write partitioned by warc_day.
+The job is the production `run_extraction_by_day`: parquet scan with 2 MB
+splits (scan-aligned extraction parallelism, no input shuffle — the source
+is splittable) -> mapInArrow extraction -> ONE shuffle on (warc_day,
+xxhash64(url) mod files_per_day) -> write partitioned by warc_day, then the
+checkpoint rows. Its checkpoint goes next to the output dir, not inside it.
 
 Methodology notes (all reported in the output JSON):
   * Trials are INTERLEAVED across the two levels (N, 4N, N, 4N, ...) and
@@ -85,8 +86,7 @@ def hardware_ceiling(n_small: int, reps: int = 2) -> float:
 def worker(cores: int, corpus: str, out: str) -> None:
     from pyspark.sql import functions as F
 
-    from document_ai_spark.operators.extraction import extract_pages
-    from document_ai_spark.plans.pipeline import compact_for_write, read_pages
+    from document_ai_spark.plans.pipeline import read_pages, run_extraction_by_day
     from document_ai_spark.session import get_spark
 
     # Fine scan splits, IDENTICAL at both levels: the bench corpus is ~150
@@ -107,23 +107,19 @@ def worker(cores: int, corpus: str, out: str) -> None:
     pages = read_pages(spark, corpus)
     n_docs = pages.count()
     mb_in = (pages.agg(F.sum(F.length("html"))).collect()[0][0] or 0) / 1e6
-    # untimed warm pass: spin up the Arrow Python workers AND the
-    # shuffle/parquet-write machinery once (long-running executors keep
-    # all of these warm; per-JVM cold-start is not what the N-vs-4N
-    # efficiency criterion measures)
-    warm_out = out + "_warm"
-    shutil.rmtree(warm_out, ignore_errors=True)
-    warm = compact_for_write(extract_pages(pages.limit(2000)), files_per_day=FILES_PER_DAY)
-    warm.write.mode("overwrite").partitionBy("warc_day").parquet(warm_out)
-    shutil.rmtree(warm_out, ignore_errors=True)
-    shutil.rmtree(out, ignore_errors=True)
+    # untimed warm run into separate dirs: spin up the Arrow Python
+    # workers AND the shuffle/parquet-write machinery once (long-running
+    # executors keep all of these warm; per-JVM cold-start is not what the
+    # N-vs-4N efficiency criterion measures)
+    run, warm_out, warm_run = out + "_run", out + "_warm", out + "_warm_run"
+    for d in (out, run, warm_out, warm_run):
+        shutil.rmtree(d, ignore_errors=True)
+    run_extraction_by_day(spark, corpus, warm_out, warm_run, files_per_day=FILES_PER_DAY)
     t0 = time.time()
-    # single-job plan, the same one run_extraction_by_day submits: one
-    # job over every day, so per-job fixed costs are paid once (see
-    # compact_for_write for the write-task rule)
-    extracted = compact_for_write(extract_pages(pages), files_per_day=FILES_PER_DAY)
-    extracted.write.mode("overwrite").partitionBy("warc_day").parquet(out)
+    run_extraction_by_day(spark, corpus, out, run, files_per_day=FILES_PER_DAY)
     wall = time.time() - t0
+    for d in (warm_out, warm_run):
+        shutil.rmtree(d, ignore_errors=True)
     print(
         "WORKER_RESULT "
         + json.dumps(

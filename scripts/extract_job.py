@@ -4,13 +4,18 @@ Ship the package alongside the job and run it on a cluster:
 
     python scripts/build_dist.py          # -> dist/document_ai_spark.zip
     spark-submit --master <cluster> --py-files dist/document_ai_spark.zip \
-        scripts/extract_job.py <pages_dir> <out_dir> [n_groups] [salt_partitions] [files_per_day] \
+        scripts/extract_job.py <pages_dir> <out_dir> [n_groups] [files_per_day] \
         [--by-day] [--warc] [--markdown]
 
+n_groups (default 8) is the number of url-bucket checkpoint keys;
+files_per_day (default 8) bounds the files written per day directory.
+More than four positional arguments, or an n_groups or files_per_day
+that is not a whole number, exits 2 with this text.
+
 Flags: --by-day resumes at warc_day-partition granularity (the scan is
-partition-pruned to the pending days; n_groups/salt ignored);
+partition-pruned to the pending days; n_groups ignored);
 --warc reads raw .warc/.warc.gz files instead of the Parquet table
-(per-file parallelism; pair with salt_partitions to rebalance);
+(one extraction task per file);
 --markdown emits structure-marked text (heading/list markers) instead of
 plain text — the corpus shape for markdown-structure chunking.
 
@@ -44,7 +49,7 @@ def main() -> None:
         print(f"unknown flag(s): {sorted(unknown)}", file=sys.stderr)
         print(__doc__, file=sys.stderr)
         raise SystemExit(2)
-    if len(args) < 2:
+    if not 2 <= len(args) <= 4 or not all(a.isdecimal() for a in args[2:]):
         print(__doc__, file=sys.stderr)
         raise SystemExit(2)
     if "--by-day" in flags and "--warc" in flags:
@@ -54,8 +59,7 @@ def main() -> None:
         raise SystemExit(2)
     pages_dir, out_dir = args[0], args[1]
     n_groups = int(args[2]) if len(args) > 2 else 8
-    salt_partitions = int(args[3]) if len(args) > 3 else None
-    files_per_day = int(args[4]) if len(args) > 4 else 8
+    files_per_day = int(args[3]) if len(args) > 3 else 8
 
     from pyspark.sql import SparkSession
 
@@ -87,7 +91,6 @@ def main() -> None:
             out_dir=out_dir,
             run_dir=os.path.join(out_dir, "_checkpoint"),
             n_groups=n_groups,
-            salt_partitions=salt_partitions,
             files_per_day=files_per_day,
             source_format="warc" if "--warc" in flags else "parquet",
             markdown="--markdown" in flags,

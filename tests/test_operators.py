@@ -404,6 +404,45 @@ def test_exact_scorer_rejects_dimension_mismatch(spark):
         brute_force_topk(df, [1.0, 0.0]).collect()
 
 
+def test_rerank_and_context_fold_on_hand_built_rows(spark):
+    from document_ai_spark.functions.embed import embed_text_py
+    from document_ai_spark.operators.retrieval import format_docs, lexical_rerank, retrieve_topk
+
+    rows = [  # (chunk_id, url, chunk_text, score); ids 3 and 5 tie on score
+        (5, "u5", "spark", 0.95),
+        (1, "u1", "Apache SPARK runs jobs", 0.9),
+        (4, "u4", "nothing relevant", 0.5),
+        (2, "u2", "spark and arrow batches", 0.8),
+        (3, "u3", "Arrow only", 0.95),
+    ]
+    df = spark.createDataFrame(rows, "chunk_id long, url string, chunk_text string, score double")
+    df = df.repartition(3)
+
+    # query terms are lowercased and deduplicated: {arrow, jobs, spark}
+    reranked = lexical_rerank(df, "Spark ARROW spark jobs").collect()
+    assert [(r.chunk_id, r.rerank_score) for r in reranked] == [
+        (1, 0.6667), (2, 0.6667), (3, 0.3333), (5, 0.3333), (4, 0.0),
+    ]
+    # no query terms: every row scores 0.0 and the order is score desc, id asc
+    empty = lexical_rerank(df, "   ").collect()
+    assert [(r.chunk_id, r.rerank_score) for r in empty] == [(i, 0.0) for i in (3, 5, 1, 2, 4)]
+
+    by_id = {r[0]: r for r in rows}
+    want = "\n\n".join(
+        f"{by_id[i][2]}\n[Source: {by_id[i][1]}, Chunk: {i}]" for i in (3, 5, 1, 2, 4)
+    )
+    assert format_docs(df).collect()[0].context == want
+    # the rerank reorders rows but never the context
+    assert format_docs(lexical_rerank(df, "Spark ARROW spark jobs")).collect()[0].context == want
+
+    chunks = spark.createDataFrame(
+        [(i, u, t, embed_text_py(t)) for i, u, t, _ in rows],
+        "chunk_id long, url string, chunk_text string, embedding array<float>",
+    )
+    top = retrieve_topk(chunks, "Spark and ARROW batches", k=2).collect()
+    assert top[0].chunk_id == 2 and top[0].score == 1.0 and len(top) == 2
+    assert top[0].asDict().keys() == {"chunk_id", "url", "chunk_text", "embedding", "score"}
+
 def test_repetition_features_known_values(spark):
     from document_ai_spark.operators.textstats import repetition_features
 

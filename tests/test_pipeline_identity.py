@@ -2,8 +2,8 @@
 
 The Spark extraction output must be byte-equal per url to the committed
 golden files produced by the single-threaded oracle kernel — and identical
-across partition layouts / salting / grouping (partition-order
-independence, the local proxy for cluster-size independence).
+across scan layouts and grouping (partition-order independence, the local
+proxy for cluster-size independence).
 """
 
 import hashlib
@@ -30,7 +30,7 @@ def _collect_texts(df):
 
 
 def test_spark_output_matches_goldens(spark, pages_dir, golden_index):
-    out = extract_pages(read_pages(spark, pages_dir), salt_partitions=8)
+    out = extract_pages(read_pages(spark, pages_dir))
     got = _collect_texts(out)
     assert set(got) == set(golden_index)
     for url, meta in golden_index.items():
@@ -73,14 +73,32 @@ def _output_fingerprint(spark, out_dir):
 
 
 def test_partition_layout_independence(spark, pages_dir, tmp_path):
-    """Same input at different grouping/salting => byte-identical output.
+    """Same input at different grouping and scan split size =>
+    byte-identical output.
 
     Local stand-in for the N vs 4N executor invariant (BASELINE.md); the
     true two-parallelism run (local[8] vs local[32]) is bench-level
     (scripts/bench_scaling.py) since one JVM owns one master setting.
+    minPartitionNum=1 stops Spark spreading the tiny corpus over every
+    core, so 1m splits give one scan task per day file and 64m splits pack
+    all four files into one task.
     """
-    run_extraction(spark, pages_dir, str(tmp_path / "a"), str(tmp_path / "ra"), n_groups=2, salt_partitions=4)
-    run_extraction(spark, pages_dir, str(tmp_path / "b"), str(tmp_path / "rb"), n_groups=8, salt_partitions=32)
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.minPartitionNum")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    scan_tasks = {}
+    try:
+        spark.conf.set("spark.sql.files.minPartitionNum", "1")
+        for name, n_groups, split in (("a", 2, "1m"), ("b", 8, "64m")):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+            scan_tasks[name] = read_pages(spark, pages_dir).rdd.getNumPartitions()
+            run_extraction(spark, pages_dir, str(tmp_path / name), str(tmp_path / f"r{name}"), n_groups=n_groups)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert scan_tasks == {"a": 4, "b": 1}
     assert _output_fingerprint(spark, str(tmp_path / "a")) == _output_fingerprint(spark, str(tmp_path / "b"))
 
 
@@ -101,21 +119,3 @@ def test_duplicate_payload_same_hash_distinct_urls(spark, pages_dir):
     assert dups[0]["doc_hash"] == dups[1]["doc_hash"]
     assert dups[0]["text"] == dups[1]["text"] != ""
 
-
-def test_outlier_salting_byte_identical(spark, pages_dir):
-    """heavy_bytes>0 (outlier-only salting: light rows stay scan-aligned,
-    giant rows shuffle) must produce the same rows as the default full
-    salted repartition — routing is physical-plan-only."""
-    full = extract_pages(read_pages(spark, pages_dir), salt_partitions=8)
-    split = extract_pages(
-        read_pages(spark, pages_dir), salt_partitions=8, heavy_bytes=2048
-    )
-    a = sorted((r.url, r.doc_hash, r.text, str(r.spans)) for r in full.collect())
-    b = sorted((r.url, r.doc_hash, r.text, str(r.spans)) for r in split.collect())
-    assert a == b
-    # the split must actually route both ways at this threshold
-    n_heavy = (
-        read_pages(spark, pages_dir)
-        .filter("length(html) >= 2048").count()
-    )
-    assert 0 < n_heavy < full.count()

@@ -2,8 +2,9 @@
 (sources/warc.py — Common Crawl's native format, per-file parallelism)."""
 
 import datetime as dt
+import gzip
 
-from pyspark.sql import functions as F
+import pytest
 
 from document_ai_spark.sources.warc import (
     parse_records,
@@ -45,8 +46,8 @@ def test_warc_extraction_matches_parquet_path(spark, pages_dir, tmp_path):
     n = write_pages_warc(warc_dir, 200, seed=42, docs_per_file=60)
     assert n == 200
 
-    via_warc = extract_pages(read_warc(spark, warc_dir), salt_partitions=8)
-    via_parquet = extract_pages(read_pages(spark, pages_dir), salt_partitions=8)
+    via_warc = extract_pages(read_warc(spark, warc_dir))
+    via_parquet = extract_pages(read_pages(spark, pages_dir))
 
     def fp(df):
         return sorted(
@@ -64,8 +65,6 @@ def test_warc_extraction_matches_parquet_path(spark, pages_dir, tmp_path):
 def test_gzipped_warc_reads_identically(spark, tmp_path):
     """Common Crawl ships .warc.gz with per-record gzip members — the
     reader must see the same rows as the plain file."""
-    import gzip
-
     from document_ai_spark.sources.pages import generate_rows
 
     plain_dir, gz_dir = str(tmp_path / "plain"), str(tmp_path / "gz")
@@ -87,3 +86,23 @@ def test_gzipped_warc_reads_identically(spark, tmp_path):
 
     a, b = fp(plain_dir), fp(gz_dir)
     assert a == b and len(a) == 60
+
+
+@pytest.mark.parametrize("damage", ["crc", "truncated", "not-gzip"])
+def test_corrupt_gzip_warc_raises_naming_the_file(spark, tmp_path, damage):
+    """A .warc.gz that does not decode fails the read with a ValueError
+    naming the file; its records are never silently dropped."""
+    rec = write_record("https://e.com/a", dt.datetime(2024, 1, 1), b"<p>payload</p>", "en")
+    blob = gzip.compress(rec)
+    if damage == "crc":  # the member trailer is CRC32 then ISIZE
+        blob = blob[:-8] + bytes([blob[-8] ^ 0xFF]) + blob[-7:]
+    elif damage == "truncated":
+        blob = blob[: len(blob) // 2]
+    else:
+        blob = b"this is not gzip at all"
+    d = tmp_path / "warc"
+    d.mkdir()
+    (d / "good.warc").write_bytes(rec)
+    (d / "bad.warc.gz").write_bytes(blob)
+    with pytest.raises(Exception, match=r"ValueError: corrupt gzip WARC file \S*bad\.warc\.gz"):
+        read_warc(spark, str(d)).collect()
