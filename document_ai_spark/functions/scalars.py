@@ -1,4 +1,4 @@
-"""Scalar column functions F2–F13 (SURVEY.md §2.7) — all JVM built-ins.
+"""Scalar column functions (SURVEY.md §2.7) — all JVM built-ins.
 
 Each mirrors one scalar behavior of the reference (file:line in the
 docstring), expressed as a reusable Column function.
@@ -36,29 +36,6 @@ def default_pdf_suffix(name: Column) -> Column:
 def chunk_id(file_path: Column, index: Column) -> Column:
     """F6 — f"{file_path}_chunk_{i}" (reference document_splitter.py:31)."""
     return F.concat_ws("_chunk_", file_path.cast("string"), index.cast("string"))
-
-
-def source_attribution(content: Column, path: Column, cid: Column) -> Column:
-    """F7 — '{content}\\n[Source: {path}, Chunk: {id}]'
-    (reference utils/query.py:97-99)."""
-    return F.format_string("%s\n[Source: %s, Chunk: %s]", content, path, cid)
-
-
-def iso_date(ts: Column) -> Column:
-    """F8/F12 — yyyy-MM-dd (reference utils/query.py:33,47; app.py:294-296)."""
-    return F.date_format(ts, "yyyy-MM-dd")
-
-
-def json_get(col: Column, key: str) -> Column:
-    """F11 — JSON field extraction (reference app.py:208-213; driver
-    events.props)."""
-    return F.get_json_object(col, f"$.{key}")
-
-
-def coalesce_text(*cols: Column) -> Column:
-    """F10 — first non-null text, empty-string fallback
-    (reference utils/query.py:104-136)."""
-    return F.coalesce(*cols, F.lit(""))
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_META_TYPE = T.StructType(
@@ -163,20 +162,3 @@ def media_features(
             yield pd.DataFrame(rows)
 
     return df.select(id_col, payload_col).mapInPandas(_batches, schema=FEATURES_SCHEMA)
-
-
-def frame_sample_plan(
-    df: DataFrame, id_col: str = "media_id", duration_col: str = "duration_ms",
-    every_ms: int = 1000,
-) -> DataFrame:
-    """Video frame-sampling *plan*: one row per sampled timestamp —
-    JVM-only sequence/explode; the decode of each frame is the stubbed
-    stage above. (sampling schedule is data, not code)."""
-    n = (F.col(duration_col) / F.lit(every_ms)).cast("int")
-    ts = F.when(
-        F.col(duration_col) > 0, F.sequence(F.lit(0), n)
-    ).otherwise(F.array().cast("array<int>"))
-    return df.select(
-        F.col(id_col),
-        F.explode(F.transform(ts, lambda i: i * every_ms)).alias("frame_ts_ms"),
-    )

@@ -2,20 +2,16 @@
 quality scoring, token counting, document fingerprinting.
 
 Everything here is a pure column expression (JVM-side, codegen'd, no
-Python) except the winnowing fingerprint, which is an Arrow-batched UDF.
-All scores are deterministic rational arithmetic rounded to fixed
-precision, so the DuckDB oracle reproduces them exactly.
+Python). All scores are deterministic rational arithmetic rounded to
+fixed precision, so the DuckDB oracle reproduces them exactly.
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # marker words per language — mirrors the generator vocabularies
 LANG_MARKERS = {
@@ -146,31 +142,6 @@ def min_kgram_fingerprint(text: Column, k: int = 8, stride: int = 4) -> Column:
     ).otherwise(F.when(n > 0, F.array(F.lit(0))).otherwise(F.array().cast("array<int>")))
     grams = F.transform(starts, lambda i: F.md5(F.substring(text, i * stride + 1, k)))
     return F.array_min(grams)
-
-
-def winnowing_fingerprint_udf(k: int = 8, window: int = 4):
-    """Winnowing (Schleimer/Wilkerson/Aiken, SIGMOD 2003) fingerprint set:
-    min hash in each sliding window of k-gram hashes, deduplicated.
-    Arrow-batched UDF; returns sorted array of hex8 fingerprints."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        def fp(t):
-            t = t or ""
-            if len(t) < k:
-                return []
-            hs = [
-                hashlib.blake2b(t[i : i + k].encode(), digest_size=4).hexdigest()
-                for i in range(len(t) - k + 1)
-            ]
-            picked = set()
-            for i in range(max(1, len(hs) - window + 1)):
-                picked.add(min(hs[i : i + window]))
-            return sorted(picked)
-
-        return texts.map(fp)
-
-    return _udf
 
 
 def repetition_features(

@@ -69,10 +69,11 @@ def compact_for_write(
     and an empty combo writes none. Over 4 days x 8 buckets, 4 tasks wrote
     14 files and 128 tasks wrote 30 (two combos were empty).
 
-    TASK-COUNT RULE: one write task per shuffle partition (the session
-    sets ``spark.sql.shuffle.partitions`` to its core count). The count is
-    passed explicitly so AQE does NOT coalesce the write stage down to a
-    few tasks and serialize the parquet/zstd encode.
+    TASK-COUNT RULE: one write task per shuffle partition.
+    ``session.get_spark`` sets ``spark.sql.shuffle.partitions`` to the
+    context's ``defaultParallelism`` (its core count) unless the launcher
+    set it. The count is passed explicitly so AQE does NOT coalesce the
+    write stage down to a few tasks and serialize the parquet/zstd encode.
     """
     bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_day))
     num_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -219,9 +220,13 @@ def run_extraction_by_day(
     A key is a warc_day PARTITION value (exactly the north rule's "resume
     at partition granularity"): the filter on pending days is
     partition-PRUNED at the scan, so the job reads only those days' files.
-    Output goes to ``warc_day=<d>/``.
+    Output goes to ``warc_day=<d>/``. A ``pages_path`` with no
+    ``warc_day=<d>`` directories raises ValueError naming it.
     """
     keys = {d: day_group_key(d) for d in list_days(pages_path)}
+    if not keys:
+        # a day's own directory or a WARC directory, not the table root
+        raise ValueError(f"no warc_day=<d> partition directories under {pages_path}")
     return _extract_pending(
         spark, read_pages(spark, pages_path), "warc_day", F.col("warc_day"), keys,
         out_dir, run_dir, run_id, files_per_day, markdown,

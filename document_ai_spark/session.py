@@ -1,12 +1,23 @@
-"""SparkSession factory with the engine's standard configuration.
+"""SparkSession factory: the one place a session is configured.
 
-Tuned for the extraction workload (MB-sized binary rows through Arrow):
- * Arrow-batched Python exchange ON, with a SMALL maxRecordsPerBatch —
-   rows carry whole HTML/PDF payloads, so a 10k-row default batch could be
-   gigabytes; 256 rows keeps per-batch memory bounded (SURVEY.md §4).
- * AQE on (runtime coalescing + skew-join splitting).
- * UTC session timezone (oracle comparison against DuckDB is UTC-naive).
- * shuffle.partitions defaults to #cores, not 200.
+``SETTINGS`` holds the engine settings that decide plan shape, file bytes
+and speed (tuned for MB-sized binary rows through Arrow). ``get_spark``
+applies them after the session starts, the same way under every launch,
+and only as DEFAULTS: a key the launcher already holds wins — spark-submit's
+``--conf``, ``spark-defaults.conf`` and ``extra_conf`` all land in
+``sparkContext.getConf()``, and any key found there is left alone.
+
+``spark.sql.shuffle.partitions`` defaults to the context's
+``defaultParallelism`` (its core count), not 200: ``compact_for_write``
+runs one write task per shuffle partition. A cluster with dynamic
+allocation has no fixed core count at start, so pass the value there
+with ``--conf spark.sql.shuffle.partitions=<n>``.
+
+Two settings are local-launch only. With ``master`` given, ``get_spark``
+starts the JVM itself and sets the UI off and 16g driver memory. With
+``master=None`` the launcher's master is kept (spark-submit's
+``--master``, else PySpark's ``local[*]``); the JVM is already running
+then, and those static settings would mean nothing.
 """
 
 from __future__ import annotations
@@ -14,6 +25,38 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+SETTINGS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # oracle comparison against DuckDB is UTC-naive
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # 256 rows/batch: rows carry whole HTML/PDF payloads, and when the
+    # extraction stage reads read_warc's per-file output (every record
+    # of one ~1 GB WARC file in one task) no scan-split byte bound
+    # applies — a batch is up to maxRecordsPerBatch rows, so with
+    # MB-sized giant pages 256 keeps the worst batch in the hundreds of MB
+    # (1024 measured only ~6% faster in one window, not worth the
+    # 4x worst-case batch memory / Arrow 2 GB offset headroom).
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    "spark.sql.parquet.compression.codec": "zstd",
+    # commit files by rename-once (v2): the v1 two-phase rename doubles
+    # driver-side commit latency for many-file day-partitioned writes.
+    # The bare Hadoop key: session keys reach newHadoopConf verbatim, so
+    # a runtime "spark.hadoop."-prefixed key would never take effect.
+    "mapreduce.fileoutputcommitter.algorithm.version": "2",
+    # MB-sized binary rows feeding a CPU-heavy Python stage: default
+    # 128 MB splits would pack a small corpus into a handful of scan
+    # tasks and leave cores idle in the last wave. 8 MB targets a few
+    # seconds of extraction per task — fine-grained enough to pack
+    # waves evenly under Zipf-skewed page sizes, coarse enough that
+    # per-task overhead stays <1%. Scales with per-byte kernel cost,
+    # not corpus size (a cluster run tunes this per executor count).
+    "spark.sql.files.maxPartitionBytes": "8m",
+    "spark.sql.files.openCostInBytes": "1m",
+}
 
 
 def default_cpus() -> int:
@@ -24,49 +67,20 @@ def default_cpus() -> int:
 def get_spark(
     app_name: str = "document_ai_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = default_cpus()
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        shuffle_partitions = int(cpus if n == "*" else n)
-    b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 256 rows/batch: rows carry whole HTML/PDF payloads, and when the
-        # extraction stage reads read_warc's per-file output (every record
-        # of one ~1 GB WARC file in one task) no scan-split byte bound
-        # applies — a batch is up to maxRecordsPerBatch rows, so with
-        # MB-sized giant pages 256 keeps the worst batch in the hundreds of MB
-        # (1024 measured only ~6% faster in one window, not worth the
-        # 4x worst-case batch memory / Arrow 2 GB offset headroom).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # commit files by rename-once (v2): the v1 two-phase rename doubles
-        # driver-side commit latency for many-file day-partitioned writes
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # MB-sized binary rows feeding a CPU-heavy Python stage: default
-        # 128 MB splits would pack a small corpus into a handful of scan
-        # tasks and leave cores idle in the last wave. 8 MB targets a few
-        # seconds of extraction per task — fine-grained enough to pack
-        # waves evenly under Zipf-skewed page sizes, coarse enough that
-        # per-task overhead stays <1%. Scales with per-byte kernel cost,
-        # not corpus size (a cluster run tunes this per executor count).
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-    )
+    b = SparkSession.builder.appName(app_name)
+    if master is not None:
+        b = b.master(master).config("spark.ui.enabled", "false").config("spark.driver.memory", "16g")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    held = sc.getConf()
+    defaults = {**SETTINGS, "spark.sql.shuffle.partitions": str(sc.defaultParallelism)}
+    for k, v in defaults.items():
+        # a launcher sets a Hadoop key as spark.hadoop.<key>
+        if not (held.contains(k) or held.contains("spark.hadoop." + k)):
+            spark.conf.set(k, v)
+    sc.setLogLevel("WARN")
     return spark

@@ -19,6 +19,15 @@ partition-pruned to the pending days; n_groups ignored);
 --markdown emits structure-marked text (heading/list markers) instead of
 plain text — the corpus shape for markdown-structure chunking.
 
+The session is ``document_ai_spark.session.get_spark()`` with no master,
+the same settings every benchmark and test runs: spark-submit's
+``--master`` and every ``--conf`` key are kept, and the engine settings
+(zstd, committer v2, 8 MB splits, Arrow batching, one shuffle partition
+per core, ...) fill in the keys the submit command leaves unset. On a
+cluster with dynamic allocation, pass
+``--conf spark.sql.shuffle.partitions=<n>``: the core count at start
+is not the job's.
+
 Each submission runs one Spark job over the checkpoint keys (url buckets,
 or days with --by-day) not yet recorded 'done' in <out_dir>/_checkpoint,
 so re-submitting with the same <out_dir> resumes. The write uses dynamic
@@ -34,9 +43,9 @@ import json
 import os
 import sys
 
-# When launched via spark-submit without --py-files (local dev), make the
-# repo importable; with --py-files the zip on sys.path wins.
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# Appended, so the --py-files zip, already on sys.path, wins; without
+# --py-files (local dev) the checkout is imported.
+sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -61,20 +70,10 @@ def main() -> None:
     n_groups = int(args[2]) if len(args) > 2 else 8
     files_per_day = int(args[3]) if len(args) > 3 else 8
 
-    from pyspark.sql import SparkSession
-
     from document_ai_spark.plans.pipeline import run_extraction, run_extraction_by_day
+    from document_ai_spark.session import get_spark
 
-    # spark-submit supplies master/deploy config; we only pin the
-    # workload-specific settings (Arrow batching for MB-sized binary rows).
-    spark = (
-        SparkSession.builder.appName("document_ai_spark.extract")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="document_ai_spark.extract")
     if "--by-day" in flags:
         summary = run_extraction_by_day(
             spark,

@@ -16,7 +16,7 @@ SF_SMALL = os.path.join(TESTDATA, "sf0.01")
 def spark():
     from document_ai_spark.session import get_spark
 
-    s = get_spark(app_name="pytest", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="pytest", master="local[8]")
     yield s
     s.stop()
 

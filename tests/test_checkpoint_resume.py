@@ -1,6 +1,7 @@
 """Checkpoint/resume + exactly-once semantics (SURVEY.md X5, §5.4)."""
 
 import os
+import re
 import shutil
 
 import pyarrow as pa
@@ -215,3 +216,15 @@ def test_day_resume_keyed_on_day_value_not_index(spark, pages_dir, tmp_path):
     # output now covers all days exactly once
     df = load_extracted(spark, out)
     assert df.count() == df.select("url").distinct().count() == 200
+
+
+def test_day_mode_rejects_a_path_without_day_partitions(spark, pages_dir, tmp_path):
+    """A pages_path with no warc_day=<d> directories (here one day's own
+    directory) must raise naming the path, not run zero keys and write
+    nothing."""
+    first_day = sorted(d for d in os.listdir(pages_dir) if d.startswith("warc_day="))[0]
+    day_dir = os.path.join(pages_dir, first_day)
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match=re.escape(f"no warc_day=<d> partition directories under {day_dir}")):
+        run_extraction_by_day(spark, day_dir, out, str(tmp_path / "run"))
+    assert not os.path.exists(out)

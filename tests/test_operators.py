@@ -267,20 +267,6 @@ def test_batch_topk_per_query(spark, emb):
         assert vid == qid and score == 1.0
 
 
-# -- winnowing fingerprints ---------------------------------------------------
-
-def test_winnowing_shared_fingerprints_for_overlap(spark):
-    from document_ai_spark.operators.textstats import winnowing_fingerprint_udf
-
-    a = "alpha beta gamma delta epsilon zeta eta theta " * 5
-    b = "PREFIX " + a + " SUFFIX"
-    df = spark.createDataFrame([(1, a), (2, b), (3, "nothing in common at all xyz")], "id int, text string")
-    rows = {r["id"]: set(r["w"]) for r in df.select("id", winnowing_fingerprint_udf()(F.col("text")).alias("w")).collect()}
-    overlap_ab = len(rows[1] & rows[2]) / len(rows[1] | rows[2])
-    overlap_ac = len(rows[1] & rows[3]) / len(rows[1] | rows[3])
-    assert overlap_ab > 0.6 > overlap_ac
-
-
 # -- multimodal plumbing ------------------------------------------------------
 
 def test_media_features_deterministic_and_shaped(spark, docs):
@@ -310,19 +296,6 @@ def test_media_real_decode_isolates_unknown_formats(spark, docs):
     assert len(rows) == 2
     for r in rows:
         assert r.media_type == "unknown" and r.features is None
-
-
-def test_frame_sample_plan(spark):
-    from document_ai_spark.operators.multimodal import frame_sample_plan
-
-    df = spark.createDataFrame([(1, 3500), (2, 0), (3, 999)], "media_id long, duration_ms long")
-    rows = frame_sample_plan(df, every_ms=1000).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["media_id"], []).append(r["frame_ts_ms"])
-    assert by_id[1] == [0, 1000, 2000, 3000]
-    assert 2 not in by_id
-    assert by_id[3] == [0]
 
 
 def test_exact_scorer_is_identical_to_cosine_sim(spark, emb):
