@@ -844,10 +844,11 @@ def q47_ivf_ann_exact_at_full_probe(spark, sf_dir):
     """IVF ANN (learned-centroid inverted file — the last SURVEY §9
     deferral, now closed): k-means centroids trained DETERMINISTICALLY
     (lowest-id init + exact DECIMAL Lloyd means, so any partitioning
-    yields identical centroids), vectors assigned JVM-side, and the probe
-    dial pinned exactly like q41: probing ALL clusters must return the
-    brute-force cosine top-7 verbatim (oracle = q06's SQL). Production
-    uses nprobe << n_clusters with ivf_cluster as a partition column."""
+    yields identical centroids), vectors assigned by similarity's numpy
+    bucket function per Arrow batch, and the probe dial pinned exactly
+    like q41: probing ALL clusters must return the brute-force cosine
+    top-7 verbatim (oracle = q06's SQL). Production uses nprobe <<
+    n_clusters with ivf_cluster as a partition column."""
     from document_ai_spark.operators.similarity import ivf_topk, train_ivf_centroids
 
     e = _t(spark, sf_dir, "embeddings")

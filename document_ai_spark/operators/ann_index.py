@@ -2,10 +2,11 @@
 
 The query-time paths in operators/similarity.py assign every vector its
 bucket per query. This module is their scale path: the same steps —
-``similarity._assign_buckets``, an ``isin`` over the probe set
-(``_probe_clusters`` / ``_probe_prefixes``, computed driver-side from
-k-element metadata), ``brute_force_topk`` — with the assignment written
-once as a partition column:
+``similarity._assign_buckets`` (the numpy bucket function
+``_bucket_ids``, one pass per Arrow batch), an ``isin`` over the probe set
+(``_probe_clusters`` / ``_probe_prefixes``: the same function applied to
+the query on the driver), ``brute_force_topk`` — with the assignment
+written once as a partition column:
 
   * ``build_ann_index`` writes the embedding table IDENTITY-PARTITIONED
     by its bucket id (IVF nearest centroid or LSH sign-sketch prefix) via
@@ -24,7 +25,9 @@ query time; here partition pruning replaces the graph walk.
 Determinism: centroids come from train_ivf_centroids (exact-DECIMAL
 Lloyd) and hyperplanes from blake2b — the bucket of a vector is a pure
 function of its value, so rebuilding the index at any parallelism yields
-byte-identical bucket assignment.
+byte-identical bucket assignment. A vector of another length than the
+index's raises a ValueError naming its id (build: ``id_col``; append: the
+frame's first column) instead of landing in a bucket.
 """
 
 from __future__ import annotations
@@ -102,7 +105,7 @@ def build_ann_index(
     if method == "ivf" and centroids is None:
         centroids = train_ivf_centroids(emb, k=n_clusters, vec_col=vec_col, id_col=id_col)
     indexed, part_col, dim = _assign_buckets(
-        emb, method, centroids, vec_col, n_planes, prefix_bits, dim=dim
+        emb, method, centroids, id_col, vec_col, n_planes, prefix_bits, dim=dim
     )
     catalog.write_partitioned(indexed, table, [part_col])
     fp = _params_fingerprint(method, centroids, dim, n_planes, prefix_bits)
@@ -157,8 +160,9 @@ def append_to_ann_index(
     dim = meta.dim if meta is not None else None
     if dim is None and method == "lsh" and emb.select(vec_col).first() is None:
         return  # pre-sidecar LSH append of an empty frame: nothing to do
+    # a row of the wrong length is named by the frame's first column
     indexed, part_col, dim = _assign_buckets(
-        emb, method, centroids, vec_col, n_planes, prefix_bits, dim=dim
+        emb, method, centroids, emb.columns[0], vec_col, n_planes, prefix_bits, dim=dim
     )
     # validate against the sidecar the build wrote: appending with
     # different hyperplane params / centroids / dim would place rows in

@@ -8,12 +8,12 @@ document_conversion/docling_pdf_loader.py:26-33), per SURVEY.md U1/X3:
 
 Design for 100 TB:
   * mapInArrow (iterator of pyarrow RecordBatches) — pipelined, no
-    per-partition materialization, and NO pandas detour: input columns the
-    kernel doesn't touch (url, warc_ts, lang) pass through zero-copy, and
-    the output — including the spans list<struct> column — is assembled
-    as flat pyarrow arrays + offsets, skipping one boxing of ~30 span
-    tuples per document each way (measured ~12% off the whole Python
-    stage vs the mapInPandas formulation at sf0.1).
+    per-partition materialization, and NO pandas detour: input columns
+    the kernel doesn't touch (url, warc_ts, lang, warc_day) pass through
+    zero-copy, and the output — including the spans list<struct> column
+    — is assembled as flat pyarrow arrays + offsets, skipping one boxing
+    of ~30 span tuples per document each way (measured ~12% off the whole
+    Python stage vs the mapInPandas formulation at sf0.1).
   * no shuffle: the stage runs on the scan's own splits (8 MB parquet
     splits, one task per WARC file). Skew is handled after extraction by
     the pipeline's one write shuffle on (warc_day, url bucket) — see
@@ -21,7 +21,8 @@ Design for 100 TB:
     output, much smaller than the html input.
   * per-document error isolation inside the kernel (kind='error' rows) — a
     poison page never fails a task, so task retries stay idempotent.
-  * column pruning: only (url, warc_ts, lang, html) enter the stage.
+  * column pruning: only (url, warc_ts, lang, html, warc_day) enter the
+    stage.
 """
 
 from __future__ import annotations
@@ -59,6 +60,7 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("n_blocks", T.IntegerType()),
         T.StructField("error", T.StringType()),
         T.StructField("bytes_in", T.LongType()),
+        T.StructField("warc_day", T.StringType()),
     ]
 )
 
@@ -143,17 +145,22 @@ def _extract_batches(
                 pa.array(n_blocks, pa.int32()),
                 pa.array(err, pa.string()),
                 pa.array(bytes_in, pa.int64()),
+                batch.column(4),  # warc_day
             ],
             names=names,
         )
 
 
 def extract_pages(pages: DataFrame, markdown: bool = False) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang, ...) -> extracted DataFrame.
+    """pages(url, warc_ts, html, text, lang, warc_day, ...) -> extracted
+    DataFrame.
 
     One Arrow stage over the input's own partitions. Every output row is a
     pure function of its input row, so output is independent of physical
-    partitioning (byte-identity invariant).
+    partitioning (byte-identity invariant). warc_day is the input row's
+    own (its partition value), never recomputed from warc_ts in the
+    session time zone: the output lands under the day the input and its
+    checkpoint key name.
 
     ``markdown=True``: the kernel emits structure-marked text ('#'-level
     headings, '- ' list items; PDF regions with heading-size fonts) —
@@ -161,8 +168,7 @@ def extract_pages(pages: DataFrame, markdown: bool = False) -> DataFrame:
     """
     # explicit pruning before the UDF; ORDER IS LOAD-BEARING — the Arrow
     # stage addresses input columns positionally (batch.column(i))
-    df = pages.select("url", "warc_ts", "lang", "html")
-    out = df.mapInArrow(
+    df = pages.select("url", "warc_ts", "lang", "html", F.col("warc_day").cast("string"))
+    return df.mapInArrow(
         functools.partial(_extract_batches, markdown=markdown), schema=EXTRACTED_SCHEMA
     )
-    return out.withColumn("warc_day", F.date_format("warc_ts", "yyyy-MM-dd"))

@@ -8,9 +8,19 @@ batch's top-k, then one global ``orderBy(score desc, id asc).limit(k)``.
 Its scores are bit-identical to ``F.round(cosine_sim(vec, q), 4)``.
 Every other top-k path runs it on a candidate set: batch_topk scores many
 queries per batch; lsh_bucketed_topk / ivf_topk keep the rows whose bucket
-(``_assign_buckets``: sign-sketch prefix / nearest centroid) is in the
-query's probe set, and operators/ann_index.py runs the same steps over a
-table partitioned by that bucket, so the probe prunes files.
+is in the query's probe set, and operators/ann_index.py runs the same
+steps over a table partitioned by that bucket, so the probe prunes files.
+
+One bucket function, ``_bucket_ids``, computes every bucket: the sign-
+sketch prefix against the hyperplanes (LSH) or the nearest centroid by
+cosine (IVF), with the scorer's left-to-right folds. It runs per Arrow
+batch on the rows (inside the scoring stage of lsh_bucketed_topk /
+ivf_topk; as a column in ``_assign_buckets`` / ``assign_cluster`` for the
+index build and the Lloyd step of train_ivf_centroids) and on the 1 x dim
+query for its probe set (``_probe_prefixes`` / ``_probe_clusters``), so a
+query and its own row always share a bucket. A vector of another length
+than the query's, the centroids' or the hyperplanes' raises a ValueError
+naming its id.
 """
 
 from __future__ import annotations
@@ -21,14 +31,11 @@ from itertools import combinations
 from typing import Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from document_ai_spark.functions.embed import cosine_sim
 
 # rounding moves a score <= 0.5e-4, so a row 1e-4 below the k-th raw score
 # rounds strictly below it (rounding is monotone); 1e-4 more for float error
@@ -49,13 +56,14 @@ def _round4(x: float) -> float:
 def _batch_vectors(batch: pa.RecordBatch, id_col: str, vec_col: str, dim: int) -> np.ndarray:
     """The batch's vectors as an n x dim float64 matrix. A null vector, or
     one holding a null, is a zero row (cosine_sim scores it 0.0); any other
-    length than the query's raises."""
+    length than ``dim`` (the query's, the centroids' or the hyperplanes')
+    raises, naming the row's ``id_col``."""
     col = batch.column(vec_col)
     lens = pc.list_value_length(col).fill_null(dim).to_numpy(zero_copy_only=False)
     if (lens != dim).any():
         i = int(np.argmax(lens != dim))
         rid = batch.column(id_col)[i].as_py()
-        raise ValueError(f"{vec_col} of {id_col}={rid!r} has {lens[i]} dims; the query has {dim}")
+        raise ValueError(f"{vec_col} of {id_col}={rid!r} has {lens[i]} dims, not {dim}")
     valid = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))
     flat = col.flatten()
     m = np.zeros((len(col), dim))
@@ -63,6 +71,14 @@ def _batch_vectors(batch: pa.RecordBatch, id_col: str, vec_col: str, dim: int) -
     if flat.null_count:
         m[valid[flat.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim).any(axis=1)]] = 0.0
     return m
+
+
+def _cosines(m: np.ndarray, norms: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """cosine_sim of every row of ``m`` (row norms ``norms``) with ``q``,
+    bit for bit: the same left-to-right folds. A zero row or q scores 0.0."""
+    denom = norms * np.sqrt(_seq_sum(q * q))
+    ok = denom > 0
+    return np.where(ok, (_seq_sum(m * q) + 0.0) / np.where(ok, denom, 1.0), 0.0)
 
 
 def _batch_topk(batch: pa.RecordBatch, queries: list, k: int, id_col: str, vec_col: str):
@@ -74,9 +90,7 @@ def _batch_topk(batch: pa.RecordBatch, queries: list, k: int, id_col: str, vec_c
         if m is None or m.shape[1] != len(q):
             m = _batch_vectors(batch, id_col, vec_col, len(q))
             norms = np.sqrt(_seq_sum(m * m))
-        denom = norms * np.sqrt(_seq_sum(q * q))
-        ok = denom > 0
-        raw = np.where(ok, (_seq_sum(m * q) + 0.0) / np.where(ok, denom, 1.0), 0.0)
+        raw = _cosines(m, norms, q)
         cand = np.arange(len(raw))
         if 0 < k < len(raw):
             kth = np.partition(raw, len(raw) - k)[len(raw) - k]
@@ -85,13 +99,16 @@ def _batch_topk(batch: pa.RecordBatch, queries: list, k: int, id_col: str, vec_c
         yield np.array([i for _, _, i in top], dtype=np.int64), [-s for s, _, _ in top]
 
 
-def _scored(df: DataFrame, query_vecs: list, k: int, id_col: str, vec_col: str) -> DataFrame:
+def _scored(df: DataFrame, query_vecs: list, k: int, id_col: str, vec_col: str, keep=None) -> DataFrame:
     """Every column of ``df`` + score + _q (the query's index): the top-k
-    rows of each Arrow batch for each query."""
+    rows of each Arrow batch for each query, among the rows ``keep`` (a
+    batch -> boolean mask, e.g. an ANN probe) selects."""
     qs = [np.asarray(q, dtype=np.float64) for q in query_vecs]
 
     def score(batches):
         for b in batches:
+            if keep is not None:
+                b = b.filter(pa.array(keep(b)))
             for j, (rows, scores) in enumerate(_batch_topk(b, qs, k, id_col, vec_col)):
                 top = b.take(rows).append_column("score", pa.array(scores, pa.float64()))
                 yield top.append_column("_q", pa.array(np.full(len(rows), j, np.int32)))
@@ -100,9 +117,9 @@ def _scored(df: DataFrame, query_vecs: list, k: int, id_col: str, vec_col: str) 
     return df.mapInArrow(score, T.StructType([*df.schema, *extra]))
 
 
-def _exact_topk(df: DataFrame, query_vec: list, k: int, id_col: str, vec_col: str) -> DataFrame:
+def _exact_topk(df: DataFrame, query_vec: list, k: int, id_col: str, vec_col: str, keep=None) -> DataFrame:
     """brute_force_topk keeping every column of ``df`` (+ score)."""
-    top = _scored(df, [query_vec], k, id_col, vec_col).drop("_q")
+    top = _scored(df, [query_vec], k, id_col, vec_col, keep).drop("_q")
     return top.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -157,57 +174,95 @@ def _hyperplanes(dim: int, n_planes: int, seed: bytes = b"document_ai_spark/lsh"
     return out
 
 
-def _sketch(planes: np.ndarray, v: np.ndarray) -> int:
-    """Sign sketch of one vector: bit p set iff v·h_p > 0."""
-    return sum(1 << i for i, bit in enumerate((planes @ v) > 0) if bit)
+def _bucket_ids(m: np.ndarray, weights: np.ndarray, prefix_bits: int | None = None) -> np.ndarray:
+    """The ONE bucket function of every ANN path, for rows and queries
+    alike: an n x dim matrix (``_batch_vectors``) -> bucket ids.
+
+    LSH (``prefix_bits`` set, ``weights`` the hyperplanes): the low
+    ``prefix_bits`` bits of the sign sketch, bit p set iff v·h_p > 0 ->
+    shape (n,). IVF (``weights`` the centroids): centroid ids by cosine,
+    descending, ties -> lowest id -> shape (n, k); column 0 is a row's
+    cluster, and a query probes the first nprobe. Dot products are the
+    _seq_sum folds, so an IVF score is cosine_sim's bit for bit, and a
+    zero row (a null vector) scores 0.0 against every centroid."""
+    if prefix_bits is not None:
+        ids = np.zeros(len(m), dtype=np.int64)
+        for p, h in enumerate(weights[:prefix_bits]):
+            ids |= (_seq_sum(m * h) > 0).astype(np.int64) << p
+        return ids
+    norms = np.sqrt(_seq_sum(m * m))
+    scores = np.stack([_cosines(m, norms, c) for c in weights], axis=1)
+    return np.argsort(-scores, axis=1, kind="stable")
 
 
-def sketch_udf(dim: int, n_planes: int = 16):
-    """pandas UDF: embedding -> integer sign-sketch (bit p set iff v·h_p>0)."""
-    planes = _hyperplanes(dim, n_planes)
+def _batch_buckets(
+    batch: pa.RecordBatch, w: np.ndarray, prefix_bits: int | None, id_col: str, vec_col: str
+) -> np.ndarray:
+    """Every row's bucket in one Arrow batch: its LSH prefix or IVF
+    cluster (``_bucket_ids``). A vector of another length than the
+    weights raises a ValueError naming its ``id_col``."""
+    ids = _bucket_ids(_batch_vectors(batch, id_col, vec_col, w.shape[1]), w, prefix_bits)
+    return ids if prefix_bits is not None else ids[:, 0]
 
-    @F.pandas_udf(T.LongType())
-    def _udf(vecs: pd.Series) -> pd.Series:
-        def sk(v):
-            if v is None:
-                return 0
-            a = np.asarray(v, dtype=np.float64)[:dim]
-            return _sketch(planes, np.pad(a, (0, dim - a.shape[0])))
 
-        return vecs.map(sk)
+def _with_buckets(
+    df: DataFrame, weights, prefix_bits: int | None, id_col: str, vec_col: str, out_col: str
+) -> DataFrame:
+    """``df`` + ``out_col``: every row's bucket (LSH a bigint prefix, IVF
+    an int cluster), one numpy pass per Arrow batch."""
+    w = np.asarray(weights, dtype=np.float64)
+    lsh = prefix_bits is not None
 
-    return _udf
+    def assign(batches):
+        for b in batches:
+            ids = _batch_buckets(b, w, prefix_bits, id_col, vec_col)
+            yield b.append_column(out_col, pa.array(ids if lsh else ids.astype(np.int32)))
+
+    out = T.StructField(out_col, T.LongType() if lsh else T.IntegerType())
+    return df.mapInArrow(assign, T.StructType([*df.schema, out]))
+
+
+def _probed_topk(
+    emb: DataFrame, query_vec: list, k: int, id_col: str, vec_col: str, weights, prefix_bits, probe: list
+) -> DataFrame:
+    """brute_force_topk over the rows whose bucket is in ``probe``. The
+    buckets are computed inside the scoring stage: a second Python stage
+    chained before it can lose the ValueError of a wrong-length row to a
+    CancelledKeyException."""
+    w = np.asarray(weights, dtype=np.float64)
+
+    def keep(b):
+        return np.isin(_batch_buckets(b, w, prefix_bits, id_col, vec_col), probe)
+
+    return _exact_topk(emb.select(id_col, vec_col), query_vec, k, id_col, vec_col, keep).select(id_col, "score")
 
 
 def _assign_buckets(
     emb: DataFrame,
     method: str,
     centroids: list | None,
+    id_col: str,
     vec_col: str,
     n_planes: int,
     prefix_bits: int,
     dim: int | None = None,
 ) -> Tuple[DataFrame, str, int]:
-    """The ONE bucket assignment of the query-time ANN paths and the index
-    build/append (a bucket is a pure function of the vector) -> (df +
-    bucket column, bucket column, dim). Without ``dim`` (IVF:
-    len(centroids[0]); a query: its length; append: the sidecar) LSH
+    """The bucket column of the index build/append (a bucket is a pure
+    function of the vector) -> (df + bucket column, bucket column, dim).
+    Without ``dim`` (IVF: len(centroids[0]); append: the sidecar) LSH
     pays one driver job for ``first()``."""
     if method == "ivf":
         if centroids is None:
             raise ValueError("ann_index: ivf assignment requires centroids")
-        return assign_cluster(emb, centroids, vec_col=vec_col), "ivf_cluster", len(centroids[0])
+        indexed = _with_buckets(emb, centroids, None, id_col, vec_col, "ivf_cluster")
+        return indexed, "ivf_cluster", len(centroids[0])
     if dim is None:
         head = emb.select(vec_col).first()
         if head is None:
             raise ValueError("ann_index: embedding table is empty")
         dim = len(head[0])
     if method == "lsh":
-        udf = sketch_udf(dim, n_planes)
-        mask = (1 << prefix_bits) - 1
-        indexed = emb.withColumn(
-            "sketch_prefix", udf(F.col(vec_col)).bitwiseAND(F.lit(mask))
-        )
+        indexed = _with_buckets(emb, _hyperplanes(dim, n_planes), prefix_bits, id_col, vec_col, "sketch_prefix")
         return indexed, "sketch_prefix", dim
     raise ValueError(f"unknown ANN index method {method!r}")
 
@@ -215,30 +270,17 @@ def _assign_buckets(
 def _probe_prefixes(query_vec: list, n_planes: int, prefix_bits: int, multi_probe: int) -> list:
     """Every sketch prefix within hamming distance ``multi_probe`` of the
     query's — sum_{h<=p} C(prefix_bits, h) values, enumerated driver-side."""
-    planes = _hyperplanes(len(query_vec), n_planes)
-    qprefix = _sketch(planes, np.asarray(query_vec, dtype=np.float64)) & ((1 << prefix_bits) - 1)
-    out = [qprefix]
-    for h in range(1, multi_probe + 1):
-        for flip in combinations(range(prefix_bits), h):
-            x = qprefix
-            for b in flip:
-                x ^= 1 << b
-            out.append(x)
-    return out
+    q = np.asarray([query_vec], dtype=np.float64)
+    qprefix = int(_bucket_ids(q, _hyperplanes(q.shape[1], n_planes), prefix_bits)[0])
+    flips = (f for h in range(1, multi_probe + 1) for f in combinations(range(prefix_bits), h))
+    return [qprefix] + [qprefix ^ sum(1 << b for b in f) for f in flips]
 
 
 def _probe_clusters(query_vec: list, centroids: list, nprobe: int) -> list:
     """The ``nprobe`` centroid ids nearest the query by cosine (ties ->
     lowest id)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    ranked = []
-    for i, c in enumerate(centroids):
-        ca = np.asarray(c, dtype=np.float64)
-        cn = np.linalg.norm(ca)
-        s = float(ca @ q / (cn * qn)) if cn > 0 and qn > 0 else 0.0
-        ranked.append((-s, i))
-    return [i for _, i in sorted(ranked)[:nprobe]]
+    q = np.asarray([query_vec], dtype=np.float64)
+    return _bucket_ids(q, np.asarray(centroids, dtype=np.float64))[0, :nprobe].tolist()
 
 
 def lsh_bucketed_topk(
@@ -255,31 +297,21 @@ def lsh_bucketed_topk(
     prefix_bits up + multi_probe up => same recall, finer buckets — at
     10^12 rows the sketch is a partition column and bucket pruning happens
     at the file-scan level (ann_index.lsh_topk_indexed)."""
-    sketched, part_col, _ = _assign_buckets(
-        emb, "lsh", None, vec_col, n_planes, prefix_bits, dim=len(query_vec)
-    )
+    planes = _hyperplanes(len(query_vec), n_planes)
     probe = _probe_prefixes(query_vec, n_planes, prefix_bits, multi_probe)
-    return brute_force_topk(sketched.filter(F.col(part_col).isin(probe)), query_vec, k, id_col, vec_col)
-
-
-def _centroid_lits(centroids: list) -> list:
-    return [F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
+    return _probed_topk(emb, query_vec, k, id_col, vec_col, planes, prefix_bits, probe)
 
 
 def assign_cluster(
     df: DataFrame, centroids: list, vec_col: str = "embedding", out_col: str = "ivf_cluster"
 ) -> DataFrame:
-    """Nearest-centroid id per row (max cosine; ties -> lowest id) as a
-    pure JVM expression: array_max over (score, -idx) structs — no UDF,
-    no shuffle, and a pure function of the row so the assignment is
-    independent of physical partitioning."""
-    vec = F.col(vec_col).cast("array<double>")
-    scored = [
-        F.struct(cosine_sim(vec, cl).alias("s"), F.lit(-i).alias("negidx"))
-        for i, cl in enumerate(_centroid_lits(centroids))
-    ]
-    best = F.array_max(F.array(*scored))
-    return df.withColumn(out_col, (-best["negidx"]).cast("int"))
+    """Nearest-centroid id per row (max cosine; ties -> lowest id): the
+    IVF case of ``_bucket_ids``, one numpy pass per Arrow batch — no
+    shuffle, and a pure function of the row, so the assignment is
+    independent of physical partitioning. A vector of another length than
+    the centroids raises a ValueError naming the row by ``df``'s first
+    column."""
+    return _with_buckets(df, centroids, None, df.columns[0], vec_col, out_col)
 
 
 def train_ivf_centroids(
@@ -313,8 +345,8 @@ def train_ivf_centroids(
     )
     centroids = [list(r["_v"]) for r in base.orderBy(id_col).limit(k).collect()]
     dim = len(centroids[0]) if centroids else 0
-    for _ in range(iters):
-        assigned = assign_cluster(base, centroids, vec_col="_v", out_col="_c")
+    for _ in range(iters if centroids else 0):
+        assigned = _with_buckets(base, centroids, None, id_col, "_v", "_c")
         sums = (
             assigned.select("_c", F.posexplode("_v").alias("_d", "_x"))
             .groupBy("_c", "_d")
@@ -347,6 +379,5 @@ def ivf_topk(
     10^12 rows ``ivf_cluster`` is a partition column written at index-build
     time (ann_index.ivf_topk_indexed), so probing prunes at the file-scan
     level and the per-query cost is ~nprobe/k of the corpus."""
-    cand, part_col, _ = _assign_buckets(emb, "ivf", centroids, vec_col, 0, 0)
     probe = _probe_clusters(query_vec, centroids, nprobe)
-    return brute_force_topk(cand.filter(F.col(part_col).isin(probe)), query_vec, k, id_col, vec_col)
+    return _probed_topk(emb, query_vec, k, id_col, vec_col, centroids, None, probe)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-GROUP_SALT = 0xD0C  # fixed salt for group assignment (distinct from task salt)
+GROUP_SALT = 0xD0C  # fixed salt of run_extraction's url-bucket keys
 
 CHECKPOINT_SCHEMA = T.StructType(
     [

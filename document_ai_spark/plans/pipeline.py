@@ -30,11 +30,13 @@ from pyspark.sql import functions as F
 from document_ai_spark.functions.hashing import salted_bucket
 from document_ai_spark.operators.extraction import extract_pages
 from document_ai_spark.plans import checkpoint as cp
+from document_ai_spark.sources.pages import PAGES_SCHEMA
 
 
 def read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
-    """Read the pages table (Parquet with Iceberg-style warc_day layout)."""
-    return spark.read.option("basePath", pages_path).parquet(pages_path)
+    """Read the pages table (Parquet with Iceberg-style warc_day layout)
+    with its declared schema: warc_ts a timestamp, warc_day a string."""
+    return spark.read.schema(PAGES_SCHEMA).option("basePath", pages_path).parquet(pages_path)
 
 
 def read_source(spark: SparkSession, pages_path: str, source_format: str = "parquet") -> DataFrame:

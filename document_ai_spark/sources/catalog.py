@@ -1,14 +1,17 @@
 """Thin table-catalog adapter: Iceberg when configured, Parquet fallback.
 
 The north rule targets Iceberg tables; this sandbox has no Iceberg runtime
-jars, so every table in this repo is addressed through this adapter
-(SURVEY.md §7 step 0): when the session has an Iceberg catalog configured
+jars, so tables can be addressed through this adapter (SURVEY.md §7 step
+0). Today the ANN index tables (operators/ann_index.py) are; the
+extraction job (plans/pipeline.py), the collections (sinks/collection.py)
+and the checkpoint (plans/checkpoint.py, with pyarrow on the driver)
+read and write Parquet directories directly. When the session has an Iceberg catalog configured
 (any ``spark.sql.catalog.<name>`` conf), tables resolve to
 ``<catalog>.<namespace>.<table>`` and writes use the DataFrameWriterV2
 ``writeTo`` API with ``partitionedBy(days(ts))``; otherwise tables resolve
 to Parquet directories with the IDENTICAL partition layout
-(``warc_day=YYYY-MM-DD/``), so a cluster deployment flips a config, not
-code.
+(``warc_day=YYYY-MM-DD/``), so moving the adapter's tables to a cluster
+flips a config, not code.
 
 Reference analog: the ChromaDB collection + SQLite store are the
 reference's only 'catalog' (services/ai_service/main.py:56-61,

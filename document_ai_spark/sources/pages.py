@@ -5,9 +5,12 @@ Emits the north-rule input table (BASELINE.json ``input_hint``)::
     pages(url: string, warc_ts: timestamp, html: binary,
           text: string, lang: string)
 
-written as Parquet partitioned by ``warc_day`` (the local stand-in for an
-Iceberg table partitioned by ``days(warc_ts)`` — no Iceberg jars in the
-sandbox; identical directory layout).
+written as Parquet partitioned by ``warc_day``, the UTC date of warc_ts
+(the local stand-in for an Iceberg table partitioned by ``days(warc_ts)``
+— no Iceberg jars in the sandbox; identical directory layout).
+``PAGES_SCHEMA`` is the table's Spark schema: every reader of pages (the
+Parquet and WARC sources, the incremental stream) uses it, so warc_ts is
+a timestamp and warc_day a string whatever the files let Spark infer.
 
 Corpus v12: ~30%/~20% of HTML articles embed one of two fixed
 IN-CONTENT boilerplate sentences (newsletter pitch / share bar) inside
@@ -51,11 +54,24 @@ import datetime as dt
 import random
 from typing import Iterator, List, Tuple
 
+from pyspark.sql import types as T
+
 LANGS = ["en", "de", "es", "fr", "zh"]
 
 # bump when generator OUTPUT changes (new variants, size mix, …): cached
 # corpus directories embed this so stale /tmp corpora are never reused
 CORPUS_VERSION = 12
+
+PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("warc_day", T.StringType()),
+    ]
+)
 
 # seeded per-language vocabularies (marker words make lang-id testable)
 _BASE_VOCAB = {

@@ -33,20 +33,12 @@ import os
 from typing import Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from document_ai_spark.sources.pages import PAGES_SCHEMA, generate_rows
 
 _CRLF = b"\r\n"
 
-WARC_PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
+WARC_PAGE_SCHEMA = PAGES_SCHEMA  # warc_day: the UTC date of WARC-Date
 
 
 # ---------------------------------------------------------------------------
@@ -115,8 +107,6 @@ def write_pages_warc(out_dir: str, n_docs: int, seed: int = 42, docs_per_file: i
     """Write the deterministic synthetic pages corpus as .warc files
     (docs_per_file records each) — the WARC twin of write_pages_parquet,
     same (seed, n_docs) => same logical rows."""
-    from document_ai_spark.sources.pages import generate_rows
-
     os.makedirs(out_dir, exist_ok=True)
     count = 0
     buf: List[bytes] = []
@@ -152,8 +142,9 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
     binaryFile scan lists the directory's ``*.warc*`` files (one row per
     file, content in memory — crawl WARCs are ~1 GB, sized for exactly
     this); an Arrow stage parses records. Parallelism is per-file
-    (non-splittable format). A ``.gz`` file that does not decode raises
-    ValueError naming its path."""
+    (non-splittable format). warc_day is the UTC date of WARC-Date, as in
+    the Parquet layout, whatever the session time zone. A ``.gz`` file
+    that does not decode raises ValueError naming its path."""
     import pyarrow as pa
 
     def _parse(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -169,6 +160,7 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
             tss: List[dt.datetime] = []
             payloads: List[bytes] = []
             langs: List[str] = []
+            days: List[str] = []
             for path, blob in zip(paths.to_pylist(), contents):
                 raw = blob.as_py() or b""
                 if path.endswith(".gz"):
@@ -183,6 +175,7 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
                     tss.append(ts)
                     payloads.append(payload)
                     langs.append(lang or None)
+                    days.append(ts.strftime("%Y-%m-%d"))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(urls, pa.string()),
@@ -190,10 +183,10 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
                     pa.array(payloads, pa.binary()),
                     pa.array([None] * len(urls), pa.string()),  # text: unused
                     pa.array(langs, pa.string()),
+                    pa.array(days, pa.string()),
                 ],
-                names=["url", "warc_ts", "html", "text", "lang"],
+                names=WARC_PAGE_SCHEMA.names,
             )
 
     files = spark.read.format("binaryFile").option("pathGlobFilter", "*.warc*").load(warc_dir)
-    pages = files.select("path", "content").mapInArrow(_parse, schema=WARC_PAGE_SCHEMA)
-    return pages.withColumn("warc_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+    return files.select("path", "content").mapInArrow(_parse, schema=WARC_PAGE_SCHEMA)

@@ -16,20 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from document_ai_spark.operators.extraction import extract_pages
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("warc_day", T.StringType()),
-    ]
-)
+from document_ai_spark.sources.pages import PAGES_SCHEMA
 
 
 def incremental_extract(
@@ -47,8 +36,14 @@ def incremental_extract(
         .parquet(pages_dir)
     )
 
+    # recursiveFileLookup turns partition discovery off, so warc_day reads
+    # null: the day is the UTC date of warc_ts, the value the pages layout
+    # is partitioned by, in any session time zone
+    micros_per_day = 86_400_000_000
+    utc_day = F.date_from_unix_date(F.floor(F.unix_micros("warc_ts") / micros_per_day).cast("int"))
+
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        out = extract_pages(batch_df)
+        out = extract_pages(batch_df.withColumn("warc_day", utc_day.cast("string")))
         out.write.mode("append").partitionBy("warc_day").parquet(out_dir)
 
     q = (

@@ -2,7 +2,11 @@
 entry in Spark AND its oracle_sql() in DuckDB over the same sf dir, compare
 row count + order-insensitive values. Usage:
 
-    python scripts/check_oracles.py [sf_dir] [only_query_prefix]
+    python scripts/check_oracles.py [sf_dir] [query_prefix ...]
+
+With prefixes, only the queries whose names start with one of them run
+(e.g. ``<sf_dir> q23 q41 q47``). Spark runs on
+``local[session.default_cpus()]``.
 """
 
 from __future__ import annotations
@@ -79,12 +83,12 @@ def canon(v):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    prefix = sys.argv[2] if len(sys.argv) > 2 else ""
+    prefixes = tuple(sys.argv[2:])
 
     import __spark_entry__ as E
-    from document_ai_spark.session import get_spark
+    from document_ai_spark.session import default_cpus, get_spark
 
-    spark = get_spark(app_name="oracle_check", master="local[8]")
+    spark = get_spark(app_name="oracle_check", master=f"local[{default_cpus()}]")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -94,7 +98,7 @@ def main() -> int:
     qs, osql = E.queries(), E.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if prefix and not name.startswith(prefix):
+        if prefixes and not name.startswith(prefixes):
             continue
         try:
             sdf = fn(spark, sf_dir).toPandas()

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -30,3 +31,14 @@ def pages_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("pages")
     write_pages_parquet(str(d), 200, seed=42)
     return str(d)
+
+
+@contextmanager
+def session_time_zone(spark, tz):
+    """Run the body under session time zone ``tz``, then restore it."""
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)

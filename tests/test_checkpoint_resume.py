@@ -17,6 +17,8 @@ from document_ai_spark.plans.pipeline import (
     run_extraction_by_day,
 )
 
+from .conftest import session_time_zone
+
 
 def _drop_checkpoint_rows(run, keys):
     """Delete the checkpoint files of ``keys``: the state a crash between
@@ -228,3 +230,37 @@ def test_day_mode_rejects_a_path_without_day_partitions(spark, pages_dir, tmp_pa
     with pytest.raises(ValueError, match=re.escape(f"no warc_day=<d> partition directories under {day_dir}")):
         run_extraction_by_day(spark, day_dir, out, str(tmp_path / "run"))
     assert not os.path.exists(out)
+
+
+def _urls_by_day(root):
+    """url -> the warc_day=<d> directory it sits in, read with pyarrow so
+    no session time zone is involved."""
+    import pyarrow.parquet as pq
+
+    return {
+        url: d.split("=", 1)[1]
+        for d in os.listdir(root)
+        if d.startswith("warc_day=")
+        for url in pq.read_table(os.path.join(root, d), columns=["url"]).column("url").to_pylist()
+    }
+
+
+def test_day_mode_keeps_the_input_day_in_any_session_time_zone(spark, pages_dir, tmp_path):
+    """A launcher may set spark.sql.session.timeZone. The output day must
+    still be the input row's partition value: recomputing it from warc_ts
+    in New York time moved urls to the previous day (and into a fifth
+    directory), and a one-day resume then overwrote a finished day."""
+    want = _urls_by_day(pages_dir)
+    out, run = str(tmp_path / "out"), str(tmp_path / "run")
+    with session_time_zone(spark, "America/New_York"):
+        run_extraction_by_day(spark, pages_dir, out, run)
+        assert _urls_by_day(out) == want
+        assert len(set(want.values())) == 4
+
+        last = max(want.values())
+        _drop_checkpoint_rows(run, [day_group_key(last)])
+        s = run_extraction_by_day(spark, pages_dir, out, run)
+        assert s["groups_run"] == 1
+        assert _urls_by_day(out) == want
+        df = load_extracted(spark, out)
+        assert df.count() == df.select("url").distinct().count() == 200

@@ -252,6 +252,66 @@ def test_ivf_pruned_probe_finds_query_and_subsets_corpus(spark, emb):
     assert max(sizes.values()) < emb.count()  # clustering is non-degenerate
 
 
+def test_bucket_ids_match_cosine_sim_and_sign_sketch(spark, emb, docs):
+    """Every ANN path buckets with one numpy function. Its IVF cluster must
+    be the argmax over cosine_sim columns (ties -> lowest id) and its LSH
+    prefix the low bits of a per-row ``planes @ v > 0``, on the sf0.001
+    embeddings, on 500 1024-dim embed_udf vectors, and on hand-built ties,
+    zero, null and null-holding vectors. A query's own vector must fall in
+    its probe set at nprobe=1 and at multi_probe=0."""
+    from document_ai_spark.functions.embed import cosine_sim, embed_udf
+    from document_ai_spark.operators import similarity as S
+
+    hand = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0]),  # ties centroids 1 and 2
+            (2, [0.0, 0.0, 2.0]),  # centroid 0 alone
+            (3, [0.0, 1.0, 0.0]),  # 0.0 against every centroid
+            (4, [0.0, 0.0, 0.0]),
+            (5, None),
+            (6, [1.0, None, 1.0]),
+            (7, [1.0, 0.0, 1.0]),  # ties centroids 0, 1 and 2
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    embedded = docs.select(F.col("doc_id").alias("vec_id"), embed_udf("text").alias("embedding"))
+    inputs = [
+        (emb, S.train_ivf_centroids(emb, k=6, iters=2, sample_limit=512)),
+        (embedded, None),
+        (hand, [[0.0, 0.0, 1.0], [1.0, 0.0, 0.0], [1.0, 0.0, 0.0]]),
+    ]
+    for df, cents in inputs:
+        cents = cents or S.train_ivf_centroids(df, k=16, iters=2)
+        rows = {r.vec_id: r.embedding for r in df.collect()}
+        dim = len(cents[0])
+        got = {r.vec_id: r.ivf_cluster for r in S.assign_cluster(df, cents).collect()}
+        cdf = spark.createDataFrame(list(enumerate(cents)), "c int, cvec array<double>")
+        best = {}
+        for r in df.crossJoin(cdf).select(
+            "vec_id", "c", cosine_sim(F.col("embedding"), F.col("cvec")).alias("s")
+        ).collect():
+            best[r.vec_id] = max(best.get(r.vec_id, (r.s, -r.c)), (r.s, -r.c))
+        assert got == {v: -negc for v, (_, negc) in best.items()}
+        assert len(got) == len(rows)
+
+        planes = S._hyperplanes(dim, 16)
+        for bits in (4, 8):
+            buckets, col, _ = S._assign_buckets(df, "lsh", None, "vec_id", "embedding", 16, bits, dim=dim)
+            sketches = {r.vec_id: r[col] for r in buckets.collect()}
+            want = {}
+            for v, vec in rows.items():
+                ok = vec is not None and None not in vec
+                sketch = planes @ np.asarray(vec, dtype=np.float64) > 0 if ok else [False]
+                want[v] = sum(1 << p for p, bit in enumerate(sketch) if bit) & ((1 << bits) - 1)
+            assert sketches == want
+            for v, vec in rows.items():
+                assert vec is None or S._probe_prefixes(vec, 16, bits, 0) == [sketches[v]]
+        for v, vec in rows.items():
+            assert vec is None or S._probe_clusters(vec, cents, 1) == [got[v]]
+
+    assert [got[v] for v in range(1, 8)] == [1, 0, 0, 0, 0, 0, 0]
+
+
 def test_batch_topk_per_query(spark, emb):
     from document_ai_spark.operators.similarity import batch_topk
 
@@ -363,18 +423,30 @@ def test_exact_scorer_is_identical_to_cosine_sim(spark, emb):
     assert top == [(3, 1.0), (6, 1.0), (9, 1.0), (12, 1.0)]
 
 
-def test_exact_scorer_rejects_dimension_mismatch(spark):
+def test_exact_scorer_rejects_dimension_mismatch(spark, tmp_path):
     # a vector whose length differs from the query's used to score null
     # and sort last; it must raise, naming the row. A null vector scores 0.
-    from document_ai_spark.operators.similarity import brute_force_topk
+    # The ANN paths bucket with the same check: the IVF assignment put the
+    # row in cluster 0 (never probed here) and the LSH sketch padded it.
+    from document_ai_spark.operators.ann_index import build_ann_index
+    from document_ai_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_bucketed_topk
+    from document_ai_spark.sources.catalog import Catalog
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
     )
     ok = brute_force_topk(df.filter("vec_id < 3"), [1.0, 0.0]).collect()
     assert [(r.vec_id, r.score) for r in ok] == [(1, 1.0), (2, 0.0)]
-    with pytest.raises(Exception, match=r"ValueError: embedding of vec_id=3 has 3 dims"):
-        brute_force_topk(df, [1.0, 0.0]).collect()
+    cents, cat = [[1.0, 0.0], [0.0, 1.0]], Catalog(spark, str(tmp_path))
+    for run in (
+        lambda: brute_force_topk(df, [1.0, 0.0]).collect(),
+        lambda: ivf_topk(df, [0.0, 1.0], cents, nprobe=1).collect(),
+        lambda: lsh_bucketed_topk(df, [0.0, 1.0], prefix_bits=2, multi_probe=0).collect(),
+        lambda: build_ann_index(df, cat, "ivf", centroids=cents),
+        lambda: build_ann_index(df, cat, "lsh", method="lsh", prefix_bits=2, dim=2),
+    ):
+        with pytest.raises(Exception, match=r"ValueError: embedding of vec_id=3 has 3 dims"):
+            run()
 
 
 def test_rerank_and_context_fold_on_hand_built_rows(spark):

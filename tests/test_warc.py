@@ -12,6 +12,7 @@ from document_ai_spark.sources.warc import (
     write_pages_warc,
     write_record,
 )
+from tests.conftest import session_time_zone
 
 
 def test_record_roundtrip_including_binary_payload():
@@ -38,28 +39,29 @@ def test_truncated_and_garbage_blobs_are_isolated():
 
 def test_warc_extraction_matches_parquet_path(spark, pages_dir, tmp_path):
     """The same corpus via WARC must extract byte-identically to the
-    Parquet path (the north rule's invariant extends across sources)."""
+    Parquet path (the north rule's invariant extends across sources), and
+    both must keep the UTC day of the layout in any session time zone."""
     from document_ai_spark.operators.extraction import extract_pages
-    from document_ai_spark.plans.pipeline import read_pages
+    from document_ai_spark.plans.pipeline import list_days, read_pages
 
     warc_dir = str(tmp_path / "warc")
     n = write_pages_warc(warc_dir, 200, seed=42, docs_per_file=60)
     assert n == 200
 
-    via_warc = extract_pages(read_warc(spark, warc_dir))
-    via_parquet = extract_pages(read_pages(spark, pages_dir))
-
     def fp(df):
         return sorted(
-            (r.url, r.doc_hash, r.kind, r.text) for r in
-            df.select("url", "doc_hash", "kind", "text").collect()
+            (r.url, r.doc_hash, r.kind, r.text, r.warc_day) for r in
+            df.select("url", "doc_hash", "kind", "text", "warc_day").collect()
         )
 
-    assert fp(via_warc) == fp(via_parquet)
+    for tz in ("UTC", "America/New_York"):
+        with session_time_zone(spark, tz):
+            via_warc = fp(extract_pages(read_warc(spark, warc_dir)))
+            via_parquet = fp(extract_pages(read_pages(spark, pages_dir)))
+        assert via_warc == via_parquet
 
-    # warc_day partition column derived identically
-    days = {r.warc_day for r in via_warc.select("warc_day").distinct().collect()}
-    assert len(days) == 4
+        # warc_day partition column derived identically: the layout's days
+        assert sorted({r[4] for r in via_warc}) == list_days(pages_dir)
 
 
 def test_gzipped_warc_reads_identically(spark, tmp_path):
