@@ -51,7 +51,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from document_ai_spark.operators.textstats import token_count
 
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
-    chunks = chunk_fixed(docs, text_col="text", id_col="doc_id", chunk_size=200, overlap=40)
+    chunks = chunk_fixed(docs, id_col="doc_id", chunk_size=200, overlap=40)
     return (
         chunks.withColumn("n_tok", token_count(F.col("chunk_text")))
         .groupBy("lang")
@@ -120,7 +120,7 @@ def q05_chunk_explode(spark, sf_dir):
     from document_ai_spark.operators.chunking import chunk_fixed
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    c = chunk_fixed(d, text_col="text", id_col="doc_id", chunk_size=200, overlap=40)
+    c = chunk_fixed(d, id_col="doc_id", chunk_size=200, overlap=40)
     return c.select(
         "doc_id",
         F.col("chunk_index").cast("long").alias("chunk_index"),
@@ -147,13 +147,15 @@ def q06_topk_cosine(spark, sf_dir):
 def q07_context_fold(spark, sf_dir):
     """A5: order-sensitive fold of the top-7 longest docs into one prompt
     context string (reference format_docs, utils/query.py:69-101)."""
+    from document_ai_spark.functions.scalars import chunk_id
+
     d = _t(spark, sf_dir, "documents")
     top = d.orderBy(F.desc("n_chars"), F.asc("doc_id")).limit(7)
     fmt = F.format_string(
         "%s\n[Source: %s, Chunk: %s]",
         F.col("text"),
         F.col("source"),
-        F.concat_ws("_chunk_", F.col("doc_id").cast("string"), F.lit("0")),
+        chunk_id(F.col("doc_id"), F.lit(0)),
     )
     folded = top.select(F.col("n_chars"), F.col("doc_id"), fmt.alias("fmt")).agg(
         F.concat_ws(
@@ -645,19 +647,20 @@ def q26_retrieval_context(spark, sf_dir):
     """Retrieval path end-to-end: embed docs (hashed features), cosine
     top-7 for a fixed query, lexical rerank, context fold."""
     from document_ai_spark.functions.embed import embed_udf
+    from document_ai_spark.functions.scalars import chunk_id
     from document_ai_spark.operators.retrieval import format_docs, lexical_rerank, retrieve_topk
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     chunks = d.select(
         F.col("doc_id"),
-        F.concat_ws("_chunk_", F.col("doc_id").cast("string"), F.lit("0")).alias("chunk_id"),
+        chunk_id(F.col("doc_id"), F.lit(0)).alias("chunk_id"),
         F.col("text").alias("chunk_text"),
         F.col("source").alias("url"),
         embed_udf(F.col("text")).alias("embedding"),
     )
-    top = retrieve_topk(chunks, "customer order revenue", k=7, id_col="chunk_id")
-    rr = lexical_rerank(top, "customer order revenue", id_col="chunk_id")
-    return format_docs(rr, text_col="chunk_text", source_col="url", id_col="chunk_id")
+    top = retrieve_topk(chunks, "customer order revenue", k=7)
+    rr = lexical_rerank(top, "customer order revenue")
+    return format_docs(rr)
 
 
 def q34_promo_revenue(spark, sf_dir):

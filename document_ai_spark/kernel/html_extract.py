@@ -180,22 +180,24 @@ class _BlockTokenizer(HTMLParser):
         self._flush()
 
 
-def tokenize_blocks(html_text: str, fast: bool = True) -> List[Block]:
+def tokenize_blocks(html_text: str) -> List[Block]:
     """Flatten an HTML string into scored text blocks (malformed-tolerant).
 
-    ``fast=True`` (default) runs the merged scanner+state-machine
-    (`_tokenize_blocks_merged`: one alternation regex, no per-event
-    callback dispatch, skipped subtrees bypass slicing/unescape — ~5x
-    HTMLParser). ``fast=False`` uses stdlib HTMLParser driving
-    `_BlockTokenizer` — the reference implementation the merged path is
-    equivalence-tested against (tests/test_fast_html.py)."""
-    if fast:
-        try:
-            return _tokenize_blocks_merged(html_text)
-        except Exception:
-            # totality guarantee: never throw; fall back to the reference
-            # parser for this document
-            pass
+    Runs the merged scanner+state-machine (`_tokenize_blocks_merged`: one
+    alternation regex, no per-event callback dispatch, skipped subtrees
+    bypass slicing/unescape — ~5x HTMLParser)."""
+    try:
+        return _tokenize_blocks_merged(html_text)
+    except Exception:
+        # totality guarantee: never throw; fall back to the reference
+        # parser for this document
+        return _tokenize_blocks_reference(html_text)
+
+
+def _tokenize_blocks_reference(html_text: str) -> List[Block]:
+    """stdlib HTMLParser driving `_BlockTokenizer`: the reference
+    implementation the merged path is equivalence-tested against
+    (tests/test_fast_html.py), and its fallback."""
     tok = _BlockTokenizer()
     try:
         tok.feed(html_text)

@@ -3,40 +3,41 @@
 Capability analog of the reference's markdown splitter
 (reference services/ai_service/document_conversion/document_splitter.py:17-33:
 langchain MarkdownTextSplitter, chunk_size=4000 chars, overlap=200, and
-chunk ids f"{file_path}_chunk_{i}" at :31). Two implementations:
+chunk ids f"{file_path}_chunk_{i}" at :31). One chunker per shape, both
+JVM-only column expressions (no Python in the plan, whole-stage codegen):
 
-1. ``chunk_fixed`` — sliding char window entirely in JVM-side column
-   expressions (sequence/transform/substring + explode). Zero Python in the
-   plan => whole-stage codegen, scales linearly; the oracle-checked default.
+1. ``chunk_fixed`` — sliding char window (sequence/transform/substring).
+   The RAG ingest chunks with it at 4000/200.
+2. ``chunk_by_heading`` — a heading plus its section, over structure-marked
+   (markdown) text.
 
-2. ``chunk_markdown`` — boundary-aware variant (prefers splitting at
-   paragraph/newline/sentence/space boundaries within the window, like the
-   reference's recursive splitter) as an Arrow-batched pandas UDF. Python
-   oracle in tests; use when chunk boundaries must respect structure.
-
-Both emit: chunk_index, chunk_id = "{id}_chunk_{i}", chunk_text,
-char_start, char_end (offsets into the input text; text[start:end] == chunk).
+Both read the ``text`` column and emit, through one row builder, the
+input's other columns then chunk_index, chunk_id
+(``functions.scalars.chunk_id``: "{id}_chunk_{i}"), chunk_text,
+char_start, char_end (offsets into the text; text[start:end] == chunk).
 """
 
 from __future__ import annotations
 
-from typing import List
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-CHUNK_STRUCT = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("chunk_index", T.IntegerType()),
-            T.StructField("chunk_text", T.StringType()),
-            T.StructField("char_start", T.LongType()),
-            T.StructField("char_end", T.LongType()),
-        ]
+from document_ai_spark.functions.scalars import chunk_id
+
+
+def _chunk_rows(df: DataFrame, chunks: Column, id_col: str) -> DataFrame:
+    """One row per element of ``chunks`` (structs of chunk_index,
+    chunk_text, char_start, char_end): df's columns except ``text``, then
+    the chunk columns, the id named after ``id_col``."""
+    keep = [c for c in df.columns if c != "text"]
+    return df.select(*keep, F.explode(chunks).alias("c")).select(
+        *keep,
+        "c.chunk_index",
+        chunk_id(F.col(id_col), F.col("c.chunk_index")).alias("chunk_id"),
+        "c.chunk_text",
+        "c.char_start",
+        "c.char_end",
     )
-)
 
 
 def _fixed_chunks_col(text: Column, chunk_size: int, overlap: int) -> Column:
@@ -61,42 +62,25 @@ def _fixed_chunks_col(text: Column, chunk_size: int, overlap: int) -> Column:
 
 def chunk_fixed(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "url",
     chunk_size: int = 4000,
     overlap: int = 200,
 ) -> DataFrame:
     """Explode df into chunk rows using the JVM-only sliding window.
 
-    Output: all original non-text columns + (chunk_index, chunk_id,
+    Output: all columns but ``text`` + (chunk_index, chunk_id,
     chunk_text, char_start, char_end). Empty/null text -> zero rows
     (matches the reference: no chunks from an empty document).
     """
-    chunks = _fixed_chunks_col(F.col(text_col), chunk_size, overlap)
-    keep = [c for c in df.columns if c != text_col]
-    out = df.select(*keep, F.explode(chunks).alias("c"))
-    return out.select(
-        *keep,
-        F.col("c.chunk_index").alias("chunk_index"),
-        F.concat_ws("_chunk_", F.col(id_col).cast("string"), F.col("c.chunk_index")).alias(
-            "chunk_id"
-        ),
-        F.col("c.chunk_text").alias("chunk_text"),
-        F.col("c.char_start").alias("char_start"),
-        F.col("c.char_end").alias("char_end"),
-    )
+    return _chunk_rows(df, _fixed_chunks_col(F.col("text"), chunk_size, overlap), id_col)
 
 
-# ---------------------------------------------------------------------------
-# heading-structure chunking (JVM-only; the markdown-mode counterpart)
-
-
-def chunk_by_heading(df: DataFrame, text_col: str = "text", id_col: str = "url") -> DataFrame:
+def chunk_by_heading(df: DataFrame) -> DataFrame:
     """Split structure-marked text at markdown heading boundaries: each
     chunk is a heading plus its following content, until the next heading
     (the MarkdownHeaderTextSplitter shape — reference parity for
     document_splitter.py's structure-aware chunking over
-    export_to_markdown output).
+    export_to_markdown output). Chunk ids are named after ``url``.
 
     Formulation is lookahead-free so the DuckDB oracle can mirror it in
     RE2: any pre-existing U+0001 is STRIPPED (it is the split sentinel;
@@ -104,127 +88,32 @@ def chunk_by_heading(df: DataFrame, text_col: str = "text", id_col: str = "url")
     "\\n\\n#" is literal-replaced with "\\x01#" and split on \\x01.
     Offsets are computed PER ROW with higher-order array functions
     (transform + slice/aggregate prefix sums) — no window, hence NO
-    SHUFFLE and no cross-row state: rows sharing an ``id_col`` value
-    cannot corrupt each other's offsets (their chunk_ids still collide —
-    id_col must identify the row, same contract as chunk_fixed). Offsets
-    re-add the removed "\\n\\n" separators, so
+    SHUFFLE and no cross-row state: rows sharing a url cannot corrupt
+    each other's offsets (their chunk_ids still collide — the url must
+    identify the row, same contract as chunk_fixed). Offsets re-add the
+    removed "\\n\\n" separators, so
     ``cleaned_text[char_start:char_end] == chunk_text``. Empty/null
     text -> zero rows.
     """
-    cleaned = F.replace(F.col(text_col), F.lit("\x01"), F.lit(""))
-    keep = [c for c in df.columns if c != text_col]
-    with_parts = (
-        df.select(
-            *keep,
-            F.split(F.replace(cleaned, F.lit("\n\n#"), F.lit("\x01#")), "\x01").alias(
-                "_parts"
-            ),
-            F.length(cleaned).alias("_len"),
-        )
-        .filter(F.col("_len") > 0)
+    cleaned = F.replace(F.col("text"), F.lit("\x01"), F.lit(""))
+    # the text column now holds its parts (an array computed once per
+    # row, not once per lambda call); the row builder drops it
+    parted = df.filter(F.length(cleaned) > 0).withColumn(
+        "text", F.split(F.replace(cleaned, F.lit("\n\n#"), F.lit("\x01#")), "\x01")
     )
-    parts = F.col("_parts")
-    # prefix-sum offsets per element: chunks-per-doc is small, so the
-    # O(chunks^2) slice+aggregate stays trivial and entirely codegen'd
-    structs = F.transform(
-        parts,
-        lambda x, i: F.struct(
+    parts = F.col("text")
+
+    def _chunk(x: Column, i: Column) -> Column:
+        # prefix-sum offsets per element: chunks-per-doc is small, so the
+        # O(chunks^2) slice+aggregate stays trivial and entirely codegen'd
+        before = F.slice(parts, F.lit(1), i)
+        start = F.aggregate(before, F.lit(0).cast("long"), lambda a, y: a + F.length(y))
+        start = start + i.cast("long") * 2
+        return F.struct(
             i.cast("int").alias("chunk_index"),
             x.alias("chunk_text"),
-            (
-                F.aggregate(
-                    F.slice(parts, F.lit(1), i),
-                    F.lit(0).cast("long"),
-                    lambda a, y: a + F.length(y),
-                )
-                + i.cast("long") * 2
-            ).alias("char_start"),
-        ),
-    )
-    out = with_parts.select(*keep, F.explode(structs).alias("c"))
-    return out.select(
-        *keep,
-        F.col("c.chunk_index").alias("chunk_index"),
-        F.concat_ws("_chunk_", F.col(id_col).cast("string"), F.col("c.chunk_index")).alias(
-            "chunk_id"
-        ),
-        F.col("c.chunk_text").alias("chunk_text"),
-        F.col("c.char_start").alias("char_start"),
-        (F.col("c.char_start") + F.length("c.chunk_text")).cast("long").alias("char_end"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# boundary-aware variant (pandas UDF)
-
-# (separator, chars of it that BELONG to the ending chunk): a heading
-# boundary cuts BEFORE the '#', so the heading starts the next chunk —
-# the reference's markdown splitter keeps headings with their section
-_BOUNDARY_SEPS = [("\n\n#", 2), ("\n\n", 2), ("\n", 1), (". ", 2), (" ", 1)]
-
-
-def split_markdown_py(text: str, chunk_size: int = 4000, overlap: int = 200) -> List[tuple]:
-    """Pure-Python oracle for the boundary-aware splitter.
-
-    Windows of at most chunk_size chars; each window end is pulled back to
-    the best boundary in its second half — heading starts first (so
-    sections stay whole), then paragraph/newline/sentence/space; next
-    window starts `overlap` chars before the previous end. Deterministic,
-    O(n)."""
-    if not text:
-        return []
-    out = []
-    start = 0
-    i = 0
-    n = len(text)
-    while start < n:
-        end = min(start + chunk_size, n)
-        if end < n:
-            window = text[start:end]
-            half = chunk_size // 2
-            cut = -1
-            for sep, keep_chars in _BOUNDARY_SEPS:
-                p = window.rfind(sep)
-                if p >= half:
-                    cut = p + keep_chars
-                    break
-            if cut > 0:
-                end = start + cut
-        out.append((i, text[start:end], start, end))
-        if end >= n:
-            break
-        start = max(end - overlap, start + 1)
-        i += 1
-    return out
-
-
-def chunk_markdown_udf(chunk_size: int = 4000, overlap: int = 200):
-    @F.pandas_udf(CHUNK_STRUCT)
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: split_markdown_py(t or "", chunk_size, overlap)
+            start.alias("char_start"),
+            (start + F.length(x)).cast("long").alias("char_end"),
         )
 
-    return _udf
-
-
-def chunk_markdown(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "url",
-    chunk_size: int = 4000,
-    overlap: int = 200,
-) -> DataFrame:
-    chunks = chunk_markdown_udf(chunk_size, overlap)(F.col(text_col))
-    keep = [c for c in df.columns if c != text_col]
-    out = df.select(*keep, F.explode(chunks).alias("c"))
-    return out.select(
-        *keep,
-        F.col("c.chunk_index").alias("chunk_index"),
-        F.concat_ws("_chunk_", F.col(id_col).cast("string"), F.col("c.chunk_index")).alias(
-            "chunk_id"
-        ),
-        F.col("c.chunk_text").alias("chunk_text"),
-        F.col("c.char_start").alias("char_start"),
-        F.col("c.char_end").alias("char_end"),
-    )
+    return _chunk_rows(parted, F.transform(parts, _chunk), "url")

@@ -51,11 +51,9 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(keep.select(id_col), id_col, "left_semi")
 
 
-def dedup_new_vs_existing(
-    incoming: DataFrame, existing: DataFrame, hash_col: str = "doc_hash"
-) -> DataFrame:
+def dedup_new_vs_existing(incoming: DataFrame, existing: DataFrame) -> DataFrame:
     """The reference's duplicate-skip filter as an anti-join (J1):
-    rows of ``incoming`` whose hash is absent from ``existing``.
+    rows of ``incoming`` whose doc_hash is absent from ``existing``.
 
     Join strategy is deliberately left to AQE: the existing-hash side is a
     narrow digest projection, and AQE converts the shuffle anti-join to a
@@ -64,8 +62,8 @@ def dedup_new_vs_existing(
     post-filter bytes, which no driver-side row-count heuristic can match
     without triggering an extra count job (tests/test_operators.py pins
     this contract)."""
-    ex = existing.select(hash_col).distinct()
-    return incoming.join(ex, hash_col, "left_anti")
+    ex = existing.select("doc_hash").distinct()
+    return incoming.join(ex, "doc_hash", "left_anti")
 
 
 # ---------------------------------------------------------------------------

@@ -19,53 +19,46 @@ from document_ai_spark.functions.embed import embed_text_py
 from document_ai_spark.operators.similarity import _exact_topk
 
 
-def retrieve_topk(
-    chunks: DataFrame, query: str, k: int = 7,
-    vec_col: str = "embedding", id_col: str = "chunk_id",
-) -> DataFrame:
+def retrieve_topk(chunks: DataFrame, query: str, k: int = 7) -> DataFrame:
     """Embed the query (driver-side, same hashed-feature function as the
-    corpus) and take exact cosine top-k -> the chunk columns + score."""
-    return _exact_topk(chunks, embed_text_py(query), k, id_col, vec_col)
+    corpus) and take exact cosine top-k of ``embedding``, ties by
+    ``chunk_id`` -> the chunk columns + score."""
+    return _exact_topk(chunks, embed_text_py(query), k, "chunk_id", "embedding")
 
 
-def lexical_rerank(
-    retrieved: DataFrame, query: str, text_col: str = "chunk_text", id_col: str = "chunk_id"
-) -> DataFrame:
+def lexical_rerank(retrieved: DataFrame, query: str) -> DataFrame:
     """Deterministic stand-in for the reference's LLM listwise rerank:
     rescore by query-term overlap (count of query tokens present in the
-    chunk / #query tokens), then re-sort by (rerank_score, score)."""
+    chunk_text / #query tokens), then re-sort by (rerank_score, score,
+    chunk_id)."""
     terms = sorted({t.lower() for t in query.split() if t})
     score = F.lit(0.0)  # no query terms: every row 0.0, still sorted
     if terms:
-        hits = sum(F.when(F.lower(F.col(text_col)).contains(t), 1).otherwise(0) for t in terms)
+        hits = sum(F.when(F.lower(F.col("chunk_text")).contains(t), 1).otherwise(0) for t in terms)
         score = F.round(hits / F.lit(len(terms)), 4)
     out = retrieved.withColumn("rerank_score", score)
-    return out.orderBy(F.desc("rerank_score"), F.desc("score"), F.asc(id_col))
+    return out.orderBy(F.desc("rerank_score"), F.desc("score"), F.asc("chunk_id"))
 
 
-def format_docs(
-    retrieved: DataFrame, text_col: str = "chunk_text",
-    source_col: str = "url", id_col: str = "chunk_id",
-    order_col: str = "score",
-) -> DataFrame:
+def format_docs(retrieved: DataFrame) -> DataFrame:
     """Order-sensitive context fold (A5): one row with the prompt context:
-    chunks sorted by score desc, formatted
-    '{text}\n[Source: {source}, Chunk: {id}]' and joined with '\n\n'."""
+    chunks sorted by (score desc, chunk_id), formatted
+    '{chunk_text}\n[Source: {url}, Chunk: {chunk_id}]' and joined with
+    '\n\n'."""
     formatted = retrieved.select(
-        F.col(order_col),
-        F.col(id_col),
+        "score",
+        "chunk_id",
         F.format_string(
-            "%s\n[Source: %s, Chunk: %s]",
-            F.col(text_col),
-            F.col(source_col),
-            F.col(id_col),
+            "%s\n[Source: %s, Chunk: %s]", F.col("chunk_text"), F.col("url"), F.col("chunk_id")
         ).alias("fmt"),
     )
     return formatted.agg(
         F.concat_ws(
             "\n\n",
             F.array_sort(
-                F.collect_list(F.struct(F.col(order_col).alias("s"), F.col(id_col).alias("i"), F.col("fmt"))),
+                F.collect_list(
+                    F.struct(F.col("score").alias("s"), F.col("chunk_id").alias("i"), "fmt")
+                ),
                 lambda a, b: F.when(a["s"] > b["s"], -1)
                 .when(a["s"] < b["s"], 1)
                 .when(a["i"] < b["i"], -1)

@@ -49,11 +49,7 @@ def read_source(spark: SparkSession, pages_path: str, source_format: str = "parq
     return read_pages(spark, pages_path)
 
 
-def compact_for_write(
-    df: DataFrame,
-    files_per_day: int,
-    id_col: str = "url",
-) -> DataFrame:
+def compact_for_write(df: DataFrame, files_per_day: int) -> DataFrame:
     """Shuffle so `write.partitionBy(..., "warc_day")` emits at most
     files_per_day files per day directory instead of one per upstream task.
 
@@ -77,7 +73,7 @@ def compact_for_write(
     set it. The count is passed explicitly so AQE does NOT coalesce the
     write stage down to a few tasks and serialize the parquet/zstd encode.
     """
-    bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_day))
+    bucket = F.pmod(F.xxhash64(F.col("url")), F.lit(files_per_day))
     num_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(num_tasks, F.col("warc_day"), bucket)
 
@@ -90,7 +86,6 @@ def _extract_pending(
     key_ids: dict,
     out_dir: str,
     run_dir: str,
-    run_id: str | None,
     files_per_day: int,
     markdown: bool,
 ) -> dict:
@@ -104,7 +99,7 @@ def _extract_pending(
     """
     done = cp.done_groups(spark, run_dir)
     pending = {v: k for v, k in key_ids.items() if k not in done}
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     summary = {"run_id": run_id, "groups_done_before": len(done), "groups_run": len(pending)}
     if not pending:
         return summary
@@ -145,7 +140,6 @@ def run_extraction(
     out_dir: str,
     run_dir: str,
     n_groups: int = 8,
-    run_id: str | None = None,
     files_per_day: int = 8,
     source_format: str = "parquet",
     markdown: bool = False,
@@ -167,7 +161,7 @@ def run_extraction(
     group = salted_bucket(F.col("url"), n_groups, cp.GROUP_SALT)
     return _extract_pending(
         spark, read_source(spark, pages_path, source_format), "group", group,
-        {g: g for g in range(n_groups)}, out_dir, run_dir, run_id, files_per_day, markdown,
+        {g: g for g in range(n_groups)}, out_dir, run_dir, files_per_day, markdown,
     )
 
 
@@ -214,7 +208,6 @@ def run_extraction_by_day(
     out_dir: str,
     run_dir: str,
     files_per_day: int = 8,
-    run_id: str | None = None,
     markdown: bool = False,
 ) -> dict:
     """Production day-partitioned extraction. Returns summary counters.
@@ -231,5 +224,5 @@ def run_extraction_by_day(
         raise ValueError(f"no warc_day=<d> partition directories under {pages_path}")
     return _extract_pending(
         spark, read_pages(spark, pages_path), "warc_day", F.col("warc_day"), keys,
-        out_dir, run_dir, run_id, files_per_day, markdown,
+        out_dir, run_dir, files_per_day, markdown,
     )

@@ -13,6 +13,14 @@ runs one write task per shuffle partition. A cluster with dynamic
 allocation has no fixed core count at start, so pass the value there
 with ``--conf spark.sql.shuffle.partitions=<n>``.
 
+Files are committed by Hadoop's default output committer (algorithm
+version 1): each task's files wait in the job's staging directory and
+move into the destination only when the whole job commits, so a failed
+append (``sinks.collection.append_chunks``, the ANN index appends, the
+incremental stream) leaves the target as it was. Version 2 moved each
+task's files at task commit and left a failed job's files behind; on the
+3000-doc extraction it was not faster.
+
 Two settings are local-launch only. With ``master`` given, ``get_spark``
 starts the JVM itself and sets the UI off and 16g driver memory. With
 ``master=None`` the launcher's master is kept (spark-submit's
@@ -42,11 +50,6 @@ SETTINGS = {
     # 4x worst-case batch memory / Arrow 2 GB offset headroom).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
     "spark.sql.parquet.compression.codec": "zstd",
-    # commit files by rename-once (v2): the v1 two-phase rename doubles
-    # driver-side commit latency for many-file day-partitioned writes.
-    # The bare Hadoop key: session keys reach newHadoopConf verbatim, so
-    # a runtime "spark.hadoop."-prefixed key would never take effect.
-    "mapreduce.fileoutputcommitter.algorithm.version": "2",
     # MB-sized binary rows feeding a CPU-heavy Python stage: default
     # 128 MB splits would pack a small corpus into a handful of scan
     # tasks and leave cores idle in the last wave. 8 MB targets a few
@@ -79,8 +82,7 @@ def get_spark(
     held = sc.getConf()
     defaults = {**SETTINGS, "spark.sql.shuffle.partitions": str(sc.defaultParallelism)}
     for k, v in defaults.items():
-        # a launcher sets a Hadoop key as spark.hadoop.<key>
-        if not (held.contains(k) or held.contains("spark.hadoop." + k)):
+        if not held.contains(k):
             spark.conf.set(k, v)
     sc.setLogLevel("WARN")
     return spark

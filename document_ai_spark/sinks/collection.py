@@ -46,8 +46,8 @@ def reset_collection(spark: SparkSession, path: str, like: DataFrame | None = No
         like.limit(0).write.mode("overwrite").parquet(path)
 
 
-def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame, hash_col: str = "doc_hash") -> int:
-    """Delete every row whose ``hash_col`` appears in ``hashes`` (J4/X7).
+def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame) -> int:
+    """Delete every row whose ``doc_hash`` appears in ``hashes`` (J4/X7).
 
     Iceberg: `DELETE FROM t WHERE doc_hash IN (SELECT ...)`. Parquet
     fallback: rewrite via LEFT ANTI JOIN into a temp dir, move the old
@@ -56,8 +56,8 @@ def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame, hash_col: 
     Returns the number of rows deleted.
     """
     cur = spark.read.parquet(path)
-    doomed = hashes.select(F.col(hash_col)).distinct()
-    kept = cur.join(F.broadcast(doomed), hash_col, "left_anti")
+    doomed = hashes.select("doc_hash").distinct()
+    kept = cur.join(F.broadcast(doomed), "doc_hash", "left_anti")
     n_before = cur.count()
     tmp = tempfile.mkdtemp(prefix="collection_rewrite_", dir=os.path.dirname(path.rstrip("/")))
     kept.write.mode("overwrite").parquet(tmp)
@@ -73,15 +73,11 @@ def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame, hash_col: 
     return n_before - n_after
 
 
-def force_readd(
-    spark: SparkSession, path: str, new_chunks: DataFrame, hash_col: str = "doc_hash"
-) -> dict:
+def force_readd(spark: SparkSession, path: str, new_chunks: DataFrame) -> dict:
     """Delete-then-append (the reference's force_readd=True path): any
     existing rows sharing a hash with ``new_chunks`` are removed, then the
     new rows are appended. Iceberg: one MERGE. Returns counters."""
-    deleted = delete_by_hash(
-        spark, path, new_chunks.select(hash_col).distinct(), hash_col
-    )
+    deleted = delete_by_hash(spark, path, new_chunks.select("doc_hash").distinct())
     added = new_chunks.count()
     append_chunks(new_chunks, path)
     return {"deleted": deleted, "added": added}

@@ -51,6 +51,7 @@ PYTHONHASHSEED dependence, no network. Same (seed, n_docs) => same bytes.
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import random
 from typing import Iterator, List, Tuple
 
@@ -808,8 +809,13 @@ _EDGE_CASES = [
 
 
 def generate_rows(n_docs: int, seed: int = 42) -> Iterator[dict]:
-    """Yield page rows deterministically. Includes edge cases + a
-    byte-duplicate pair at the head, then the Zipf-sized mix."""
+    """Yield exactly ``n_docs`` page rows deterministically: the edge
+    cases and a byte-duplicate pair at the head, then the Zipf-sized mix
+    (a corpus shorter than the head is a prefix of it)."""
+    return itertools.islice(_rows(n_docs, seed), n_docs)
+
+
+def _rows(n_docs: int, seed: int) -> Iterator[dict]:
     rng = random.Random(seed)
     i = 0
     # edge cases first (stable urls)
@@ -871,7 +877,7 @@ def _row(rng: random.Random, i: int, payload: bytes, lang: str, tag) -> dict:
     }
 
 
-def write_pages_parquet(out_dir: str, n_docs: int, seed: int = 42, batch_rows: int = 5000) -> int:
+def write_pages_parquet(out_dir: str, n_docs: int, seed: int = 42) -> int:
     """Write the corpus as Parquet partitioned by warc_day=YYYY-MM-DD
     (Iceberg days(warc_ts) layout, Parquet fallback). Returns row count."""
     import pyarrow as pa
@@ -907,7 +913,7 @@ def write_pages_parquet(out_dir: str, n_docs: int, seed: int = 42, batch_rows: i
     for row in generate_rows(n_docs, seed=seed):
         buf.append(row)
         total += 1
-        if len(buf) >= batch_rows:
+        if len(buf) >= 5000:  # bounds the rows held in memory
             _flush(buf)
             buf = []
     _flush(buf)

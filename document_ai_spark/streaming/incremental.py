@@ -4,9 +4,14 @@ Spark re-expression of the reference's webhook path (reference
 app.py:193-266: per-document arrival -> background thread -> download ->
 add, at-least-once): a file-source ``readStream`` over the pages directory
 with ``trigger(availableNow=True)`` and ``foreachBatch`` running the SAME
-extraction stage as the batch pipeline. The streaming checkpoint upgrades
-the reference's at-least-once + hash-dedup to exactly-once appends; new
-page files dropped into the directory are picked up on the next trigger.
+extraction stage as the batch pipeline; new page files dropped into the
+directory are picked up on the next trigger. The streaming checkpoint
+records which files each epoch read, and each epoch's append is atomic
+(the output committer moves its files in only when the write job
+commits), so a failed epoch leaves nothing behind. Delivery is still
+at-least-once: a crash between an epoch's append and the stream's commit
+of that epoch makes ``foreachBatch`` re-run the epoch and append its rows
+again.
 
 Also: windowed event aggregation (watermark + tumbling window) over the
 ``events`` fixture — the streaming capability the reference lacks entirely.

@@ -22,7 +22,7 @@ plain text — the corpus shape for markdown-structure chunking.
 The session is ``document_ai_spark.session.get_spark()`` with no master,
 the same settings every benchmark and test runs: spark-submit's
 ``--master`` and every ``--conf`` key are kept, and the engine settings
-(zstd, committer v2, 8 MB splits, Arrow batching, one shuffle partition
+(zstd, 8 MB splits, Arrow batching, one shuffle partition
 per core, ...) fill in the keys the submit command leaves unset. On a
 cluster with dynamic allocation, pass
 ``--conf spark.sql.shuffle.partitions=<n>``: the core count at start

@@ -65,8 +65,8 @@ def test_noop_resume(spark, pages_dir, tmp_path):
 
 def test_metrics_rollup_counters(spark, pages_dir, tmp_path):
     out, run = str(tmp_path / "out"), str(tmp_path / "run")
-    run_extraction(spark, pages_dir, out, run, n_groups=2, run_id="r1")
-    m = metrics_rollup(spark, run).filter(F.col("run_id") == "r1").collect()[0]
+    run_id = run_extraction(spark, pages_dir, out, run, n_groups=2)["run_id"]
+    m = metrics_rollup(spark, run).filter(F.col("run_id") == run_id).collect()[0]
     assert m["n_groups"] == 2 and m["n_docs"] == 200
     # corpus v10 plants exactly one deliberate error row: the /Encrypt'd
     # PDF (labeled isolation) — the rollup must count it, and only it

@@ -11,14 +11,14 @@ import random
 
 import pytest
 
-from document_ai_spark.kernel.html_extract import tokenize_blocks
+from document_ai_spark.kernel.html_extract import _tokenize_blocks_reference, tokenize_blocks
 from document_ai_spark.sources.pages import generate_rows
 
 
 def _sig(s: str, fast: bool):
     return [
         (b.tag, b.text, b.n_chars, b.n_link_chars, b.n_text_nodes, b.in_article)
-        for b in tokenize_blocks(s, fast=fast)
+        for b in (tokenize_blocks if fast else _tokenize_blocks_reference)(s)
     ]
 
 

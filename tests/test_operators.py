@@ -19,23 +19,6 @@ def emb(spark):
 
 # -- chunking ---------------------------------------------------------------
 
-def test_chunk_markdown_matches_python_oracle(spark, docs):
-    from document_ai_spark.operators.chunking import chunk_markdown, split_markdown_py
-
-    sample = docs.filter(F.col("doc_id") < 30)
-    got = chunk_markdown(sample, "text", "doc_id", chunk_size=150, overlap=30)
-    got_rows = {
-        (r["doc_id"], r["chunk_index"]): (r["chunk_text"], r["char_start"], r["char_end"])
-        for r in got.collect()
-    }
-    texts = {r["doc_id"]: r["text"] for r in sample.select("doc_id", "text").collect()}
-    want = {}
-    for did, t in texts.items():
-        for i, chunk, s, e in split_markdown_py(t, 150, 30):
-            want[(did, i)] = (chunk, s, e)
-    assert got_rows == want
-
-
 def test_chunk_by_heading_splits_on_structure(spark):
     from document_ai_spark.operators.chunking import chunk_by_heading
 
@@ -109,7 +92,7 @@ def test_chunk_by_heading_plan_has_no_shuffle(spark):
 def test_chunk_spans_reconstruct(spark, docs):
     from document_ai_spark.operators.chunking import chunk_fixed
 
-    c = chunk_fixed(docs.limit(50), "text", "doc_id", chunk_size=120, overlap=20)
+    c = chunk_fixed(docs.limit(50), "doc_id", chunk_size=120, overlap=20)
     joined = c.join(docs.select("doc_id", "text"), "doc_id")
     bad = joined.filter(
         F.expr("substring(text, char_start + 1, char_end - char_start) != chunk_text")

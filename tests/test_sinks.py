@@ -5,6 +5,7 @@ delete-by-hash, force-readd — reference analogs of ChromaDB collection ops
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -82,3 +83,35 @@ def test_force_readd_replaces_matching_hashes(spark, tmp_path):
     assert ("h3", "text 3") not in rows
     assert ("h9", "fresh") in rows
     assert read_collection(spark, path).count() == 7
+
+
+def test_failed_append_leaves_the_collection_unchanged(spark, tmp_path):
+    # 4 write tasks; the last one sleeps, so the other three commit first,
+    # then raises: the job fails, and no committed task's files may reach
+    # the collection (they move in only when the whole job commits)
+    path = os.path.join(str(tmp_path), "col")
+    append_chunks(_chunks(spark, range(40)).coalesce(1), path)
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), path) for d, _, fs in os.walk(path) for f in fs
+        )
+
+    before = files()
+
+    @F.udf("string")
+    def fail_last(i):
+        if i == 299:
+            time.sleep(3)
+            raise ValueError("planted failure")
+        return f"h{i}"
+
+    rows = spark.range(0, 300, 1, 4).select(
+        fail_last("id").alias("doc_hash"),
+        F.concat(F.lit("url"), F.col("id").cast("string")).alias("url"),
+        F.lit("text").alias("chunk_text"),
+    )
+    with pytest.raises(Exception, match="planted failure"):
+        append_chunks(rows, path)
+    assert files() == before
+    assert read_collection(spark, path).count() == 40

@@ -28,8 +28,9 @@ from document_ai_spark.session import SETTINGS, get_spark
 
 spark = get_spark()
 hadoop = spark._jsparkSession.sessionState().newHadoopConf()
-got = {k: (hadoop if k.startswith("mapreduce.") else spark.conf).get(k) for k in SETTINGS}
+got = {k: spark.conf.get(k) for k in SETTINGS}
 got["spark.sql.shuffle.partitions"] = spark.conf.get("spark.sql.shuffle.partitions")
+got["committer"] = hadoop.get("mapreduce.fileoutputcommitter.algorithm.version")
 got["master"] = spark.sparkContext.master
 print(json.dumps(got))
 spark.stop()
@@ -47,7 +48,8 @@ def _submit(args, cwd, env=None):
 
 def test_get_spark_keeps_the_launchers_master_and_conf(tmp_path):
     """get_spark() under spark-submit keeps --master and --conf and fills in
-    every other engine setting, the committer version included."""
+    every other engine setting; files commit with Hadoop's default
+    committer, version 1 (a failed job leaves no task's files behind)."""
     probe = tmp_path / "probe.py"
     probe.write_text(PROBE)
     env = {**os.environ, "PYTHONPATH": os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))}
@@ -57,12 +59,13 @@ def test_get_spark_keeps_the_launchers_master_and_conf(tmp_path):
     assert got["master"] == "local[2]" and got["spark.sql.files.maxPartitionBytes"] == "4m"
     assert got["spark.sql.shuffle.partitions"] == "2"
     assert got["spark.sql.parquet.compression.codec"] == "zstd"
-    assert got["mapreduce.fileoutputcommitter.algorithm.version"] == "2"
+    assert got["committer"] == "1"
     # every other engine setting is in effect
     assert got == {
         **SETTINGS,
         "spark.sql.files.maxPartitionBytes": "4m",
         "spark.sql.shuffle.partitions": "2",
+        "committer": "1",
         "master": "local[2]",
     }
 
