@@ -102,9 +102,19 @@ def _embed_batch(texts: pd.Series, dim: int = DIM) -> pd.Series:
     return pd.Series(list(out32))
 
 
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def embed_udf(texts: pd.Series) -> pd.Series:
+def _embed_series(texts: pd.Series) -> pd.Series:
     return _embed_batch(texts)
+
+
+def embed_udf(texts):
+    """Column: ``embed_text_py`` of each row, computed per Arrow batch.
+
+    The pandas UDF is built per call: a module-level one would cache its
+    JVM function on first use (``UserDefinedFunction._judf``) and with it
+    the first session's Python accumulator, so after ``spark.stop()`` and
+    a new session in the same process every task using it would log
+    ``Failed to update accumulator 0 (PythonAccumulatorV2) ... Broken pipe``."""
+    return F.pandas_udf(_embed_series, T.ArrayType(T.FloatType()))(texts)
 
 
 def cosine_sim(a, b):

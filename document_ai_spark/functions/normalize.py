@@ -17,6 +17,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-@F.pandas_udf(T.StringType())
-def nfc_normalize_udf(s: pd.Series) -> pd.Series:
+def _nfc_series(s: pd.Series) -> pd.Series:
     return s.map(lambda x: unicodedata.normalize("NFC", x) if x is not None else None)
+
+
+def nfc_normalize_udf(s):
+    """Column: NFC of each string. Built per call, as ``embed.embed_udf``
+    (a cached UDF outlives its session)."""
+    return F.pandas_udf(_nfc_series, T.StringType())(s)

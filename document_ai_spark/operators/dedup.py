@@ -219,9 +219,14 @@ def simhash64_py(text: str) -> int:
     return v - (1 << 64) if v >= 1 << 63 else v
 
 
-@F.pandas_udf(T.LongType())
-def simhash64_udf(texts: pd.Series) -> pd.Series:
+def _simhash64_series(texts: pd.Series) -> pd.Series:
     return texts.map(simhash64_py)
+
+
+def simhash64_udf(texts):
+    """Column: ``simhash64_py`` of each row. Built per call, as
+    ``functions.embed.embed_udf`` (a cached UDF outlives its session)."""
+    return F.pandas_udf(_simhash64_series, T.LongType())(texts)
 
 
 def simhash_near_dups(

@@ -52,18 +52,13 @@ def format_docs(retrieved: DataFrame) -> DataFrame:
             "%s\n[Source: %s, Chunk: %s]", F.col("chunk_text"), F.col("url"), F.col("chunk_id")
         ).alias("fmt"),
     )
+    # ascending on (-score, chunk_id) is (score desc, chunk_id asc): one
+    # JVM sort, no per-pair lambda comparator; Spark orders -0.0 == 0.0
     return formatted.agg(
         F.concat_ws(
             "\n\n",
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("score").alias("s"), F.col("chunk_id").alias("i"), "fmt")
-                ),
-                lambda a, b: F.when(a["s"] > b["s"], -1)
-                .when(a["s"] < b["s"], 1)
-                .when(a["i"] < b["i"], -1)
-                .when(a["i"] > b["i"], 1)
-                .otherwise(0),
+            F.sort_array(
+                F.collect_list(F.struct((-F.col("score")).alias("s"), F.col("chunk_id").alias("i"), "fmt"))
             ).getField("fmt"),
         ).alias("context")
     )

@@ -18,8 +18,9 @@ records. At crawl scale, one WARC file is ~1 GB => tens of thousands of
 files => file-level parallelism saturates any executor count, so the
 parsed rows go straight into the extraction stage, task for task; the
 pipeline's one write shuffle (``compact_for_write``) balances the output.
-A gzip decode failure raises a ValueError naming the file: a corrupt
-archive fails the job instead of silently dropping its records.
+A gzip decode failure or a malformed record raises a ValueError naming
+the file (and the record's byte offset): a corrupt archive fails the job
+instead of silently dropping its records.
 
 Output schema == the pages table (url, warc_ts, html, text, lang,
 warc_day), so ``extract_pages(read_warc(...))`` is a drop-in for the
@@ -62,9 +63,13 @@ def write_record(url: str, ts: dt.datetime, payload: bytes, lang: str = "") -> b
 
 def parse_records(blob: bytes) -> Iterator[Tuple[str, dt.datetime, bytes, str]]:
     """Yield (url, ts, payload, lang) for every response record in a WARC
-    blob. Content-Length delimits payloads (they may contain 'WARC/1.0');
-    a malformed record ends parsing of the remainder of THIS file only —
-    per-file error isolation, same contract as per-document extraction."""
+    blob. Content-Length delimits payloads (they may contain 'WARC/1.0').
+    A record whose header block is unterminated (or cut, so that the next
+    record's header ends it), whose Content-Length is missing, not a
+    non-negative integer or longer than the bytes left, or (for a
+    response) whose WARC-Date is missing or not ``YYYY-MM-DDThh:mm:ssZ``
+    raises ValueError naming its byte offset: the records after it cannot
+    be found, so the file fails instead of losing them silently."""
     pos = 0
     n = len(blob)
     while pos < n:
@@ -72,30 +77,34 @@ def parse_records(blob: bytes) -> Iterator[Tuple[str, dt.datetime, bytes, str]]:
         if start == -1:
             return
         head_end = blob.find(_CRLF + _CRLF, start)
-        if head_end == -1:
-            return
+        # a second version line in the block: this record's header was cut
+        # and the next record's header ends it
+        if head_end == -1 or blob.find(b"WARC/1.0" + _CRLF, start + 1, head_end + 2) != -1:
+            raise ValueError(f"WARC record at byte {start}: header block is not terminated")
         headers = {}
         for line in blob[start:head_end].split(_CRLF)[1:]:
             k, _, v = line.partition(b":")
             if v:
                 headers[k.strip().lower()] = v.strip()
-        try:
-            length = int(headers[b"content-length"])
-        except (KeyError, ValueError):
-            return
+        raw_length = headers.get(b"content-length", b"")
+        if not raw_length.isdigit():
+            raise ValueError(f"WARC record at byte {start}: bad Content-Length {raw_length!r}")
+        length = int(raw_length)
         body_start = head_end + 4
+        if body_start + length > n:
+            raise ValueError(
+                f"WARC record at byte {start}: truncated payload, {n - body_start} of {length} bytes"
+            )
         payload = blob[body_start : body_start + length]
-        if len(payload) < length:
-            return  # truncated record
         pos = body_start + length
         if headers.get(b"warc-type", b"") == b"response":
             url = headers.get(b"warc-target-uri", b"").decode("utf-8", "replace")
             lang = headers.get(b"warc-identified-content-language", b"").decode("ascii", "replace")
-            raw_date = headers.get(b"warc-date", b"1970-01-01T00:00:00Z").decode("ascii", "replace")
+            raw_date = headers.get(b"warc-date", b"").decode("ascii", "replace")
             try:
                 ts = dt.datetime.strptime(raw_date, "%Y-%m-%dT%H:%M:%SZ")
             except ValueError:
-                ts = dt.datetime(1970, 1, 1)
+                raise ValueError(f"WARC record at byte {start}: bad WARC-Date {raw_date!r}") from None
             yield url, ts, payload, lang
 
 
@@ -144,7 +153,8 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
     this); an Arrow stage parses records. Parallelism is per-file
     (non-splittable format). warc_day is the UTC date of WARC-Date, as in
     the Parquet layout, whatever the session time zone. A ``.gz`` file
-    that does not decode raises ValueError naming its path."""
+    that does not decode, or a record ``parse_records`` rejects, raises
+    ValueError naming its path."""
     import pyarrow as pa
 
     def _parse(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -170,12 +180,15 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
                         raw = gzip.GzipFile(fileobj=io.BytesIO(raw)).read()
                     except (OSError, EOFError, zlib.error) as e:
                         raise ValueError(f"corrupt gzip WARC file {path}: {e}") from e
-                for url, ts, payload, lang in parse_records(raw):
-                    urls.append(url)
-                    tss.append(ts)
-                    payloads.append(payload)
-                    langs.append(lang or None)
-                    days.append(ts.strftime("%Y-%m-%d"))
+                try:
+                    for url, ts, payload, lang in parse_records(raw):
+                        urls.append(url)
+                        tss.append(ts)
+                        payloads.append(payload)
+                        langs.append(lang or None)
+                        days.append(ts.strftime("%Y-%m-%d"))
+                except ValueError as e:
+                    raise ValueError(f"malformed WARC file {path}: {e}") from e
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(urls, pa.string()),

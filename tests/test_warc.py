@@ -3,6 +3,7 @@
 
 import datetime as dt
 import gzip
+import re
 
 import pytest
 
@@ -28,13 +29,45 @@ def test_record_roundtrip_including_binary_payload():
 
 
 def test_truncated_and_garbage_blobs_are_isolated():
+    """A blob without a record is empty; a malformed record raises naming
+    its byte offset after the records before it were yielded (it used to
+    end the file silently, dropping every later record, and a bad
+    WARC-Date became 1970-01-01)."""
     assert list(parse_records(b"")) == []
     assert list(parse_records(b"not a warc at all")) == []
     good = write_record("https://e.com/x", dt.datetime(2024, 1, 1), b"ok", "en")
-    # good record followed by a truncated one: the good one still parses
-    trunc = write_record("https://e.com/y", dt.datetime(2024, 1, 1), b"payload", "en")[:-12]
-    recs = list(parse_records(good + trunc))
-    assert len(recs) == 1 and recs[0][2] == b"ok"
+    rec = write_record("https://e.com/y", dt.datetime(2024, 1, 1), b"payload", "en")
+    at = f"WARC record at byte {len(good)}: "
+    damaged = [
+        ("truncated payload, 5 of 7 bytes", rec[:-6]),
+        ("header block is not terminated", rec[:40]),
+        ("header block is not terminated", rec[:40] + good),  # cut, then the next record
+        ("bad Content-Length b''", rec.replace(b"Content-Length: 7\r\n", b"")),
+        ("bad Content-Length b'seven'", rec.replace(b"Content-Length: 7", b"Content-Length: seven")),
+        ("bad Content-Length b'-7'", rec.replace(b"Content-Length: 7", b"Content-Length: -7")),
+        ("bad WARC-Date ''", rec.replace(b"WARC-Date: 2024-01-01T00:00:00Z\r\n", b"")),
+        ("bad WARC-Date '2024-13-01T00:00:00Z'", rec.replace(b"2024-01-01T", b"2024-13-01T")),
+    ]
+    for reason, bad in damaged:
+        assert bad != rec
+        recs = []
+        with pytest.raises(ValueError, match="^" + re.escape(at + reason)):
+            for r in parse_records(good + bad):
+                recs.append(r)
+        assert [r[2] for r in recs] == [b"ok"], reason
+
+
+def test_malformed_warc_record_raises_naming_the_file(spark, tmp_path):
+    """read_warc fails on a malformed record with the file and offset."""
+    rec = write_record("https://e.com/a", dt.datetime(2024, 1, 1), b"<p>payload</p>", "en")
+    d = tmp_path / "warc"
+    d.mkdir()
+    (d / "good.warc").write_bytes(rec)
+    (d / "bad.warc").write_bytes(rec + rec[:-9])
+    with pytest.raises(
+        Exception, match=rf"ValueError: malformed WARC file \S*bad\.warc: WARC record at byte {len(rec)}"
+    ):
+        read_warc(spark, str(d)).collect()
 
 
 def test_warc_extraction_matches_parquet_path(spark, pages_dir, tmp_path):
