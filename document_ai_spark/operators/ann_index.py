@@ -59,23 +59,6 @@ def _params_fingerprint(method: str, centroids: list | None, dim: int, n_planes:
     return hashlib.blake2b(blob, digest_size=16).hexdigest()
 
 
-def _is_missing_table(exc: Exception) -> bool:
-    """True only for 'the table/path does not exist' failures — the ONE
-    condition under which the sidecar guard may be skipped (pre-sidecar
-    index). Transient read errors (permissions, corrupt file) must NOT
-    silently disable the bucket-function mismatch guard."""
-    from pyspark.errors import AnalysisException
-
-    if not isinstance(exc, AnalysisException):
-        return False
-    msg = str(exc)
-    return (
-        "PATH_NOT_FOUND" in msg
-        or "TABLE_OR_VIEW_NOT_FOUND" in msg
-        or "Path does not exist" in msg
-    )
-
-
 def build_ann_index(
     emb: DataFrame,
     catalog: Catalog,
@@ -145,30 +128,27 @@ def append_to_ann_index(
     append sees a consistent prefix. The append is validated against the
     ``<table>__meta`` sidecar fingerprint — mismatched centroids /
     hyperplane params / dim raise instead of silently landing rows in
-    buckets probes never read. Retrain + rebuild (build_ann_index) only
-    when drift degrades recall — the same build/refresh split as any IVF
-    service."""
-    # Read the sidecar FIRST: it carries the dim the index was built
-    # with, so the append path launches no data-side driver job at all
-    # (k×dim centroids / a 5-field meta row are the only driver reads).
-    try:
-        meta = catalog.read(f"{table}__meta").first()
-    except Exception as exc:
-        if not _is_missing_table(exc):
-            raise  # transient error must not disable the mismatch guard
-        meta = None  # pre-sidecar index: append unvalidated
-    dim = meta.dim if meta is not None else None
-    if dim is None and method == "lsh" and emb.select(vec_col).first() is None:
-        return  # pre-sidecar LSH append of an empty frame: nothing to do
+    buckets probes never read, and a table without a sidecar raises
+    (rebuild it). Retrain + rebuild (build_ann_index) only when drift
+    degrades recall — the same build/refresh split as any IVF service."""
+    if not catalog.exists(f"{table}__meta"):
+        raise ValueError(
+            f"append_to_ann_index: {table!r} has no {table}__meta sidecar; "
+            "rebuild it with build_ann_index"
+        )
+    # the sidecar carries the dim the index was built with, so the append
+    # path launches no data-side driver job at all (k×dim centroids / a
+    # 5-field meta row are the only driver reads)
+    meta = catalog.read(f"{table}__meta").first()
     # a row of the wrong length is named by the frame's first column
     indexed, part_col, dim = _assign_buckets(
-        emb, method, centroids, emb.columns[0], vec_col, n_planes, prefix_bits, dim=dim
+        emb, method, centroids, emb.columns[0], vec_col, n_planes, prefix_bits, dim=meta.dim
     )
     # validate against the sidecar the build wrote: appending with
     # different hyperplane params / centroids / dim would place rows in
     # buckets probes never read — fail loudly instead
     fp = _params_fingerprint(method, centroids, dim, n_planes, prefix_bits)
-    if meta is not None and (meta.method != method or meta.fingerprint != fp):
+    if meta.method != method or meta.fingerprint != fp:
         raise ValueError(
             f"append_to_ann_index: bucket-function mismatch for {table!r} "
             f"(index built as {meta.method}/{meta.fingerprint}, append is {method}/{fp})"

@@ -10,10 +10,10 @@ Design for 100 TB:
   * mapInArrow (iterator of pyarrow RecordBatches) — pipelined, no
     per-partition materialization, and NO pandas detour: input columns
     the kernel doesn't touch (url, warc_ts, lang, warc_day) pass through
-    zero-copy, and the output — including the spans list<struct> column
-    — is assembled as flat pyarrow arrays + offsets, skipping one boxing
-    of ~30 span tuples per document each way (measured ~12% off the whole
-    Python stage vs the mapInPandas formulation at sf0.1).
+    zero-copy, by name. The kernel's result tuples are transposed, and
+    each new column is one ``pa.array`` typed by the Arrow form of
+    EXTRACTED_SCHEMA, so the span dicts become the list<struct> column
+    with no second copy of its type.
   * no shuffle: the stage runs on the scan's own splits (8 MB parquet
     splits, one task per WARC file). Skew is handled after extraction by
     the pipeline's one write shuffle on (warc_day, url bucket) — see
@@ -70,84 +70,22 @@ def _extract_batches(
 ) -> Iterator["pa.RecordBatch"]:
     # imports inside the worker so the closure pickles only names
     import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from document_ai_spark.kernel.extract import extract_document
 
-    span_fields = [
-        pa.field("block_id", pa.int32()),
-        pa.field("char_start", pa.int64()),
-        pa.field("char_end", pa.int64()),
-        pa.field("tag", pa.string()),
-        pa.field("text_density", pa.float64()),
-        pa.field("link_density", pa.float64()),
-    ]
-    names = [f.name for f in EXTRACTED_SCHEMA.fields]
-
+    schema = to_arrow_schema(EXTRACTED_SCHEMA)
+    made = ("doc_hash", "kind", "text", "spans", "n_chars", "n_blocks", "error")
     for batch in batches:
-        payloads = batch.column(3).to_pylist()  # html
-        doc_hash: list = []
-        kind: list = []
-        text: list = []
-        n_chars: list = []
-        n_blocks: list = []
-        err: list = []
-        bytes_in: list = []
-        # spans as flat columns + list offsets: no per-span Python tuples
-        off = [0]
-        s_id: list = []
-        s_start: list = []
-        s_end: list = []
-        s_tag: list = []
-        s_td: list = []
-        s_ld: list = []
-        for payload in payloads:
-            b = bytes(payload) if payload is not None else b""
-            dh, kd, tx, spans, nc, nb, er = extract_document(b, markdown=markdown)
-            doc_hash.append(dh)
-            kind.append(kd)
-            text.append(tx)
-            n_chars.append(nc)
-            n_blocks.append(nb)
-            err.append(er)
-            bytes_in.append(len(b))
-            for s in spans:
-                s_id.append(s["block_id"])
-                s_start.append(s["char_start"])
-                s_end.append(s["char_end"])
-                s_tag.append(s["tag"])
-                s_td.append(s["text_density"])
-                s_ld.append(s["link_density"])
-            off.append(len(s_id))
-        spans_arr = pa.ListArray.from_arrays(
-            pa.array(off, pa.int32()),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(s_id, pa.int32()),
-                    pa.array(s_start, pa.int64()),
-                    pa.array(s_end, pa.int64()),
-                    pa.array(s_tag, pa.string()),
-                    pa.array(s_td, pa.float64()),
-                    pa.array(s_ld, pa.float64()),
-                ],
-                fields=span_fields,
-            ),
-        )
+        html = batch.column("html")
+        results = [extract_document(b, markdown=markdown) for b in html.to_pylist()]
+        values = zip(*results) if results else [()] * len(made)
+        columns = {k: pa.array(v, schema.field(k).type) for k, v in zip(made, values)}
+        columns["bytes_in"] = pc.binary_length(html).fill_null(0).cast(pa.int64())
         yield pa.RecordBatch.from_arrays(
-            [
-                batch.column(0),  # url: zero-copy passthrough
-                batch.column(1),  # warc_ts
-                batch.column(2),  # lang
-                pa.array(doc_hash, pa.string()),
-                pa.array(kind, pa.string()),
-                pa.array(text, pa.string()),
-                spans_arr,
-                pa.array(n_chars, pa.int64()),
-                pa.array(n_blocks, pa.int32()),
-                pa.array(err, pa.string()),
-                pa.array(bytes_in, pa.int64()),
-                batch.column(4),  # warc_day
-            ],
-            names=names,
+            [columns[n] if n in columns else batch.column(n) for n in schema.names],
+            names=schema.names,
         )
 
 
@@ -166,8 +104,7 @@ def extract_pages(pages: DataFrame, markdown: bool = False) -> DataFrame:
     headings, '- ' list items; PDF regions with heading-size fonts) —
     feed `chunk_by_heading` for the reference's markdown-splitter shape.
     """
-    # explicit pruning before the UDF; ORDER IS LOAD-BEARING — the Arrow
-    # stage addresses input columns positionally (batch.column(i))
+    # only the columns the stage reads or passes through enter it
     df = pages.select("url", "warc_ts", "lang", "html", F.col("warc_day").cast("string"))
     return df.mapInArrow(
         functools.partial(_extract_batches, markdown=markdown), schema=EXTRACTED_SCHEMA

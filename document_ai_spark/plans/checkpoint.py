@@ -18,11 +18,12 @@ cluster sizes. A key is re-extracted iff no 'done' row exists for it.
 
 One extraction job covers every pending key and writes its output with
 dynamic partition overwrite, so re-running a key replaces exactly that
-key's partitions (exactly-once output under retry). The job appends one
-row per key after its write commits; a crash before the append re-runs
-that job's keys.
+key's partitions (exactly-once output under retry). After its write
+commits, the job adds one file holding one row per key, renamed into
+place in one step: its keys become done together, and a crash before the
+rename re-runs all of them.
 
-The table is a directory of small parquet files, one per key, written and
+The table is a directory of small parquet files, one per job, written and
 read on the driver with pyarrow. A missing directory is an empty
 checkpoint; any file that cannot be read raises, because treating it as
 empty would silently re-run the whole crawl.
@@ -85,34 +86,34 @@ def append_done(
     spark: SparkSession,
     run_dir: str,
     run_id: str,
-    group_id: int,
     counters: dict,
     started_at: float,
 ) -> None:
-    # driver-side pyarrow append (one tiny file, unique name): a Spark
-    # write job for one row costs ~300 ms of scheduling, which multiplied
-    # by thousands of keys is real money. On a cluster this row goes
+    """Record every key of one job done: ``counters`` maps each key's
+    group_id to its counters. One file with one row per key, so the keys
+    become done together."""
+    # driver-side pyarrow append (one small file, unique name): a Spark
+    # write job costs ~300 ms of scheduling. On a cluster these rows go
     # through the Iceberg catalog instead.
     path = checkpoint_path(run_dir)
     os.makedirs(path, exist_ok=True)
-    table = pa.table(
+    finished_at, app_id = time.time(), spark.sparkContext.applicationId
+    rows = [
         {
-            "run_id": [run_id],
-            "group_id": [group_id],
-            "status": ["done"],
-            "n_docs": [int(counters.get("n_docs", 0))],
-            "n_ok": [int(counters.get("n_ok", 0))],
-            "n_err": [int(counters.get("n_err", 0))],
-            "bytes_in": [int(counters.get("bytes_in", 0))],
-            "started_at": [float(started_at)],
-            "finished_at": [float(time.time())],
-            "app_id": [spark.sparkContext.applicationId],
-        },
-        schema=_ARROW_SCHEMA,
-    )
+            "run_id": run_id,
+            "group_id": group_id,
+            "status": "done",
+            **{k: int(c.get(k, 0)) for k in ("n_docs", "n_ok", "n_err", "bytes_in")},
+            "started_at": float(started_at),
+            "finished_at": finished_at,
+            "app_id": app_id,
+        }
+        for group_id, c in counters.items()
+    ]
+    table = pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA)
     # written under a hidden name, then renamed: a crash mid-write leaves a
     # file every reader skips, not one that fails every later read
-    name = f"cp-{run_id}-{group_id}-{uuid.uuid4().hex[:8]}.parquet"
+    name = f"cp-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
     pq.write_table(table, os.path.join(path, "." + name))
     os.replace(os.path.join(path, "." + name), os.path.join(path, name))
 

@@ -8,14 +8,16 @@ Each call runs ONE Spark job over every checkpoint key not yet done:
       -> repartition(warc_day, url bucket)      # compact_for_write, the one shuffle
       -> observe per-key n_docs, n_err, bytes_in
       -> write partitionBy(key, warc_day), dynamic partition overwrite
-    then append one 'done' row per key, from the observed counters.
+    then add one checkpoint file with a 'done' row per key, from the
+    observed counters.
 
 A key is a warc_day partition value (:func:`run_extraction_by_day`, layout
 ``warc_day=<d>/``) or a url bucket (:func:`run_extraction`, layout
 ``group=<g>/warc_day=<d>/``). Re-running the same (pages_path, out_dir,
-run_dir) skips done keys: resume at partition granularity. A crash before
-the checkpoint append re-runs that job's keys, and the dynamic overwrite
-replaces exactly their partitions, so the output stays exactly-once.
+run_dir) skips done keys: resume at partition granularity. A job's keys
+become done together, when its checkpoint file is renamed into place; a
+crash before that re-runs all of them, and the dynamic overwrite replaces
+exactly their partitions, so the output stays exactly-once.
 """
 
 from __future__ import annotations
@@ -126,11 +128,11 @@ def _extract_pending(
         .partitionBy(*dict.fromkeys([key_name, "warc_day"]))
         .parquet(out_dir)
     )
-    got = counters.get
+    got, stats = counters.get, {}
     for i, v in enumerate(values):
         n_docs, n_err, n_bytes = (got[f"{c}_{i}"] for c in ("n_docs", "n_err", "bytes_in"))
-        stats = {"n_docs": n_docs, "n_ok": n_docs - n_err, "n_err": n_err, "bytes_in": n_bytes}
-        cp.append_done(spark, run_dir, run_id, pending[v], stats, started)
+        stats[pending[v]] = dict(n_docs=n_docs, n_ok=n_docs - n_err, n_err=n_err, bytes_in=n_bytes)
+    cp.append_done(spark, run_dir, run_id, stats, started)
     return summary
 
 

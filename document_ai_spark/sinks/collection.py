@@ -22,7 +22,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.dataset as ds
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -58,10 +59,12 @@ def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame) -> int:
     cur = spark.read.parquet(path)
     doomed = hashes.select("doc_hash").distinct()
     kept = cur.join(F.broadcast(doomed), "doc_hash", "left_anti")
-    n_before = cur.count()
+    n_before = ds.dataset(path, format="parquet").count_rows()  # parquet footers, no job
     tmp = tempfile.mkdtemp(prefix="collection_rewrite_", dir=os.path.dirname(path.rstrip("/")))
-    kept.write.mode("overwrite").parquet(tmp)
-    n_after = spark.read.parquet(tmp).count()
+    # observed directly before the write: counted in the write's result
+    # stage, where each task's update is applied once
+    n_kept = Observation()
+    kept.observe(n_kept, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(tmp)
     old = tmp + "_old"
     os.rename(path, old)
     try:
@@ -70,7 +73,7 @@ def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame) -> int:
         os.rename(old, path)
         raise
     shutil.rmtree(old)
-    return n_before - n_after
+    return n_before - n_kept.get["n"]
 
 
 def force_readd(spark: SparkSession, path: str, new_chunks: DataFrame) -> dict:
@@ -78,6 +81,6 @@ def force_readd(spark: SparkSession, path: str, new_chunks: DataFrame) -> dict:
     existing rows sharing a hash with ``new_chunks`` are removed, then the
     new rows are appended. Iceberg: one MERGE. Returns counters."""
     deleted = delete_by_hash(spark, path, new_chunks.select("doc_hash").distinct())
-    added = new_chunks.count()
-    append_chunks(new_chunks, path)
-    return {"deleted": deleted, "added": added}
+    added = Observation()
+    append_chunks(new_chunks.observe(added, F.count(F.lit(1)).alias("n")), path)
+    return {"deleted": deleted, "added": added.get["n"]}

@@ -3,9 +3,9 @@
 The north rule targets Iceberg tables; the local setup has no Iceberg runtime
 jars, so tables can be addressed through this adapter (SURVEY.md §7 step
 0). It holds what the ANN index tables (operators/ann_index.py) use:
-``identifier``, ``read``, ``write_partitioned`` (identity partitions),
-``append`` and ``drop``. When the session has an Iceberg catalog
-configured (any ``spark.sql.catalog.<name>`` conf), tables resolve to
+``identifier``, ``exists``, ``read``, ``write_partitioned`` (identity
+partitions), ``append`` and ``drop``. When the session has an Iceberg
+catalog configured (any ``spark.sql.catalog.<name>`` conf), tables resolve to
 ``<catalog>.<namespace>.<table>`` and writes use the DataFrameWriterV2
 ``writeTo`` API; otherwise tables resolve to Parquet directories with the
 same partition layout, so moving the index to a cluster flips a config,
@@ -56,6 +56,12 @@ class Catalog:
             return f"{self.iceberg}.{self.namespace}.{table}"
         return os.path.join(self.warehouse_dir, table)
 
+    def exists(self, table: str) -> bool:
+        ident = self.identifier(table)
+        if self.iceberg:
+            return self.spark.catalog.tableExists(ident)
+        return os.path.isdir(ident)
+
     # -- read ---------------------------------------------------------------
     def read(self, table: str) -> DataFrame:
         ident = self.identifier(table)
@@ -80,7 +86,7 @@ class Catalog:
             if mode == "overwrite":
                 w.createOrReplace()
             else:
-                w.append() if self.spark.catalog.tableExists(ident) else w.create()
+                w.append() if self.exists(table) else w.create()
             return
         df.write.mode(mode).partitionBy(*partition_cols).parquet(ident)
 
@@ -90,7 +96,7 @@ class Catalog:
             # bootstrap with writeTo().create() so the table takes df's
             # schema (a CTAS from a dummy SELECT would create a mismatched
             # single-column table and every later append would fail)
-            if self.spark.catalog.tableExists(ident):
+            if self.exists(table):
                 df.writeTo(ident).append()
             else:
                 df.writeTo(ident).create()

@@ -18,9 +18,10 @@ records. At crawl scale, one WARC file is ~1 GB => tens of thousands of
 files => file-level parallelism saturates any executor count, so the
 parsed rows go straight into the extraction stage, task for task; the
 pipeline's one write shuffle (``compact_for_write``) balances the output.
-A gzip decode failure or a malformed record raises a ValueError naming
-the file (and the record's byte offset): a corrupt archive fails the job
-instead of silently dropping its records.
+A gzip decode failure, a malformed record or junk between records (any
+byte but CR/LF) raises a ValueError naming the file (and the byte offset
+of the record or junk): a corrupt archive fails the job instead of
+silently dropping its records.
 
 Output schema == the pages table (url, warc_ts, html, text, lang,
 warc_day), so ``extract_pages(read_warc(...))`` is a drop-in for the
@@ -31,6 +32,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 from typing import Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from document_ai_spark.sources.pages import PAGES_SCHEMA, generate_rows
 
 _CRLF = b"\r\n"
+_LINE_ENDS = re.compile(rb"[\r\n]*")  # the only bytes allowed between records
 
 WARC_PAGE_SCHEMA = PAGES_SCHEMA  # warc_day: the UTC date of WARC-Date
 
@@ -64,7 +67,9 @@ def write_record(url: str, ts: dt.datetime, payload: bytes, lang: str = "") -> b
 def parse_records(blob: bytes) -> Iterator[Tuple[str, dt.datetime, bytes, str]]:
     """Yield (url, ts, payload, lang) for every response record in a WARC
     blob. Content-Length delimits payloads (they may contain 'WARC/1.0').
-    A record whose header block is unterminated (or cut, so that the next
+    Only CR and LF may stand between records: any other byte where a
+    record should start raises ValueError naming its offset. A record
+    whose header block is unterminated (or cut, so that the next
     record's header ends it), whose Content-Length is missing, not a
     non-negative integer or longer than the bytes left, or (for a
     response) whose WARC-Date is missing or not ``YYYY-MM-DDThh:mm:ssZ``
@@ -72,10 +77,13 @@ def parse_records(blob: bytes) -> Iterator[Tuple[str, dt.datetime, bytes, str]]:
     be found, so the file fails instead of losing them silently."""
     pos = 0
     n = len(blob)
-    while pos < n:
-        start = blob.find(b"WARC/1.0", pos)
-        if start == -1:
+    while True:
+        start = _LINE_ENDS.match(blob, pos).end()
+        if start == n:
             return
+        if not blob.startswith(b"WARC/1.0", start):
+            found = blob[start : start + 16]
+            raise ValueError(f"WARC record at byte {start}: expected b'WARC/1.0', found {found!r}")
         head_end = blob.find(_CRLF + _CRLF, start)
         # a second version line in the block: this record's header was cut
         # and the next record's header ends it
@@ -156,6 +164,9 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
     that does not decode, or a record ``parse_records`` rejects, raises
     ValueError naming its path."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(WARC_PAGE_SCHEMA)
 
     def _parse(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import gzip
@@ -163,16 +174,9 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
         import zlib
 
         for batch in batches:
-            names = batch.schema.names
-            contents = batch.column(names.index("content"))
-            paths = batch.column(names.index("path"))
-            urls: List[str] = []
-            tss: List[dt.datetime] = []
-            payloads: List[bytes] = []
-            langs: List[str] = []
-            days: List[str] = []
-            for path, blob in zip(paths.to_pylist(), contents):
-                raw = blob.as_py() or b""
+            rows = []  # (url, warc_ts, html, text, lang, warc_day) per record
+            for path, blob in zip(batch.column("path").to_pylist(), batch.column("content")):
+                raw = blob.as_py() or b""  # one file's bytes in Python at a time
                 if path.endswith(".gz"):
                     # Common Crawl ships .warc.gz as CONCATENATED per-record
                     # gzip members; GzipFile reads through all members
@@ -182,23 +186,12 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
                         raise ValueError(f"corrupt gzip WARC file {path}: {e}") from e
                 try:
                     for url, ts, payload, lang in parse_records(raw):
-                        urls.append(url)
-                        tss.append(ts)
-                        payloads.append(payload)
-                        langs.append(lang or None)
-                        days.append(ts.strftime("%Y-%m-%d"))
+                        rows.append((url, ts, payload, None, lang or None, ts.strftime("%Y-%m-%d")))
                 except ValueError as e:
                     raise ValueError(f"malformed WARC file {path}: {e}") from e
+            values = zip(*rows) if rows else [()] * len(schema)
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, pa.string()),
-                    pa.array(tss, pa.timestamp("us")),
-                    pa.array(payloads, pa.binary()),
-                    pa.array([None] * len(urls), pa.string()),  # text: unused
-                    pa.array(langs, pa.string()),
-                    pa.array(days, pa.string()),
-                ],
-                names=WARC_PAGE_SCHEMA.names,
+                [pa.array(v, f.type) for v, f in zip(values, schema)], schema=schema
             )
 
     files = spark.read.format("binaryFile").option("pathGlobFilter", "*.warc*").load(warc_dir)

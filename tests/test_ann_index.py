@@ -175,3 +175,28 @@ def test_append_rejects_mismatched_bucket_function(spark, emb, tmp_path_factory)
     # matching params still append fine
     append_to_ann_index(emb, cat, "g_lsh", method="lsh", prefix_bits=4)
     append_to_ann_index(emb, cat, "g_ivf", method="ivf", centroids=c1)
+
+
+def test_append_without_a_sidecar_raises(spark, emb, tmp_path_factory):
+    """Every build writes <table>__meta; an index without one cannot be
+    validated, so appending to it raises and leaves its files as they are."""
+    import shutil
+
+    from document_ai_spark.operators.ann_index import append_to_ann_index
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("ann_wh_nometa")))
+    cents = build_ann_index(emb, cat, "bare", method="ivf", n_clusters=4)
+    shutil.rmtree(cat.identifier("bare__meta"))
+    root = cat.identifier("bare")
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, names in os.walk(root)
+            for f in names
+        }
+
+    before = files()
+    with pytest.raises(ValueError, match="'bare' has no bare__meta sidecar; rebuild it with build_ann_index"):
+        append_to_ann_index(emb, cat, "bare", method="ivf", centroids=cents)
+    assert files() == before

@@ -21,12 +21,20 @@ from .conftest import session_time_zone
 
 
 def _drop_checkpoint_rows(run, keys):
-    """Delete the checkpoint files of ``keys``: the state a crash between
-    the output commit and those keys' checkpoint appends leaves behind."""
+    """Remove the checkpoint rows of ``keys``: the state left when the job
+    that ran them crashed between its output commit and its checkpoint
+    file, while earlier jobs committed the other keys."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     path = cp.checkpoint_path(run)
     for name in os.listdir(path):
-        if int(name.split("-")[2]) in keys:  # cp-<run_id>-<key>-<uuid>.parquet
-            os.remove(os.path.join(path, name))
+        f = os.path.join(path, name)
+        t = pq.read_table(f)
+        os.remove(f)
+        kept = t.filter(pc.invert(pc.is_in(t["group_id"], pa.array(keys, pa.int32()))))
+        if kept.num_rows:
+            pq.write_table(kept, f)
 
 
 def _files(d):
@@ -129,8 +137,8 @@ def test_unreadable_checkpoint_file_raises(spark, tmp_path):
     """A checkpoint file that cannot be read must raise when the checkpoint
     is read, never turn into an empty checkpoint that re-runs every key."""
     run = str(tmp_path / "run")
-    cp.append_done(spark, run, "r1", 0, {"n_docs": 5}, 0.0)
-    with open(os.path.join(cp.checkpoint_path(run), "cp-r1-1-corrupt.parquet"), "wb") as f:
+    cp.append_done(spark, run, "r1", {0: {"n_docs": 5}}, 0.0)
+    with open(os.path.join(cp.checkpoint_path(run), "cp-r2-corrupt.parquet"), "wb") as f:
         f.write(b"PAR1 this is not a parquet footer")
     with pytest.raises(pa.ArrowInvalid):
         cp.read_checkpoint(spark, run)
@@ -140,24 +148,48 @@ def test_unreadable_checkpoint_file_raises(spark, tmp_path):
     assert done_groups(spark, str(tmp_path / "no_run")) == set()
 
 
+def _torn_write(table, where, **kw):
+    with open(where, "wb") as f:
+        f.write(b"PAR1")
+    raise OSError("disk gone")
+
+
 def test_torn_checkpoint_append_is_skipped(spark, tmp_path, monkeypatch):
-    """A crash in the middle of one checkpoint append leaves that key not
-    done and the checkpoint readable."""
+    """A crash in the middle of one checkpoint append leaves none of its
+    keys done and the checkpoint readable."""
     import pyarrow.parquet as pq
 
     run = str(tmp_path / "run")
-    cp.append_done(spark, run, "r1", 0, {"n_docs": 5}, 0.0)
-
-    def torn_write(table, where, **kw):
-        with open(where, "wb") as f:
-            f.write(b"PAR1")
-        raise OSError("disk gone")
-
-    monkeypatch.setattr(pq, "write_table", torn_write)
+    cp.append_done(spark, run, "r1", {0: {"n_docs": 5}}, 0.0)
+    monkeypatch.setattr(pq, "write_table", _torn_write)
     with pytest.raises(OSError, match="disk gone"):
-        cp.append_done(spark, run, "r1", 1, {"n_docs": 5}, 0.0)
+        cp.append_done(spark, run, "r2", {1: {"n_docs": 5}, 2: {"n_docs": 7}}, 0.0)
     monkeypatch.undo()
     assert done_groups(spark, run) == {0}
+
+
+def test_a_job_commits_its_keys_in_one_checkpoint_file(spark, pages_dir, tmp_path, monkeypatch):
+    """The day job writes one checkpoint file with a row per day; when that
+    write tears, all four days stay pending and the re-run writes each url
+    once."""
+    import pyarrow.parquet as pq
+
+    out, first = str(tmp_path / "out"), str(tmp_path / "run_a")
+    run_extraction_by_day(spark, pages_dir, out, first)
+    [name] = os.listdir(cp.checkpoint_path(first))
+    assert pq.read_table(os.path.join(cp.checkpoint_path(first), name)).num_rows == 4
+
+    run = str(tmp_path / "run_b")
+    monkeypatch.setattr(pq, "write_table", _torn_write)
+    with pytest.raises(OSError, match="disk gone"):
+        run_extraction_by_day(spark, pages_dir, out, run)
+    monkeypatch.undo()
+    assert done_groups(spark, run) == set()
+    s = run_extraction_by_day(spark, pages_dir, out, run)
+    assert s["groups_done_before"] == 0 and s["groups_run"] == 4
+    assert len(done_groups(spark, run)) == 4
+    df = load_extracted(spark, out)
+    assert df.count() == df.select("url").distinct().count() == 200
 
 
 def test_output_partitioned_by_day(spark, pages_dir, tmp_path):

@@ -119,3 +119,48 @@ def test_duplicate_payload_same_hash_distinct_urls(spark, pages_dir):
     assert dups[0]["doc_hash"] == dups[1]["doc_hash"]
     assert dups[0]["text"] == dups[1]["text"] != ""
 
+
+
+def test_extract_batches_build_the_declared_schema():
+    """The Arrow stage fed batches directly: every row equals
+    extract_document's result, and every batch, an empty one included,
+    has the Arrow form of EXTRACTED_SCHEMA."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from document_ai_spark.kernel.extract import extract_document
+    from document_ai_spark.operators.extraction import EXTRACTED_SCHEMA, _extract_batches
+    from document_ai_spark.sources.pages import generate_rows
+
+    # a null html, then empty-0, no-main-4 (zero spans), pdf-encrypted-6
+    # (the error row) and page-28 (a PDF with spans) among 29 corpus rows
+    rows = [{"url": "https://e.com/null", "html": None}] + list(generate_rows(29, seed=42))
+    schema = to_arrow_schema(EXTRACTED_SCHEMA)
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "url": [r["url"] for r in rows],
+            "warc_ts": [r.get("warc_ts") for r in rows],
+            "lang": [r.get("lang") for r in rows],
+            "html": [r["html"] for r in rows],
+            "warc_day": ["2024-03-01"] * len(rows),
+        },
+        schema=pa.schema(
+            [schema.field(n) for n in ("url", "warc_ts", "lang")]
+            + [pa.field("html", pa.binary()), schema.field("warc_day")]
+        ),
+    )
+    for markdown in (False, True):
+        out = list(_extract_batches(iter([batch, batch.slice(0, 0)]), markdown=markdown))
+        assert [b.num_rows for b in out] == [len(rows), 0]
+        assert [b.schema for b in out] == [schema, schema]
+        got = out[0].to_pylist()
+        made_names = ("doc_hash", "kind", "text", "spans", "n_chars", "n_blocks", "error")
+        for src, g in zip(batch.to_pylist(), got):
+            html = src.pop("html")  # url, warc_ts, lang and warc_day pass through
+            made = dict(zip(made_names, extract_document(html, markdown=markdown)))
+            assert g == {**src, **made, "bytes_in": len(html or b"")}
+        by_url = {g["url"].rsplit("/", 1)[1]: g for g in got}
+        assert by_url["null"]["bytes_in"] == 0 and by_url["null"]["kind"] == "empty"
+        assert by_url["empty-0"]["kind"] == "empty" and by_url["no-main-4"]["spans"] == []
+        assert by_url["pdf-encrypted-6"]["error"] == "encrypted"
+        assert by_url["page-28"]["kind"] == "pdf" and len(by_url["page-28"]["spans"]) == 4

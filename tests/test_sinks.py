@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,3 +116,28 @@ def test_failed_append_leaves_the_collection_unchanged(spark, tmp_path):
         append_chunks(rows, path)
     assert files() == before
     assert read_collection(spark, path).count() == 40
+
+
+def _jobs(spark, call):
+    """Run ``call()``; return its result and the number of Spark jobs it ran."""
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, "counted")
+    try:
+        result = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_collection_counters_come_from_the_write(spark, tmp_path):
+    """delete_by_hash counts its input from the parquet footers and the kept
+    rows in the rewrite; force_readd counts the added rows in the append.
+    Re-counting ran 9 and 12 jobs."""
+    path = os.path.join(str(tmp_path), "col")
+    append_chunks(_chunks(spark, range(10)), path)
+    doomed = spark.createDataFrame([("h2",), ("h7",), ("h404",)], "doc_hash string")
+    assert _jobs(spark, lambda: delete_by_hash(spark, path, doomed)) == (2, 4)
+    replacement = _chunks(spark, [3, 12])
+    assert _jobs(spark, lambda: force_readd(spark, path, replacement)) == ({"deleted": 1, "added": 2}, 5)
+    assert read_collection(spark, path).count() == 9

@@ -29,16 +29,21 @@ def test_record_roundtrip_including_binary_payload():
 
 
 def test_truncated_and_garbage_blobs_are_isolated():
-    """A blob without a record is empty; a malformed record raises naming
-    its byte offset after the records before it were yielded (it used to
-    end the file silently, dropping every later record, and a bad
-    WARC-Date became 1970-01-01)."""
+    """An empty blob has no records; junk where a record should start, or
+    a malformed record, raises naming its byte offset after the records
+    before it were yielded (junk used to be skipped, so a garbage file
+    extracted nothing and the job succeeded; a malformed record ended the
+    file silently, and a bad WARC-Date became 1970-01-01)."""
     assert list(parse_records(b"")) == []
-    assert list(parse_records(b"not a warc at all")) == []
+    assert list(parse_records(b"\r\n\r\n")) == []
+    garbage = "WARC record at byte 0: expected b'WARC/1.0', found b'not a warc at al'"
+    with pytest.raises(ValueError, match=re.escape(garbage)):
+        list(parse_records(b"not a warc at all"))
     good = write_record("https://e.com/x", dt.datetime(2024, 1, 1), b"ok", "en")
     rec = write_record("https://e.com/y", dt.datetime(2024, 1, 1), b"payload", "en")
     at = f"WARC record at byte {len(good)}: "
     damaged = [
+        ("expected b'WARC/1.0', found b'junk\\r\\nWARC/1.0\\r\\n'", b"junk\r\n" + good),
         ("truncated payload, 5 of 7 bytes", rec[:-6]),
         ("header block is not terminated", rec[:40]),
         ("header block is not terminated", rec[:40] + good),  # cut, then the next record
@@ -58,16 +63,19 @@ def test_truncated_and_garbage_blobs_are_isolated():
 
 
 def test_malformed_warc_record_raises_naming_the_file(spark, tmp_path):
-    """read_warc fails on a malformed record with the file and offset."""
+    """read_warc fails on a malformed record, or on a file of junk, with
+    the file and offset (a junk file used to yield no rows, so its
+    documents vanished from a job that succeeded)."""
     rec = write_record("https://e.com/a", dt.datetime(2024, 1, 1), b"<p>payload</p>", "en")
-    d = tmp_path / "warc"
-    d.mkdir()
-    (d / "good.warc").write_bytes(rec)
-    (d / "bad.warc").write_bytes(rec + rec[:-9])
-    with pytest.raises(
-        Exception, match=rf"ValueError: malformed WARC file \S*bad\.warc: WARC record at byte {len(rec)}"
-    ):
-        read_warc(spark, str(d)).collect()
+    for bad, at in ((rec + rec[:-9], len(rec)), (b"not a warc at all", 0)):
+        d = tmp_path / f"warc{at}"
+        d.mkdir()
+        (d / "good.warc").write_bytes(rec)
+        (d / "bad.warc").write_bytes(bad)
+        with pytest.raises(
+            Exception, match=rf"ValueError: malformed WARC file \S*bad\.warc: WARC record at byte {at}:"
+        ):
+            read_warc(spark, str(d)).collect()
 
 
 def test_warc_extraction_matches_parquet_path(spark, pages_dir, tmp_path):
