@@ -18,7 +18,8 @@ Design for 100 TB:
     splits, one task per WARC file). Skew is handled after extraction by
     the pipeline's one write shuffle on (warc_day, url bucket) — see
     plans/pipeline.compact_for_write — which moves only the extracted
-    output, much smaller than the html input.
+    output, much smaller than the html input; after it, a second Arrow
+    stage writes the files with pyarrow (plans/pipeline._write_files).
   * per-document error isolation inside the kernel (kind='error' rows) — a
     poison page never fails a task, so task retries stay idempotent.
   * column pruning: only (url, warc_ts, lang, html, warc_day) enter the

@@ -16,12 +16,13 @@ xxhash64(url, GROUP_SALT) mod n_groups. Both are pure functions of the
 row, so key membership is identical across runs, partition counts and
 cluster sizes. A key is re-extracted iff no 'done' row exists for it.
 
-One extraction job covers every pending key and writes its output with
-dynamic partition overwrite, so re-running a key replaces exactly that
-key's partitions (exactly-once output under retry). After its write
-commits, the job adds one file holding one row per key, renamed into
-place in one step: its keys become done together, and a crash before the
-rename re-runs all of them.
+One extraction job covers every pending key. Its commit on the driver
+(``pipeline.commit_output``) replaces exactly those keys' directories,
+so re-running a key replaces its output (exactly-once under retry), and
+sums the files' commit rows into each key's counters. Then the job adds
+one file holding one row per key, renamed into place in one step: its
+keys become done together, and a crash before the rename re-runs all of
+them.
 
 The table is a directory of small parquet files, one per job, written and
 read on the driver with pyarrow. A missing directory is an empty

@@ -18,8 +18,9 @@ version 1): each task's files wait in the job's staging directory and
 move into the destination only when the whole job commits, so a failed
 append (``sinks.collection.append_chunks``, the ANN index appends, the
 incremental stream) leaves the target as it was. Version 2 moved each
-task's files at task commit and left a failed job's files behind; on the
-3000-doc extraction it was not faster.
+task's files at task commit and left a failed job's files behind. The
+extraction job writes with pyarrow and commits its own files
+(``plans.pipeline.commit_output``).
 
 Two settings are local-launch only. With ``master`` given, ``get_spark``
 starts the JVM itself and sets the UI off and 16g driver memory. With
@@ -86,3 +87,15 @@ def get_spark(
             spark.conf.set(k, v)
     sc.setLogLevel("WARN")
     return spark
+
+
+def stop_spark(spark: SparkSession) -> None:
+    """Stop the session, and before it Structured Streaming's state store.
+
+    A stateful query leaves the state store's maintenance thread running
+    after the query ends. Left to ``spark.stop()``, its next run finds no
+    SparkEnv and logs a stack trace (``SparkEnv not active, cannot do
+    maintenance on StateStores``) although nothing failed.
+    """
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    spark.stop()

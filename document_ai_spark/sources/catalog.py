@@ -11,10 +11,10 @@ catalog configured (any ``spark.sql.catalog.<name>`` conf), tables resolve to
 same partition layout, so moving the index to a cluster flips a config,
 not code.
 
-The extraction job (plans/pipeline.py) writes Parquet directly: it needs
-a dynamic partition overwrite (a re-run replaces exactly its pending
-keys' partitions; Iceberg's ``overwritePartitions()``), which none of
-these writers does. The collections (sinks/collection.py) and the
+The extraction job (plans/pipeline.py) writes its Parquet files with
+pyarrow inside its Python stage, and the driver replaces exactly the
+pending keys' directories with them (Iceberg's ``overwritePartitions()``
+on a cluster), which none of these writers does. The collections (sinks/collection.py) and the
 checkpoint (plans/checkpoint.py, pyarrow on the driver) are Parquet
 directories too.
 

@@ -8,9 +8,11 @@ Emits the north-rule input table (BASELINE.json ``input_hint``)::
 written as Parquet partitioned by ``warc_day``, the UTC date of warc_ts
 (the local stand-in for an Iceberg table partitioned by ``days(warc_ts)``
 — no Iceberg jars in the sandbox; identical directory layout).
-``PAGES_SCHEMA`` is the table's Spark schema: every reader of pages (the
-Parquet and WARC sources, the incremental stream) uses it, so warc_ts is
-a timestamp and warc_day a string whatever the files let Spark infer.
+``PAGES_SCHEMA`` is the table's Spark schema: ``write_pages_parquet``
+types its files from it (warc_ts as timestamp[us, tz=UTC]), and every
+reader of pages (the Parquet and WARC sources, the incremental stream)
+uses it, so warc_ts is a timestamp and warc_day a string whatever the
+files let Spark infer.
 
 Corpus v12: ~30%/~20% of HTML articles embed one of two fixed
 IN-CONTENT boilerplate sentences (newsletter pitch / share bar) inside
@@ -882,17 +884,10 @@ def write_pages_parquet(out_dir: str, n_docs: int, seed: int = 42) -> int:
     (Iceberg days(warc_ts) layout, Parquet fallback). Returns row count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = pa.schema(
-        [
-            pa.field("url", pa.string()),
-            pa.field("warc_ts", pa.timestamp("us")),
-            pa.field("html", pa.binary()),
-            pa.field("text", pa.string()),
-            pa.field("lang", pa.string()),
-            pa.field("warc_day", pa.string()),
-        ]
-    )
+    # warc_day becomes the partition directory, not a column of the files
+    schema = to_arrow_schema(PAGES_SCHEMA)
     buf: List[dict] = []
     total = 0
 

@@ -86,7 +86,7 @@ def main() -> int:
     prefixes = tuple(sys.argv[2:])
 
     import __spark_entry__ as E
-    from document_ai_spark.session import default_cpus, get_spark
+    from document_ai_spark.session import default_cpus, get_spark, stop_spark
 
     spark = get_spark(app_name="oracle_check", master=f"local[{default_cpus()}]")
     con = duckdb.connect()
@@ -148,7 +148,7 @@ def main() -> int:
             print(f"{name:28s} VALUE MISMATCH row {bad[0]}:\n  spark={bad[1]}\n  duck ={bad[2]}")
         else:
             print(f"{name:28s} OK ({len(srows)} rows)")
-    spark.stop()
+    stop_spark(spark)
     print(f"\n{len(failures)} failures")
     return 1 if failures else 0
 

@@ -30,10 +30,10 @@ is not the job's.
 
 Each submission runs one Spark job over the checkpoint keys (url buckets,
 or days with --by-day) not yet recorded 'done' in <out_dir>/_checkpoint,
-so re-submitting with the same <out_dir> resumes. The write uses dynamic
-partition overwrite: a re-run replaces exactly the pending keys'
-partitions and leaves _checkpoint in place (exactly-once; see
-document_ai_spark/plans/pipeline.py). On a real cluster the parquet paths
+so re-submitting with the same <out_dir> resumes. The tasks write the
+files with pyarrow into a staging directory, and the driver replaces
+exactly the pending keys' directories with them, leaving _checkpoint in
+place (exactly-once; see document_ai_spark/plans/pipeline.py). On a real cluster the parquet paths
 become Iceberg tables — the plan is unchanged.
 """
 

@@ -47,3 +47,36 @@ def test_module_udfs_survive_a_session_restart(tmp_path):
     )
     assert r.returncode == 0 and r.stdout.split() == ["ok"], r.stderr[-4000:]
     assert "Failed to update accumulator" not in r.stderr, r.stderr[-4000:]
+
+
+STATEFUL = """
+import sys, time
+from document_ai_spark.session import get_spark, stop_spark
+
+spark = get_spark(master="local[1]", extra_conf={"spark.sql.streaming.stateStore.maintenanceInterval": "100ms"})
+spark.range(60).selectExpr("id % 7 AS k").write.parquet(sys.argv[1] + "/in")
+q = (
+    spark.readStream.schema("k long").parquet(sys.argv[1] + "/in").groupBy("k").count()
+    .writeStream.outputMode("complete").format("memory").queryName("counts")
+    .option("checkpointLocation", sys.argv[1] + "/cp").trigger(availableNow=True).start()
+)
+q.awaitTermination()
+assert spark.sql("SELECT * FROM counts").count() == 7
+stop_spark(spark)
+time.sleep(1)  # ten maintenance intervals: the thread would run after the stop
+print("ok")
+"""
+
+
+def test_stopping_after_a_stateful_query_logs_no_stack_trace(tmp_path):
+    """A stateful availableNow query, then the session stops: the state
+    store's maintenance thread used to outlive the session and log
+    `IllegalStateException: SparkEnv not active` with its stack."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))}
+    r = subprocess.run(
+        [sys.executable, "-c", STATEFUL, str(tmp_path)], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0 and r.stdout.split() == ["ok"], r.stderr[-4000:]
+    assert "Exception" not in r.stderr and "\tat " not in r.stderr, r.stderr[-4000:]
