@@ -1215,8 +1215,8 @@ def _q44_dirs() -> tuple[str, str, str, str]:
 
 def q44_incremental_extract(spark, sf_dir):
     """ST1's actual path under the driver's gate, NON-vacuously: the
-    file-source readStream -> foreachBatch(extract + day-partitioned
-    append) cycle (availableNow; the reference's webhook arrival analog,
+    file-source readStream -> foreachBatch(extract + the batch jobs'
+    write and commit) cycle (availableNow; the reference's webhook arrival analog,
     app.py:193-266) writes one output; an independent BATCH-path
     extraction of the same corpus writes another. The returned rollup
     aggregates the STREAM-written files while the oracle aggregates the

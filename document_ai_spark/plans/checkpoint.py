@@ -16,18 +16,16 @@ xxhash64(url, GROUP_SALT) mod n_groups. Both are pure functions of the
 row, so key membership is identical across runs, partition counts and
 cluster sizes. A key is re-extracted iff no 'done' row exists for it.
 
-One extraction job covers every pending key. Its commit on the driver
-(``pipeline.commit_output``) replaces exactly those keys' directories,
-so re-running a key replaces its output (exactly-once under retry), and
-sums the files' commit rows into each key's counters. Then the job adds
-one file holding one row per key, renamed into place in one step: its
-keys become done together, and a crash before the rename re-runs all of
-them.
+One extraction job covers every pending key; its commit
+(``pipeline.commit_output``) replaces those keys' files (exactly-once
+under retry) and sums their counters. Then the job adds one file with a
+row per key, renamed into place: its keys become done together, and a
+crash before the rename re-runs all of them.
 
 The table is a directory of small parquet files, one per job, written and
 read on the driver with pyarrow. A missing directory is an empty
 checkpoint; any file that cannot be read raises, because treating it as
-empty would silently re-run the whole crawl.
+empty would silently re-run the whole crawl. Paths may be URIs.
 """
 
 from __future__ import annotations
@@ -37,6 +35,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,11 +65,16 @@ def checkpoint_path(run_dir: str) -> str:
     return os.path.join(run_dir, "checkpoint")
 
 
+def filesystem(path: str):
+    """-> (pyarrow filesystem, path within it) of a URI or a local path."""
+    return pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
+
+
 def _read_table(run_dir: str) -> pa.Table:
-    path = checkpoint_path(run_dir)
-    if not os.path.isdir(path):
+    fs, path = filesystem(checkpoint_path(run_dir))
+    if fs.get_file_info(path).type == pafs.FileType.NotFound:
         return _ARROW_SCHEMA.empty_table()
-    return pq.read_table(path, schema=_ARROW_SCHEMA)
+    return pq.read_table(path, schema=_ARROW_SCHEMA, filesystem=fs)
 
 
 def read_checkpoint(spark: SparkSession, run_dir: str) -> DataFrame:
@@ -96,8 +100,8 @@ def append_done(
     # driver-side pyarrow append (one small file, unique name): a Spark
     # write job costs ~300 ms of scheduling. On a cluster these rows go
     # through the Iceberg catalog instead.
-    path = checkpoint_path(run_dir)
-    os.makedirs(path, exist_ok=True)
+    fs, path = filesystem(checkpoint_path(run_dir))
+    fs.create_dir(path)
     finished_at, app_id = time.time(), spark.sparkContext.applicationId
     rows = [
         {
@@ -115,8 +119,8 @@ def append_done(
     # written under a hidden name, then renamed: a crash mid-write leaves a
     # file every reader skips, not one that fails every later read
     name = f"cp-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
-    pq.write_table(table, os.path.join(path, "." + name))
-    os.replace(os.path.join(path, "." + name), os.path.join(path, name))
+    pq.write_table(table, f"{path}/.{name}", filesystem=fs)
+    fs.move(f"{path}/.{name}", f"{path}/{name}")
 
 
 def metrics_rollup(spark: SparkSession, run_dir: str) -> DataFrame:

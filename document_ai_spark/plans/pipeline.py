@@ -5,34 +5,33 @@ Each call runs ONE Spark job over every checkpoint key not yet done:
     read pages (parquet/Iceberg layout, partition+column pruned)
       -> filter(key IN pending keys)            # a day filter prunes files
       -> mapInArrow(extract_batch)              # scan-aligned, Arrow batches
-      -> repartition(warc_day, url bucket)      # compact_for_write, the one shuffle
+      -> repartition(warc_day, bucket)          # the one shuffle
       -> mapInArrow(write_files)                # pyarrow: one zstd file per (task,
-                                                # partition) in a staging directory,
+                                                # day, key) in a staging directory,
                                                 # one commit row per file
       -> collect()                              # one successful attempt per task
-    then, on the driver, commit_output moves the files the commit rows
-    name into place and sums their counters per key, and one checkpoint
-    file adds a 'done' row per key.
+    then, on the driver, commit_output replaces the pending keys' files
+    with the ones the commit rows name and sums their counters per key,
+    and one checkpoint file adds a 'done' row per key.
 
 The rows stay Arrow from the extraction to the file: pyarrow encodes them
 in the Python worker, and the JVM runs no parquet writer and no commit
-protocol. ``out_dir`` is resolved with ``pyarrow.fs.FileSystem.from_uri``,
-so a URI (s3://, hdfs://) works as a local path does.
+protocol. Every path resolves through ``checkpoint.filesystem``, so a URI
+(file://, s3://, hdfs://) works as a local path does.
 
-A key is a warc_day partition value (:func:`run_extraction_by_day`, layout
-``warc_day=<d>/``) or a url bucket (:func:`run_extraction`, layout
-``group=<g>/warc_day=<d>/``). Re-running the same (pages_path, out_dir,
-run_dir) skips done keys: resume at partition granularity. A job's keys
-become done together, when its checkpoint file is renamed into place; a
-crash before that re-runs all of them, and the commit replaces exactly
-their directories, so the output stays exactly-once.
+A key is a warc_day partition value (:func:`run_extraction_by_day`), a url
+bucket (:func:`run_extraction`) or a stream epoch
+(``streaming.incremental``); all three write one layout,
+``warc_day=<d>/part-<key>-<task>-<attempt>.zstd.parquet``. Re-running the
+same (pages_path, out_dir, run_dir) skips done keys and replaces the
+pending keys' files: resume at partition granularity, exactly-once.
 """
 
 from __future__ import annotations
 
 import functools
-import os
 import posixpath
+import re
 import time
 import uuid
 
@@ -42,24 +41,20 @@ import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from document_ai_spark.functions.hashing import salted_bucket
 from document_ai_spark.operators.extraction import EXTRACTED_SCHEMA, extract_pages
 from document_ai_spark.plans import checkpoint as cp
 from document_ai_spark.sources.pages import PAGES_SCHEMA
+from document_ai_spark.sources.warc import read_warc
 
-# one commit row per written file: its key's directory, its path under
-# the job's staging directory, and its counters
-_COMMIT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("n_err", T.LongType()),
-        T.StructField("bytes_in", T.LongType()),
-    ]
+FILES_PER_DAY = 8  # the jobs' default bound on files per day directory
+
+# one commit row per written file: its checkpoint key, its path under the
+# job's staging directory, and its counters
+_COMMIT_SCHEMA = pa.schema(
+    [("key", pa.int64()), ("path", pa.string())] + [(c, pa.int64()) for c in ("n_docs", "n_err", "bytes_in")]
 )
 # an output file's columns: the extracted row without its partition
 # column, warc_ts as INT64 UTC microseconds in any session time zone
@@ -73,6 +68,8 @@ _DICTIONARY = ["lang", "kind", "error", "n_blocks"] + [
 ]
 # characters Spark escapes in a partition directory's value
 _ESCAPED = set('"#%\'*/:=?\\\x7f{[]^')
+# the name _write_files gives a file: part-<key>-<task>-<attempt>
+_OWN_FILE = re.compile(r"part-(\d+)-\d{5}-\d+\.zstd\.parquet")
 
 
 def read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
@@ -81,19 +78,9 @@ def read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).option("basePath", pages_path).parquet(pages_path)
 
 
-def read_source(spark: SparkSession, pages_path: str, source_format: str = "parquet") -> DataFrame:
-    """Pages from any supported source format — same schema either way
-    (cross-source extraction identity is gated by q40/test_warc)."""
-    if source_format == "warc":
-        from document_ai_spark.sources.warc import read_warc
-
-        return read_warc(spark, pages_path)
-    return read_pages(spark, pages_path)
-
-
 def compact_for_write(df: DataFrame, files_per_day: int) -> DataFrame:
-    """Shuffle so `write.partitionBy(..., "warc_day")` emits at most
-    files_per_day files per day directory instead of one per upstream task.
+    """Shuffle so the write emits at most files_per_day files per day
+    directory instead of one per upstream task.
 
     Each row gets a bucket = xxhash64(url) mod files_per_day; repartitioning
     on (warc_day, bucket) puts every (day, bucket) combo in exactly one
@@ -109,31 +96,38 @@ def compact_for_write(df: DataFrame, files_per_day: int) -> DataFrame:
     and an empty combo writes none. Over 4 days x 8 buckets, 4 tasks wrote
     14 files and 128 tasks wrote 30 (two combos were empty).
 
-    TASK-COUNT RULE: one write task per shuffle partition.
-    ``session.get_spark`` sets ``spark.sql.shuffle.partitions`` to the
-    context's ``defaultParallelism`` (its core count) unless the launcher
-    set it. The count is passed explicitly so AQE does NOT coalesce the
-    write stage down to a few tasks and serialize the parquet/zstd encode.
+    TASK-COUNT RULE: one write task per shuffle partition
+    (``spark.sql.shuffle.partitions``, the core count unless the launcher
+    set it), passed explicitly so AQE does NOT coalesce the write stage
+    down to a few tasks and serialize the parquet/zstd encode.
     """
-    bucket = F.pmod(F.xxhash64(F.col("url")), F.lit(files_per_day))
+    return _write_shuffle(df, _url_bucket(files_per_day))
+
+
+def _url_bucket(n: int) -> Column:
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(n))
+
+
+def _write_shuffle(df: DataFrame, bucket: Column) -> DataFrame:
     num_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(num_tasks, F.col("warc_day"), bucket)
 
 
-def _part_dir(name: str, value) -> str:
-    """Hive-style ``name=value`` directory, escaped as Spark escapes it."""
-    if value is None:
-        return f"{name}=__HIVE_DEFAULT_PARTITION__"
-    return f"{name}=" + "".join(
-        f"%{ord(c):02X}" if ord(c) < 0x20 or c in _ESCAPED else c for c in str(value)
+def _day_dir(day) -> str:
+    """Hive-style ``warc_day=<d>`` directory, escaped as Spark escapes it."""
+    if day is None:
+        return "warc_day=__HIVE_DEFAULT_PARTITION__"
+    return "warc_day=" + "".join(
+        f"%{ord(c):02X}" if ord(c) < 0x20 or c in _ESCAPED else c for c in str(day)
     )
 
 
-def _write_files(batches, fs, staging: str, parts: list):
-    """The write, as the mapInArrow body after the shuffle: group this
-    task's rows by the partition columns ``parts`` and write each group as
-    one zstd file with one row group under ``staging/<partition path>/``,
-    without the partition columns; yield one commit row per file.
+def _write_files(batches, fs, staging: str):
+    """The write, as the mapInArrow body after the shuffle: write each
+    (``_key``, warc_day) group of this task's rows, without those two
+    columns, as one zstd file with one row group to
+    ``staging/warc_day=<d>/part-<key>-<task>-<attempt>.zstd.parquet``;
+    yield one commit row per file.
 
     A task holds its rows as Arrow until it writes them, so a shuffle
     partition must fit in a Python worker's memory: on a cluster, size
@@ -146,7 +140,8 @@ def _write_files(batches, fs, staging: str, parts: list):
         return
     table = pa.Table.from_batches(batches)
     ctx = TaskContext.get()
-    name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.zstd.parquet"
+    name = f"{ctx.partitionId():05d}-{ctx.taskAttemptId()}.zstd.parquet"
+    parts = ["_key", "warc_day"]
     groups = (
         table.select(parts)
         .append_column("_row", pa.array(range(table.num_rows), pa.int64()))
@@ -156,7 +151,7 @@ def _write_files(batches, fs, staging: str, parts: list):
     commits = []
     for g in groups.to_pylist():
         rows = table.take(g["_row_list"]).drop_columns(parts).cast(_FILE_SCHEMA)
-        path = "/".join(_part_dir(c, g[c]) for c in parts) + "/" + name
+        path = f"{_day_dir(g['warc_day'])}/part-{g['_key']}-{name}"
         fs.create_dir(posixpath.dirname(f"{staging}/{path}"))
         pq.write_table(
             rows, f"{staging}/{path}", filesystem=fs, row_group_size=rows.num_rows,
@@ -164,60 +159,57 @@ def _write_files(batches, fs, staging: str, parts: list):
         )
         commits.append(
             dict(
-                key=path.split("/")[0],
+                key=g["_key"],
                 path=path,
                 n_docs=rows.num_rows,
                 n_err=pc.sum(pc.equal(rows["kind"], "error")).as_py(),
                 bytes_in=pc.sum(rows["bytes_in"]).as_py(),
             )
         )
-    yield pa.RecordBatch.from_pylist(commits, schema=to_arrow_schema(_COMMIT_SCHEMA))
+    yield pa.RecordBatch.from_pylist(commits, schema=_COMMIT_SCHEMA)
 
 
-def commit_output(out_dir: str, staging: str, pending: dict, rows) -> dict:
+def commit_output(out_dir: str, staging: str, pending, rows) -> dict:
     """Commit one job's files into ``out_dir`` on the driver and return
-    each pending key's counters, keyed by its checkpoint group_id.
+    each pending key's counters.
 
     ``staging`` is the job's directory under ``out_dir`` that its tasks
-    wrote into; ``pending`` maps each pending key's directory
-    (``warc_day=<d>`` or ``group=<g>``) to its group_id; ``rows`` are the
-    job's commit rows, one per file, from exactly one successful attempt
-    per task. In this order:
+    wrote into; ``pending`` holds the job's checkpoint keys (group_ids);
+    ``rows`` are the job's commit rows, one per file, from exactly one
+    successful attempt per task. In this order:
 
-    1. The files the rows name move into a fresh tree; any other file in
-       ``staging`` (a failed or speculative attempt's) stays behind. Then
-       each pending key's directory is replaced by two renames: the old
-       one moves aside into ``staging``, the new one moves in. Between the
-       two, a reader finds no directory for that key and sees none of its
-       rows; a crash there leaves the key so until the next call re-runs
-       it. A key without rows is left with no directory.
-    2. ``staging`` is deleted, with the old directories and every file no
-       row named.
-    3. The rows are summed per key into n_docs, n_ok, n_err and bytes_in.
+    1. Every file in a ``warc_day=<d>/`` directory whose name bears a
+       pending key (``part-<key>-<task>-<attempt>.zstd.parquet``) is
+       deleted. The commit lists ``out_dir`` once per job, recursively.
+    2. The files the rows name move from ``staging`` into their day
+       directories. Between steps 1 and 2 a reader misses the pending
+       keys' rows but never sees a url twice; a crash there leaves them
+       missing until the next call re-runs those keys.
+    3. ``staging`` is deleted, with every file no row named (a failed or
+       speculative attempt's).
+    4. The rows are summed per key into n_docs, n_ok, n_err and bytes_in.
 
-    Done keys' directories, and anything else in ``out_dir``, are not
-    touched. The caller then records the keys done in the checkpoint; a
-    crash before that leaves them pending, and the next call replaces
-    their directories again, so every url is written once. A crashed
-    job's staging directory stays behind; readers skip it, as its name
-    starts with an underscore.
+    Done keys' files and every name this commit does not write (Spark's
+    ``part-00000-<uuid>.c000...``) are never deleted, so an ``out_dir``
+    written before this layout is not migrated: re-running its keys adds
+    their rows again. A crash before the caller records the keys done
+    leaves them pending, and the next call replaces their files again. A
+    crashed job's staging directory stays behind; readers skip it.
     """
-    fs, root = _filesystem(out_dir)
+    fs, root = cp.filesystem(out_dir)
     staging = f"{root}/{staging}"
-    fs.create_dir(f"{staging}/_old")
+    for f in fs.get_file_info(pafs.FileSelector(root, recursive=True, allow_not_found=True)):
+        rel = f.path[len(root) + 1 :].split("/")
+        own = len(rel) == 2 and rel[0].startswith("warc_day=") and _OWN_FILE.fullmatch(rel[1])
+        if own and int(own[1]) in pending:
+            fs.delete_file(f.path)
     for r in rows:
-        fs.create_dir(posixpath.dirname(f"{staging}/_new/{r['path']}"))
-        fs.move(f"{staging}/{r['path']}", f"{staging}/_new/{r['path']}")
-    for d in pending:
-        old, new = fs.get_file_info([f"{root}/{d}", f"{staging}/_new/{d}"])
-        if old.type != pafs.FileType.NotFound:
-            fs.move(old.path, f"{staging}/_old/{d}")
-        if new.type != pafs.FileType.NotFound:
-            fs.move(new.path, f"{root}/{d}")
+        fs.create_dir(posixpath.dirname(f"{root}/{r['path']}"))
+        fs.move(f"{staging}/{r['path']}", f"{root}/{r['path']}")
     fs.delete_dir(staging)
-    stats = {group_id: dict(n_docs=0, n_err=0, bytes_in=0) for group_id in pending.values()}
+    stats = {key: dict(n_docs=0, n_err=0, bytes_in=0) for key in pending}
     for r in rows:
-        s = stats[pending[r["key"]]]
+        s = stats[r["key"]]
         for c in s:
             s[c] += r[c]
     for s in stats.values():
@@ -225,20 +217,30 @@ def commit_output(out_dir: str, staging: str, pending: dict, rows) -> dict:
     return stats
 
 
-def _filesystem(out_dir: str):
-    """-> (pyarrow filesystem, path) of a URI or a local path."""
-    return pafs.FileSystem.from_uri(out_dir if "://" in out_dir else os.path.abspath(out_dir))
+def write_output(df: DataFrame, out_dir: str, pending) -> dict:
+    """Write ``df``, shuffled for the write and keyed by its ``_key``
+    column, and commit it for the keys ``pending``; -> their counters.
+    The day and url-bucket jobs and each stream epoch all write here."""
+    fs, root = cp.filesystem(out_dir)
+    staging = f"_staging-{uuid.uuid4().hex[:12]}"
+    write = functools.partial(_write_files, fs=fs, staging=f"{root}/{staging}")
+    try:
+        rows = df.mapInArrow(write, from_arrow_schema(_COMMIT_SCHEMA)).collect()
+    except BaseException:
+        if fs.get_file_info(f"{root}/{staging}").type != pafs.FileType.NotFound:
+            fs.delete_dir(f"{root}/{staging}")
+        raise
+    return commit_output(out_dir, staging, pending, rows)
 
 
 def _extract_pending(
     spark: SparkSession,
     pages: DataFrame,
-    key_name: str,
     key: Column,
     key_ids: dict,
     out_dir: str,
     run_dir: str,
-    files_per_day: int,
+    bucket: Column,
     markdown: bool,
 ) -> dict:
     """The one extraction job behind both entry points.
@@ -246,8 +248,7 @@ def _extract_pending(
     ``key`` computes the checkpoint key and gives the same value on a page
     row and on its extracted row; ``key_ids`` maps every key value to its
     checkpoint group_id. Keys without a 'done' row are extracted, and the
-    output is partitioned by ``key_name`` and then warc_day (warc_day
-    alone when it is the key).
+    write shuffle partitions by (warc_day, ``bucket``).
     """
     done = cp.done_groups(spark, run_dir)
     pending = {v: k for v, k in key_ids.items() if k not in done}
@@ -257,19 +258,9 @@ def _extract_pending(
         return summary
     started = time.time()
     extracted = extract_pages(pages.filter(key.isin(list(pending))), markdown)
-    extracted = extracted.withColumn(key_name, key)
-    fs, root = _filesystem(out_dir)
-    staging = f"_staging-{run_id}"
-    write = functools.partial(
-        _write_files, fs=fs, staging=f"{root}/{staging}", parts=list(dict.fromkeys([key_name, "warc_day"]))
-    )
-    try:
-        rows = compact_for_write(extracted, files_per_day).mapInArrow(write, _COMMIT_SCHEMA).collect()
-    except BaseException:
-        if fs.get_file_info(f"{root}/{staging}").type != pafs.FileType.NotFound:
-            fs.delete_dir(f"{root}/{staging}")
-        raise
-    stats = commit_output(out_dir, staging, {_part_dir(key_name, v): k for v, k in pending.items()}, rows)
+    ids = F.create_map(*[F.lit(x) for kv in pending.items() for x in kv])
+    extracted = _write_shuffle(extracted.withColumn("_key", ids[key]), bucket)
+    stats = write_output(extracted, out_dir, set(pending.values()))
     cp.append_done(spark, run_dir, run_id, stats, started)
     return summary
 
@@ -280,7 +271,7 @@ def run_extraction(
     out_dir: str,
     run_dir: str,
     n_groups: int = 8,
-    files_per_day: int = 8,
+    files_per_day: int = FILES_PER_DAY,
     source_format: str = "parquet",
     markdown: bool = False,
 ) -> dict:
@@ -288,9 +279,11 @@ def run_extraction(
     counters.
 
     A key is ``salted_bucket(url, n_groups, GROUP_SALT)``, re-derived from
-    url after extraction; output goes to ``group=<g>/warc_day=<d>/``. This
-    is the mode for sources without day partitions (raw WARC) and for
-    targeted re-runs of a url subset.
+    url after extraction. This is the mode for sources without day
+    partitions (``source_format="warc"``) and for targeted re-runs of a
+    url subset. The write shuffle gives each key files_per_day // n_groups
+    buckets (at least one), so a day gets at most max(files_per_day,
+    n_groups) files.
 
     SCALE FENCE: the bucket filter is a hash of url, which no file format
     can prune, so every call scans the whole source once, however few keys
@@ -298,26 +291,27 @@ def run_extraction(
     whose day filter prunes the scan to the pending days' files.
     tests/test_plans.py pins both the fence and the day-mode pruning.
     """
+    readers = {"parquet": read_pages, "warc": read_warc}
+    if source_format not in readers:
+        raise ValueError(f"unknown source_format {source_format!r}: expected 'parquet' or 'warc'")
     group = salted_bucket(F.col("url"), n_groups, cp.GROUP_SALT)
+    per_key = max(1, files_per_day // n_groups)
     return _extract_pending(
-        spark, read_source(spark, pages_path, source_format), "group", group,
-        {g: g for g in range(n_groups)}, out_dir, run_dir, files_per_day, markdown,
+        spark, readers[source_format](spark, pages_path), group, {g: g for g in range(n_groups)},
+        out_dir, run_dir, group * per_key + _url_bucket(per_key), markdown,
     )
 
 
 def load_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the full extraction output across groups (group is a partition col)."""
+    """Read the extraction output: every writer's ``warc_day=<d>/`` layout."""
     return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def list_days(pages_path: str) -> list[str]:
-    """Distinct warc_day partition values from the directory layout (the
-    Iceberg equivalent reads partition metadata, not data)."""
-    days = []
-    for name in sorted(os.listdir(pages_path)):
-        if name.startswith("warc_day="):
-            days.append(name.split("=", 1)[1])
-    return days
+    """warc_day values from the directory layout (Iceberg: partition metadata)."""
+    fs, root = cp.filesystem(pages_path)
+    names = [f.base_name for f in fs.get_file_info(pafs.FileSelector(root))]
+    return sorted(n.split("=", 1)[1] for n in names if n.startswith("warc_day="))
 
 
 def day_group_key(day: str) -> int:
@@ -347,7 +341,7 @@ def run_extraction_by_day(
     pages_path: str,
     out_dir: str,
     run_dir: str,
-    files_per_day: int = 8,
+    files_per_day: int = FILES_PER_DAY,
     markdown: bool = False,
 ) -> dict:
     """Production day-partitioned extraction. Returns summary counters.
@@ -363,6 +357,6 @@ def run_extraction_by_day(
         # a day's own directory or a WARC directory, not the table root
         raise ValueError(f"no warc_day=<d> partition directories under {pages_path}")
     return _extract_pending(
-        spark, read_pages(spark, pages_path), "warc_day", F.col("warc_day"), keys,
-        out_dir, run_dir, files_per_day, markdown,
+        spark, read_pages(spark, pages_path), F.col("warc_day"), keys, out_dir, run_dir,
+        _url_bucket(files_per_day), markdown,
     )

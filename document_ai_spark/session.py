@@ -16,10 +16,10 @@ with ``--conf spark.sql.shuffle.partitions=<n>``.
 Files are committed by Hadoop's default output committer (algorithm
 version 1): each task's files wait in the job's staging directory and
 move into the destination only when the whole job commits, so a failed
-append (``sinks.collection.append_chunks``, the ANN index appends, the
-incremental stream) leaves the target as it was. Version 2 moved each
-task's files at task commit and left a failed job's files behind. The
-extraction job writes with pyarrow and commits its own files
+append (``sinks.collection.append_chunks``, the ANN index appends)
+leaves the target as it was. Version 2 moved each task's files at task
+commit and left a failed job's files behind. The extraction jobs and
+the incremental stream write with pyarrow and commit their own files
 (``plans.pipeline.commit_output``).
 
 Two settings are local-launch only. With ``master`` given, ``get_spark``

@@ -13,7 +13,7 @@ not code.
 
 The extraction job (plans/pipeline.py) writes its Parquet files with
 pyarrow inside its Python stage, and the driver replaces exactly the
-pending keys' directories with them (Iceberg's ``overwritePartitions()``
+pending keys' files with them (Iceberg's ``overwritePartitions()``
 on a cluster), which none of these writers does. The collections (sinks/collection.py) and the
 checkpoint (plans/checkpoint.py, pyarrow on the driver) are Parquet
 directories too.

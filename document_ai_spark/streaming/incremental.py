@@ -4,14 +4,11 @@ Spark re-expression of the reference's webhook path (reference
 app.py:193-266: per-document arrival -> background thread -> download ->
 add, at-least-once): a file-source ``readStream`` over the pages directory
 with ``trigger(availableNow=True)`` and ``foreachBatch`` running the SAME
-extraction stage as the batch pipeline; new page files dropped into the
-directory are picked up on the next trigger. The streaming checkpoint
-records which files each epoch read, and each epoch's append is atomic
-(the output committer moves its files in only when the write job
-commits), so a failed epoch leaves nothing behind. Delivery is still
-at-least-once: a crash between an epoch's append and the stream's commit
-of that epoch makes ``foreachBatch`` re-run the epoch and append its rows
-again.
+extraction stage, write shuffle, write and commit as the batch jobs
+(``plans.pipeline.write_output``), keyed by the epoch id. New page files
+are picked up on the next trigger. An epoch replayed after a crash (its
+output committed, the stream's commit of it not) reads the same files
+and replaces its own files: delivery is exactly-once.
 
 Also: windowed event aggregation (watermark + tumbling window) over the
 ``events`` fixture — the streaming capability the reference lacks entirely.
@@ -23,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from document_ai_spark.operators.extraction import extract_pages
+from document_ai_spark.plans.pipeline import FILES_PER_DAY, compact_for_write, write_output
 from document_ai_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -32,9 +30,10 @@ def incremental_extract(
     out_dir: str,
     stream_checkpoint_dir: str,
 ) -> None:
-    """Process all not-yet-seen page files, append extraction output,
-    then stop (availableNow). Re-running picks up only new files —
-    the streaming-source analog of the batch checkpoint table."""
+    """Process all not-yet-seen page files into ``out_dir``, then stop
+    (availableNow). Re-running picks up only new files — the
+    streaming-source analog of the batch checkpoint table. Give the stream
+    an ``out_dir`` of its own: epoch ids and url-bucket keys can coincide."""
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("recursiveFileLookup", "true")
@@ -48,8 +47,9 @@ def incremental_extract(
     utc_day = F.date_from_unix_date(F.floor(F.unix_micros("warc_ts") / micros_per_day).cast("int"))
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        out = extract_pages(batch_df.withColumn("warc_day", utc_day.cast("string")))
-        out.write.mode("append").partitionBy("warc_day").parquet(out_dir)
+        rows = extract_pages(batch_df.withColumn("warc_day", utc_day.cast("string")))
+        rows = compact_for_write(rows.withColumn("_key", F.lit(epoch_id)), FILES_PER_DAY)
+        write_output(rows, out_dir, {epoch_id})
 
     q = (
         stream.writeStream.foreachBatch(_process)

@@ -30,11 +30,14 @@ is not the job's.
 
 Each submission runs one Spark job over the checkpoint keys (url buckets,
 or days with --by-day) not yet recorded 'done' in <out_dir>/_checkpoint,
-so re-submitting with the same <out_dir> resumes. The tasks write the
-files with pyarrow into a staging directory, and the driver replaces
-exactly the pending keys' directories with them, leaving _checkpoint in
-place (exactly-once; see document_ai_spark/plans/pipeline.py). On a real cluster the parquet paths
-become Iceberg tables — the plan is unchanged.
+so re-submitting with the same <out_dir> resumes. Either mode writes
+<out_dir>/warc_day=<d>/part-<key>-<task>-<attempt>.zstd.parquet: the
+tasks write the files with pyarrow into a staging directory, and the
+driver deletes the files named with a pending key and moves the new
+ones in, leaving _checkpoint and every other file in place (exactly-once;
+see document_ai_spark/plans/pipeline.py). <pages_dir> and <out_dir> may
+be URIs (s3://, hdfs://). On a real cluster the parquet paths become
+Iceberg tables — the plan is unchanged.
 """
 
 from __future__ import annotations

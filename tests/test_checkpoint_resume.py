@@ -8,6 +8,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from document_ai_spark.functions.hashing import salted_bucket
 from document_ai_spark.plans import checkpoint as cp
 from document_ai_spark.plans.checkpoint import done_groups, metrics_rollup
 from document_ai_spark.plans.pipeline import (
@@ -51,7 +52,8 @@ def test_crash_resume_exactly_once(spark, pages_dir, tmp_path):
     run_extraction(spark, pages_dir, out, run, n_groups=4)
     _drop_checkpoint_rows(run, [1, 3])
     assert done_groups(spark, run) == {0, 2}
-    kept = {f: t for f, t in _files(out).items() if "/group=0/" in f or "/group=2/" in f}
+    kept = {f: t for f, t in _files(out).items() if os.path.basename(f).startswith(("part-0-", "part-2-"))}
+    assert kept
 
     s = run_extraction(spark, pages_dir, out, run, n_groups=4)
     assert s["groups_done_before"] == 2 and s["groups_run"] == 2
@@ -95,6 +97,7 @@ def test_checkpoint_counters_match_output(spark, pages_dir, tmp_path, key):
     want = {
         key_id(r[col]): (r["n_docs"], r["n_err"], r["bytes_in"])
         for r in load_extracted(spark, out)
+        .withColumn("group", salted_bucket(F.col("url"), 4, cp.GROUP_SALT))
         .groupBy(col)
         .agg(
             F.count("*").alias("n_docs"),
@@ -296,3 +299,29 @@ def test_day_mode_keeps_the_input_day_in_any_session_time_zone(spark, pages_dir,
         assert _urls_by_day(out) == want
         df = load_extracted(spark, out)
         assert df.count() == df.select("url").distinct().count() == 200
+
+
+def test_uri_paths_resume(spark, pages_dir, tmp_path, monkeypatch):
+    """file:// URIs for the pages, out and run dirs: the job lists days,
+    reads and writes its checkpoint and commits through one pyarrow
+    filesystem, so the second call runs no key, and no ``file:``
+    directory appears under the working directory."""
+    import pathlib
+
+    monkeypatch.chdir(tmp_path)
+    pages, out, run = pathlib.Path(pages_dir).as_uri(), (tmp_path / "out").as_uri(), (tmp_path / "run").as_uri()
+    assert run_extraction_by_day(spark, pages, out, run)["groups_run"] == 4
+    s = run_extraction_by_day(spark, pages, out, run)
+    assert s["groups_run"] == 0 and s["groups_done_before"] == 4
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("file:")]
+    df = load_extracted(spark, out)
+    assert df.count() == df.select("url").distinct().count() == 200
+
+
+def test_unknown_source_format_raises(spark, pages_dir, tmp_path):
+    """A source_format other than parquet or warc raises naming it; it
+    used to read the pages as parquet."""
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="unknown source_format 'orc'"):
+        run_extraction(spark, pages_dir, out, str(tmp_path / "run"), source_format="orc")
+    assert not os.path.exists(out)

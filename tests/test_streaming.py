@@ -1,5 +1,6 @@
-"""Structured Streaming path (SURVEY.md ST1): incremental extraction with
-exactly-once file-source checkpointing + windowed event aggregation."""
+"""Structured Streaming path (SURVEY.md ST1): incremental extraction
+through the batch jobs' write and commit, exactly-once also when an epoch
+is replayed, + windowed event aggregation."""
 
 import os
 
@@ -37,6 +38,24 @@ def test_incremental_extract_picks_up_new_files_once(spark, tmp_path):
     # third trigger with nothing new: still 85 (idempotent)
     incremental_extract(spark, pages, out, ckpt)
     assert spark.read.parquet(out).count() == 85
+
+
+def test_replayed_epoch_replaces_its_own_files(spark, tmp_path):
+    """A crash after an epoch's output landed but before the stream logged
+    the epoch (its file under commits/ deleted): the re-run replays the
+    epoch, which replaces its own files instead of adding its rows again."""
+    pages, out, ckpt = str(tmp_path / "pages"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    write_pages_parquet(pages, 60, seed=42)
+    incremental_extract(spark, pages, out, ckpt)
+    commits = os.path.join(ckpt, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for f in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+
+    incremental_extract(spark, pages, out, ckpt)
+    df = spark.read.parquet(out)
+    assert df.count() == df.select("url").distinct().count() == 60
 
 
 def test_windowed_stream_matches_batch(spark, tmp_path):
