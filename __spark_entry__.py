@@ -508,6 +508,9 @@ def q22_simhash_neardup(spark, sf_dir):
 
 
 def q23_ann_lsh_topk(spark, sf_dir):
+    """Multi-probe LSH at its pruned setting (4-bit prefixes, hamming
+    radius 1): the query-time path buckets every row per query; the only
+    materialized index is IVF's (q49). Approximate by design, so rows-only."""
     from document_ai_spark.operators.similarity import lsh_bucketed_topk
 
     e = _t(spark, sf_dir, "embeddings")
@@ -701,10 +704,15 @@ def q35_stream_windows(spark, sf_dir):
 
     from document_ai_spark.streaming.incremental import run_windowed_stream
 
+    # the memory sink holds the result, so the input and checkpoint can go
+    # once the stream has stopped
     tmp = tempfile.mkdtemp(prefix="da_stream_q35_")
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(tmp, "events.parquet"))
-    name = "q35_" + _uuid.uuid4().hex[:8]
-    out = run_windowed_stream(spark, tmp, os.path.join(tmp, "_ckpt"), query_name=name)
+    try:
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(tmp, "events.parquet"))
+        name = "q35_" + _uuid.uuid4().hex[:8]
+        out = run_windowed_stream(spark, tmp, os.path.join(tmp, "_ckpt"), query_name=name)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -870,7 +878,11 @@ def q49_ivf_indexed_pruned_probe(spark, sf_dir):
     executed-plan metrics). Probing all clusters must return the
     brute-force cosine top-7 verbatim (the q41/q47 exactness contract),
     so the oracle is q06's SQL. Production probes nprobe << n_clusters
-    and reads only those directories."""
+    and reads only those directories. IVF is the only materialized index
+    (q23's LSH buckets at query time). The returned DataFrame reads the
+    index lazily, so its directory is removed at process exit."""
+    import atexit
+    import shutil
     import tempfile
 
     from document_ai_spark.operators.ann_index import build_ann_index, ivf_topk_indexed
@@ -878,8 +890,10 @@ def q49_ivf_indexed_pruned_probe(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     qv = [r[0] for r in e.filter(F.col("vec_id") == 0).select(F.explode("embedding")).collect()]
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="da_spark_ann_idx_"))
-    cents = build_ann_index(e, cat, "emb_ivf", method="ivf", n_clusters=8)
+    wh = tempfile.mkdtemp(prefix="da_spark_ann_idx_")
+    atexit.register(shutil.rmtree, wh, ignore_errors=True)
+    cat = Catalog(spark, wh)
+    cents = build_ann_index(e, cat, "emb_ivf", n_clusters=8)
     return ivf_topk_indexed(cat, "emb_ivf", qv, cents, k=7, nprobe=len(cents))
 
 
@@ -924,22 +938,25 @@ def q50_sessionize_watermarked(spark, sf_dir):
         ).otherwise(F.col("_third")),
     )
     tmp = tempfile.mkdtemp(prefix="da_stream_q50_")
-    now = time.time()
-    for k in range(3):
-        part_dir = tempfile.mkdtemp(prefix="q50_part_")
-        staged.filter(F.col("_file") == k).drop(
-            "_rn", "_third", "_tmin", "_file"
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dest = os.path.join(tmp, f"batch-{k}.parquet")
-        shutil.copyfile(src, dest)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        os.utime(dest, (now - 300 + 100 * k, now - 300 + 100 * k))
-    name = "q50_" + _uuid.uuid4().hex[:8]
-    out = run_sessionize_stream_watermarked(
-        spark, tmp, os.path.join(tmp, "_ckpt"), gap_minutes=30, delay="2 hours",
-        query_name=name,
-    )
+    try:
+        now = time.time()
+        for k in range(3):
+            part_dir = tempfile.mkdtemp(prefix="q50_part_")
+            staged.filter(F.col("_file") == k).drop(
+                "_rn", "_third", "_tmin", "_file"
+            ).coalesce(1).write.mode("overwrite").parquet(part_dir)
+            src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
+            dest = os.path.join(tmp, f"batch-{k}.parquet")
+            shutil.copyfile(src, dest)
+            shutil.rmtree(part_dir, ignore_errors=True)
+            os.utime(dest, (now - 300 + 100 * k, now - 300 + 100 * k))
+        name = "q50_" + _uuid.uuid4().hex[:8]
+        out = run_sessionize_stream_watermarked(
+            spark, tmp, os.path.join(tmp, "_ckpt"), gap_minutes=30, delay="2 hours",
+            query_name=name,
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return out.select(
         "user_id",
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
@@ -1173,11 +1190,14 @@ def q42_sessionize_stream(spark, sf_dir):
     from document_ai_spark.streaming.sessionize import run_sessionize_stream
 
     tmp = tempfile.mkdtemp(prefix="da_stream_q42_")
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(tmp, "events.parquet"))
-    name = "q42_" + _uuid.uuid4().hex[:8]
-    out = run_sessionize_stream(
-        spark, tmp, os.path.join(tmp, "_ckpt"), gap_minutes=30, query_name=name
-    )
+    try:
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(tmp, "events.parquet"))
+        name = "q42_" + _uuid.uuid4().hex[:8]
+        out = run_sessionize_stream(
+            spark, tmp, os.path.join(tmp, "_ckpt"), gap_minutes=30, query_name=name
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return out.select(
         "user_id",
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
@@ -1222,8 +1242,12 @@ def q44_incremental_extract(spark, sf_dir):
     aggregates the STREAM-written files while the oracle aggregates the
     BATCH-written files — equal only if the streaming path produced
     exactly the batch rows (duplicated/missing appends would diverge).
-    The streaming checkpoint makes re-runs no-ops, so the result is
-    stable across invocations."""
+    Each call clears the stream's output and checkpoint first (not the
+    pages), so the stream runs the checked-out code every time: a
+    checkpoint left by an earlier run would skip it and leave that run's
+    files to be compared."""
+    import shutil
+
     from document_ai_spark.operators.extraction import extract_pages
     from document_ai_spark.plans.pipeline import read_pages
     from document_ai_spark.sources.pages import write_pages_parquet
@@ -1232,6 +1256,8 @@ def q44_incremental_extract(spark, sf_dir):
     pages, out, ckpt, batch_out = _q44_dirs()
     if not os.path.isdir(pages):
         write_pages_parquet(pages, 500, seed=43)
+    shutil.rmtree(out, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
     incremental_extract(spark, pages, out, ckpt)
     extract_pages(read_pages(spark, pages)).write.mode(
         "overwrite"

@@ -8,14 +8,14 @@ batch's top-k, then one global ``orderBy(score desc, id asc).limit(k)``.
 Its scores are bit-identical to ``F.round(cosine_sim(vec, q), 4)``.
 Every other top-k path runs it on a candidate set: batch_topk scores many
 queries per batch; lsh_bucketed_topk / ivf_topk keep the rows whose bucket
-is in the query's probe set, and operators/ann_index.py runs the same
-steps over a table partitioned by that bucket, so the probe prunes files.
+is in the query's probe set, and operators/ann_index.py runs the IVF steps
+over a table partitioned by ``ivf_cluster``, so the probe prunes files.
 
 One bucket function, ``_bucket_ids``, computes every bucket: the sign-
 sketch prefix against the hyperplanes (LSH) or the nearest centroid by
 cosine (IVF), with the scorer's left-to-right folds. It runs per Arrow
 batch on the rows (inside the scoring stage of lsh_bucketed_topk /
-ivf_topk; as a column in ``_assign_buckets`` / ``assign_cluster`` for the
+ivf_topk; as the ``_with_buckets`` column of ``assign_cluster``, the
 index build and the Lloyd step of train_ivf_centroids) and on the 1 x dim
 query for its probe set (``_probe_prefixes`` / ``_probe_clusters``), so a
 query and its own row always share a bucket. A vector of another length
@@ -28,7 +28,6 @@ from __future__ import annotations
 import decimal
 import hashlib
 from itertools import combinations
-from typing import Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -205,21 +204,17 @@ def _batch_buckets(
     return ids if prefix_bits is not None else ids[:, 0]
 
 
-def _with_buckets(
-    df: DataFrame, weights, prefix_bits: int | None, id_col: str, vec_col: str, out_col: str
-) -> DataFrame:
-    """``df`` + ``out_col``: every row's bucket (LSH a bigint prefix, IVF
-    an int cluster), one numpy pass per Arrow batch."""
-    w = np.asarray(weights, dtype=np.float64)
-    lsh = prefix_bits is not None
+def _with_buckets(df: DataFrame, centroids, id_col: str, vec_col: str, out_col: str) -> DataFrame:
+    """``df`` + ``out_col``: every row's IVF cluster (an int), one numpy
+    pass per Arrow batch."""
+    w = np.asarray(centroids, dtype=np.float64)
 
     def assign(batches):
         for b in batches:
-            ids = _batch_buckets(b, w, prefix_bits, id_col, vec_col)
-            yield b.append_column(out_col, pa.array(ids if lsh else ids.astype(np.int32)))
+            ids = _batch_buckets(b, w, None, id_col, vec_col)
+            yield b.append_column(out_col, pa.array(ids.astype(np.int32)))
 
-    out = T.StructField(out_col, T.LongType() if lsh else T.IntegerType())
-    return df.mapInArrow(assign, T.StructType([*df.schema, out]))
+    return df.mapInArrow(assign, T.StructType([*df.schema, T.StructField(out_col, T.IntegerType())]))
 
 
 def _probed_topk(
@@ -235,36 +230,6 @@ def _probed_topk(
         return np.isin(_batch_buckets(b, w, prefix_bits, id_col, vec_col), probe)
 
     return _exact_topk(emb.select(id_col, vec_col), query_vec, k, id_col, vec_col, keep).select(id_col, "score")
-
-
-def _assign_buckets(
-    emb: DataFrame,
-    method: str,
-    centroids: list | None,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    prefix_bits: int,
-    dim: int | None = None,
-) -> Tuple[DataFrame, str, int]:
-    """The bucket column of the index build/append (a bucket is a pure
-    function of the vector) -> (df + bucket column, bucket column, dim).
-    Without ``dim`` (IVF: len(centroids[0]); append: the sidecar) LSH
-    pays one driver job for ``first()``."""
-    if method == "ivf":
-        if centroids is None:
-            raise ValueError("ann_index: ivf assignment requires centroids")
-        indexed = _with_buckets(emb, centroids, None, id_col, vec_col, "ivf_cluster")
-        return indexed, "ivf_cluster", len(centroids[0])
-    if dim is None:
-        head = emb.select(vec_col).first()
-        if head is None:
-            raise ValueError("ann_index: embedding table is empty")
-        dim = len(head[0])
-    if method == "lsh":
-        indexed = _with_buckets(emb, _hyperplanes(dim, n_planes), prefix_bits, id_col, vec_col, "sketch_prefix")
-        return indexed, "sketch_prefix", dim
-    raise ValueError(f"unknown ANN index method {method!r}")
 
 
 def _probe_prefixes(query_vec: list, n_planes: int, prefix_bits: int, multi_probe: int) -> list:
@@ -294,9 +259,9 @@ def lsh_bucketed_topk(
 
     Cost dial: fraction of corpus scanned ≈
     sum_{h<=p} C(prefix_bits, h) / 2^prefix_bits  (p=1, 8 bits => 9/256).
-    prefix_bits up + multi_probe up => same recall, finer buckets — at
-    10^12 rows the sketch is a partition column and bucket pruning happens
-    at the file-scan level (ann_index.lsh_topk_indexed)."""
+    prefix_bits up + multi_probe up => same recall, finer buckets. Every
+    query re-buckets the whole corpus; the materialized index that prunes
+    at the file scan is IVF's (ann_index.ivf_topk_indexed)."""
     planes = _hyperplanes(len(query_vec), n_planes)
     probe = _probe_prefixes(query_vec, n_planes, prefix_bits, multi_probe)
     return _probed_topk(emb, query_vec, k, id_col, vec_col, planes, prefix_bits, probe)
@@ -311,7 +276,7 @@ def assign_cluster(
     independent of physical partitioning. A vector of another length than
     the centroids raises a ValueError naming the row by ``df``'s first
     column."""
-    return _with_buckets(df, centroids, None, df.columns[0], vec_col, out_col)
+    return _with_buckets(df, centroids, df.columns[0], vec_col, out_col)
 
 
 def train_ivf_centroids(
@@ -346,7 +311,7 @@ def train_ivf_centroids(
     centroids = [list(r["_v"]) for r in base.orderBy(id_col).limit(k).collect()]
     dim = len(centroids[0]) if centroids else 0
     for _ in range(iters if centroids else 0):
-        assigned = _with_buckets(base, centroids, None, id_col, "_v", "_c")
+        assigned = _with_buckets(base, centroids, id_col, "_v", "_c")
         sums = (
             assigned.select("_c", F.posexplode("_v").alias("_d", "_x"))
             .groupBy("_c", "_d")

@@ -2,9 +2,10 @@
 
 The north rule targets Iceberg tables; the local setup has no Iceberg runtime
 jars, so tables can be addressed through this adapter (SURVEY.md §7 step
-0). It holds what the ANN index tables (operators/ann_index.py) use:
-``identifier``, ``exists``, ``read``, ``write_partitioned`` (identity
-partitions), ``append`` and ``drop``. When the session has an Iceberg
+0). It holds what the IVF index tables (operators/ann_index.py) use:
+``exists``, ``read``, ``write_partitioned`` (identity partitions, the
+index itself) and ``drop`` + ``append`` (the one-row ``__meta`` sidecar,
+replaced on each build), over ``identifier``. When the session has an Iceberg
 catalog configured (any ``spark.sql.catalog.<name>`` conf), tables resolve to
 ``<catalog>.<namespace>.<table>`` and writes use the DataFrameWriterV2
 ``writeTo`` API; otherwise tables resolve to Parquet directories with the
@@ -78,7 +79,7 @@ class Catalog:
         layout probe reads prune on — `filter(col.isin(...))` over such a
         table touches only the matching directories (PartitionFilters at
         the scan, no data files opened elsewhere). Used by the ANN index
-        tables (operators/ann_index.py) where the cluster/sketch id is the
+        tables (operators/ann_index.py) where the IVF cluster id is the
         partition column."""
         ident = self.identifier(table)
         if self.iceberg:

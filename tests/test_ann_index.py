@@ -10,11 +10,7 @@ from contextlib import redirect_stdout
 import pytest
 
 from document_ai_spark.operators import similarity as S
-from document_ai_spark.operators.ann_index import (
-    build_ann_index,
-    ivf_topk_indexed,
-    lsh_topk_indexed,
-)
+from document_ai_spark.operators.ann_index import build_ann_index, ivf_topk_indexed
 from document_ai_spark.sources.catalog import Catalog
 
 from .conftest import SF_TINY
@@ -36,7 +32,7 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def ivf_index(spark, emb, tmp_path_factory):
     cat = Catalog(spark, str(tmp_path_factory.mktemp("ann_wh")))
-    centroids = build_ann_index(emb, cat, "emb_ivf", method="ivf", n_clusters=N_CLUSTERS)
+    centroids = build_ann_index(emb, cat, "emb_ivf", n_clusters=N_CLUSTERS)
     return cat, centroids
 
 
@@ -102,27 +98,11 @@ def test_probe_scan_is_partition_pruned(emb, ivf_index):
     assert nfiles < total_files
 
 
-def test_lsh_index_probe_matches_and_prunes(spark, emb, tmp_path_factory):
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("ann_wh_lsh")))
-    build_ann_index(emb, cat, "emb_lsh", method="lsh", prefix_bits=4)
-    q = _query_vec(_dim(emb))
-    a = S.lsh_bucketed_topk(emb, q, k=7, prefix_bits=4, multi_probe=1).collect()
-    probed = lsh_topk_indexed(cat, "emb_lsh", q, k=7, prefix_bits=4, multi_probe=1)
-    assert [(r.vec_id, r.score) for r in probed.collect()] == [
-        (r.vec_id, r.score) for r in a
-    ]
-    assert "sketch_prefix" in _partition_filters(probed)
-    total_parts, _ = _scan_metrics(cat.read("emb_lsh"))
-    nparts, _ = _scan_metrics(probed)
-    assert nparts <= 5  # hamming ball: 1 + C(4,1) prefixes
-    assert nparts < total_parts
-
-
 def test_rebuild_is_deterministic(spark, emb, tmp_path_factory):
     # same input -> byte-identical bucket assignment, any build order
     cat = Catalog(spark, str(tmp_path_factory.mktemp("ann_wh_det")))
-    c1 = build_ann_index(emb, cat, "emb_a", method="ivf", n_clusters=4)
-    c2 = build_ann_index(emb, cat, "emb_b", method="ivf", n_clusters=4)
+    c1 = build_ann_index(emb, cat, "emb_a", n_clusters=4)
+    c2 = build_ann_index(emb, cat, "emb_b", n_clusters=4)
     assert c1 == c2
     a = {r.vec_id: r.ivf_cluster for r in cat.read("emb_a").collect()}
     b = {r.vec_id: r.ivf_cluster for r in cat.read("emb_b").collect()}
@@ -141,9 +121,9 @@ def test_append_maintains_index(spark, emb, tmp_path_factory):
     from document_ai_spark.operators.similarity import train_ivf_centroids
 
     cents = train_ivf_centroids(emb, k=4)  # metadata fixed up front
-    build_ann_index(half_a, cat, "emb_inc", method="ivf", centroids=cents, n_clusters=4)
-    append_to_ann_index(half_b, cat, "emb_inc", method="ivf", centroids=cents)
-    build_ann_index(emb, cat, "emb_full", method="ivf", centroids=cents, n_clusters=4)
+    build_ann_index(half_a, cat, "emb_inc", centroids=cents, n_clusters=4)
+    append_to_ann_index(half_b, cat, "emb_inc", centroids=cents)
+    build_ann_index(emb, cat, "emb_full", centroids=cents, n_clusters=4)
     q = _query_vec(_dim(emb))
     for nprobe in (1, 4):
         a = ivf_topk_indexed(cat, "emb_inc", q, cents, k=7, nprobe=nprobe).collect()
@@ -157,24 +137,24 @@ def test_append_maintains_index(spark, emb, tmp_path_factory):
 
 
 def test_append_rejects_mismatched_bucket_function(spark, emb, tmp_path_factory):
-    # the sidecar fingerprint guard: appending with different LSH params
-    # (or different centroids) must raise, not silently strand rows in
-    # buckets probes never read
+    # the sidecar fingerprint guard: appending with other centroids (of
+    # the same or another dim) must raise, not silently strand rows in
+    # clusters probes never read
     from document_ai_spark.operators.ann_index import append_to_ann_index
     from document_ai_spark.operators.similarity import train_ivf_centroids
 
     cat = Catalog(spark, str(tmp_path_factory.mktemp("ann_wh_guard")))
-    build_ann_index(emb, cat, "g_lsh", method="lsh", prefix_bits=4)
-    with pytest.raises(ValueError, match="mismatch"):
-        append_to_ann_index(emb, cat, "g_lsh", method="lsh", prefix_bits=8)
     c1 = train_ivf_centroids(emb, k=4)
     c2 = train_ivf_centroids(emb, k=2)
-    build_ann_index(emb, cat, "g_ivf", method="ivf", centroids=c1, n_clusters=4)
-    with pytest.raises(ValueError, match="mismatch"):
-        append_to_ann_index(emb, cat, "g_ivf", method="ivf", centroids=c2)
-    # matching params still append fine
-    append_to_ann_index(emb, cat, "g_lsh", method="lsh", prefix_bits=4)
-    append_to_ann_index(emb, cat, "g_ivf", method="ivf", centroids=c1)
+    build_ann_index(emb, cat, "g_ivf", centroids=c1, n_clusters=4)
+    before = cat.read("g_ivf").count()
+    for other in (c2, [c[: len(c) // 2] for c in c1]):
+        with pytest.raises(ValueError, match="mismatch"):
+            append_to_ann_index(emb, cat, "g_ivf", centroids=other)
+    assert cat.read("g_ivf").count() == before
+    # matching centroids still append fine
+    append_to_ann_index(emb, cat, "g_ivf", centroids=c1)
+    assert cat.read("g_ivf").count() == 2 * before
 
 
 def test_append_without_a_sidecar_raises(spark, emb, tmp_path_factory):
@@ -185,7 +165,7 @@ def test_append_without_a_sidecar_raises(spark, emb, tmp_path_factory):
     from document_ai_spark.operators.ann_index import append_to_ann_index
 
     cat = Catalog(spark, str(tmp_path_factory.mktemp("ann_wh_nometa")))
-    cents = build_ann_index(emb, cat, "bare", method="ivf", n_clusters=4)
+    cents = build_ann_index(emb, cat, "bare", n_clusters=4)
     shutil.rmtree(cat.identifier("bare__meta"))
     root = cat.identifier("bare")
 
@@ -198,5 +178,5 @@ def test_append_without_a_sidecar_raises(spark, emb, tmp_path_factory):
 
     before = files()
     with pytest.raises(ValueError, match="'bare' has no bare__meta sidecar; rebuild it with build_ann_index"):
-        append_to_ann_index(emb, cat, "bare", method="ivf", centroids=cents)
+        append_to_ann_index(emb, cat, "bare", centroids=cents)
     assert files() == before

@@ -441,18 +441,20 @@ def test_jpeg_progressive_scan_budget():
         decode_jpeg(bomb)
 
 
-def test_ann_and_sessionize_empty_input_guards(spark):
+def test_ann_and_sessionize_empty_input_guards(spark, tmp_path):
+    # an empty table trains no centroids; that and an empty centroid
+    # list each raise a labelled error before anything is written
     import pytest as _pytest
 
     from document_ai_spark.operators.ann_index import build_ann_index
     from document_ai_spark.sources.catalog import Catalog
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    import tempfile
-
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="ann_empty_"))
-    with _pytest.raises(ValueError, match="empty"):
-        build_ann_index(empty, cat, "t", method="lsh")
+    cat = Catalog(spark, str(tmp_path))
+    for kw in ({"n_clusters": 4}, {"centroids": []}):
+        with _pytest.raises(ValueError, match="no centroids for 't'"):
+            build_ann_index(empty, cat, "t", **kw)
+        assert not cat.exists("t") and not cat.exists("t__meta")
 
 
 def test_watermarked_sessionizer_requires_utc(spark, tmp_path):

@@ -278,9 +278,12 @@ def test_bucket_ids_match_cosine_sim_and_sign_sketch(spark, emb, docs):
         assert len(got) == len(rows)
 
         planes = S._hyperplanes(dim, 16)
+        batches = df.toArrow().to_batches()
         for bits in (4, 8):
-            buckets, col, _ = S._assign_buckets(df, "lsh", None, "vec_id", "embedding", 16, bits, dim=dim)
-            sketches = {r.vec_id: r[col] for r in buckets.collect()}
+            sketches = {}
+            for b in batches:
+                ids = S._batch_buckets(b, planes, bits, "vec_id", "embedding")
+                sketches.update(zip(b.column("vec_id").to_pylist(), ids.tolist()))
             want = {}
             for v, vec in rows.items():
                 ok = vec is not None and None not in vec
@@ -426,7 +429,6 @@ def test_exact_scorer_rejects_dimension_mismatch(spark, tmp_path):
         lambda: ivf_topk(df, [0.0, 1.0], cents, nprobe=1).collect(),
         lambda: lsh_bucketed_topk(df, [0.0, 1.0], prefix_bits=2, multi_probe=0).collect(),
         lambda: build_ann_index(df, cat, "ivf", centroids=cents),
-        lambda: build_ann_index(df, cat, "lsh", method="lsh", prefix_bits=2, dim=2),
     ):
         with pytest.raises(Exception, match=r"ValueError: embedding of vec_id=3 has 3 dims"):
             run()
