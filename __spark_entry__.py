@@ -327,7 +327,7 @@ def q20_event_windows(spark, sf_dir):
     from document_ai_spark.streaming.incremental import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events")
-    out = windowed_event_counts(ev, window="1 hour")
+    out = windowed_event_counts(ev)
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from document_ai_spark.operators.extraction import extract_pages
 from document_ai_spark.plans.pipeline import FILES_PER_DAY, compact_for_write, write_output
 from document_ai_spark.sources.pages import PAGES_SCHEMA
+from document_ai_spark.streaming.memory import run_to_memory
 
 
 def incremental_extract(
@@ -60,20 +61,14 @@ def incremental_extract(
     q.awaitTermination()
 
 
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling-window counts per event_type with late-data watermark.
-    Works identically on a batch DataFrame (window() is not
-    streaming-only) — the oracle-checked entry uses the batch form."""
-    src = events
-    if events.isStreaming:
-        # parquet infers TIMESTAMP_NTZ (Spark 4); watermarks need TIMESTAMP
-        src = events.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-            "ts", watermark
-        )
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """One-hour tumbling-window counts per event_type, with a two-hour
+    late-data watermark on a stream. Works identically on a batch
+    DataFrame (window() is not streaming-only); q20 checks that form
+    against its oracle, q35 the stream."""
+    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -89,16 +84,6 @@ def run_windowed_stream(
 ) -> DataFrame:
     """Drive the windowed aggregation as a real stream over the events
     parquet (memory sink, availableNow) and return the result table."""
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(
+        spark, events_path, checkpoint_dir, query_name, windowed_event_counts, "complete", None
     )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -2,41 +2,61 @@
 
 The reference has no stateful stream processing at all (SURVEY.md §2.10);
 this is the training-pipeline extension: group events by user, close a
-session when ``gap`` elapses between consecutive events, emit
-(user_id, session_start, session_end, n_events, sum_value).
+session when more than ``gap_minutes`` pass between consecutive events,
+emit (user_id, session_start, session_end, n_events, sum_value).
 
-Two implementations with identical semantics:
-  * sessionize_batch — pure DataFrame ops (lag -> gap flag -> running sum
-    session id -> groupBy), DuckDB-oracle-checkable, used for backfills.
-  * sessionize_stream_fn — an ``applyInPandasWithState`` update function
-    for Structured Streaming: state carries the open session per user;
-    arrival of an event beyond the gap (or processing-timeout expiry)
-    emits the closed session. Exactly the
-    ``flatMapGroupsWithState``-style operator the reference's thread-based
-    design could never express.
+Four entry points, one gap rule:
+  * sessionize_batch (q29) — window ops (``_session_id``: lag -> gap flag
+    -> running-sum session id) and a groupBy; the DuckDB-checked form,
+    used for backfills.
+  * sessionize_sharded (q46) — the same rule per (user, day) shard, then
+    over the shard sessions; for a pathological hot key (below).
+  * run_sessionize_stream (q42) — ``applyInPandasWithState`` under
+    NoTimeout: state is the user's open session, O(1) per user, and an
+    event beyond the gap emits it. Emits the sessions CLOSED by a later
+    event; needs each user's events in event-time order across
+    micro-batches.
+  * run_sessionize_stream_watermarked (q50) — ``applyInPandasWithState``
+    under EventTimeTimeout with a watermark: state buffers the pending
+    events, arrival order is free within the delay, and two sentinel
+    events drain every session, so it emits exactly sessionize_batch's
+    sessions.
+Both stream forms stay because they are different contracts, not two
+implementations of one: q42 the cheap closed-session operator that a
+batch backfill completes, q50 the full drain of out-of-order input.
+Both read each event's time as ``unix_micros(ts)`` and emit tz-aware UTC
+instants, so their gaps are elapsed time in any session time zone.
 
 Hot-key note (tested in test_sessionize_batch_tolerates_hot_user_skew): a
 power user with a large share of events lands wholly in one task — that is
 REQUIRED for correctness (gap detection must see the user's full ordered
 event list), so url-hash-style salting does NOT apply here (a salted split
-would sever sessions at salt boundaries). At 100 TB the mitigations are:
-(1) AQE skew handling for the surrounding stages, (2) per-key state bounded
-to the open session only (the stream form holds O(1) state per user, not
-the event list), and (3) for a pathological single key (bot traffic),
-``sessionize_sharded`` — the IMPLEMENTED two-pass form: sessionize per
-(user, day) shard, then merge sessions that straddle shard boundaries — a
-deterministic reduce over ~days rows per user, proven session-identical
-to the single-pass form (q46 oracles it against the single-pass SQL).
+would sever sessions at salt boundaries). At 100 TB the mitigations are
+AQE skew handling for the surrounding stages, O(1) state per user in the
+NoTimeout stream, and for a pathological single key (bot traffic)
+``sessionize_sharded``.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import os
+import re
+import time
+import warnings
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupStateTimeout
+
+from document_ai_spark.streaming.memory import run_to_memory
 
 SESSION_SCHEMA = T.StructType(
     [
@@ -50,55 +70,54 @@ SESSION_SCHEMA = T.StructType(
 
 STATE_SCHEMA = T.StructType(
     [
-        T.StructField("session_start", T.DoubleType()),  # epoch seconds
-        T.StructField("session_end", T.DoubleType()),
+        T.StructField("session_start", T.LongType()),  # unix micros
+        T.StructField("session_end", T.LongType()),
         T.StructField("n_events", T.LongType()),
         T.StructField("sum_value", T.DoubleType()),
     ]
 )
 
+WM_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("ev_ts", T.ArrayType(T.LongType())),  # unix micros
+        T.StructField("ev_val", T.ArrayType(T.DoubleType())),
+    ]
+)
 
-def sessionize_batch(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_tiebreak: str = "event_id",
-) -> DataFrame:
-    """Gap-based sessions as plain window ops (one shuffle on user_id;
-    both window functions and the final aggregate reuse that partitioning)."""
-    w = Window.partitionBy(user_col).orderBy(F.col(ts_col), F.col(order_tiebreak))
-    gap = F.lit(gap_minutes * 60)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    new_session = F.when(
-        prev_ts.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev_ts)) > gap),
+FLUSH_USER_ID = -1  # reserved key carried by the sentinel flush events
+
+def _session_id(partition: list, order: list, start: str, end: str, gap_minutes: int) -> Column:
+    """The gap rule as window ops: a row opens a session when it is the
+    first of its partition (in ``order``) or its ``start`` lies more than
+    ``gap_minutes`` after the previous row's ``end``; the session id is
+    the running count of openings."""
+    w = Window.partitionBy(*partition).orderBy(*order)
+    prev_end = F.lag(end).over(w)
+    opens = F.when(
+        prev_end.isNull()
+        | ((F.unix_timestamp(F.col(start)) - F.unix_timestamp(prev_end)) > F.lit(gap_minutes * 60)),
         1,
     ).otherwise(0)
-    sid = F.sum(new_session).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    return F.sum(opens).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+
+def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """Gap-based sessions as plain window ops (one shuffle on user_id;
+    both window functions and the final aggregate reuse that partitioning)."""
+    sid = _session_id(["user_id"], ["ts", "event_id"], "ts", "ts", gap_minutes)
     return (
         events.withColumn("_sid", sid)
-        .groupBy(F.col(user_col).alias("user_id"), F.col("_sid").alias("session_id"))
+        .groupBy("user_id", F.col("_sid").alias("session_id"))
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count("*").alias("n_events"),
-            F.round(F.sum(value_col), 2).alias("sum_value"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
 
 
-def sessionize_sharded(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_tiebreak: str = "event_id",
-) -> DataFrame:
+def sessionize_sharded(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Two-pass HOT-KEY-SAFE sessionization — the escape hatch this
     module's header documents for pathological single keys (bot traffic):
 
@@ -117,43 +136,25 @@ def sessionize_sharded(
     shard partials is bit-identical to the single-pass sum regardless of
     partitioning; the caller rounds after a final cast to double.
     """
-    gap = F.lit(gap_minutes * 60)
-    ev = events.withColumn("_shard", F.to_date(F.col(ts_col))).withColumn(
-        "_val", F.col(value_col).cast("decimal(18,6)")
-    )
-    w1 = Window.partitionBy(user_col, "_shard").orderBy(
-        F.col(ts_col), F.col(order_tiebreak)
-    )
-    prev_ts = F.lag(F.col(ts_col)).over(w1)
-    new1 = F.when(
-        prev_ts.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev_ts)) > gap),
-        1,
-    ).otherwise(0)
-    sid1 = F.sum(new1).over(w1.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    sid1 = _session_id(["user_id", "_shard"], ["ts", "event_id"], "ts", "ts", gap_minutes)
     sub = (
-        ev.withColumn("_sid", sid1)
-        .groupBy(user_col, "_shard", "_sid")
+        events.withColumn("_shard", F.to_date("ts"))
+        .withColumn("_val", F.col("value").cast("decimal(18,6)"))
+        .withColumn("_sid", sid1)
+        .groupBy("user_id", "_shard", "_sid")
         .agg(
-            F.min(ts_col).alias("s_start"),
-            F.max(ts_col).alias("s_end"),
+            F.min("ts").alias("s_start"),
+            F.max("ts").alias("s_end"),
             F.count("*").alias("n"),
             F.sum("_val").alias("v"),
         )
     )
     # pass 2: per-user interval merge (intervals are time-disjoint, so
     # ordering by s_start is total and deterministic)
-    w2 = Window.partitionBy(user_col).orderBy("s_start", "s_end")
-    prev_end = F.lag("s_end").over(w2)
-    new2 = F.when(
-        prev_end.isNull()
-        | ((F.unix_timestamp(F.col("s_start")) - F.unix_timestamp(prev_end)) > gap),
-        1,
-    ).otherwise(0)
-    sid2 = F.sum(new2).over(w2.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    sid2 = _session_id(["user_id"], ["s_start", "s_end"], "s_start", "s_end", gap_minutes)
     return (
         sub.withColumn("_sid2", sid2)
-        .groupBy(F.col(user_col).alias("user_id"), F.col("_sid2").alias("session_id"))
+        .groupBy("user_id", F.col("_sid2").alias("session_id"))
         .agg(
             F.min("s_start").alias("session_start"),
             F.max("s_end").alias("session_end"),
@@ -163,17 +164,63 @@ def sessionize_sharded(
     )
 
 
-def sessionize_stream_fn(gap_minutes: int = 30, timeout_ms: int | None = None):
+@functools.cache
+def _quiet_state_concat() -> None:
+    """applyInPandasWithState pads every output batch with all-NA rows
+    and concatenates them (pyspark.sql.pandas.serializers), which pandas 2
+    warns about each time. Ignore exactly that warning, once per worker."""
+    warnings.filterwarnings(
+        "ignore",
+        message=re.escape(
+            "The behavior of DataFrame concatenation with empty or all-NA entries is deprecated"
+        ),
+        category=FutureWarning,
+        module=r"pyspark\.sql\.pandas\.serializers$",
+    )
+
+
+def _read_events(pdfs) -> list:
+    """(unix micros, value) of every event in one user's frames, in
+    event-time order (ties by value)."""
+    _quiet_state_concat()
+    return sorted((int(t), float(v)) for pdf in pdfs for t, v in zip(pdf["_us"], pdf["value"]))
+
+
+def _sessions_frame(user_id: int, sessions: list) -> pd.DataFrame:
+    """The emitted rows of one user; ``sessions`` holds (start micros,
+    end micros, n_events, sum_value) tuples. The times are tz-aware UTC
+    instants, so Spark stores them exactly in any session time zone."""
+    start, end, n_events, total = zip(*sessions)
+    return pd.DataFrame(
+        {
+            "user_id": [user_id] * len(sessions),
+            "session_start": pd.to_datetime(start, unit="us", utc=True),
+            "session_end": pd.to_datetime(end, unit="us", utc=True),
+            "n_events": n_events,
+            "sum_value": [round(v, 2) for v in total],
+        }
+    )
+
+
+def _sessions(events: DataFrame, fn, state_schema: T.StructType, timeout: str) -> DataFrame:
+    """Run the update function ``fn`` per user; it reads each event's time
+    from ``_us``, ``unix_micros(ts)``."""
+    return (
+        events.withColumn("_us", F.unix_micros("ts"))
+        .groupBy("user_id")
+        .applyInPandasWithState(fn, SESSION_SCHEMA, state_schema, "append", timeout)
+    )
+
+
+def sessionize_stream_fn(gap_minutes: int = 30):
     """Returns the (key, batches, state) update function for
-    ``groupBy(user_id).applyInPandasWithState(fn, SESSION_SCHEMA,
-    STATE_SCHEMA, "append", <timeout conf>)``.
+    ``applyInPandasWithState(fn, SESSION_SCHEMA, STATE_SCHEMA, "append",
+    NoTimeout)``.
 
     State = the currently-open session for the user. Events are folded in
-    event-time order; a gap closes the open session and emits it. With
-    ``timeout_ms`` set (and ProcessingTimeTimeout configured) an idle
-    user's open session is flushed on timeout; the default NoTimeout form
-    leaves tail sessions in state — a periodic batch backfill
-    (sessionize_batch) closes them, which is the cheaper pattern for a
+    event-time order; a gap closes the open session and emits it. The
+    user's last session stays in state — a periodic batch backfill
+    (sessionize_batch) closes it, which is the cheaper pattern for a
     training-data pipeline where sessions are consumed in bulk.
 
     CROSS-BATCH ORDERING PRECONDITION (no event-time watermark in the
@@ -188,70 +235,34 @@ def sessionize_stream_fn(gap_minutes: int = 30, timeout_ms: int | None = None):
     duplicate) — tests/test_streaming.py pins this. Sessions the late
     event should have belonged to are healed by the production mitigation:
     a tumbling re-sessionization backfill over sessionize_batch."""
-    gap_s = gap_minutes * 60.0
+    gap_us = gap_minutes * 60_000_000
 
     def fn(key, pdfs, state):
-        user_id = int(key[0])
         out = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                s0, s1, n, v = state.get
-                out.append((user_id, s0, s1, int(n), float(v)))
-                state.remove()
-        else:
-            rows = []
-            for pdf in pdfs:
-                for ts, val in zip(pdf["ts"], pdf["value"]):
-                    t = ts.timestamp() if hasattr(ts, "timestamp") else float(ts)
-                    rows.append((t, float(val)))
-            rows.sort()
-            cur = list(state.get) if state.exists else None
-            for t, val in rows:
-                if cur is None:
-                    cur = [t, t, 1, val]
-                elif t - cur[1] > gap_s:
-                    out.append((user_id, cur[0], cur[1], int(cur[2]), float(cur[3])))
-                    cur = [t, t, 1, val]
-                else:
-                    # in-order: extends the tail; LATE (cross-batch) event:
-                    # absorbed — start may extend backward, never corrupts
-                    # an already-emitted session (docstring precondition)
-                    cur[0] = min(cur[0], t)
-                    cur[1] = max(cur[1], t)
-                    cur[2] += 1
-                    cur[3] += val
-            if cur is not None:
-                state.update(tuple(cur))
-                if timeout_ms is not None:
-                    state.setTimeoutDuration(timeout_ms)
-
+        cur = list(state.get) if state.exists else None
+        for t, val in _read_events(pdfs):
+            if cur is None:
+                cur = [t, t, 1, val]
+            elif t - cur[1] > gap_us:
+                out.append(tuple(cur))
+                cur = [t, t, 1, val]
+            else:
+                # in-order: extends the tail; LATE (cross-batch) event:
+                # absorbed — start may extend backward, never corrupts
+                # an already-emitted session (docstring precondition)
+                cur = [min(cur[0], t), max(cur[1], t), cur[2] + 1, cur[3] + val]
+        if cur is not None:
+            state.update(tuple(cur))
         if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [o[0] for o in out],
-                    "session_start": [dt.datetime.utcfromtimestamp(o[1]) for o in out],
-                    "session_end": [dt.datetime.utcfromtimestamp(o[2]) for o in out],
-                    "n_events": [o[3] for o in out],
-                    "sum_value": [round(o[4], 2) for o in out],
-                }
-            )
+            yield _sessions_frame(int(key[0]), out)
 
     return fn
-
-
-WM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ev_ts", T.ArrayType(T.DoubleType())),  # epoch seconds
-        T.StructField("ev_val", T.ArrayType(T.DoubleType())),
-    ]
-)
 
 
 def sessionize_stream_watermark_fn(gap_minutes: int = 30):
     """EVENT-TIME-WATERMARKED sessionizer update function — replaces
     sessionize_stream_fn's cross-batch ordering PRECONDITION with real
-    late-data absorption (round-3 verdict item #5):
+    late-data absorption:
 
       * state BUFFERS the user's pending events (not a folded session),
         so a late event — arriving out of order ACROSS micro-batches —
@@ -267,92 +278,76 @@ def sessionize_stream_watermark_fn(gap_minutes: int = 30):
       * pending events are held under EventTimeTimeout: the timeout
         timestamp is the earliest instant the oldest pending session can
         finalize, so a user with no new arrivals still emits as the
-        watermark passes (including in the closing no-data micro-batch).
+        watermark passes.
 
     State per key is O(events inside the gap+delay horizon), not O(all
     events): everything older is finalized and evicted each trigger.
-
-    Use with ``withWatermark("ts", ...)`` + ``applyInPandasWithState(fn,
-    SESSION_SCHEMA, WM_STATE_SCHEMA, "append", EventTimeTimeout)`` — see
-    run_sessionize_stream_watermarked."""
-    gap_s = gap_minutes * 60.0
+    run_sessionize_stream_watermarked drives it."""
+    gap_us = gap_minutes * 60_000_000
 
     def fn(key, pdfs, state):
-        user_id = int(key[0])
-        ts_buf: list = []
-        val_buf: list = []
-        if state.exists:
-            s_ts, s_val = state.get
-            ts_buf = list(s_ts)
-            val_buf = list(s_val)
         wm_ms = state.getCurrentWatermarkMs()
-        wm = wm_ms / 1000.0
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for ts, val in zip(pdf["ts"], pdf["value"]):
-                    t = ts.timestamp() if hasattr(ts, "timestamp") else float(ts)
-                    if wm_ms > 0 and t < wm:
-                        continue  # too late: beyond the declared disorder bound
-                    ts_buf.append(t)
-                    val_buf.append(float(val))
-        order = sorted(range(len(ts_buf)), key=lambda i: (ts_buf[i], val_buf[i]))
-        ts_buf = [ts_buf[i] for i in order]
-        val_buf = [val_buf[i] for i in order]
+        wm_us = wm_ms * 1000
+        events = list(zip(*state.get)) if state.exists else []
+        # an event older than the watermark is beyond the declared disorder bound
+        events += [e for e in _read_events(pdfs) if not (wm_ms > 0 and e[0] < wm_us)]
+        events.sort()
 
         # sessionize the buffer; emit the prefix of sessions proven final
-        out = []
-        cur_start = 0  # index of first event of the current session
-        keep_from = None  # first buffer index NOT finalized
-        for i in range(1, len(ts_buf) + 1):
-            closes = i == len(ts_buf) or ts_buf[i] - ts_buf[i - 1] > gap_s
-            if not closes:
-                continue
-            end = ts_buf[i - 1]
-            if wm_ms > 0 and end + gap_s < wm:
-                out.append(
-                    (
-                        user_id,
-                        ts_buf[cur_start],
-                        end,
-                        i - cur_start,
-                        sum(val_buf[cur_start:i]),
-                    )
-                )
-            elif keep_from is None:
-                keep_from = cur_start
-            cur_start = i
-        keep_from = len(ts_buf) if keep_from is None else keep_from
-
-        if keep_from < len(ts_buf):
-            state.update((ts_buf[keep_from:], val_buf[keep_from:]))
-            # earliest future finalization: oldest pending session could
-            # close gap_s after its CURRENT tail (a later event may push
-            # this out — the next trigger just re-arms the timeout)
-            tail = ts_buf[keep_from]
-            j = keep_from
-            while j + 1 < len(ts_buf) and ts_buf[j + 1] - ts_buf[j] <= gap_s:
+        out, i = [], 0
+        while i < len(events):
+            j = i + 1
+            while j < len(events) and events[j][0] - events[j - 1][0] <= gap_us:
                 j += 1
-            tail = ts_buf[j]
-            fire_ms = int((tail + gap_s) * 1000) + 1
-            state.setTimeoutTimestamp(max(fire_ms, wm_ms + 1))
+            end = events[j - 1][0]
+            if not (wm_ms > 0 and end + gap_us < wm_us):
+                break  # this session and every later one may still grow
+            out.append((events[i][0], end, j - i, sum(v for _, v in events[i:j])))
+            i = j
+
+        if i < len(events):
+            state.update(([t for t, _ in events[i:]], [v for _, v in events[i:]]))
+            # the oldest pending session is final once the watermark passes
+            # its current end + gap (a later event may push that out — the
+            # next trigger just re-arms the timeout)
+            state.setTimeoutTimestamp(max((end + gap_us) // 1000 + 1, wm_ms + 1))
         else:
             state.remove()
-
         if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [o[0] for o in out],
-                    "session_start": [dt.datetime.utcfromtimestamp(o[1]) for o in out],
-                    "session_end": [dt.datetime.utcfromtimestamp(o[2]) for o in out],
-                    "n_events": [o[3] for o in out],
-                    "sum_value": [round(o[4], 2) for o in out],
-                }
-            )
+            yield _sessions_frame(int(key[0]), out)
 
     return fn
 
 
-FLUSH_USER_ID = -1  # reserved key carried by the sentinel flush event
+def _flush_path(events_path: str, n: int) -> str:
+    return os.path.join(events_path, f"zzz-wm-flush-{n}.parquet")
+
+
+def _stage_flush_events(events_path: str) -> None:
+    """Write the two sentinel events of ``FLUSH_USER_ID`` into
+    ``events_path`` with pyarrow, each a file typed like the directory's
+    first events file: ``ts`` 10 and 20 years after the last real event,
+    every other field null. Their modification times lie in the future,
+    so the file source, which orders files by mtime, reads them last."""
+    files = ds.dataset(events_path, format="parquet")
+    # the horizon derives from the REAL events only (a left-over sentinel
+    # must not compound it)
+    last = pc.max(files.to_table(columns=["ts"], filter=ds.field("user_id") != FLUSH_USER_ID)["ts"])
+    if not last.is_valid:
+        raise ValueError("run_sessionize_stream_watermarked: no (non-sentinel) events")
+    first = pq.ParquetFile(files.files[0])
+    schema = first.schema_arrow
+    # Spark writes timestamps as INT96, which reads as timestamp[ns]: the
+    # sentinels keep that encoding (Spark cannot read INT64 nanoseconds)
+    int96 = first.schema.column(schema.get_field_index("ts")).physical_type == "INT96"
+    for n in (1, 2):
+        ts = pc.add(last, pa.scalar(dt.timedelta(days=3650 * n)))
+        cols = {"user_id": pa.array([FLUSH_USER_ID], schema.field("user_id").type), "ts": pa.repeat(ts, 1)}
+        table = pa.table([cols.get(f.name, pa.nulls(1, f.type)) for f in schema], schema=schema)
+        dest = _flush_path(events_path, n)
+        pq.write_table(table, dest, use_deprecated_int96_timestamps=int96)
+        future = time.time() + 3600 * n
+        os.utime(dest, (future, future))
 
 
 def run_sessionize_stream_watermarked(
@@ -362,156 +357,47 @@ def run_sessionize_stream_watermarked(
     gap_minutes: int = 30,
     delay: str = "2 hours",
     query_name: str = "sessions_wm",
-    max_files_per_trigger: int | None = 1,
-    flush: bool = True,
 ) -> DataFrame:
-    """Drive the WATERMARKED sessionizer (availableNow, memory sink):
-    ``withWatermark(ts, delay)`` + EventTimeTimeout. Unlike
-    run_sessionize_stream there is NO cross-batch ordering precondition:
-    arrival order may be arbitrary within ``delay`` (events later than
-    that are dropped — the watermark contract).
+    """Drive the WATERMARKED sessionizer, one file per micro-batch
+    (availableNow, memory sink): ``withWatermark(ts, delay)`` +
+    EventTimeTimeout. Unlike run_sessionize_stream there is NO cross-batch
+    ordering precondition: arrival order may be arbitrary within ``delay``
+    (events later than that are dropped — the watermark contract).
 
-    ``flush=True`` (default) appends TWO sentinel far-future events for
-    the reserved key ``FLUSH_USER_ID``, each as its own LAST micro-batch
-    (the key is filtered from the output). Why two: event-time timeouts
-    fire in a batch whose watermark has passed them, and a batch's
-    watermark derives from PREVIOUS batches only; trailing no-data
-    micro-batches — the only other place final timeouts could fire — are
-    not reliably scheduled under availableNow, so emission at termination
-    would be timing-dependent. Sentinel batch 1 runs at watermark
-    ``max(real ts) - delay``; sentinel batch 2 runs at
+    Two sentinel far-future events for the reserved key ``FLUSH_USER_ID``
+    run as the LAST two micro-batches (the key is filtered from the
+    output). Why two: event-time timeouts fire in a batch whose watermark
+    has passed them, and a batch's watermark derives from PREVIOUS batches
+    only; trailing no-data micro-batches — the only other place final
+    timeouts could fire — are not reliably scheduled under availableNow,
+    so emission at termination would be timing-dependent. Sentinel batch 1
+    runs at watermark ``max(real ts) - delay``; sentinel batch 2 runs at
     ``sentinel1 - delay`` (far future), firing EVERY remaining timeout.
-    Net contract, deterministically: the emitted sessions are EXACTLY
-    the batch twin's sessions over the non-dropped events — full drain,
-    in event-time order per user. With ``flush=False`` sessions still
-    pending at termination stay in state (resume the checkpoint to
-    continue absorbing arrivals).
+    Net contract, deterministically: the emitted sessions are EXACTLY the
+    batch twin's sessions over the non-dropped events — full drain, in
+    event-time order per user.
 
     The sentinels are staged as ``zzz-wm-flush-N.parquet`` files INSIDE
     ``events_path`` (the flat file source only lists that one directory)
-    and are DELETED once the query terminates, so other readers of the
-    events directory never observe the synthetic rows — the mutation is
-    scoped to the query's lifetime. (The memory sink holds the results;
-    the returned DataFrame does not re-read the files.)"""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    and are deleted when the call ends, also when it fails, so other
+    readers of the events directory never see the synthetic rows."""
 
-    # the state fn compares pandas naive .timestamp() (treated as UTC)
-    # against getCurrentWatermarkMs() true-epoch values: correct ONLY
-    # under a UTC session timezone (session.py pins it; a caller with a
-    # local-TZ session would get lateness checks skewed by the offset)
-    tz = spark.conf.get("spark.sql.session.timeZone", "")
-    zero_offset = tz.upper() in (
-        "UTC", "GMT", "UT", "Z", "+00:00", "-00:00", "GMT0", "UTC0",
-        "ETC/UTC", "ETC/GMT", "ETC/GMT0", "ETC/GMT+0", "ETC/GMT-0",
-        "ETC/UNIVERSAL", "UNIVERSAL", "ZULU", "ETC/ZULU", "GREENWICH",
-        "ETC/GREENWICH",
-    )
-    if not zero_offset:
-        try:  # any IANA zone whose offset is permanently zero also works
-            from zoneinfo import ZoneInfo
-
-            z = ZoneInfo(tz)
-            zero_offset = all(
-                z.utcoffset(dt.datetime(y, m, 1)) == dt.timedelta(0)
-                for y in (1990, 2024)
-                for m in (1, 7)
-            )
-        except Exception:
-            zero_offset = False
-    if not zero_offset:
-        raise ValueError(
-            f"watermarked sessionizer requires spark.sql.session.timeZone=UTC, got {tz!r}"
+    def op(events: DataFrame) -> DataFrame:
+        return _sessions(
+            events.withWatermark("ts", delay),
+            sessionize_stream_watermark_fn(gap_minutes),
+            WM_STATE_SCHEMA,
+            GroupStateTimeout.EventTimeTimeout,
         )
 
-    batch_df = spark.read.parquet(events_path)
-    schema = batch_df.schema
-    if flush:
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-        import tempfile as _tempfile
-        import time as _time
-
-        # sentinel ts derives from the REAL events only (a rerun over a
-        # dir already holding sentinels must not compound the horizon)
-        max_ts = (
-            batch_df.filter(F.col("user_id") != F.lit(FLUSH_USER_ID))
-            .agg(F.max("ts"))
-            .first()[0]
-        )
-        if max_ts is None:
-            raise ValueError(
-                "run_sessionize_stream_watermarked: no (non-sentinel) events"
-            )
-        for n_sentinel in (1, 2):
-            sentinel = spark.createDataFrame(
-                [tuple(None for _ in schema.fields)], schema
-            ).select(
-                *[
-                    F.lit(FLUSH_USER_ID).cast("long").alias("user_id")
-                    if f.name == "user_id"
-                    else F.lit(
-                        max_ts + dt.timedelta(days=3650 * n_sentinel)
-                    ).alias("ts")
-                    if f.name == "ts"
-                    else F.col(f.name)
-                    for f in schema.fields
-                ]
-            )
-            # stage as a single FILE inside events_path (a subdirectory
-            # would confuse the flat parquet listing; an _-prefixed path
-            # is hidden from Spark entirely), mtime in the future so the
-            # file source — which orders batches by mtime — runs the
-            # sentinels as the final two batches, in order
-            stage_dir = _tempfile.mkdtemp(prefix="wm_flush_")
-            sentinel.coalesce(1).write.mode("overwrite").parquet(stage_dir)
-            part = _glob.glob(_os.path.join(stage_dir, "part-*.parquet"))[0]
-            dest = _os.path.join(events_path, f"zzz-wm-flush-{n_sentinel}.parquet")
-            _shutil.copyfile(part, dest)
-            _shutil.rmtree(stage_dir, ignore_errors=True)
-            future = _time.time() + 3600 * n_sentinel
-            _os.utime(dest, (future, future))
-        max_files_per_trigger = max_files_per_trigger or 1  # sentinels: own batches
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", delay)
-    )
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        sessionize_stream_watermark_fn(gap_minutes),
-        SESSION_SCHEMA,
-        WM_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if flush:
-        # restore the caller's input directory: the memory sink already
-        # holds every emitted row, so the sentinel files are dead weight
-        # that would otherwise leak into any other reader of events_path
-        import glob as _glob
-        import os as _os
-
-        for f in _glob.glob(_os.path.join(events_path, "zzz-wm-flush-*.parquet")):
-            try:
-                _os.remove(f)
-            except OSError:
-                pass  # best-effort: a vanished file is already clean
-    return spark.sql(f"SELECT * FROM {query_name}").filter(
-        F.col("user_id") != F.lit(FLUSH_USER_ID)
-    )
+    try:
+        _stage_flush_events(events_path)
+        out = run_to_memory(spark, events_path, checkpoint_dir, query_name, op, "append", 1)
+    finally:
+        for n in (1, 2):
+            if os.path.exists(_flush_path(events_path, n)):
+                os.remove(_flush_path(events_path, n))
+    return out.filter(F.col("user_id") != F.lit(FLUSH_USER_ID))
 
 
 def run_sessionize_stream(
@@ -522,38 +408,21 @@ def run_sessionize_stream(
     query_name: str = "sessions",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Drive the stateful sessionizer over the events parquet as a stream
-    (availableNow, memory sink); returns sessions CLOSED by a later event
-    (idle-flush needs a subsequent trigger's timeout).
+    """Drive the NoTimeout sessionizer over the events parquet as a stream
+    (availableNow, memory sink); returns the sessions CLOSED by a later
+    event of the same user. Each user's last session stays open in state:
+    under NoTimeout nothing flushes it (sessionize_batch over the same
+    events gives it).
 
     ``max_files_per_trigger`` splits availableNow into multiple
-    micro-batches (1 file per batch) — used by tests to exercise
+    micro-batches (that many files per batch) — used by tests to exercise
     cross-batch state behavior."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.parquet(events_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader
-        .parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    def op(events: DataFrame) -> DataFrame:
+        return _sessions(
+            events, sessionize_stream_fn(gap_minutes), STATE_SCHEMA, GroupStateTimeout.NoTimeout
+        )
+
+    return run_to_memory(
+        spark, events_path, checkpoint_dir, query_name, op, "append", max_files_per_trigger
     )
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        sessionize_stream_fn(gap_minutes),
-        SESSION_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -457,27 +457,6 @@ def test_ann_and_sessionize_empty_input_guards(spark, tmp_path):
         assert not cat.exists("t") and not cat.exists("t__meta")
 
 
-def test_watermarked_sessionizer_requires_utc(spark, tmp_path):
-    import pytest as _pytest
-
-    from document_ai_spark.streaming.sessionize import (
-        run_sessionize_stream_watermarked,
-    )
-
-    src = str(tmp_path / "ev")
-    spark.createDataFrame(
-        [(1, __import__("datetime").datetime(2024, 3, 1), 1, "c", 1.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    ).write.parquet(src)
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        with _pytest.raises(ValueError, match="timeZone"):
-            run_sessionize_stream_watermarked(spark, src, str(tmp_path / "ck"))
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
-
-
 def test_gif_roundtrip_and_interlace():
     from document_ai_spark.kernel.media import decode_gif, encode_gif
 

@@ -224,7 +224,7 @@ def test_sessionize_watermarked_out_of_order_batches_match_batch_twin(spark, tmp
 
     out = run_sessionize_stream_watermarked(
         spark, src, str(tmp_path / "wm_ckpt"), gap_minutes=30, delay="2 hours",
-        query_name="wm_t", max_files_per_trigger=1,
+        query_name="wm_t",
     )
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)
@@ -285,7 +285,7 @@ def test_sessionize_watermarked_drops_events_beyond_delay(spark, tmp_path):
     stage([ev(3, 100, 4.0), ev(4, 310, 8.0)], 200)  # minute-100 event < wm: dropped
     out = run_sessionize_stream_watermarked(
         spark, src, str(tmp_path / "wm_ckpt"), gap_minutes=30, delay="2 hours",
-        query_name="wm_drop_t", max_files_per_trigger=1,
+        query_name="wm_drop_t",
     )
     got = {
         (r.session_start, r.session_end, r.n_events, float(r.sum_value))
@@ -402,3 +402,76 @@ def test_sessionize_batch_tolerates_hot_user_skew(spark):
 
     plan = sessionize_batch(events, gap_minutes=30)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1  # window + agg share one shuffle
+
+
+def _closed(sessions):
+    """The sessions of each user but the last: those a later event closed."""
+    from pyspark.sql import Window
+
+    last = F.max("session_start").over(Window.partitionBy("user_id"))
+    return sessions.withColumn("_last", last).filter(F.col("session_start") < F.col("_last"))
+
+
+def _rows(df):
+    return {(r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value) for r in df.collect()}
+
+
+def test_stream_sessionizers_measure_gaps_in_elapsed_time_in_any_zone(spark, tmp_path):
+    """Events at 06:50, 07:10 and 09:30 UTC on 2024-03-10, when New York
+    moves its clocks forward: the first two are 20 minutes apart, one
+    session. Both stream forms must agree with sessionize_batch under a
+    New York session time zone (the NoTimeout form on closed sessions)."""
+    import datetime as dt
+
+    from document_ai_spark.streaming.sessionize import (
+        run_sessionize_stream,
+        run_sessionize_stream_watermarked,
+        sessionize_batch,
+    )
+    from tests.conftest import session_time_zone
+
+    utc = dt.timezone.utc
+    rows = [
+        (eid, dt.datetime(2024, 3, 10, h, m, tzinfo=utc), 1, "click", float(eid), "{}")
+        for eid, h, m in ((1, 6, 50), (2, 7, 10), (3, 9, 30))
+    ]
+    src = str(tmp_path / "events_src")
+    with session_time_zone(spark, "America/New_York"):
+        events = spark.createDataFrame(
+            rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+        )
+        events.coalesce(1).write.parquet(src)
+        batch = sessionize_batch(spark.read.parquet(src), gap_minutes=30)
+        assert {(r.n_events, r.sum_value) for r in batch.collect()} == {(2, 3.0), (1, 3.0)}
+
+        closed = run_sessionize_stream(spark, src, str(tmp_path / "ck1"), query_name="dst_closed")
+        assert _rows(closed) == _rows(_closed(batch))
+        drained = run_sessionize_stream_watermarked(spark, src, str(tmp_path / "ck2"), query_name="dst_wm")
+        assert _rows(drained) == _rows(batch)
+
+
+def test_watermarked_stream_leaves_the_events_directory_as_it_found_it(spark, tmp_path):
+    """The sentinel files go when the call ends, also when it fails: here
+    the delay does not parse, after the sentinels were written."""
+    import datetime as dt
+
+    import pytest
+
+    from pyspark.errors import AnalysisException
+
+    from document_ai_spark.streaming.sessionize import run_sessionize_stream_watermarked
+
+    src = str(tmp_path / "events_src")
+    spark.createDataFrame(
+        [(1, dt.datetime(2024, 3, 1, 8), 1, "click", 1.0, "{}")],
+        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+    ).write.parquet(src)
+    listing = sorted(os.listdir(src))
+
+    with pytest.raises(AnalysisException, match="CANNOT_PARSE_INTERVAL"):
+        run_sessionize_stream_watermarked(spark, src, str(tmp_path / "ck1"), delay="soon")
+    assert sorted(os.listdir(src)) == listing
+
+    out = run_sessionize_stream_watermarked(spark, src, str(tmp_path / "ck2"), query_name="wm_clean")
+    assert out.count() == 1
+    assert sorted(os.listdir(src)) == listing
