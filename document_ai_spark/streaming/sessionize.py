@@ -39,6 +39,7 @@ NoTimeout stream, and for a pathological single key (bot traffic)
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import functools
 import os
@@ -85,6 +86,7 @@ WM_STATE_SCHEMA = T.StructType(
 )
 
 FLUSH_USER_ID = -1  # reserved key carried by the sentinel flush events
+
 
 def _session_id(partition: list, order: list, start: str, end: str, gap_minutes: int) -> Column:
     """The gap rule as window ops: a row opens a session when it is the
@@ -395,7 +397,7 @@ def run_sessionize_stream_watermarked(
         out = run_to_memory(spark, events_path, checkpoint_dir, query_name, op, "append", 1)
     finally:
         for n in (1, 2):
-            if os.path.exists(_flush_path(events_path, n)):
+            with contextlib.suppress(FileNotFoundError):
                 os.remove(_flush_path(events_path, n))
     return out.filter(F.col("user_id") != F.lit(FLUSH_USER_ID))
 
