@@ -897,6 +897,33 @@ def q49_ivf_indexed_pruned_probe(spark, sf_dir):
     return ivf_topk_indexed(cat, "emb_ivf", qv, cents, k=7, nprobe=len(cents))
 
 
+def _stage_q50_events(sf_dir: str, dest_dir: str) -> None:
+    """Write the events table into ``dest_dir`` as batch-0/1/2.parquet
+    with pyarrow, file k older than file k+1: rows ranked by (ts,
+    event_id) split into thirds, and each third's even event_ids from its
+    first 30 minutes (whole seconds since the third's earliest ts) moved
+    into the previous file."""
+    import time
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by(
+        [("ts", "ascending"), ("event_id", "ascending")]
+    )
+    third = np.arange(ev.num_rows) * 3 // max(ev.num_rows, 1)
+    sec = ev["ts"].cast(pa.int64()).to_numpy() // 1_000_000
+    since_start = sec - sec[np.searchsorted(third, third)]
+    promoted = (third > 0) & (ev["event_id"].to_numpy() % 2 == 0) & (since_start < 1800)
+    part = third - promoted
+    now = time.time()
+    for k in range(3):
+        dest = os.path.join(dest_dir, f"batch-{k}.parquet")
+        pq.write_table(ev.filter(pa.array(part == k)), dest)
+        os.utime(dest, (now - 300 + 100 * k, now - 300 + 100 * k))
+
+
 def q50_sessionize_watermarked(spark, sf_dir):
     """EVENT-TIME WATERMARK sessionization (round-4): the events table is
     staged as THREE mtime-ordered files with genuine bounded cross-batch
@@ -908,48 +935,19 @@ def q50_sessionize_watermarked(spark, sf_dir):
     operator (streaming/sessionize.py sessionize_stream_watermark_fn)
     buffers in state, finalizes by watermark, and the sentinel flush
     drains — so the emitted sessions must equal the batch sessionization
-    EXACTLY (oracle = q29's SQL minus session_id)."""
-    import glob
+    EXACTLY (oracle = q29's SQL minus session_id). The files are staged
+    on the driver (_stage_q50_events), with no Spark job."""
     import shutil
     import tempfile
-    import time
     import uuid as _uuid
-
-    from pyspark.sql import Window
 
     from document_ai_spark.streaming.sessionize import (
         run_sessionize_stream_watermarked,
     )
 
-    ev = _t(spark, sf_dir, "events")
-    n = ev.count()
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_third", ((F.col("_rn") - 1) * 3 / F.lit(n)).cast("int")
-    )
-    tmin = Window.partitionBy("_third")
-    staged = ranked.withColumn("_tmin", F.min("ts").over(tmin)).withColumn(
-        "_file",
-        F.when(
-            (F.col("_third") > 0)
-            & (F.col("event_id") % 2 == 0)
-            & (F.unix_timestamp("ts") - F.unix_timestamp("_tmin") < 1800),
-            F.col("_third") - 1,
-        ).otherwise(F.col("_third")),
-    )
     tmp = tempfile.mkdtemp(prefix="da_stream_q50_")
     try:
-        now = time.time()
-        for k in range(3):
-            part_dir = tempfile.mkdtemp(prefix="q50_part_")
-            staged.filter(F.col("_file") == k).drop(
-                "_rn", "_third", "_tmin", "_file"
-            ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-            src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            dest = os.path.join(tmp, f"batch-{k}.parquet")
-            shutil.copyfile(src, dest)
-            shutil.rmtree(part_dir, ignore_errors=True)
-            os.utime(dest, (now - 300 + 100 * k, now - 300 + 100 * k))
+        _stage_q50_events(sf_dir, tmp)
         name = "q50_" + _uuid.uuid4().hex[:8]
         out = run_sessionize_stream_watermarked(
             spark, tmp, os.path.join(tmp, "_ckpt"), gap_minutes=30, delay="2 hours",

@@ -386,26 +386,8 @@ def _tokenize_blocks_merged(s: str) -> List[Block]:
         pos = m.end()
         if name is not None:  # full tag
             name = name.lower()
-            if closing:
-                # == handle_endtag
-                if name in SKIP_TAGS:
-                    if open_skip_tags and name in open_skip_tags:
-                        for i in range(len(open_skip_tags) - 1, -1, -1):
-                            if open_skip_tags[i] == name:
-                                del open_skip_tags[i]
-                                skip_depth -= 1
-                                break
-                elif not skip_depth:
-                    if name in ("article", "main") and article_depth > 0:
-                        article_depth -= 1
-                    elif name == "a" and link_depth > 0:
-                        link_depth -= 1
-                    if name in BLOCK_TAGS:
-                        if pieces:  # empty flush is a no-op; skip the call
-                            flush()
-                        cur_tag = "body"
-            else:
-                # == handle_starttag (+ immediate endtag for self-closing)
+            if not closing:
+                # == handle_starttag
                 if name in VOID_TAGS:
                     pass
                 elif name in SKIP_TAGS:
@@ -422,41 +404,36 @@ def _tokenize_blocks_merged(s: str) -> List[Block]:
                         if pieces:
                             flush()
                         cur_tag = name
-                if selfclose:
-                    # handle_endtag immediately (undo skip push, etc.)
-                    if name in SKIP_TAGS:
-                        if open_skip_tags and name in open_skip_tags:
-                            for i in range(len(open_skip_tags) - 1, -1, -1):
-                                if open_skip_tags[i] == name:
-                                    del open_skip_tags[i]
-                                    skip_depth -= 1
-                                    break
-                    elif name not in VOID_TAGS and not skip_depth:
-                        if name in ("article", "main") and article_depth > 0:
-                            article_depth -= 1
-                        elif name == "a" and link_depth > 0:
-                            link_depth -= 1
-                        if name in BLOCK_TAGS:
-                            if pieces:
-                                flush()
-                            cur_tag = "body"
-                elif name in _CDATA_ELEMS:
+                if not selfclose:
+                    if name not in _CDATA_ELEMS:
+                        continue
                     # raw CDATA until the close tag; script/style are
                     # SKIP_TAGS, so skip_depth >= 1 here and the content
                     # is dropped WITHOUT ever being sliced or unescaped
                     mc = _CDATA_CLOSE_RE[name].search(s, pos)
                     if mc is None:
                         break
-                    close = mc.start()
-                    gt = find(">", close)
-                    # close tag == handle_endtag(name): pop the skip entry
-                    if open_skip_tags and name in open_skip_tags:
-                        for i in range(len(open_skip_tags) - 1, -1, -1):
-                            if open_skip_tags[i] == name:
-                                del open_skip_tags[i]
-                                skip_depth -= 1
-                                break
+                    gt = find(">", mc.start())
                     pos = n if gt == -1 else gt + 1
+            # == handle_endtag: a closing tag, a self-closing tag or the
+            # close of a CDATA element. A void tag's is a no-op: VOID_TAGS
+            # shares no name with SKIP_TAGS, BLOCK_TAGS, article/main or a
+            if name in SKIP_TAGS:
+                if open_skip_tags and name in open_skip_tags:
+                    for i in range(len(open_skip_tags) - 1, -1, -1):
+                        if open_skip_tags[i] == name:
+                            del open_skip_tags[i]
+                            skip_depth -= 1
+                            break
+            elif not skip_depth:
+                if name in ("article", "main") and article_depth > 0:
+                    article_depth -= 1
+                elif name == "a" and link_depth > 0:
+                    link_depth -= 1
+                if name in BLOCK_TAGS:
+                    if pieces:  # empty flush is a no-op; skip the call
+                        flush()
+                    cur_tag = "body"
         elif pos - lt == 1:
             nc = s[pos : pos + 1]
             if nc == "/" or ("a" <= nc <= "z") or ("A" <= nc <= "Z"):

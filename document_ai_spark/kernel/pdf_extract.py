@@ -50,12 +50,12 @@ hex strings ``<48656C6C6F>``
 
 Also handled (round 3): ordered ``/Filter`` CHAINS (arrays applied in
 sequence), ``/LZWDecode`` (incl. /DecodeParms EarlyChange), ``/ToUnicode``
-CMaps in 1-byte AND 2-byte (CID-style) codespaces (bfchar + bfrange,
-UTF-16BE destinations) selected per ``Tf`` font with §7.8.3 resource
-inheritance, the FULL ``Tm`` matrix (rotation/scaling: line advance
-composes in text space, item position is the matrix translation, item
-size scales by hypot(b, d)), and markdown-structured emission
-(``markdown=True``: heading-size regions get '#'-prefixes).
+CMaps (bfchar + bfrange, UTF-16BE destinations) selected per ``Tf``
+font with §7.8.3 resource inheritance, the FULL ``Tm`` matrix
+(rotation/scaling: line advance composes in text space, item position is
+the matrix translation, item size scales by hypot(b, d)), and
+markdown-structured emission (``markdown=True``: heading-size regions get
+'#'-prefixes).
 
 Also handled (round 4): MODERN (PDF >= 1.5) file structure — objects
 packed zlib-compressed inside ``/Type /ObjStm`` object streams are
@@ -93,10 +93,13 @@ The Tc (character spacing), Tw (word spacing — single-byte code 32 only,
 cursor: tx = (w/1000 x Tfs + Tc + Tw) x Th per glyph, so justified text
 (big Tw) and letterspaced text keep truthful positions.
 
-ToUnicode CMaps may declare MIXED-WIDTH codespaces (§9.7.6.2 — 1-byte
-ASCII alongside 2-byte CJK ranges, the Shift-JIS-style layout): shown
-bytes are consumed by greedy codespace-range match, mappings are keyed
-(width, code), and metrics/advances follow the same consumption.
+CHARACTER CODES: every font has one codespace, a tuple of (nbytes, lo,
+hi) ranges — its ToUnicode CMap's (one width, or MIXED widths such as
+1-byte ASCII alongside 2-byte CJK, the Shift-JIS-style layout), else 2
+bytes for a CID font and 1 byte for any other. One splitter consumes the
+shown bytes by the codespace range they fall in (§9.7.6.2); the text
+lookup (map keyed (nbytes, code)) and the glyph advances read the same
+codes.
 
 Out of scope (documented): an indirect /Font VALUE inside a resources
 dict, per-filter /DecodeParms arrays (the first parms dict applies), and
@@ -696,11 +699,12 @@ def _decode_filters(head: bytes, data: bytes) -> bytes:
     return data
 
 
-# ToUnicode CMap subset (PDF 32000-1 §9.10.3): 1-byte or 2-byte
-# (CID-style) source codespaces — the codespacerange sets the width —
+# ToUnicode CMap subset (PDF 32000-1 §9.10.3): codespacerange blocks,
 # bfchar pairs and bfrange triples (contiguous or array form), UTF-16BE
-# destinations. A parsed cmap travels as (width, {code -> str}); fonts
-# without /ToUnicode keep the byte-transparent path.
+# destinations. Every font resolves to a CODESPACE, a tuple of
+# (nbytes, lo, hi) ranges sorted by width that _iter_codes splits shown
+# bytes by, and an optional map {(nbytes, code) -> str}; fonts without a
+# usable /ToUnicode keep the byte-transparent text path.
 _FONTDICT_RE = re.compile(rb"/Font\s*<<(.*?)>>", re.S)
 _FONT_PAIR_RE = re.compile(rb"/([A-Za-z0-9]+)\s+(\d+)\s+\d+\s+R")
 _TOUNICODE_RE = re.compile(rb"/ToUnicode\s+(\d+)\s+\d+\s+R")
@@ -709,6 +713,9 @@ _BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.S)
 _CODESPACE_RE = re.compile(rb"begincodespacerange(.*?)endcodespacerange", re.S)
 _CMAP_TOK_RE = re.compile(rb"<([0-9A-Fa-f]+)>|(\[)|(\])")
 _CMAP_MAX_ENTRIES = 1 << 17  # adversarial-range budget (65k x2 is plenty)
+_ONE_BYTE = ((1, 0, 0xFF),)    # a simple font's codes
+_TWO_BYTE = ((2, 0, 0xFFFF),)  # a CID font's codes when it has no ToUnicode
+_BYTE_CODES = [(1, b) for b in range(256)]  # _ONE_BYTE's codes, built once
 
 
 def _utf16be_hex_to_str(h: bytes) -> str:
@@ -717,43 +724,44 @@ def _utf16be_hex_to_str(h: bytes) -> str:
     return bytes.fromhex(h.decode("ascii")).decode("utf-16-be", errors="replace")
 
 
+def _hex_width(h: bytes) -> int:
+    """Byte width of a CMap hex code, 1..4."""
+    return max(1, min(4, (len(h) + 1) // 2))
+
+
 def _parse_cmap(data: bytes) -> tuple:
-    """CMap stream bytes -> one of two shapes:
+    """CMap stream bytes -> (codespace, {(nbytes, code) -> unicode str}).
 
-      * UNIFORM codespace (the overwhelming norm): (code width in bytes,
-        {source code -> unicode str}) — width 1 or 2 from the
-        codespacerange hex-digit count, default 1;
-      * MIXED-width codespace (§9.7.6.2: e.g. 1-byte ASCII <00><7F>
-        alongside 2-byte CJK <8140><FFFC>): ('mixed', ((nbytes, lo, hi),
-        ...), {(nbytes, code) -> str}) — _iter_codes consumes the shown
-        bytes greedily by matching codespace range.
+    The codespace holds the ranges of every codespacerange block. When
+    they share one width (or none is declared: width 1) it is the one
+    full range of that width, so bytes outside the declared bounds still
+    make codes; ranges of MIXED widths (§9.7.6.2: e.g. 1-byte ASCII
+    <00><7F> alongside 2-byte CJK <8140><FFFC>) stay as declared. A
+    bfchar/bfrange source is keyed at the narrowest codespace width that
+    holds it (<41> in a <0000><FFFF> map is the 2-byte code 0x0041); a
+    source wider than every range is dropped.
 
-    Total: a malformed CMap yields (1, {}) — the font then stays
+    Total: a malformed CMap yields (_ONE_BYTE, {}) — the font then stays
     byte-transparent. Range expansion is budget-capped so an adversarial
     <0000> <FFFF> blanket cannot balloon memory."""
     cmap: dict = {}
-    width = 1
     try:
-        ranges: list = []  # (nbytes, lo, hi) over ALL codespacerange blocks
-        first_hex = None
+        ranges = []
         for cs in _CODESPACE_RE.finditer(data):
             hexes = [t[0] for t in _CMAP_TOK_RE.findall(cs.group(1)) if t[0]]
-            if first_hex is None and hexes:
-                first_hex = hexes[0]
             for lo_h, hi_h in zip(hexes[0::2], hexes[1::2]):
-                nb = max(1, min(4, (len(lo_h) + 1) // 2))
-                ranges.append((nb, int(lo_h, 16), int(hi_h, 16)))
-        if ranges and len({nb for nb, _, _ in ranges}) > 1:
-            return _parse_cmap_mixed(data, tuple(ranges))
-        if first_hex is not None and len(first_hex) > 2:
-            width = 2
-        max_code = (1 << (8 * width)) - 1
-        max_hex = 2 * width
+                ranges.append((_hex_width(lo_h), int(lo_h, 16), int(hi_h, 16)))
+        widths = sorted({nb for nb, _, _ in ranges}) or [1]
+        if len(widths) == 1:
+            codespace = ((widths[0], 0, (1 << (8 * widths[0])) - 1),)
+        else:
+            codespace = tuple(sorted(ranges))
         for m in _BFCHAR_RE.finditer(data):
             hexes = [t[0] for t in _CMAP_TOK_RE.findall(m.group(1)) if t[0]]
             for src, dst in zip(hexes[0::2], hexes[1::2]):
-                if len(src) <= max_hex:
-                    cmap[int(src, 16)] = _utf16be_hex_to_str(dst)
+                nb = next((w for w in widths if w >= _hex_width(src)), 0)
+                if nb:
+                    cmap[(nb, int(src, 16))] = _utf16be_hex_to_str(dst)
         for m in _BFRANGE_RE.finditer(data):
             toks = _CMAP_TOK_RE.findall(m.group(1))
             i, n = 0, len(toks)
@@ -761,22 +769,23 @@ def _parse_cmap(data: bytes) -> tuple:
                 if not toks[i][0] or i + 1 >= n or not toks[i + 1][0]:
                     i += 1  # malformed entry: resync on next hex token
                     continue
+                # the narrowest width holding the source; 0: none does
+                nb = next((w for w in widths if w >= _hex_width(toks[i][0])), 0)
                 lo, hi = int(toks[i][0], 16), int(toks[i + 1][0], 16)
-                in_width = len(toks[i][0]) <= max_hex
                 i += 2
                 if i < n and toks[i][1]:  # [ <d0> <d1> ... ] array form
                     i += 1
                     code = lo
                     while i < n and not toks[i][2]:
-                        if toks[i][0] and in_width and code <= hi:
-                            cmap[code] = _utf16be_hex_to_str(toks[i][0])
+                        if toks[i][0] and nb and code <= hi:
+                            cmap[(nb, code)] = _utf16be_hex_to_str(toks[i][0])
                         code += 1
                         i += 1
                     i += 1  # the ']'
                 elif i < n and toks[i][0]:  # contiguous: dst_start + offset
-                    if in_width:
+                    if nb:
                         base = int(toks[i][0], 16)
-                        hi_c = min(hi, max_code, lo + _CMAP_MAX_ENTRIES)
+                        hi_c = min(hi, (1 << (8 * nb)) - 1, lo + _CMAP_MAX_ENTRIES)
                         for code in range(lo, hi_c + 1):
                             if len(cmap) > _CMAP_MAX_ENTRIES:
                                 break
@@ -786,13 +795,35 @@ def _parse_cmap(data: bytes) -> tuple:
                                 # U+FFFD like the bfchar errors='replace'
                                 # path (a surrogate str would blow up the
                                 # Arrow batch, not just this document)
-                                cmap[code] = "�"
+                                cmap[(nb, code)] = "�"
                             elif v <= 0x10FFFF:
-                                cmap[code] = chr(v)
+                                cmap[(nb, code)] = chr(v)
                     i += 1
     except Exception:
-        return (1, {})
-    return (width, cmap)
+        return (_ONE_BYTE, {})
+    return (codespace, cmap)
+
+
+def _iter_codes(raw: bytes, codespace: tuple) -> list:
+    """Split shown bytes into (nbytes, code) character codes by the
+    §9.7.6.2 rule: at each position take the narrowest codespace range
+    the next bytes fall in. A byte in no range (a trailing byte short of
+    a 2-byte code among them) is consumed alone as (0, byte): U+FFFD in
+    _shown_text, one default-width glyph in _advance_units (§9.7.6.3)."""
+    if codespace == _ONE_BYTE:  # every simple font: each byte is a code
+        return [_BYTE_CODES[b] for b in raw]
+    codes = []
+    i, n = 0, len(raw)
+    while i < n:
+        for nb, lo, hi in codespace:
+            if i + nb <= n and lo <= (code := int.from_bytes(raw[i : i + nb], "big")) <= hi:
+                codes.append((nb, code))
+                i += nb
+                break
+        else:
+            codes.append((0, raw[i]))
+            i += 1
+    return codes
 
 
 # ---------------------------------------------------------------------------
@@ -882,12 +913,7 @@ def _font_metrics(fobj: bytes, objs: dict) -> tuple | None:
                 wmap = _parse_cid_w(desc[wm.end() : i - 1])
             if not wmap and dwm is None:
                 return None
-            # 4th field: CODE WIDTH in bytes — a CID font's widths are
-            # keyed by 2-byte codes, and the advance must consume the
-            # shown bytes pairwise even when the font has no usable
-            # ToUnicode cmap (review finding: byte-wise lookups in a
-            # CID-keyed map yield garbage advances)
-            return (wmap, dw, min(dw, DEFAULT_SPACE_W), 2)
+            return (wmap, dw, min(dw, DEFAULT_SPACE_W))
         wm = _WIDTHS_RE.search(fobj)
         if not wm:
             return None
@@ -912,76 +938,9 @@ def _font_metrics(fobj: bytes, objs: dict) -> tuple | None:
             if mw:
                 default = float(mw.group(1))
         wmap = {first + i: w for i, w in enumerate(widths)}
-        return (wmap, default, wmap.get(32, DEFAULT_SPACE_W), 1)
+        return (wmap, default, wmap.get(32, DEFAULT_SPACE_W))
     except Exception:
         return None
-
-
-def _parse_cmap_mixed(data: bytes, ranges: tuple) -> tuple:
-    """The mixed-width arm of _parse_cmap: bfchar/bfrange sources are
-    keyed by (nbytes, code) — 0x41 as a 1-byte code and 0x0041 as a
-    2-byte code are distinct codespace members. Same entry budget."""
-    cmap: dict = {}
-    try:
-        for m in _BFCHAR_RE.finditer(data):
-            hexes = [t[0] for t in _CMAP_TOK_RE.findall(m.group(1)) if t[0]]
-            for src, dst in zip(hexes[0::2], hexes[1::2]):
-                nb = max(1, min(4, (len(src) + 1) // 2))
-                cmap[(nb, int(src, 16))] = _utf16be_hex_to_str(dst)
-        for m in _BFRANGE_RE.finditer(data):
-            toks = _CMAP_TOK_RE.findall(m.group(1))
-            i, n = 0, len(toks)
-            while i < n:
-                if not toks[i][0] or i + 1 >= n or not toks[i + 1][0]:
-                    i += 1
-                    continue
-                nb = max(1, min(4, (len(toks[i][0]) + 1) // 2))
-                lo, hi = int(toks[i][0], 16), int(toks[i + 1][0], 16)
-                i += 2
-                if i < n and toks[i][1]:  # [ <d0> <d1> ... ] array form
-                    i += 1
-                    code = lo
-                    while i < n and not toks[i][2]:
-                        if toks[i][0] and code <= hi:
-                            cmap[(nb, code)] = _utf16be_hex_to_str(toks[i][0])
-                        code += 1
-                        i += 1
-                    i += 1
-                elif i < n and toks[i][0]:  # contiguous form
-                    base = int(toks[i][0], 16)
-                    hi_c = min(hi, lo + _CMAP_MAX_ENTRIES)
-                    for code in range(lo, hi_c + 1):
-                        if len(cmap) > _CMAP_MAX_ENTRIES:
-                            break
-                        v = base + (code - lo)
-                        if 0xD800 <= v <= 0xDFFF:
-                            cmap[(nb, code)] = "�"
-                        elif v <= 0x10FFFF:
-                            cmap[(nb, code)] = chr(v)
-                    i += 1
-    except Exception:
-        return (1, {})
-    return ("mixed", ranges, cmap)
-
-
-def _iter_codes(raw: bytes, ranges: tuple):
-    """Yield (nbytes, code) by greedy SHORTEST-match against the mixed
-    codespace ranges (§9.7.6.2 consumption rule: take the number of bytes
-    of the codespace range the next bytes fall in; an unmatched byte
-    consumes 1 and yields (0, byte) — the caller's U+FFFD case)."""
-    i, n = 0, len(raw)
-    while i < n:
-        for nb in (1, 2, 3, 4):
-            if i + nb > n:
-                continue
-            code = int.from_bytes(raw[i : i + nb], "big")
-            if any(rn == nb and lo <= code <= hi for rn, lo, hi in ranges):
-                yield (nb, code)
-                i += nb
-                break
-        else:
-            yield (0, raw[i])
-            i += 1
 
 
 _RESOURCES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
@@ -990,13 +949,15 @@ _RESOURCES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
 def _page_fonts(
     body: bytes, objs: dict, cmap_cache: dict, parent_body: bytes = b""
 ) -> dict:
-    """Page object body -> {font name bytes -> (cmap | None,
-    metrics | None)} for fonts declaring /ToUnicode and/or width metrics
-    (/Widths, CID /W). Resolution order (PDF 32000-1 §7.8.3 resource
-    inheritance): inline /Resources<</Font<<...>>>> on the page, then an
-    INDIRECT /Resources N 0 R on the page, then the same two forms on the
-    parent /Pages node (the dominant real layout: resources declared once
-    on the tree root). Out of scope: an indirect /Font VALUE inside a
+    """Page object body -> {font name bytes -> (codespace, cmap | None,
+    metrics | None)} for fonts declaring a usable /ToUnicode and/or width
+    metrics (/Widths, CID /W). The codespace and cmap are _parse_cmap's
+    when the ToUnicode map is not empty, else the 2-byte codespace for a
+    CID (Type0) font and the 1-byte one for any other. Resolution order
+    (PDF 32000-1 §7.8.3 resource inheritance): inline
+    /Resources<</Font<<...>>>> on the page, then an INDIRECT /Resources
+    N 0 R on the page, then the same two forms on the parent /Pages node
+    (the dominant real layout: resources declared once on the tree root). Out of scope: an indirect /Font VALUE inside a
     resources dict. CMap streams are parsed once per document (cache
     keyed by object number)."""
     fm = _FONTDICT_RE.search(body)
@@ -1017,28 +978,25 @@ def _page_fonts(
         fobj = objs.get(int(ref))
         if not fobj:
             continue
+        codespace = _TWO_BYTE if _DESCFONT_RE.search(fobj) else _ONE_BYTE
         cmap = None
         tm = _TOUNICODE_RE.search(fobj)
         if tm:
             cnum = int(tm.group(1))
             if cnum not in cmap_cache:
                 cmap_cache[cnum] = _parse_cmap(_stream_bytes(objs.get(cnum, b""), objs))
-            entry = cmap_cache[cnum]
-            # empty MAP = stay byte-transparent; the map is element 2 in
-            # the mixed shape (element 1 is the always-truthy ranges)
-            mapping = entry[2] if entry[0] == "mixed" else entry[1]
-            if mapping:
-                cmap = entry
+            if cmap_cache[cnum][1]:  # an empty map stays byte-transparent
+                codespace, cmap = cmap_cache[cnum]
         metrics = _font_metrics(fobj, objs)
         if cmap is not None or metrics is not None:
-            fonts[name] = (cmap, metrics)
+            fonts[name] = (codespace, cmap, metrics)
     return fonts
 
 
 def _split_pages(payload: bytes) -> List[Tuple[bytes, dict]]:
     """-> one (content-stream bytes, fonts) pair per page, in reading
-    (/Kids) order. ``fonts`` maps font names to ToUnicode cmaps (empty for
-    pages without CMap'd fonts).
+    (/Kids) order. ``fonts`` is _page_fonts' map (empty for pages without
+    CMap'd or metric fonts).
 
     Fallback when no /Pages tree exists: every stream section in document
     order, concatenated as a single page (the constrained round-1 subset,
@@ -1240,83 +1198,40 @@ def _hex_bytes(content: bytes) -> bytes:
         return b""
 
 
-# unmapped code under an active 1-byte ToUnicode CMap: ASCII passes through
+# unmapped 1-byte code under an active ToUnicode map: ASCII passes through
 # (real CMaps routinely cover only the non-ASCII range), other bytes are
-# U+FFFD; under a 2-byte (CID-style) codespace there is no byte-transparent
-# reading, so unmapped codes are always U+FFFD
+# U+FFFD; a wider code has no byte-transparent reading, so it is U+FFFD
 _CMAP_FALLBACK = [chr(b) if b < 128 else "�" for b in range(256)]
 
 
-def _shown_text(raw: bytes, cmap: tuple | None) -> str:
-    """Raw shown-string bytes -> text through the active font's ToUnicode
-    CMap — ``cmap`` is (code width in bytes, {code int -> str}) — or
-    utf-8 (errors=replace) when the font has none. Width 2 consumes the
-    string two bytes per code (big-endian, the CID convention); an odd
-    trailing byte is U+FFFD."""
+def _shown_text(raw: bytes, codespace: tuple, cmap: dict | None) -> str:
+    """Raw shown-string bytes -> text: each code _iter_codes splits off
+    by the active font's codespace is looked up in its ToUnicode ``cmap``
+    ({(nbytes, code) -> str}), unmapped codes as _CMAP_FALLBACK says. A
+    font without a map decodes utf-8 (errors=replace)."""
     if cmap is None:
         return raw.decode("utf-8", errors="replace")
-    if cmap[0] == "mixed":
-        _, ranges, mm = cmap
-        fb = _CMAP_FALLBACK
-        out_m: List[str] = []
-        for nb, code in _iter_codes(raw, ranges):
-            hit = mm.get((nb, code)) if nb else None
-            if hit is not None:
-                out_m.append(hit)
-            elif nb == 1:
-                # same ASCII passthrough as the uniform 1-byte path: real
-                # CMaps routinely map only the non-ASCII range
-                out_m.append(fb[code])
-            else:
-                out_m.append("�")
-        return "".join(out_m)
-    width, m = cmap
-    if width == 1:
-        fb = _CMAP_FALLBACK
-        return "".join([m.get(b, fb[b]) for b in raw])
-    out: List[str] = []
-    i = 0
-    last = len(raw) - 1
-    while i < last:
-        out.append(m.get((raw[i] << 8) | raw[i + 1], "�"))
-        i += 2
-    if i <= last:
-        out.append("�")
-    return "".join(out)
+    get = cmap.get
+    fb = _CMAP_FALLBACK
+    return "".join([
+        hit if (hit := get(c)) is not None else fb[c[1]] if c[0] == 1 else "�"
+        for c in _iter_codes(raw, codespace)
+    ])
 
 
-def _advance_units(raw: bytes, cmap: tuple | None, metrics: tuple) -> Tuple[float, int, int]:
-    """(total glyph advance in 1/1000-em units, glyph count, single-byte
-    space-code count) for a shown string, from the active font's width
-    metrics ``(wmap, default, space_w, code_bytes)``. 2-byte codespaces —
-    from the cmap, or from CID metrics when the font has no cmap —
-    consume the raw bytes pairwise, matching _shown_text; word spacing
-    (Tw) applies only to the single-byte code 32 per §9.3.3, so their
-    space count is 0."""
-    wmap, dw = metrics[0], metrics[1]
+def _advance_units(raw: bytes, codespace: tuple, metrics: tuple) -> Tuple[float, int, int]:
+    """(total glyph advance in 1/1000-em units, glyph count, space count)
+    for a shown string, from the active font's width metrics ``(wmap,
+    default, space_w)`` over the codes _iter_codes splits it into, the
+    ones _shown_text decodes. A byte in no codespace range is a glyph of
+    the default width; word spacing (Tw) applies only to the 1-byte code
+    32 (§9.3.3)."""
+    get, dw = metrics[0].get, metrics[1]
     total = 0.0
-    if cmap is not None and cmap[0] == "mixed":
-        n = spaces = 0
-        for nb, code in _iter_codes(raw, cmap[1]):
-            total += wmap.get(code, dw) if nb else dw
-            n += 1
-            if nb == 1 and code == 32:
-                spaces += 1
-        return total, n, spaces
-    # pairwise consumption: a 2-byte ToUnicode codespace, or (cmap-less)
-    # a CID font whose metrics declare 2-byte codes
-    if (cmap is not None and cmap[0] == 2) or (cmap is None and metrics[3] == 2):
-        n = 0
-        for i in range(0, len(raw) - 1, 2):
-            total += wmap.get((raw[i] << 8) | raw[i + 1], dw)
-            n += 1
-        return total, n, 0
-    spaces = 0
-    for b in raw:
-        total += wmap.get(b, dw)
-        if b == 32:
-            spaces += 1
-    return total, len(raw), spaces
+    codes = _iter_codes(raw, codespace)
+    for nb, code in codes:
+        total += get(code, dw) if nb else dw
+    return total, len(codes), codes.count((1, 32))
 
 
 def _parse_items(
@@ -1331,10 +1246,11 @@ def _parse_items(
     on the matched group index. Semantics are pinned to
     ``_parse_items_reference`` by a fuzz-equivalence test.
 
-    ``fonts``: optional {font name bytes -> (cmap | None, metrics | None)}
-    from the page's /Resources. When the font selected by Tf has a cmap,
-    shown string BYTES are decoded through it (byte- or 2-byte-coded
-    fonts extract real text instead of mojibake); otherwise utf-8
+    ``fonts``: optional {font name bytes -> (codespace, cmap | None,
+    metrics | None)} from the page's /Resources. When the font selected by
+    Tf has a cmap, shown string BYTES are split by its codespace and
+    decoded through it (byte- or 2-byte-coded fonts extract real text
+    instead of mojibake); otherwise utf-8
     (errors=replace), which is exactly the reference path's behavior.
     When it has metrics, successive shows ADVANCE a within-line cursor
     (so segmented writing positions truthfully) and TJ word spaces use
@@ -1362,7 +1278,8 @@ def _parse_items(
     arr: List[object] | None = None  # TJ array being collected
     have_fonts = bool(fonts)
     last_name = b""               # most recent /Name operand (Tf font arg)
-    cur_map: tuple | None = None  # active font's ToUnicode (width, cmap)
+    cur_space: tuple | None = None  # active font's codespace
+    cur_map: dict | None = None   # active font's ToUnicode map
     cur_metrics: tuple | None = None  # active font's (wmap, default, space_w)
 
     items_append = items.append
@@ -1403,11 +1320,11 @@ def _parse_items(
                         cursor = 0.0
                     if strs:
                         raw = strs[-1]
-                        t = " ".join(_shown_text(raw, cur_map).split())
+                        t = " ".join(_shown_text(raw, cur_space, cur_map).split())
                         if cur_metrics is not None:
                             x0 = me + cursor * ma
                             y0 = mf + cursor * mb
-                            units, ng, nsp = _advance_units(raw, cur_map, cur_metrics)
+                            units, ng, nsp = _advance_units(raw, cur_space, cur_metrics)
                             cursor += (units * size / 1000.0 + ng * tc + nsp * tw) * th
                             if t:
                                 items_append((int(round(x0)), int(round(y0)), int(round(size * (mb * mb + md_ * md_) ** 0.5)), t, int(round(me + cursor * ma))))
@@ -1437,8 +1354,8 @@ def _parse_items(
                             pieces: List[str] = []
                             for el in arr:
                                 if isinstance(el, bytes):
-                                    pieces.append(_shown_text(el, cur_map))
-                                    units, ng, nsp = _advance_units(el, cur_map, cur_metrics)
+                                    pieces.append(_shown_text(el, cur_space, cur_map))
+                                    units, ng, nsp = _advance_units(el, cur_space, cur_metrics)
                                     cursor += (units * size / 1000.0 + ng * tc + nsp * tw) * th
                                 else:
                                     cursor += -el * size / 1000.0 * th
@@ -1451,7 +1368,7 @@ def _parse_items(
                             pieces = []
                             for el in arr:
                                 if isinstance(el, bytes):
-                                    pieces.append(_shown_text(el, cur_map))
+                                    pieces.append(_shown_text(el, cur_space, cur_map))
                                 elif el <= TJ_SPACE_THRESHOLD:
                                     pieces.append(" ")
                             t = " ".join("".join(pieces).split())
@@ -1462,7 +1379,7 @@ def _parse_items(
                         size = nums[-1]
                     if have_fonts:
                         f = fonts.get(last_name)
-                        cur_map, cur_metrics = f if f is not None else (None, None)
+                        cur_space, cur_map, cur_metrics = f if f is not None else (None, None, None)
                 elif w == b"BT":
                     ma, mb, mc, md_, me, mf = 1.0, 0.0, 0.0, 1.0, 0.0, 0.0
                     leading = 0.0

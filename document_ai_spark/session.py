@@ -75,7 +75,12 @@ def get_spark(
 ) -> SparkSession:
     b = SparkSession.builder.appName(app_name)
     if master is not None:
-        b = b.master(master).config("spark.ui.enabled", "false").config("spark.driver.memory", "16g")
+        b = (
+            b.master(master)
+            .config("spark.ui.enabled", "false")
+            .config("spark.ui.showConsoleProgress", "false")
+            .config("spark.driver.memory", "16g")
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -999,15 +999,15 @@ def test_mixed_width_codespace_cmap():
 def test_mixed_width_codespace_unmatched_byte_isolates():
     from document_ai_spark.kernel.pdf_extract import _parse_cmap, _shown_text
 
-    cmap = _parse_cmap(
+    space, cmap = _parse_cmap(
         b"begincmap\n2 begincodespacerange\n<00> <3F>\n<8000> <80FF>\nendcodespacerange\n"
         b"1 beginbfchar\n<20> <0058>\nendbfchar\n"
         b"1 beginbfrange\n<21> <3F> <0041>\nendbfrange\nendcmap\n"
     )
-    assert cmap[0] == "mixed"
+    assert space == ((1, 0x00, 0x3F), (2, 0x8000, 0x80FF))
     # 0x50 matches NO codespace range -> U+FFFD, consume one byte; the
     # 0x80 0x10 pair lands in the 2-byte range but has no mapping -> FFFD
-    assert _shown_text(bytes([0x21, 0x50, 0x20, 0x80, 0x10]), cmap) == "A�X�"
+    assert _shown_text(bytes([0x21, 0x50, 0x20, 0x80, 0x10]), space, cmap) == "A�X�"
 
 
 def test_mixed_width_codespace_with_cid_widths():
@@ -1060,14 +1060,14 @@ def test_mixed_cmap_ascii_passthrough():
     # through (the Shift-JIS-style CMap that maps only the CJK range)
     from document_ai_spark.kernel.pdf_extract import _parse_cmap, _shown_text
 
-    cmap = _parse_cmap(
+    space, cmap = _parse_cmap(
         b"begincmap\n2 begincodespacerange\n<00> <7F>\n<8000> <FFFF>\nendcodespacerange\n"
         b"1 beginbfchar\n<8000> <4E00>\nendbfchar\nendcmap\n"
     )
-    assert cmap[0] == "mixed"
-    assert _shown_text(b"Hi \x80\x00!", cmap) == "Hi 一!"
+    assert space == ((1, 0x00, 0x7F), (2, 0x8000, 0xFFFF))
+    assert _shown_text(b"Hi \x80\x00!", space, cmap) == "Hi 一!"
     # non-ASCII unmapped 1-byte still isolates (parity with uniform path)
-    assert _shown_text(bytes([0x7F]), cmap) == "\x7f"
+    assert _shown_text(bytes([0x7F]), space, cmap) == "\x7f"
 
 
 def test_mixed_cmap_split_codespacerange_blocks():
@@ -1075,14 +1075,14 @@ def test_mixed_cmap_split_codespacerange_blocks():
     # must still be detected as mixed
     from document_ai_spark.kernel.pdf_extract import _parse_cmap, _shown_text
 
-    cmap = _parse_cmap(
+    space, cmap = _parse_cmap(
         b"begincmap\n"
         b"1 begincodespacerange\n<00> <7F>\nendcodespacerange\n"
         b"1 begincodespacerange\n<8000> <FFFF>\nendcodespacerange\n"
         b"1 beginbfchar\n<8001> <4E8C>\nendbfchar\nendcmap\n"
     )
-    assert cmap[0] == "mixed"
-    assert _shown_text(b"A\x80\x01", cmap) == "A二"
+    assert space == ((1, 0x00, 0x7F), (2, 0x8000, 0xFFFF))
+    assert _shown_text(b"A\x80\x01", space, cmap) == "A二"
 
 
 def test_cid_widths_without_tounicode_consume_pairwise():
@@ -1103,6 +1103,54 @@ def test_cid_widths_without_tounicode_consume_pairwise():
     # second show abuts at 108 and advances one more CID to 112. Note the
     # low byte 0x20 must NOT count as a Tw-eligible space (2-byte code).
     assert [(it[0], it[4]) for it in items] == [(100, 108), (108, 112)]
+
+
+def test_cid_font_without_tounicode_odd_trailing_byte_is_a_default_glyph():
+    # 2-byte codespace, 3 shown bytes: the code 0x0020 and a trailing
+    # byte that makes no whole code; that byte is one glyph of the
+    # default width (§9.7.6.3 .notdef), so 2 x 500 units @ 10 pt = 10 pt
+    from document_ai_spark.kernel.pdf_extract import _parse_items, _split_pages
+
+    payload = _doc(
+        b"1 0 obj\n<</Type /Pages /Kids [2 0 R]>>\nendobj\n",
+        b"2 0 obj\n<</Type /Page /Resources <</Font <</F2 4 0 R>>>> /Contents 3 0 R>>\nendobj\n",
+        b"3 0 obj\nstream\nBT /F2 10 Tf 100 700 Td <002000> Tj ET\nendstream\nendobj\n",
+        b"4 0 obj\n<</Type /Font /Subtype /Type0 /DescendantFonts [9 0 R]>>\nendobj\n",
+        b"9 0 obj\n<</Subtype /CIDFontType2 /DW 500>>\nendobj\n",
+    )
+    (stream, fonts), = _split_pages(payload)
+    assert [(it[0], it[4]) for it in _parse_items(stream, fonts)] == [(100, 110)]
+
+
+def _tounicode_doc(cmap: bytes, shown_hex: bytes) -> bytes:
+    return _doc(
+        b"1 0 obj\n<</Type /Pages /Kids [2 0 R]>>\nendobj\n",
+        b"2 0 obj\n<</Type /Page /Resources <</Font <</F5 4 0 R>>>> /Contents 3 0 R>>\nendobj\n",
+        b"3 0 obj\nstream\nBT /F5 12 Tf 72 700 Td <" + shown_hex + b"> Tj ET\nendstream\nendobj\n",
+        b"4 0 obj\n<</Type /Font /ToUnicode 6 0 R>>\nendobj\n",
+        b"6 0 obj\n<</Length " + str(len(cmap)).encode() + b">>\nstream\n" + cmap + b"\nendstream\nendobj\n",
+    )
+
+
+def test_partial_one_byte_codespace_still_consumes_every_byte():
+    # a one-width codespace is the full range of that width: 0x10 and
+    # 0x7F lie outside <20> <7E> but are still 1-byte codes, unmapped,
+    # so ASCII passes through
+    cmap = (
+        b"begincmap\n1 begincodespacerange\n<20> <7E>\nendcodespacerange\n"
+        b"1 beginbfchar\n<41> <0058>\nendbfchar\nendcmap\n"
+    )
+    assert extract_pdf(_tounicode_doc(cmap, b"41107F"))[0] == "X\x10\x7f"
+
+
+def test_short_source_keys_at_the_codespace_width():
+    # <41> in a 2-byte map is the code 0x0041; the 3-byte source
+    # <000042> fits no 2-byte code and is dropped, so 0x0042 is unmapped
+    cmap = (
+        b"begincmap\n1 begincodespacerange\n<0000> <FFFF>\nendcodespacerange\n"
+        b"2 beginbfchar\n<41> <0058>\n<000042> <0059>\nendbfchar\nendcmap\n"
+    )
+    assert extract_pdf(_tounicode_doc(cmap, b"00410042"))[0] == "X\ufffd"
 
 
 def test_descendantfonts_indirect_array():
