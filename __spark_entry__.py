@@ -912,7 +912,7 @@ def _stage_q50_events(sf_dir: str, dest_dir: str) -> None:
     ev = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by(
         [("ts", "ascending"), ("event_id", "ascending")]
     )
-    third = np.arange(ev.num_rows) * 3 // max(ev.num_rows, 1)
+    third = np.arange(ev.num_rows) * 3 // ev.num_rows
     sec = ev["ts"].cast(pa.int64()).to_numpy() // 1_000_000
     since_start = sec - sec[np.searchsorted(third, third)]
     promoted = (third > 0) & (ev["event_id"].to_numpy() % 2 == 0) & (since_start < 1800)

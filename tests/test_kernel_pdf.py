@@ -1153,6 +1153,15 @@ def test_short_source_keys_at_the_codespace_width():
     assert extract_pdf(_tounicode_doc(cmap, b"00410042"))[0] == "X\ufffd"
 
 
+def test_uniform_three_byte_codespace_consumes_three_bytes():
+    # one rule for every width: a 3-byte codespace makes 3-byte codes
+    cmap = (
+        b"begincmap\n1 begincodespacerange\n<000000> <FFFFFF>\nendcodespacerange\n"
+        b"1 beginbfchar\n<000041> <0058>\nendbfchar\nendcmap\n"
+    )
+    assert extract_pdf(_tounicode_doc(cmap, b"000041"))[0] == "X"
+
+
 def test_descendantfonts_indirect_array():
     # review regression: '/DescendantFonts 12 0 R' -> object 12 is the
     # ARRAY '[13 0 R]' -> metrics come from object 13
