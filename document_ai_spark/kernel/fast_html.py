@@ -17,14 +17,17 @@ on the full synthetic corpus + adversarial fuzz):
     NOT unescaped — same as HTMLParser's CDATA_CONTENT_ELEMENTS;
   * comments/declarations/processing instructions are skipped; a lone '<'
     that does not open a tag is data; an unterminated tag at EOF is
-    dropped (HTMLParser leaves it buffered);
-  * self-closing tags fire starttag then endtag (handle_startendtag
-    default behavior).
+    dropped (HTMLParser leaves it buffered).
 
-Divergence (documented, irrelevant to the block model): CDATA sections
-(``<![CDATA[..]]>`` containing '>') and comments containing '--!>' may
-terminate earlier than HTML5 spec; neither occurs in sane web text, and the
-kernel remains total either way.
+Divergences (documented):
+  * a '/' before '>' is ignored: ``<br/>`` is the void tag br, and a
+    non-void ``<x/>`` only OPENS x, as HTML5 does. HTMLParser fires
+    starttag then endtag (handle_startendtag), so ``<script/>`` starts a
+    CDATA section here that runs to the next ``</script>``, ``<a/>`` opens
+    a link and ``<div/>`` a div block (tests/test_fast_html.py pins these);
+  * CDATA sections (``<![CDATA[..]]>`` containing '>') and comments
+    containing '--!>' may terminate earlier than HTML5 spec; neither
+    occurs in sane web text, and the kernel remains total either way.
 """
 
 from __future__ import annotations
@@ -50,7 +53,7 @@ _SCAN_RE = re.compile(
     r"<!--.*?(?:-->|\Z)"                 # comment (to --> or EOF)
     r"|<[!?][^>]*(?:>|\Z)"               # declaration / processing instr
     r"|<(/?)([a-zA-Z][^\t\n\r\f />]*)"   # full tag: closing?, name,
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)(/?)>"  # quote-aware attrs, self?
+    r"(?:\"[^\"]*\"|'[^']*'|[^>\"'])*>"   # quote-aware attrs (a '/' too)
     r"|<(?=[a-zA-Z/])"                   # garbled tag: drop to next '<'
     r"|<",                               # lone '<' (e.g. '<3'): data
     re.S,

@@ -320,9 +320,10 @@ def _tokenize_blocks_merged(s: str) -> List[Block]:
     """The fast scanner with the _BlockTokenizer state machine INLINED:
     one function, no per-event callback dispatch (~1.1M calls per 6k
     docs), and text inside skipped subtrees (head/nav/script/...) bypasses
-    slicing + unescape entirely. Semantics are EXACTLY _BlockTokenizer
-    driven by fast_html.scan — equivalence-tested against HTMLParser on
-    the corpus + fuzz (tests/test_fast_html.py) and against the goldens.
+    slicing + unescape entirely. Semantics are _BlockTokenizer's, but for
+    the divergences fast_html's docstring lists — equivalence-tested
+    against HTMLParser on the corpus + fuzz (tests/test_fast_html.py) and
+    against the goldens.
     """
     from document_ai_spark.kernel.fast_html import _CDATA_CLOSE_RE, _CDATA_ELEMS, _SCAN_RE
 
@@ -382,7 +383,7 @@ def _tokenize_blocks_merged(s: str) -> List[Block]:
         if lt > pos and not dropping and not skip_depth:
             data(unescape(s[pos:lt]))
         dropping = False
-        closing, name, _attrs, selfclose = m.group(1, 2, 3, 4)
+        closing, name = m.group(1, 2)
         pos = m.end()
         if name is not None:  # full tag
             name = name.lower()
@@ -404,20 +405,19 @@ def _tokenize_blocks_merged(s: str) -> List[Block]:
                         if pieces:
                             flush()
                         cur_tag = name
-                if not selfclose:
-                    if name not in _CDATA_ELEMS:
-                        continue
-                    # raw CDATA until the close tag; script/style are
-                    # SKIP_TAGS, so skip_depth >= 1 here and the content
-                    # is dropped WITHOUT ever being sliced or unescaped
-                    mc = _CDATA_CLOSE_RE[name].search(s, pos)
-                    if mc is None:
-                        break
-                    gt = find(">", mc.start())
-                    pos = n if gt == -1 else gt + 1
-            # == handle_endtag: a closing tag, a self-closing tag or the
-            # close of a CDATA element. A void tag's is a no-op: VOID_TAGS
-            # shares no name with SKIP_TAGS, BLOCK_TAGS, article/main or a
+                if name not in _CDATA_ELEMS:
+                    continue
+                # raw CDATA until the close tag; script/style are
+                # SKIP_TAGS, so skip_depth >= 1 here and the content is
+                # dropped WITHOUT ever being sliced or unescaped
+                mc = _CDATA_CLOSE_RE[name].search(s, pos)
+                if mc is None:
+                    break
+                gt = find(">", mc.start())
+                pos = n if gt == -1 else gt + 1
+            # == handle_endtag: a closing tag or the close of a CDATA
+            # element. A void tag's is a no-op: VOID_TAGS shares no name
+            # with SKIP_TAGS, BLOCK_TAGS, article/main or a
             if name in SKIP_TAGS:
                 if open_skip_tags and name in open_skip_tags:
                     for i in range(len(open_skip_tags) - 1, -1, -1):

@@ -1225,9 +1225,14 @@ def _advance_units(raw: bytes, codespace: tuple, metrics: tuple) -> Tuple[float,
     default, space_w)`` over the codes _iter_codes splits it into, the
     ones _shown_text decodes. A byte in no codespace range is a glyph of
     the default width; word spacing (Tw) applies only to the 1-byte code
-    32 (§9.3.3)."""
+    32 (§9.3.3). The 1-byte codespace of every simple font reads the
+    bytes directly: each is a code, no list is built."""
     get, dw = metrics[0].get, metrics[1]
     total = 0.0
+    if codespace == _ONE_BYTE:
+        for b in raw:
+            total += get(b, dw)
+        return total, len(raw), raw.count(32)
     codes = _iter_codes(raw, codespace)
     for nb, code in codes:
         total += get(code, dw) if nb else dw

@@ -18,13 +18,22 @@ DELETE` / `DELETE FROM`, which rewrites only the touched files.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
 
 import pyarrow.dataset as ds
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from document_ai_spark.plans.checkpoint import filesystem
+
+# the key under which Spark's parquet writer stores the row schema as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def append_chunks(df: DataFrame, path: str) -> None:
@@ -33,7 +42,42 @@ def append_chunks(df: DataFrame, path: str) -> None:
 
 
 def read_collection(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The collection at ``path``, typed from its own footer: the same
+    DataFrame as ``spark.read.parquet(path)`` without the Spark job that
+    infers its schema.
+
+    Spark's parquet writer stores the row schema as JSON under
+    ``org.apache.spark.sql.parquet.row.metadata``, and Spark's inference
+    reads exactly that key from one data file, assuming every file under
+    the path shares its schema. This reads the key on the driver with
+    pyarrow from the first ``*.parquet`` data file by name (``_``/``.``
+    files skipped) and hands the schema to the reader, which makes every
+    field nullable as inference does. A path with no such file (a
+    missing collection among them) or whose file lacks the key goes to
+    ``spark.read.parquet`` unchanged, so it raises or infers as before."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema in the footer of the first data file directly under
+    ``path``, or None (see read_collection)."""
+    fs, root = filesystem(path)
+    if fs.get_file_info(root).type != pafs.FileType.Directory:
+        return None
+    files = [
+        f.path
+        for f in fs.get_file_info(pafs.FileSelector(root))
+        if f.type == pafs.FileType.File and f.base_name.endswith(".parquet")
+        and not f.base_name.startswith(("_", "."))
+    ]
+    if not files:
+        return None
+    meta = pq.read_schema(min(files), filesystem=fs).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
 
 def reset_collection(spark: SparkSession, path: str, like: DataFrame | None = None) -> None:
@@ -56,7 +100,7 @@ def delete_by_hash(spark: SparkSession, path: str, hashes: DataFrame) -> int:
     back), then remove the old one: no failure leaves ``path`` empty.
     Returns the number of rows deleted.
     """
-    cur = spark.read.parquet(path)
+    cur = read_collection(spark, path)
     doomed = hashes.select("doc_hash").distinct()
     kept = cur.join(F.broadcast(doomed), "doc_hash", "left_anti")
     n_before = ds.dataset(path, format="parquet").count_rows()  # parquet footers, no job

@@ -5,7 +5,7 @@
 For each plan: what to check (PushedFilters reaching the scan, ReadSchema
 pruned to referenced columns, BroadcastHashJoin on dimension sides, no
 Exchange before the extraction UDF, explicit partitioning on the write
-shuffle). tests/test_plans.py asserts these; this script makes them
+shuffle, one stage for a RAG query). tests/test_plans.py asserts these; this script makes them
 visible for review.
 """
 
@@ -26,6 +26,22 @@ def section(title: str, note: str, df) -> None:
     print("CHECK:", note)
     print("-" * 78)
     df.explain("formatted")
+
+
+def rag_query(spark, tmp: str):
+    """format_docs(lexical_rerank(retrieve_topk(read_collection(...)))) over
+    a 60-chunk collection written under ``tmp``."""
+    from document_ai_spark.functions.embed import embed_text_py
+    from document_ai_spark.operators.retrieval import format_docs, lexical_rerank, retrieve_topk
+    from document_ai_spark.sinks.collection import append_chunks, read_collection
+
+    coll = os.path.join(tmp, "coll")
+    texts = [f"chunk {i} on spark arrow batches and parquet footers {i * 7}" for i in range(60)]
+    rows = [(i, f"https://example.com/{i % 6}", t, embed_text_py(t)) for i, t in enumerate(texts)]
+    schema = "chunk_id long, url string, chunk_text string, embedding array<float>"
+    append_chunks(spark.createDataFrame(rows, schema).repartition(3), coll)
+    q = "parquet footers spark"
+    return format_docs(lexical_rerank(retrieve_topk(read_collection(spark, coll), q, k=7), q))
 
 
 def main() -> None:
@@ -65,6 +81,14 @@ def main() -> None:
         "TakeOrderedAndProject (top-k without full sort)",
         entry.q06_topk_cosine(spark, SF_DIR),
     )
+    with tempfile.TemporaryDirectory(prefix="da_spark_plan_coll_") as tmp:
+        section(
+            "RAG query (perfbench's rag-query shape over a small collection)",
+            "ONE MapInArrow; NO Exchange; TakeOrderedAndProject -> Sort -> "
+            "ObjectHashAggregate in one stage (one Spark job per query: the "
+            "collection's schema comes from its footer, not a job)",
+            rag_query(spark, tmp),
+        )
     spark.stop()
 
 

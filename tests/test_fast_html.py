@@ -1,7 +1,7 @@
 """Fast HTML scanner equivalence vs the stdlib HTMLParser reference path.
 
 The fast scanner (kernel/fast_html.py) must produce the identical block
-stream on the whole synthetic corpus and on structured fuzz. Two documented
+stream on the whole synthetic corpus and on structured fuzz. The documented
 divergences where the scanner follows HTML5 and HTMLParser does not are
 pinned as intended behavior."""
 
@@ -71,6 +71,22 @@ def test_documented_html5_divergences(doc):
     # unterminated construct leaks into block text
     joined = " ".join(t for _, t, *_ in fast)
     assert "<!--" not in joined and "href=" not in joined
+
+
+@pytest.mark.parametrize(
+    "doc, blocks",
+    [
+        # the CDATA section runs to a </script> that never comes
+        ("<script/><p>kept text here</p>", []),
+        ("<a/>var x", [("body", "var x", 5, 5, 1, False)]),  # inside the link
+        ("<div/>tail text", [("div", "tail text", 9, 0, 1, False)]),  # in the div
+    ],
+)
+def test_slash_before_close_is_ignored_on_non_void_tags(doc, blocks):
+    # HTML5 ignores the '/' of <x/> for a non-void x, so the tag only opens
+    # x; HTMLParser fires starttag then endtag, closing it at once
+    assert _sig(doc, True) == blocks
+    assert _sig(doc, True) != _sig(doc, False)
 
 
 def test_cdata_offsets_survive_length_changing_lowercase():

@@ -473,6 +473,49 @@ def test_rerank_and_context_fold_on_hand_built_rows(spark):
     assert top[0].chunk_id == 2 and top[0].score == 1.0 and len(top) == 2
     assert top[0].asDict().keys() == {"chunk_id", "url", "chunk_text", "embedding", "score"}
 
+
+def test_rerank_matches_special_characters_as_literal_substrings(spark):
+    """Query terms are literal ``contains`` arguments, never SQL text, LIKE
+    patterns or regexes. The parent matched them literally as well; this
+    pins that the plan built from fewer JVM calls still does."""
+    from document_ai_spark.operators.retrieval import lexical_rerank
+
+    rows = [  # (chunk_id, chunk_text): each hits exactly the terms listed
+        (1, "it's 50% done"),  # it's, 50%
+        (2, "snake_case path\\to f(x)"),  # snake_case, path\to, f(x)
+        (3, "its 50 done snakeXcase pathto fx"),  # none: every near miss
+        (4, None),  # a null text matches no term
+    ]
+    df = spark.createDataFrame(
+        [(i, f"u{i}", t, 0.5) for i, t in rows], "chunk_id long, url string, chunk_text string, score double"
+    )
+    query = "it's 50% snake_case path\\to f(x) ')"
+    got = {r.chunk_id: r.rerank_score for r in lexical_rerank(df, query).collect()}
+    assert got == {1: 0.3333, 2: 0.5, 3: 0.0, 4: 0.0}  # of 6 terms
+
+
+def test_query_over_a_collection_is_one_spark_job(spark, tmp_path):
+    """perfbench's timed query shape: read_collection -> retrieve_topk ->
+    lexical_rerank -> format_docs -> collect. Inferring the collection's
+    schema with a Spark job made it 2."""
+    from document_ai_spark.functions.embed import embed_text_py
+    from document_ai_spark.operators.retrieval import format_docs, lexical_rerank, retrieve_topk
+    from document_ai_spark.sinks.collection import append_chunks, read_collection
+
+    path = str(tmp_path / "coll")
+    texts = [f"chunk {i} about spark arrow batches and parquet footers {i * 7}" for i in range(40)]
+    chunks = spark.createDataFrame(
+        [(i, f"u{i % 5}", t, embed_text_py(t)) for i, t in enumerate(texts)],
+        "chunk_id long, url string, chunk_text string, embedding array<float>",
+    )
+    append_chunks(chunks.repartition(3), path)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    q = "parquet footers spark"
+    before = dag.nextJobId()
+    context = format_docs(lexical_rerank(retrieve_topk(read_collection(spark, path), q, k=7), q)).collect()
+    assert dag.nextJobId() - before == 1
+    assert context[0].context.count("[Source: ") == 7
+
 def test_repetition_features_known_values(spark):
     from document_ai_spark.operators.textstats import repetition_features
 

@@ -133,11 +133,63 @@ def _jobs(spark, call):
 def test_collection_counters_come_from_the_write(spark, tmp_path):
     """delete_by_hash counts its input from the parquet footers and the kept
     rows in the rewrite; force_readd counts the added rows in the append.
-    Re-counting ran 9 and 12 jobs."""
+    Re-counting ran 9 and 12 jobs; inferring the collection's schema with
+    a Spark job, 4 and 5."""
     path = os.path.join(str(tmp_path), "col")
     append_chunks(_chunks(spark, range(10)), path)
     doomed = spark.createDataFrame([("h2",), ("h7",), ("h404",)], "doc_hash string")
-    assert _jobs(spark, lambda: delete_by_hash(spark, path, doomed)) == (2, 4)
+    assert _jobs(spark, lambda: delete_by_hash(spark, path, doomed)) == (2, 3)
     replacement = _chunks(spark, [3, 12])
-    assert _jobs(spark, lambda: force_readd(spark, path, replacement)) == ({"deleted": 1, "added": 2}, 5)
+    assert _jobs(spark, lambda: force_readd(spark, path, replacement)) == ({"deleted": 1, "added": 2}, 4)
     assert read_collection(spark, path).count() == 9
+
+
+def _deleted_from(spark, path):
+    append_chunks(_chunks(spark, range(6)), path)
+    delete_by_hash(spark, path, spark.createDataFrame([("h1",)], "doc_hash string"))
+
+
+def _nested(spark, path):
+    # non-nullable columns, an array, a struct holding a map
+    append_chunks(
+        spark.range(3).select(
+            "id",
+            F.array(F.col("id").cast("float")).alias("vec"),
+            F.struct(F.col("id").alias("x"), F.create_map(F.lit("k"), F.col("id")).alias("m")).alias("s"),
+        ),
+        path,
+    )
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda spark, path: [append_chunks(_chunks(spark, ids), path) for ids in (range(3), range(3, 5))],
+        lambda spark, path: reset_collection(spark, path, like=_chunks(spark, [])),
+        _deleted_from,
+        _nested,
+    ],
+    ids=["two-appends", "reset-like", "after-delete", "nested"],
+)
+def test_read_collection_is_typed_from_the_footer(spark, tmp_path, build):
+    """The same schema as Spark's inference, with no Spark job for it (the
+    inference ran one)."""
+    path = os.path.join(str(tmp_path), "col")
+    build(spark, path)
+    coll, jobs = _jobs(spark, lambda: read_collection(spark, path))
+    assert jobs == 0
+    assert coll.schema == spark.read.parquet(path).schema
+    assert coll.count() == spark.read.parquet(path).count()
+
+
+def test_read_collection_of_a_missing_path_raises_as_spark_does(spark, tmp_path):
+    """A path without a data file goes to Spark's reader unchanged. This
+    passes at the parent too, where read_collection was Spark's reader: it
+    pins the fallback."""
+    missing = os.path.join(str(tmp_path), "nothing-here")
+    with pytest.raises(Exception) as spark_error:
+        spark.read.parquet(missing)
+    with pytest.raises(Exception) as ours:
+        read_collection(spark, missing)
+    assert type(ours.value) is type(spark_error.value)
+    assert "PATH_NOT_FOUND" in str(ours.value)
